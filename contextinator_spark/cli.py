@@ -56,6 +56,13 @@ def _corpus(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+def _query_terms(query: str) -> list[str]:
+    """Free-text query → BM25 terms under the index's token policy."""
+    from .oracle import tokenize
+
+    return [t for w in query.split() for t in tokenize(w)]
+
+
 def _emit(rows, fmt: str, text_fn: Callable[[dict], str], fold: bool = False) -> None:
     dicts = [
         r.asDict(recursive=True) if hasattr(r, "asDict") else dict(r) for r in rows
@@ -575,9 +582,8 @@ def cmd_composite(args, spark) -> None:
     """ES composite aggregation: pageable (group, value-bucket) buckets
     of the full match set; --after GROUP:BUCKET resumes the next page."""
     from .operators.bm25_segments import composite_agg
-    from .oracle import tokenize
 
-    terms = [t for w in args.query.split() for t in tokenize(w)]
+    terms = _query_terms(args.query)
     after = None
     if args.after:
         g, bk = args.after.rsplit(":", 1)
@@ -616,7 +622,9 @@ def cmd_alias(args, spark) -> None:
     verb's --index accepts an alias transparently."""
     from .operators.alias import create_alias, read_alias, swap_alias
 
-    if args.target and args.swap:
+    if args.swap and not args.target:
+        raise SystemExit("--swap requires --target")
+    if args.swap:
         old = swap_alias(args.alias, args.target)
         print(json.dumps({"alias": args.alias, "target": args.target, "was": old}))
     elif args.target:
@@ -651,7 +659,7 @@ def cmd_rankeval(args, spark) -> None:
     from .operators.bm25_segments import topk_segments
     from .operators.rankeval import rank_eval
 
-    ranking = topk_segments(spark, args.index, args.query.split(), k=args.k)
+    ranking = topk_segments(spark, args.index, _query_terms(args.query), k=args.k)
     rel = spark.createDataFrame(
         [(int(d),) for d in args.relevant.split(",") if d.strip()],
         "doc_id long",
@@ -688,7 +696,7 @@ def cmd_pctl(args, spark) -> None:
 
     pcts = tuple(float(p) for p in args.pcts.split(",") if p.strip())
     out = percentiles_agg(
-        spark, args.index, args.query.split(), args.field, pcts
+        spark, args.index, _query_terms(args.query), args.field, pcts
     )
     _emit(
         out.collect(),
@@ -702,7 +710,7 @@ def cmd_xstats(args, spark) -> None:
     """Extended stats (all seven moments) over the query's match set."""
     from .operators.bm25_segments import extended_stats
 
-    out = extended_stats(spark, args.index, args.query.split(), args.field)
+    out = extended_stats(spark, args.index, _query_terms(args.query), args.field)
     _emit(
         out.collect(),
         args.format,
@@ -812,7 +820,6 @@ def cmd_explain(args, spark) -> None:
     tf, doc_len, df, idf and the term's partial contribution — partials
     sum to the hit's score."""
     from .operators.bm25_segments import explain_topk
-    from .oracle import tokenize
 
     if getattr(args, "bool_query", False):
         # full Boolean grammar: per-CLAUSE decomposition instead of
@@ -831,7 +838,7 @@ def cmd_explain(args, spark) -> None:
             getattr(args, "toon_fold", False),
         )
         return
-    terms = [t for w in args.query.split() for t in tokenize(w)]
+    terms = _query_terms(args.query)
     out = explain_topk(spark, args.index, terms, k=args.k)
     _emit(
         out.collect(),
@@ -849,9 +856,8 @@ def cmd_facets(args, spark) -> None:
     """Hit counts per doc_meta value over the FULL match set of the
     disjunction (Lucene faceting analog) — not just the top-k."""
     from .operators.bm25_segments import facet_counts
-    from .oracle import tokenize
 
-    terms = [t for w in args.query.split() for t in tokenize(w)]
+    terms = _query_terms(args.query)
     stats = getattr(args, "stats", None)
     if stats:
         from .operators.bm25_segments import facet_stats
@@ -882,9 +888,8 @@ def cmd_facets(args, spark) -> None:
 def cmd_tophits(args, spark) -> None:
     """Per-group top-k hits (ES terms agg + top_hits sub-agg)."""
     from .operators.bm25_segments import top_hits
-    from .oracle import tokenize
 
-    terms = [t for w in args.query.split() for t in tokenize(w)]
+    terms = _query_terms(args.query)
     out = top_hits(
         spark, args.index, terms, group_col=args.by, k_per_group=args.k
     )
@@ -902,9 +907,8 @@ def cmd_tophits(args, spark) -> None:
 def cmd_histo(args, spark) -> None:
     """Fixed-interval histogram over the match set (ES histogram agg)."""
     from .operators.bm25_segments import histogram_agg
-    from .oracle import tokenize
 
-    terms = [t for w in args.query.split() for t in tokenize(w)]
+    terms = _query_terms(args.query)
     out = histogram_agg(
         spark, args.index, terms, field=args.field, interval=args.interval
     )
@@ -920,9 +924,8 @@ def cmd_sigterms(args, spark) -> None:
     """Significant terms (ES significant_terms aggregation): vocabulary
     terms overrepresented in the query's match set vs the background."""
     from .operators.bm25_segments import significant_terms
-    from .oracle import tokenize
 
-    terms = [t for w in args.query.split() for t in tokenize(w)]
+    terms = _query_terms(args.query)
     out = significant_terms(
         spark, args.index, terms, k=args.k, min_fg=args.min_fg
     )
@@ -941,9 +944,8 @@ def cmd_count(args, spark) -> None:
     """Total hit count (Lucene TotalHitCountCollector analog): how many
     live docs contain ANY of the query terms — no scoring, no top-k."""
     from .operators.bm25_segments import match_count
-    from .oracle import tokenize
 
-    terms = [t for w in args.query.split() for t in tokenize(w)]
+    terms = _query_terms(args.query)
     out = match_count(
         spark, args.index, terms,
         approximate=getattr(args, "approx", False),

@@ -70,50 +70,3 @@ def token_count_expr(col: Column | str) -> Column:
     """doc_len as a pure column expression (= size of tokens_expr)."""
     return F.size(tokens_expr(col))
 
-
-_TF_TYPE = T.StructType(
-    [
-        T.StructField("dl", T.IntegerType()),
-        T.StructField("terms", T.ArrayType(T.StringType())),
-        T.StructField("tfs", T.ArrayType(T.IntegerType())),
-    ]
-)
-
-
-@pandas_udf(_TF_TYPE)
-def termfreq_udf(content: pd.Series) -> pd.DataFrame:
-    """Per-doc (doc_len, terms[], tfs[]) in one Arrow pass.
-
-    Doing the (doc, term) aggregation INSIDE the UDF removes the
-    40M-row explode→groupBy shuffle from the index build: grouping by
-    (doc, term) is doc-local, so no cross-partition exchange is ever
-    needed for it. Vectorized: one flat token frame per Arrow batch,
-    a single pandas groupby, then np.split row splits.
-
-    Output is two PARALLEL PRIMITIVE ARRAYS (zipped JVM-side with
-    ``arrays_zip`` where rows are needed) rather than array<struct>:
-    building one Python dict per posting and serializing struct arrays
-    measured ~2× slower than list<string>+list<int> at bench scale.
-    """
-    import numpy as np
-
-    toks = content.fillna("").str.lower().str.findall(TOKEN_PATTERN)
-    lens = toks.str.len().fillna(0).astype("int64").to_numpy()
-    n = len(toks)
-    if lens.sum() == 0:
-        empty = [[] for _ in range(n)]
-        return pd.DataFrame(
-            {"dl": np.zeros(n, dtype="int32"), "terms": empty, "tfs": [[] for _ in range(n)]}
-        )
-    idx = np.repeat(np.arange(n), lens)
-    flat = np.concatenate([np.asarray(t, dtype=object) for t in toks])
-    # factorize → int keys → np.unique: ~4x faster than a string groupby
-    codes, uniques = pd.factorize(flat)
-    key = idx * len(uniques) + codes
-    uk, counts = np.unique(key, return_counts=True)
-    gi = uk // len(uniques)
-    gt = uniques[uk % len(uniques)]
-    bounds = np.searchsorted(gi, np.arange(n + 1))
-    terms = np.split(gt, bounds[1:-1])
-    tfs = np.split(counts.astype("int32"), bounds[1:-1])
-    return pd.DataFrame({"dl": lens.astype("int32"), "terms": terms, "tfs": tfs})

@@ -1,7 +1,7 @@
 """Segment store: compressed posting slices + term dictionary + catalog.
 
-Build topology (SURVEY.md §4 item 2, north_star skew requirement) —
-default "fused" path (SPARK_GRAFT_SLICE_IMPL selects legacy variants):
+Build topology (SURVEY.md §4 item 2, north_star skew requirement) — one
+fused path, shared by write_index and streaming deltas:
 
   pass A  corpus → (sha2, byte-level count UDF) → doc_meta + stats
           [observe() rides the write; no token strings materialized]
@@ -55,201 +55,6 @@ from ..config import (
 )
 from .compress import block_max, encode_postings
 
-_ENC_TYPE = T.StructType(
-    [
-        T.StructField("blob", T.BinaryType()),
-        T.StructField(
-            "block_max",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("upper_doc", T.LongType()),
-                        T.StructField("max_tf", T.IntegerType()),
-                        T.StructField("min_dl", T.IntegerType()),
-                    ]
-                )
-            ),
-        ),
-    ]
-)
-
-
-@F.pandas_udf(_ENC_TYPE)
-def _encode_udf(docs: pd.Series, tfs_col: pd.Series, dls_col: pd.Series) -> pd.DataFrame:
-    """Three primitive arrays (sorted by doc_id) → (blob, block_max)."""
-    blobs, bms = [], []
-    for d, t, l in zip(docs, tfs_col, dls_col):
-        doc_ids = np.asarray(d, dtype=np.int64)
-        tfs = np.asarray(t, dtype=np.int64)
-        dls = np.asarray(l, dtype=np.int64)
-        blobs.append(encode_postings(doc_ids, tfs, dls))
-        bms.append(block_max(doc_ids, tfs, dls, BLOCK_SIZE))
-    return pd.DataFrame({"blob": blobs, "block_max": bms})
-
-
-_SLICE_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType()),
-        T.StructField("slice_id", T.IntegerType()),
-        T.StructField("df_slice", T.LongType()),
-        T.StructField("cf_slice", T.LongType()),
-        T.StructField("blob", T.BinaryType()),
-        _ENC_TYPE["block_max"],
-        T.StructField("kth_tfnorm", T.DoubleType()),
-        T.StructField("partition_id", T.IntegerType()),
-    ]
-)
-
-
-def _make_encode_stream(n_partitions: int):
-    """Streaming slice encoder over (term, slice_id, doc_id)-sorted input.
-
-    Receives one shuffle partition as a sequence of Arrow batches; all rows
-    of a (term, slice_id) group are contiguous (repartition on the group
-    key + sortWithinPartitions), so the encoder emits a finished
-    (blob, block_max) row at every group boundary and carries the trailing
-    partial group across batches. Memory = one group's primitive arrays in
-    the Python worker, never a JVM-side list."""
-
-    def _encode_stream(pdf_iter):
-        from ..functions.xxhash import term_partition
-
-        carry = None  # (term, slice_id, [docs...], [tfs...], [dls...])
-        out: list[dict] = []
-
-        def _emit(term, slice_id, docs, tfs, dls):
-            d = np.concatenate(docs).astype(np.int64, copy=False)
-            t = np.concatenate(tfs).astype(np.int64, copy=False)
-            l = np.concatenate(dls).astype(np.int64, copy=False)
-            out.append(
-                {
-                    "term": term,
-                    "slice_id": int(slice_id),
-                    "df_slice": int(d.size),
-                    "cf_slice": int(t.sum()),
-                    "blob": encode_postings(d, t, l),
-                    "block_max": block_max(d, t, l, BLOCK_SIZE),
-                    "kth_tfnorm": None,  # impact metadata: fused path only
-                    "partition_id": term_partition(str(term), n_partitions),
-                }
-            )
-
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            terms = pdf["term"].to_numpy()
-            slices = pdf["slice_id"].to_numpy()
-            docs = pdf["doc_id"].to_numpy()
-            tfs = pdf["tf"].to_numpy()
-            dls = pdf["dl"].to_numpy()
-            # group boundaries within the batch
-            change = (terms[1:] != terms[:-1]) | (slices[1:] != slices[:-1])
-            starts = np.concatenate(([0], np.flatnonzero(change) + 1))
-            ends = np.concatenate((starts[1:], [len(pdf)]))
-            for s, e in zip(starts, ends):
-                key = (terms[s], slices[s])
-                if carry is not None and (carry[0], carry[1]) == key:
-                    carry[2].append(docs[s:e])
-                    carry[3].append(tfs[s:e])
-                    carry[4].append(dls[s:e])
-                    continue
-                if carry is not None:
-                    _emit(*carry)
-                carry = [terms[s], slices[s], [docs[s:e]], [tfs[s:e]], [dls[s:e]]]
-            if len(out) >= 256:
-                yield pd.DataFrame(out)
-                out = []
-        if carry is not None:
-            _emit(*carry)
-        if out:
-            yield pd.DataFrame(out)
-
-    return _encode_stream
-
-
-def postings_with_dl(corpus: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(term, doc_id, tf, dl) with ZERO shuffle: the (doc, term) aggregation
-    happens inside the Arrow UDF (doc-local by definition), so the plan is
-    scan → project → explode — postings stream straight into the slice
-    shuffle."""
-    from ..functions.tokenize import termfreq_udf
-
-    tf = termfreq_udf(F.col("content"))
-    return (
-        corpus.select(F.col(id_col).alias("doc_id"), tf.alias("_tf"))
-        .select(
-            "doc_id",
-            F.col("_tf.dl").alias("dl"),
-            F.explode(F.arrays_zip("_tf.terms", "_tf.tfs")).alias("p"),
-        )
-        .select("doc_id", "dl", F.col("p.terms").alias("term"), F.col("p.tfs").alias("tf"))
-    )
-
-
-def term_dictionary(postings_dl: DataFrame, n_partitions: int = INDEX_PARTITIONS) -> DataFrame:
-    return postings_dl.groupBy("term").agg(
-        F.count(F.lit(1)).alias("df"),
-        F.sum("tf").alias("cf"),
-    ).withColumn("partition_id", F.pmod(F.xxhash64("term"), F.lit(n_partitions)).cast("int"))
-
-
-def _make_map_combine(heavy_fanout: dict, max_doc_id: int):
-    """Map-side combine: doc-major (doc_id, dl, terms[], tfs[]) batches →
-    term-major (term, slice_id, docs[], tfs[], dls[]) partial posting rows.
-
-    All vectorized: one factorize + one lexsort per Arrow batch. Heavy-term
-    salt fan-outs arrive as a closure dict (bounded: df > 5%·N admits at
-    most avg_dl/0.05 terms, ~2k for code corpora), so slice assignment
-    needs no join. Emitting ARRAYS instead of exploded rows keeps the
-    shuffle free of per-posting row overhead and the reduce side free of
-    JVM collect_list object churn (measured: the old reduce spent 17s in
-    GC per stage at 8 cores)."""
-
-    def map_combine(pdf_iter):
-        for pdf in pdf_iter:
-            toks = pdf["terms"]
-            lens = toks.str.len().fillna(0).astype("int64").to_numpy()
-            if lens.sum() == 0:
-                continue
-            docs = np.repeat(pdf["doc_id"].to_numpy(), lens)
-            dls = np.repeat(pdf["dl"].to_numpy(), lens)
-            nonempty = lens > 0  # mask (not truthiness) — null rows are NaN
-            flat_terms = np.concatenate(
-                [np.asarray(t, dtype=object) for t in toks[nonempty]]
-            )
-            tfs = np.concatenate([np.asarray(t) for t in pdf["tfs"][nonempty]])
-            codes, uniq = pd.factorize(flat_terms)
-            fan = np.fromiter(
-                (heavy_fanout.get(u, 1) for u in uniq), dtype=np.int64, count=len(uniq)
-            )
-            f_per = fan[codes]
-            slc = np.zeros(docs.size, dtype=np.int64)
-            hv = f_per > 1
-            if hv.any():
-                slc[hv] = np.minimum(
-                    f_per[hv] - 1,
-                    (docs[hv].astype(np.float64) / float(max_doc_id + 1) * f_per[hv]).astype(
-                        np.int64
-                    ),
-                )
-            order = np.lexsort((docs, slc, codes))
-            c_s, s_s = codes[order], slc[order]
-            d_s, t_s, l_s = docs[order], tfs[order], dls[order]
-            change = (c_s[1:] != c_s[:-1]) | (s_s[1:] != s_s[:-1])
-            starts = np.concatenate(([0], np.flatnonzero(change) + 1))
-            ends = np.concatenate((starts[1:], [c_s.size]))
-            yield pd.DataFrame(
-                {
-                    "term": uniq[c_s[starts]],
-                    "slice_id": s_s[starts].astype("int32"),
-                    "docs": [d_s[s:e] for s, e in zip(starts, ends)],
-                    "tfs": [t_s[s:e].astype("int32") for s, e in zip(starts, ends)],
-                    "dls": [l_s[s:e].astype("int32") for s, e in zip(starts, ends)],
-                }
-            )
-
-    return map_combine
-
 
 def _make_fused_combine(
     heavy_fanout: dict, max_doc_id: int, id_col: str = "doc_id", positions: bool = False
@@ -257,15 +62,15 @@ def _make_fused_combine(
     """Fused tokenize + map-side combine: (doc_id, content) Arrow batches →
     term-major (term, slice_id, docs[], tfs[], dls[]) partial posting rows.
 
-    One kernel replaces the old termfreq-UDF → persist → combine chain:
-    token arrays never cross the Arrow boundary, never sit in an
-    InMemoryRelation, and are never re-read — per-batch the flow is one
-    findall, one factorize, one lexsort, one run-length pass. Profiled on
-    this VM the old chain's tokenize+persist stage moved ~10 GB through
-    cache-build + Arrow round-trips and scaled 1.1× from 2→8 cores while
-    the raw pandas kernel scales 3.6×; fusing removes the traffic, not the
-    math. Salt fan-outs arrive as a closure dict from the sampled
-    heavy-hitter pre-pass (see sampled_heavy_fanout).
+    Tokenizing inside the combine kernel means token arrays never cross
+    the Arrow boundary, never sit in an InMemoryRelation, and are never
+    re-read — per-batch the flow is one findall, one factorize, one
+    lexsort, one run-length pass. A separate tokenize → persist → combine
+    chain was profiled moving ~10 GB through cache-build + Arrow
+    round-trips and scaling 1.1× from 2→8 cores while the raw pandas
+    kernel scales 3.6×; fusing removes the traffic, not the math. Salt
+    fan-outs arrive as a closure dict from the sampled heavy-hitter
+    pre-pass (see sampled_heavy_fanout).
 
     Partial groups leave the map task as PRIMITIVE ARRAYS, not pre-encoded
     varbyte blobs. Measured head-to-head (interleaved 3×, 8 cores, 2M
@@ -438,7 +243,18 @@ _MERGE_TYPE = T.StructType(
         T.StructField("df_slice", T.LongType()),
         T.StructField("cf_slice", T.LongType()),
         T.StructField("blob", T.BinaryType()),
-        _ENC_TYPE["block_max"],
+        T.StructField(
+            "block_max",
+            T.ArrayType(
+                T.StructType(
+                    [
+                        T.StructField("upper_doc", T.LongType()),
+                        T.StructField("max_tf", T.IntegerType()),
+                        T.StructField("min_dl", T.IntegerType()),
+                    ]
+                )
+            ),
+        ),
         T.StructField("kth_tfnorm", T.DoubleType()),
     ]
 )
@@ -464,7 +280,7 @@ def _make_merge_udf(
     query executor derives its pruning threshold θ from these values with
     ZERO extra jobs — per-slice k-th ≤ global k-th ≤ k-th best total score,
     so θ stays a conservative lower bound (see bm25_segments θ proof).
-    avgdl=None (legacy/delta paths) → null, executor falls back to the
+    avgdl=None (streaming deltas) → null, executor falls back to the
     job-based θ pass."""
     from ..config import BM25_B, BM25_K1, DEFAULT_TOP_K
 
@@ -538,141 +354,6 @@ def _make_merge_udf(
     return F.pandas_udf(fn, returnType=_MERGE_TYPE)
 
 
-def build_slices_combine(
-    enriched: DataFrame,
-    term_dict: DataFrame,
-    n_docs: int,
-    max_doc_id: int,
-    heavy_df_fraction: float = HEAVY_DF_FRACTION,
-    fanout: int = HEAVY_SALT_FANOUT,
-    n_partitions: int = INDEX_PARTITIONS,
-) -> DataFrame:
-    """Two-phase slice build from doc-major `enriched` rows
-    (doc_id, dl, terms[], tfs[]): map-side combine → array shuffle →
-    per-(term, slice) merge+encode."""
-    threshold = max(1, int(heavy_df_fraction * n_docs))
-    heavy_rows = (
-        term_dict.filter(F.col("df") > threshold)
-        .select(
-            "term",
-            F.least(
-                F.lit(MAX_SALT_FANOUT),
-                F.greatest(F.lit(fanout), F.ceil(F.col("df") / F.lit(SLICE_TARGET_POSTINGS))),
-            ).cast("int").alias("fanout_t"),
-        )
-        .collect()
-    )
-    heavy_fanout = {r["term"]: int(r["fanout_t"]) for r in heavy_rows}
-    partial = enriched.select("doc_id", "dl", "terms", "tfs").mapInPandas(
-        _make_map_combine(heavy_fanout, max_doc_id), schema=_COMBINE_SCHEMA
-    )
-    grouped = partial.groupBy("term", "slice_id").agg(
-        F.collect_list("docs").alias("docs_ll"),
-        F.collect_list("tfs").alias("tfs_ll"),
-        F.collect_list("dls").alias("dls_ll"),
-    )
-    enc = _make_merge_udf(n_partitions)(
-        F.col("docs_ll"), F.col("tfs_ll"), F.col("dls_ll")
-    )
-    return grouped.select(
-        "term",
-        "slice_id",
-        enc["df_slice"].alias("df_slice"),
-        enc["cf_slice"].alias("cf_slice"),
-        enc["blob"].alias("blob"),
-        enc["block_max"].alias("block_max"),
-        enc["kth_tfnorm"].alias("kth_tfnorm"),
-        F.pmod(F.xxhash64("term"), F.lit(n_partitions)).cast("int").alias("partition_id"),
-    )
-
-
-def build_slices(
-    postings_dl: DataFrame,
-    term_dict: DataFrame,
-    n_docs: int,
-    max_doc_id: int,
-    heavy_df_fraction: float = HEAVY_DF_FRACTION,
-    fanout: int = HEAVY_SALT_FANOUT,
-    n_partitions: int = INDEX_PARTITIONS,
-) -> DataFrame:
-    """Salted slice build → (term, slice_id, df_slice, cf_slice, blob, block_max, partition_id)."""
-    threshold = max(1, int(heavy_df_fraction * n_docs))
-    # per-term salt factor scales with df (north_star): floor `fanout` for
-    # any heavy term, growing as df/SLICE_TARGET_POSTINGS so no slice group
-    # exceeds ~64k postings regardless of corpus size
-    heavy = term_dict.filter(F.col("df") > threshold).select(
-        "term",
-        F.least(
-            F.lit(MAX_SALT_FANOUT),
-            F.greatest(
-                F.lit(fanout),
-                F.ceil(F.col("df") / F.lit(SLICE_TARGET_POSTINGS)),
-            ),
-        ).cast("int").alias("fanout_t"),
-    )
-    salted = (
-        postings_dl.join(F.broadcast(heavy), "term", "left")
-        .withColumn(
-            # doc_id RANGE slice via double math (monotone ⇒ ranges disjoint;
-            # int64 multiply would overflow for hash-derived doc_ids).
-            # Engine invariant: doc_id ∈ [0, 2^62).
-            "slice_id",
-            F.when(
-                F.col("fanout_t").isNotNull(),
-                F.least(
-                    F.col("fanout_t") - 1,
-                    F.floor(
-                        F.col("doc_id").cast("double")
-                        / F.lit(float(max_doc_id + 1))
-                        * F.col("fanout_t")
-                    ).cast("int"),
-                ),
-            ).otherwise(F.lit(0)),
-        )
-        .drop("fanout_t")
-    )
-    impl = os.environ.get("SPARK_GRAFT_SLICE_IMPL", "agg")
-    if impl == "sort":
-        # shuffle + EXTERNAL SORT + streaming encode: Tungsten's spillable
-        # sort handles arbitrarily large partitions and the Arrow encoder
-        # streams group-by-group in Python worker memory — no JVM buffer
-        # proportional to group size anywhere. Costs a string-keyed sort +
-        # per-posting Arrow transfer; kept as the fallback for corpora
-        # whose largest groups would not fit an agg buffer.
-        # numeric leading sort key: UnsafeRow radix-prefix on the hash long
-        # beats string comparisons; ties (hash collisions) break on term.
-        # partition_id is recomputed per GROUP in Python via the
-        # Spark-identical XXH64 twin — 4 fewer bytes per POSTING in Arrow.
-        spread = (
-            salted.withColumn("thash", F.xxhash64("term"))
-            .repartition("term", "slice_id")
-            .sortWithinPartitions("thash", "term", "slice_id", "doc_id")
-            .drop("thash")
-        )
-        return spread.mapInPandas(_make_encode_stream(n_partitions), schema=_SLICE_SCHEMA)
-
-    # default: JVM hash-agg collects each (term, slice) group — groups are
-    # bounded (≤ SLICE_TARGET_POSTINGS·2) by the df-scaled salt, so agg
-    # state stays small; struct fields are extracted JVM-side and the
-    # encode UDF receives primitive arrays per group.
-    slices = salted.groupBy("term", "slice_id").agg(
-        F.sort_array(F.collect_list(F.struct("doc_id", "tf", "dl"))).alias("plist"),
-        F.count(F.lit(1)).alias("df_slice"),
-        F.sum("tf").alias("cf_slice"),
-    )
-    enc = _encode_udf(F.col("plist.doc_id"), F.col("plist.tf"), F.col("plist.dl"))
-    return slices.select(
-        "term",
-        "slice_id",
-        "df_slice",
-        "cf_slice",
-        enc["blob"].alias("blob"),
-        enc["block_max"].alias("block_max"),
-        F.lit(None).cast("double").alias("kth_tfnorm"),
-        F.pmod(F.xxhash64("term"), F.lit(n_partitions)).cast("int").alias("partition_id"),
-    )
-
-
 def build_slices_fused(
     corpus: DataFrame,
     heavy_fanout: dict,
@@ -684,9 +365,9 @@ def build_slices_fused(
 ) -> DataFrame:
     """Slice rows straight from raw (doc_id, content) via the fused
     tokenize+combine kernel — the ONE slice-build path shared by
-    write_index and streaming ingest, so format-2 (positions) delta blobs
-    ride the identical salting + array-shuffle + merge machinery as a
-    batch build. Returns (term, slice_id, df_slice, cf_slice, blob,
+    write_index and streaming ingest, so delta blobs of either posting
+    format ride the identical salting + array-shuffle + merge machinery
+    as a batch build. Returns (term, slice_id, df_slice, cf_slice, blob,
     block_max, kth_tfnorm, partition_id) for ALL partitions; callers
     filter/shift as needed."""
     partial = corpus.select(F.col(id_col), "content").mapInPandas(
@@ -824,7 +505,7 @@ def write_index(
     Resume: partitions already in catalog/ are skipped; `only_partitions`
     restricts an epoch (used by tests to simulate a mid-build crash).
 
-    Default topology ("fused", SPARK_GRAFT_SLICE_IMPL to override):
+    Topology:
 
       pass A  corpus → (sha2, count-only token UDF) → doc_meta + stats
               [observe() rides the write job — no second scan; no token
@@ -835,19 +516,10 @@ def write_index(
       post    terms/ + catalog/ derived from the WRITTEN slice rows
               (exact df/cf = sum over slices; tiny post-encode data)
 
-    vs the previous topology this removes: the multi-GB persist of per-doc
-    token arrays (and its Arrow round-trip into the combine), the full
-    explode→groupBy dictionary shuffle, and one full corpus re-scan — the
-    three pieces profiling showed don't scale with cores.
+    No per-doc token arrays are persisted and no explode→groupBy
+    dictionary shuffle runs — the pieces profiling showed don't scale
+    with cores.
     """
-    impl = os.environ.get("SPARK_GRAFT_SLICE_IMPL", "fused")
-    if impl != "fused":
-        if positions:
-            raise ValueError("positions=True requires the fused build path")
-        return _write_index_legacy(
-            spark, corpus, index_dir, id_col, n_partitions, only_partitions, epoch, impl
-        )
-
     done = committed_partitions(spark, index_dir)
     all_parts = set(range(n_partitions))
     todo = sorted((all_parts - done) & (only_partitions or all_parts))
@@ -978,175 +650,6 @@ def write_index(
         "skipped_partitions": sorted(done),
         "elapsed_sec": time.perf_counter() - t0,
         "phases": phases,
-        **stats,
-    }
-
-
-def _write_index_legacy(
-    spark: SparkSession,
-    corpus: DataFrame,
-    index_dir: str,
-    id_col: str = "doc_id",
-    n_partitions: int = INDEX_PARTITIONS,
-    only_partitions: set[int] | None = None,
-    epoch: int = 0,
-    impl: str = "combine",
-) -> dict:
-    """Pre-fusion topology (impl = combine | agg | sort), kept for A/B
-    profiling and as the fallback for corpora whose vocabulary would make
-    the fused kernel's per-batch factorize state too large."""
-
-    done = committed_partitions(spark, index_dir)
-    all_parts = set(range(n_partitions))
-    todo = sorted((all_parts - done) & (only_partitions or all_parts))
-    if done:  # resuming: scrub data from the append-before-commit window
-        _clean_uncommitted(index_dir, done)
-    t0 = time.perf_counter()
-
-    # ONE tokenize+termfreq pass feeds doc_meta, dictionary and slices.
-    # (At 100 TB, persisting the per-doc term-frequency pairs trades
-    # memory/disk for not running the Arrow UDF three times.)
-    from pyspark.storagelevel import StorageLevel
-    from ..functions.tokenize import termfreq_udf
-
-    # guard against under-partitioned inputs (a single small parquet file
-    # would otherwise serialize the whole tokenize stage on 1-2 tasks)
-    par = spark.sparkContext.defaultParallelism
-    if corpus.rdd.getNumPartitions() < par:
-        corpus = corpus.repartition(2 * par)
-
-    extra = [c for c in ("repo", "path", "lang") if c in corpus.columns]
-    enriched = (
-        corpus.withColumn("_tf", termfreq_udf(F.col("content")))
-        .withColumn("content_sha256", F.sha2(F.col("content"), 256))
-        .select(
-            F.col(id_col).alias("doc_id"),
-            *extra,
-            "content_sha256",
-            F.col("_tf.dl").alias("dl"),
-            F.col("_tf.terms").alias("terms"),
-            F.col("_tf.tfs").alias("tfs"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
-    pdl = tdict = None
-    if todo:
-        pdl = (
-            enriched.select(
-                "doc_id", "dl", F.explode(F.arrays_zip("terms", "tfs")).alias("p")
-            )
-            .select("doc_id", "dl", F.col("p.terms").alias("term"), F.col("p.tfs").alias("tf"))
-        )
-        if impl != "combine":
-            # the row-explode slice impls scan pdl a second time; persisted
-            # so the slice build's agg pressure can't force re-tokenization
-            pdl = pdl.persist(StorageLevel.MEMORY_AND_DISK)
-        tdict = term_dictionary(pdl, n_partitions).persist()
-
-    if not done:  # first epoch also writes doc_meta + stats
-        import threading
-
-        from pyspark.sql import Observation
-
-        obs = Observation("collection_stats")
-        meta = enriched.select(
-            "doc_id", F.col("dl").alias("doc_len"), *extra, "content_sha256"
-        ).observe(
-            obs,
-            F.count(F.lit(1)).alias("n_docs"),
-            F.avg("doc_len").alias("avgdl"),
-            F.max("doc_id").alias("max_doc_id"),
-            F.sum("doc_len").alias("total_terms"),
-        )
-
-        # overlap two independent jobs: doc_meta write (+observed stats)
-        # and the dictionary write — both consume the persisted `enriched`;
-        # the slice build needs BOTH (stats for salting, tdict for heavy
-        # detection), so this is the only overlappable pair
-        def _write_terms():
-            if todo:
-                # repartition onto partition_id before partitionBy: each
-                # write task then emits one directory (32 clean files)
-                # instead of shuffle_partitions × |todo| fragments
-                tdict.filter(F.col("partition_id").isin(todo)).repartition(
-                    len(todo), "partition_id"
-                ).write.mode("append").partitionBy("partition_id").parquet(
-                    os.path.join(index_dir, "terms")
-                )
-
-        th = threading.Thread(target=_write_terms)
-        th.start()
-        # observe(): stats ride the write job — no second scan
-        meta.write.mode("overwrite").parquet(os.path.join(index_dir, "doc_meta"))
-        th.join()
-        g = obs.get
-        stats = {
-            "n_docs": int(g["n_docs"]),
-            "avgdl": float(g["avgdl"]),
-            "max_doc_id": int(g["max_doc_id"]),
-            "total_terms": int(g["total_terms"]),
-            # the index self-describes its layout: query executors read
-            # n_partitions from here, so an index built under a different
-            # INDEX_PARTITIONS default stays readable forever
-            "n_partitions": n_partitions,
-            "block_size": BLOCK_SIZE,
-            "posting_format": 1,
-        }
-        with open(os.path.join(index_dir, "stats.json"), "w") as f:
-            json.dump(stats, f)
-    else:
-        with open(os.path.join(index_dir, "stats.json")) as f:
-            stats = json.load(f)
-        if todo:
-            tdict.filter(F.col("partition_id").isin(todo)).repartition(
-                len(todo), "partition_id"
-            ).write.mode("append").partitionBy("partition_id").parquet(
-                os.path.join(index_dir, "terms")
-            )
-
-    if todo:
-        part_filter = F.col("partition_id").isin(todo)
-        if impl == "combine":
-            slices = build_slices_combine(
-                enriched, tdict, stats["n_docs"], stats["max_doc_id"], n_partitions=n_partitions
-            ).filter(part_filter)
-        else:
-            slices = build_slices(
-                pdl, tdict, stats["n_docs"], stats["max_doc_id"], n_partitions=n_partitions
-            ).filter(part_filter)
-        # blobs are compact post-encode; one extra small shuffle buys a
-        # clean one-file-per-storage-partition layout for query pruning
-        slices.repartition(len(todo), "partition_id").write.mode("append").partitionBy(
-            "partition_id"
-        ).parquet(os.path.join(index_dir, "segments"))
-        if impl != "combine":
-            pdl.unpersist()
-        tdict.unpersist()
-        # per-partition counters from the committed data (ground truth)
-        seg = spark.read.parquet(os.path.join(index_dir, "segments")).filter(
-            F.col("partition_id").isin(todo)
-        )
-        cat = seg.groupBy("partition_id").agg(
-            F.countDistinct("term").alias("n_terms"),
-            F.sum("df_slice").alias("n_postings"),
-            F.sum(F.length("blob")).alias("bytes"),
-        ).select(
-            F.concat(F.lit("seg-"), F.col("partition_id").cast("string")).alias("segment_id"),
-            "partition_id",
-            "n_terms",
-            "n_postings",
-            "bytes",
-            F.lit(epoch).cast("int").alias("checkpoint_epoch"),
-            F.lit(f"build@epoch={epoch};src=corpus").alias("lineage"),
-        )
-        cat.write.mode("append").parquet(_catalog_path(index_dir))
-    enriched.unpersist()
-
-    return {
-        "built_partitions": todo,
-        "skipped_partitions": sorted(done),
-        "elapsed_sec": time.perf_counter() - t0,
         **stats,
     }
 

@@ -13,6 +13,9 @@ from pyspark.sql import SparkSession
 
 from .config import DEFAULT_SHUFFLE_PARTITIONS
 
+# the directory holding the contextinator_spark package
+_CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "contextinator-spark",
@@ -84,6 +87,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_mem))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # Python workers must import the engine whatever the driver's cwd;
+        # Spark merges this with the workers' inherited PYTHONPATH
+        .config("spark.executorEnv.PYTHONPATH", _CHECKOUT)
     )
     # shuffle/spill on tmpfs when available: the sandbox's /tmp sits on a
     # virtualized disk with bursty hypervisor IO (measured 2-3× run-to-run

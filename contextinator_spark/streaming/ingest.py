@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import INDEX_PARTITIONS
-from ..operators.segments import build_slices, term_dictionary
+from ..operators.segments import build_slices_fused, sampled_heavy_fanout
 from .. import schemas
 
 _DELTA_SUBDIRS = ("doc_meta", "segments", "terms_delta")
@@ -163,14 +163,12 @@ def apply_ingest_batch(
     from pyspark.sql import Observation
 
     from ..functions.tokenize import token_count_udf
-    from ..operators.segments import postings_with_dl
 
     # fresh read per batch: earlier micro-batches already moved the stats
     with open(os.path.join(index_dir, "stats.json")) as f:
         stats = json.load(f)
-    # a posting_format=2 store gets format-2 delta blobs via the SAME
-    # fused tokenize+combine kernel write_index uses (build_slices_fused)
-    # — positions ride the identical salting/shuffle/merge, so phrase/NEAR
+    # delta blobs take the store's posting format; a format-2 store's
+    # positions ride the same salting/shuffle/merge, so phrase/NEAR
     # probes decode delta slices exactly like base slices
     positions = int(stats.get("posting_format", 1)) == 2
     # replay guard (foreachBatch is at-least-once): last_batch_id is
@@ -206,30 +204,22 @@ def apply_ingest_batch(
     total_terms = int(stats.get("total_terms", 0)) + int(g["total_terms"])
     max_doc_id = max(int(stats["max_doc_id"]), int(g["max_doc_id"]))
 
-    # (2) delta slices, salted with the MERGED stats so range slicing
-    # of new doc_ids beyond the base max_doc_id stays spread
-    if positions:
-        from ..operators.segments import build_slices_fused, sampled_heavy_fanout
-
-        # heavy detection over the batch alone (exact for small batches —
-        # k=1 below HEAVY_SAMPLE_TARGET); a batch-local threshold only
-        # OVER-salts relative to the merged-collection threshold, which
-        # costs extra slice rows, never correctness
-        hv = sampled_heavy_fanout(
-            batch_df.select(F.col(id_col), "content"), id_col, int(g["n_docs"])
-        )
-        # avgdl=None: delta kth_tfnorm is null — the θ shortcut is already
-        # invalidated by the delta's avgdl change, so impact metadata on
-        # delta slices would be dead weight until compaction refreshes it
-        slices = build_slices_fused(
-            batch_df, hv, max_doc_id, avgdl=None,
-            n_partitions=n_partitions, id_col=id_col, positions=True,
-        )
-    else:
-        pdl = postings_with_dl(batch_df, id_col=id_col)
-        tdict = term_dictionary(pdl, n_partitions)
-        slices = build_slices(pdl, tdict, n_docs, max_doc_id, n_partitions=n_partitions)
-    slices = slices.withColumn(
+    # (2) delta slices through the fused kernel write_index uses, range-
+    # salted against the MERGED max_doc_id so new doc_ids beyond the base
+    # max stay spread. Heavy detection runs over the batch alone (exact
+    # for small batches — k=1 below HEAVY_SAMPLE_TARGET); a batch-local
+    # threshold only OVER-salts relative to the merged-collection one,
+    # which costs extra slice rows, never correctness
+    hv = sampled_heavy_fanout(
+        batch_df.select(F.col(id_col), "content"), id_col, int(g["n_docs"])
+    )
+    # avgdl=None: delta kth_tfnorm is null — the θ shortcut is already
+    # invalidated by the delta's avgdl change, so impact metadata on
+    # delta slices would be dead weight until compaction refreshes it
+    slices = build_slices_fused(
+        batch_df, hv, max_doc_id, avgdl=None,
+        n_partitions=n_partitions, id_col=id_col, positions=positions,
+    ).withColumn(
         # epoch-shift keeps delta slice_ids disjoint from any base
         # slice_id (which is < MAX_SALT_FANOUT) and from other epochs
         "slice_id",
@@ -238,18 +228,16 @@ def apply_ingest_batch(
     slices.write.mode("overwrite").partitionBy("partition_id").parquet(
         os.path.join(staging, "segments")
     )
-    # delta rows for the dictionary (df/cf additive; readers aggregate).
-    # Derived from the STAGED slices (exact sums over written bytes) —
-    # the fused path never materializes a separate term dictionary.
-    if positions:
-        tdict = (
-            batch_df.sparkSession.read.parquet(os.path.join(staging, "segments"))
-            .groupBy("term", "partition_id")
-            .agg(F.sum("df_slice").alias("df"), F.sum("cf_slice").alias("cf"))
-            .select("term", "df", "cf", "partition_id")
-        )
-    tdict.write.mode("overwrite").partitionBy("partition_id").parquet(
-        os.path.join(staging, "terms_delta")
+    # delta rows for the dictionary (df/cf additive; readers aggregate),
+    # exact sums over the STAGED slices, as write_index derives terms/
+    (
+        batch_df.sparkSession.read.parquet(os.path.join(staging, "segments"))
+        .groupBy("term", "partition_id")
+        .agg(F.sum("df_slice").alias("df"), F.sum("cf_slice").alias("cf"))
+        .select("term", "df", "cf", "partition_id")
+        .write.mode("overwrite")
+        .partitionBy("partition_id")
+        .parquet(os.path.join(staging, "terms_delta"))
     )
 
     # (3) publish: move staged files into the live tree under

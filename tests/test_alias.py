@@ -99,6 +99,10 @@ def test_cli_alias_verb_end_to_end(capsys, spark, stores, tmp_path):
     )
     rec = json.loads(out[0])
     assert rec["was"] == os.path.abspath(stores["a"])
+    # a swap with no target must fail loudly, not fall through to a show
+    with pytest.raises(SystemExit, match="--swap requires --target"):
+        run_cli(capsys, spark, "alias", "--alias", a, "--swap")
+    assert read_alias(a) == os.path.abspath(stores["b"])
     rows = run_cli(
         capsys, spark, "--format", "text", "count", "--index", a,
         "--query", "merge",

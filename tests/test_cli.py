@@ -866,6 +866,35 @@ def test_cli_rankeval_verb(capsys, spark, index_dir):
     assert all(0.0 <= float(v) <= 1.0 for v in got.values())
 
 
+def test_cli_match_set_verbs_tokenize_query(capsys, spark, index_dir):
+    """rankeval, pctl and xstats tokenize the query like every other verb:
+    a mixed-case query answers exactly as its lowercase form."""
+    top = [
+        json.loads(l)["doc_id"]
+        for l in run_cli(
+            capsys, spark, "query", "--index", index_dir,
+            "--query", "spark hash", "--k", "3",
+        )
+    ]
+    assert top
+    verbs = {
+        "rankeval": ["--relevant", ",".join(map(str, top)), "--k", "5"],
+        "pctl": ["--pcts", "0.5,0.9"],
+        "xstats": [],
+    }
+    for verb, extra in verbs.items():
+        want, got = (
+            run_cli(
+                capsys, spark, "--format", "text", verb,
+                "--index", index_dir, "--query", q, *extra,
+            )
+            for q in ("spark hash", "Spark HASH")
+        )
+        assert want and got == want, verb
+        if verb == "rankeval":
+            assert float(dict(l.split() for l in got)["mrr"]) == 1.0
+
+
 def test_cli_count_approx_and_datehisto(capsys, spark, index_dir):
     exact = int(run_cli(
         capsys, spark, "--format", "text", "count",

@@ -11,16 +11,26 @@ from contextinator_spark.operators import bm25_segments, segments as S
 from contextinator_spark.streaming.ingest import start_incremental_ingest
 
 
+def _rows(df):
+    return [(r["rank"], r["doc_id"], r["score"]) for r in df.collect()]
+
+
 def _topk(spark, index_dir, terms, **kw):
-    res = bm25_segments.topk_segments(spark, index_dir, terms, k=10, **kw)
-    return [(r["rank"], r["doc_id"], r["score"]) for r in res.collect()]
+    return _rows(bm25_segments.topk_segments(spark, index_dir, terms, k=10, **kw))
 
 
-def test_incremental_ingest_matches_batch(spark, corpus, tmp_path_factory):
+@pytest.mark.parametrize("positions", [False, True], ids=["format1", "format2"])
+def test_incremental_ingest_matches_batch(spark, corpus, tmp_path_factory, positions):
     """After a streamed delta, the index must be RANK-IDENTICAL to a fresh
-    full-corpus rebuild: same top-k docIDs AND same BM25 scores. This pins
+    full-corpus rebuild in the same posting format: same top-k docIDs AND
+    same BM25 scores (plus phrase and NEAR on a positions store). This pins
     that ingest.py maintains doc_meta + stats (n_docs/avgdl/max_doc_id), not
     just retrievability — stale stats would shift idf/avgdl and diverge."""
+    from contextinator_spark.operators.phrase import (
+        near_topk_indexed,
+        phrase_topk_indexed,
+    )
+
     base_dir = str(tmp_path_factory.mktemp("stream_idx"))
     fresh_dir = str(tmp_path_factory.mktemp("fresh_idx"))
     drop_dir = str(tmp_path_factory.mktemp("stream_drops"))
@@ -30,7 +40,7 @@ def test_incremental_ingest_matches_batch(spark, corpus, tmp_path_factory):
     first, second = c.filter(F.col("doc_id") % 2 == 0), c.filter(F.col("doc_id") % 2 == 1)
 
     # base index from the first half (batch path)
-    S.write_index(spark, first, base_dir)
+    S.write_index(spark, first, base_dir, positions=positions)
     # second half arrives as a streamed drop
     second.select("doc_id", "repo", "path", "commit", "lang", "content").write.parquet(
         f"{drop_dir}/drop1"
@@ -39,14 +49,14 @@ def test_incremental_ingest_matches_batch(spark, corpus, tmp_path_factory):
     q.awaitTermination(120)
 
     # reference: a fresh batch build over the FULL corpus
-    S.write_index(spark, c, fresh_dir)
+    S.write_index(spark, c, fresh_dir, positions=positions)
 
     # 1) merged stats == fresh stats (idf/avgdl inputs identical)
     with open(f"{base_dir}/stats.json") as f:
         merged = json.load(f)
     with open(f"{fresh_dir}/stats.json") as f:
         fresh = json.load(f)
-    for key in ("n_docs", "avgdl", "max_doc_id", "total_terms"):
+    for key in ("n_docs", "avgdl", "max_doc_id", "total_terms", "posting_format"):
         assert merged[key] == fresh[key], key
 
     # 2) doc_meta covers streamed docs (J4 enrichment)
@@ -84,6 +94,17 @@ def test_incremental_ingest_matches_batch(spark, corpus, tmp_path_factory):
             want = _topk(spark, fresh_dir, terms, prune=prune)
             assert got == want, f"terms={terms} prune={prune}\n{got}\nvs\n{want}"
         assert got, f"no results for {terms}"
+
+    # 4) phrase + NEAR, the format-2 payload
+    if positions:
+        for terms in (["def"], ["import", "os"]):
+            got = _rows(phrase_topk_indexed(spark, base_dir, terms, k=10))
+            want = _rows(phrase_topk_indexed(spark, fresh_dir, terms, k=10))
+            assert got == want, f"phrase {terms}\n{got}\nvs\n{want}"
+        gotn = _rows(near_topk_indexed(spark, base_dir, ["def", "return"], 8, k=10))
+        wantn = _rows(near_topk_indexed(spark, fresh_dir, ["def", "return"], 8, k=10))
+        assert gotn == wantn
+        assert gotn, "NEAR query returned nothing — probe corpus mismatch"
 
     shutil.rmtree(base_dir, ignore_errors=True)
     shutil.rmtree(fresh_dir, ignore_errors=True)
@@ -170,63 +191,6 @@ def test_clean_uncommitted_spares_ingest_deltas(tmp_path):
     assert os.path.exists(f"{pdir}/ingest-b2-0.parquet")
 
 
-def test_incremental_ingest_positions_matches_batch(spark, corpus, tmp_path_factory):
-    """Positional twin of test_incremental_ingest_matches_batch: streaming
-    format-2 delta blobs into a positions store must leave phrase, NEAR and
-    BM25 queries rank-identical (incl. scores) to a fresh full-corpus
-    write_index(positions=True) build — the round-4 loud refusal replaced
-    by a working path."""
-    from contextinator_spark.operators.phrase import (
-        near_topk_indexed,
-        phrase_topk_indexed,
-    )
-
-    base_dir = str(tmp_path_factory.mktemp("pstream_idx"))
-    fresh_dir = str(tmp_path_factory.mktemp("pfresh_idx"))
-    drop_dir = str(tmp_path_factory.mktemp("pstream_drops"))
-    ckpt = str(tmp_path_factory.mktemp("pstream_ckpt"))
-
-    c = corpus.withColumn("doc_id", F.pmod(F.xxhash64("repo", "path"), F.lit(2**61)))
-    first, second = c.filter(F.col("doc_id") % 2 == 0), c.filter(F.col("doc_id") % 2 == 1)
-
-    S.write_index(spark, first, base_dir, positions=True)
-    second.select("doc_id", "repo", "path", "commit", "lang", "content").write.parquet(
-        f"{drop_dir}/drop1"
-    )
-    q = start_incremental_ingest(spark, f"{drop_dir}/*", base_dir, ckpt)
-    q.awaitTermination(120)
-    S.write_index(spark, c, fresh_dir, positions=True)
-
-    with open(f"{base_dir}/stats.json") as f:
-        merged = json.load(f)
-    with open(f"{fresh_dir}/stats.json") as f:
-        fresh = json.load(f)
-    for key in ("n_docs", "avgdl", "max_doc_id", "total_terms", "posting_format"):
-        assert merged[key] == fresh[key], key
-
-    def rows(df):
-        return [(r["rank"], r["doc_id"], r["score"]) for r in df.collect()]
-
-    # phrase + NEAR (the format-2 payload) and plain BM25 on the same store
-    for terms in (["def"], ["import", "os"]):
-        got = rows(phrase_topk_indexed(spark, base_dir, terms, k=10))
-        want = rows(phrase_topk_indexed(spark, fresh_dir, terms, k=10))
-        assert got == want, f"phrase {terms}\n{got}\nvs\n{want}"
-    gotn = rows(near_topk_indexed(spark, base_dir, ["def", "return"], 8, k=10))
-    wantn = rows(near_topk_indexed(spark, fresh_dir, ["def", "return"], 8, k=10))
-    assert gotn == wantn
-    assert gotn, "NEAR query returned nothing — probe corpus mismatch"
-    for prune in (True, False):
-        assert _topk(spark, base_dir, ["def", "import"], prune=prune) == _topk(
-            spark, fresh_dir, ["def", "import"], prune=prune
-        )
-
-    shutil.rmtree(base_dir, ignore_errors=True)
-    shutil.rmtree(fresh_dir, ignore_errors=True)
-    shutil.rmtree(drop_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-
-
 def test_tiered_compact_loop(spark, corpus, tmp_path_factory):
     """Repeated ingest → tiered-compact cycles on a positions store:
     bounded unit counts, bounded bytes rewritten per cycle (base never
@@ -284,15 +248,12 @@ def test_tiered_compact_loop(spark, corpus, tmp_path_factory):
                 spark, fresh_dir, terms, prune=prune
             ), terms
 
-    def rows(df):
-        return [(r["rank"], r["doc_id"], r["score"]) for r in df.collect()]
-
-    assert rows(phrase_topk_indexed(spark, base_dir, ["def"], k=10)) == rows(
+    assert _rows(phrase_topk_indexed(spark, base_dir, ["def"], k=10)) == _rows(
         phrase_topk_indexed(spark, fresh_dir, ["def"], k=10)
     )
-    assert rows(
+    assert _rows(
         near_topk_indexed(spark, base_dir, ["def", "return"], 8, k=10)
-    ) == rows(near_topk_indexed(spark, fresh_dir, ["def", "return"], 8, k=10))
+    ) == _rows(near_topk_indexed(spark, fresh_dir, ["def", "return"], 8, k=10))
 
     shutil.rmtree(base_dir, ignore_errors=True)
     shutil.rmtree(fresh_dir, ignore_errors=True)
