@@ -79,13 +79,17 @@ INDEX_PARTITIONS = 128
 # stage so scoring spreads across all cores; below it the extra shuffle
 # costs more than it buys.
 QUERY_REPARTITION_MIN_DF = 50_000
-# scatter-gather short-circuit: when the matched posting volume is at most
-# this, the latency executor collects the pruned blobs (≈ 6 bytes/posting
-# → ~1 MB here) and computes the exact top-k in numpy on the driver — one
-# Spark job fetching a few MB beats a distributed scan whose task/shuffle
-# overhead dwarfs the work (Lucene executes a whole query on one node for
-# the same reason). Results are bit-identical: same decode/score kernels,
-# same tie-break.
+# driver-read short-circuit, the one gate for every small single query: at
+# most this many postings are read on the driver with pyarrow (≈ 6
+# bytes/posting → ~1 MB here) and scored and ranked in numpy, with no
+# Spark job — a driver read of a few MB beats a distributed scan whose
+# job/task/shuffle overhead dwarfs the work (Lucene executes a whole query
+# on one node for the same reason). BM25 top-k (topk_segments) and its
+# one-term θ fetch gate on the query terms' Σdf, Boolean's rare-MUST
+# candidate fetch on that term's df; the positional top-k (phrase,
+# multiphrase, span-first, span-near) gates on the slot terms' Σcf, since
+# the driver then holds every position. Results equal the Spark plan's:
+# same decode/score kernels, same tie-break.
 DRIVER_TOPK_MAX_DF = 131_072
 
 # Largest tombstone (deleted-docs) set the query path will collect, sort

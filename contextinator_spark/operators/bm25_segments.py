@@ -3,9 +3,17 @@
 Query trace (mirrors the reference flow semantic_search.py:39-114,
 re-expressed over the segment store):
 
-  query terms → dictionary probe (partition-pruned scan of terms/)
-             → partition-pruned scan of segments/ (only the query terms'
-               partition_ids reach the parquet reader: PushedFilters)
+  query terms → dictionary probe (the query terms' terms/ and
+               terms_delta/ partition directories, read on the driver
+               with pyarrow — no Spark job)
+             → small candidate sets (Σdf ≤ DRIVER_TOPK_MAX_DF): the pruned
+               blobs are read on the driver the same way and scored and
+               ranked in numpy; the result is a LocalRelation — zero
+               Spark jobs end to end (_topk_driver)
+             → otherwise: partition-pruned scan of segments/ (_segments:
+               schema pinned to schemas.SEGMENTS, so no inference job;
+               only the query terms' partition_ids reach the parquet
+               reader: PushedFilters)
              → Arrow UDF per slice: decode blob → exact BM25 partial scores
                (doc_len from the blob; N/avgdl broadcast as literals)
                with block-max pruning against a threshold θ
@@ -25,12 +33,15 @@ and decreasing in dl, so the corner is a valid bound).
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -45,6 +56,7 @@ from ..config import (
     SCORE_ROUND_DECIMALS,
     TOMBSTONE_BROADCAST_MAX,
 )
+from ..schemas import SEGMENTS
 from .deletes import live_mask, member_mask
 
 # Batch-executor qid-chunking: bound the (qids × postings) broadcast temp in
@@ -149,13 +161,17 @@ def _terms_version(index_dir: str) -> tuple:
 
 
 def _terms_df(spark: SparkSession, index_dir: str) -> DataFrame:
-    """The dictionary, cached in executor memory per index version.
+    """The whole dictionary as a DataFrame, cached in executor memory per
+    index version, for the scans that cannot be pruned to a few
+    partitions: the multi-term rewrites (expand_*, complete_terms,
+    suggest_terms) and the phrase operators' dictionary passes.
 
     The term dictionary is vocabulary-sized (≪ postings — this is the part
-    a Lucene-style engine pins in RAM), so persisting it turns every
-    query's probe from a parquet listing + footer + scan into an
-    InMemoryRelation scan with partition-stat pruning. Keyed on directory
-    mtimes so resume epochs and streaming deltas self-invalidate."""
+    a Lucene-style engine pins in RAM), so persisting it turns each such
+    scan from a parquet listing + footer + scan into an InMemoryRelation
+    scan. Keyed on directory mtimes so resume epochs and streaming deltas
+    self-invalidate. probe_dictionary does not use it: an exact-term probe
+    reads its few partition directories on the driver."""
     from pyspark.storagelevel import StorageLevel
 
     ver = _terms_version(index_dir)
@@ -181,15 +197,87 @@ def _terms_df(spark: SparkSession, index_dir: str) -> DataFrame:
     return df
 
 
+# the dictionary's columns as the driver reads them; a file that lacks one
+# (terms_delta/ carries no kth_tfnorm) reads it as null
+_DICT_SCHEMA = pa.schema(
+    [("term", pa.string()), ("df", pa.int64()), ("cf", pa.int64()), ("kth_tfnorm", pa.float64())]
+)
+_BLOB_SCHEMA = pa.schema([("term", pa.string()), ("blob", pa.binary())])
+_TOPK_SCHEMA = pa.schema([("rank", pa.int32()), ("doc_id", pa.int64()), ("score", pa.float64())])
+
+
+def _read_partitions(
+    index_dir: str, sub: str, pids: list[int], terms: list[str], schema: pa.Schema
+) -> pa.Table:
+    """The rows of `sub`/partition_id=<p> (p in pids) whose term is in
+    `terms`, read on the driver with pyarrow, plus their partition_id.
+
+    No Spark job: a query touches a few partition directories, and the
+    jobs that read them cost more than the reads (mostly scheduling: about
+    an eighth of their time was executor CPU). pyarrow skips `_`- and
+    `.`-prefixed files as spark.read.parquet does, so both see the same
+    part files (base build, ingest-b*, tiered-t*). The term filter applies
+    to each row group as it is read, so the driver transiently holds a few
+    row groups of a partition file; what it keeps is bounded by the caller
+    (DRIVER_TOPK_MAX_DF for blobs)."""
+    wanted = ds.field("term").isin(pa.array(terms, pa.string()))
+    parts = []
+    for pid in pids:
+        path = os.path.join(index_dir, sub, f"partition_id={pid}")
+        if not os.path.isdir(path):
+            continue
+        t = ds.dataset(path, schema=schema, format="parquet").to_table(filter=wanted)
+        parts.append(t.append_column("partition_id", pa.array(np.full(t.num_rows, pid, np.int32))))
+    if not parts:
+        return schema.append(pa.field("partition_id", pa.int32())).empty_table()
+    return pa.concat_tables(parts)
+
+
+def _local_frame(
+    spark: SparkSession, rows: list[tuple], schema: "pa.Schema | str"
+) -> DataFrame:
+    """A driver-side result (or an empty one) as a DataFrame that runs no
+    Spark job. `schema` is an Arrow schema or a Spark DDL string.
+
+    The rows go to createDataFrame as an Arrow table, which becomes a
+    LocalRelation; collecting it reads the rows back on the driver. A
+    Python list is pickled through a Python RDD instead (one job, 0.3-0.5 s
+    even for no rows), and so is an empty pandas frame."""
+    if isinstance(schema, str):
+        schema = _arrow_schema(schema)
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=schema)
+    return spark.createDataFrame(table)
+
+
+@functools.lru_cache(maxsize=128)
+def _arrow_schema(ddl: str) -> pa.Schema:
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    return to_arrow_schema(StructType.fromDDL(ddl))
+
+
+def _segments(spark: SparkSession, index_dir: str) -> DataFrame:
+    """segments/ as a DataFrame, its schema pinned to schemas.SEGMENTS.
+
+    A schema-less spark.read.parquet runs a one-task job to infer the
+    schema from a footer (about 0.1 s warm) on every call; every executor
+    reads segments/ at least once per query."""
+    return spark.read.schema(SEGMENTS).parquet(os.path.join(index_dir, "segments"))
+
+
 def probe_dictionary(
     spark: SparkSession, index_dir: str, terms: list[str], n_partitions: int | None = None
 ) -> dict[str, dict]:
-    """term → {df, cf, partition_id}; partition-pruned scan of the cached
-    dictionary (_terms_df).
+    """term → {df, cf, partition_id, kth_tfnorm} for the terms the store
+    holds, summed over terms/ and its streaming deltas (terms_delta/).
 
     partition_ids are computed driver-side with the pure-Python XXH64 twin
-    (functions/xxhash.py, Spark-identical by test) — zero Spark jobs spent
-    on pruning; the only job is the pruned in-memory/parquet read itself.
+    (functions/xxhash.py, Spark-identical by test), and only those
+    partition directories are read, on the driver (_read_partitions): the
+    probe runs no Spark job. kth_tfnorm is the max over the files that
+    carry it, None when none does. `spark` is unused, kept so every
+    executor calls the probe the same way.
     """
     from ..functions.xxhash import term_partition
 
@@ -197,25 +285,20 @@ def probe_dictionary(
         n_partitions = _layout_partitions(index_dir)
     terms = sorted(set(terms))
     pids = sorted({term_partition(t, n_partitions) for t in terms})
-    base = _terms_df(spark, index_dir)
-    has_impact = "kth_tfnorm" in base.columns
-    aggs = [F.sum("df").alias("df"), F.sum("cf").alias("cf")]
-    if has_impact:
-        aggs.append(F.max("kth_tfnorm").alias("kth_tfnorm"))
-    tdict = (
-        base.filter(F.col("partition_id").isin(pids) & F.col("term").isin(terms))
-        .groupBy("term", "partition_id")
-        .agg(*aggs)
-        .collect()
+    rows = pa.concat_tables(
+        [_read_partitions(index_dir, sub, pids, terms, _DICT_SCHEMA) for sub in ("terms", "terms_delta")]
+    )
+    agg = rows.group_by(["term", "partition_id"]).aggregate(
+        [("df", "sum"), ("cf", "sum"), ("kth_tfnorm", "max")]
     )
     return {
         r["term"]: {
-            "df": r["df"],
-            "cf": r["cf"],
+            "df": r["df_sum"],
+            "cf": r["cf_sum"],
             "partition_id": r["partition_id"],
-            "kth_tfnorm": r["kth_tfnorm"] if has_impact else None,
+            "kth_tfnorm": r["kth_tfnorm_max"],
         }
-        for r in tdict
+        for r in agg.to_pylist()
     }
 
 
@@ -255,7 +338,7 @@ def _term_impact_sketch(
     pids = sorted({info[t]["partition_id"] for t in info})
     need = sorted(info)
     segb = (
-        spark.read.parquet(os.path.join(index_dir, "segments"))
+        _segments(spark, index_dir)
         .filter(F.col("partition_id").isin(pids) & F.col("term").isin(need))
         .select("term", "blob", "block_max")
     )
@@ -344,9 +427,9 @@ def topk_segments(
     apply.
 
     Small candidate sets (Σdf ≤ DRIVER_TOPK_MAX_DF) short-circuit to a
-    driver-side scatter-gather: one job collects the pruned blobs, numpy
-    scores and ranks exactly — identical results (tested), a fraction of
-    the latency. driver_path=False forces the distributed plan.
+    driver-side scatter-gather: the driver reads the pruned blobs, numpy
+    scores and ranks exactly — identical results (tested), no Spark job.
+    driver_path=False forces the distributed plan.
 
     `scope` restricts the ranking to a doc_id subset (Lucene FILTER
     clause: idf/df stay GLOBAL, so in-scope docs keep their unscoped
@@ -362,7 +445,7 @@ def topk_segments(
     info = probe_dictionary(spark, index_dir, terms, n_partitions)
     matched = sorted(info)
     if not matched:
-        return spark.createDataFrame([], "rank int, doc_id long, score double")
+        return _local_frame(spark, [], _TOPK_SCHEMA)
 
     # live-docs (deletes.py): n/avgdl/df stay at build-time values until
     # compaction (Lucene semantics — surviving docs keep identical scores);
@@ -372,7 +455,7 @@ def topk_segments(
     if scope is not None:
         if isinstance(scope, np.ndarray):
             if scope.size == 0:
-                return spark.createDataFrame([], "rank int, doc_id long, score double")
+                return _local_frame(spark, [], _TOPK_SCHEMA)
             scope_bc = spark.sparkContext.broadcast(np.sort(scope))
         else:
             scope_over = scope.select("doc_id")
@@ -434,7 +517,7 @@ def topk_segments(
         rest_sk = {t: total_sk - sketches[t][1] for t in matched}
 
     pids = sorted({info[t]["partition_id"] for t in matched})
-    seg = spark.read.parquet(os.path.join(index_dir, "segments")).filter(
+    seg = _segments(spark, index_dir).filter(
         F.col("partition_id").isin(pids) & F.col("term").isin(matched)
     )
     seg = _spread_slices(seg, spark, total_df)
@@ -629,7 +712,7 @@ def _distributed_term_kth(
     reaches the driver (the collect is |need| rows)."""
     pids = sorted({info[t]["partition_id"] for t in need})
     segb = (
-        spark.read.parquet(os.path.join(index_dir, "segments"))
+        _segments(spark, index_dir)
         .filter(F.col("partition_id").isin(pids) & F.col("term").isin(need))
         .select("term", "blob")
     )
@@ -706,7 +789,7 @@ def topk_segments_multi(
     info = probe_dictionary(spark, index_dir, all_terms, n_partitions)
     matched = sorted(info)
     if not matched:
-        return spark.createDataFrame([], "query_id int, rank int, doc_id long, score double")
+        return _local_frame(spark, [], "query_id int, rank int, doc_id long, score double")
     tomb_bc, tomb_over = _tombstones(spark, index_dir)
     idf = {t: _idf(float(info[t]["df"]), n) for t in matched}
     term_queries = {
@@ -752,7 +835,7 @@ def topk_segments_multi(
     }
 
     pids = sorted({info[t]["partition_id"] for t in matched})
-    seg = spark.read.parquet(os.path.join(index_dir, "segments")).filter(
+    seg = _segments(spark, index_dir).filter(
         F.col("partition_id").isin(pids) & F.col("term").isin(matched)
     )
     seg = _spread_slices(seg, spark, total_df)
@@ -925,22 +1008,18 @@ def _topk_driver(
     scope_bc=None,
     after: tuple[float, int] | None = None,
 ) -> DataFrame:
-    """Scatter-gather execution for small candidate sets: fetch the pruned
-    blobs in one job, decode/score/rank with the SAME kernels as the
-    distributed path (bit-identical output by construction)."""
+    """Scatter-gather execution for small candidate sets: read the pruned
+    blobs on the driver (_read_partitions), decode/score/rank with the SAME
+    kernels as the distributed path (bit-identical output by construction)
+    and return the top-k as a LocalRelation — no Spark job at all."""
     matched = sorted(info)
     pids = sorted({info[t]["partition_id"] for t in matched})
-    rows = (
-        spark.read.parquet(os.path.join(index_dir, "segments"))
-        .filter(F.col("partition_id").isin(pids) & F.col("term").isin(matched))
-        .select("term", "blob")
-        .collect()
-    )
+    rows = _read_partitions(index_dir, "segments", pids, matched, _BLOB_SCHEMA)
     from .compress import decode_postings
 
     docs_all, scores_all = [], []
-    for r in rows:
-        doc_ids, tfs, dls = decode_postings(bytes(r["blob"]))
+    for term, blob in zip(rows.column("term").to_pylist(), rows.column("blob").to_pylist()):
+        doc_ids, tfs, dls = decode_postings(blob)
         if tomb_bc is not None and doc_ids.size:
             mask = live_mask(doc_ids, tomb_bc.value)
             doc_ids, tfs, dls = doc_ids[mask], tfs[mask], dls[mask]
@@ -951,11 +1030,11 @@ def _topk_driver(
             continue
         docs_all.append(doc_ids)
         scores_all.append(
-            idf[r["term"]]
+            idf[term]
             * _tf_norm(tfs.astype(np.float64), dls.astype(np.float64), avgdl, k1, b)
         )
     if not docs_all:
-        return spark.createDataFrame([], "rank int, doc_id long, score double")
+        return _local_frame(spark, [], _TOPK_SCHEMA)
     docs = np.concatenate(docs_all)
     scores = np.concatenate(scores_all)
     uniq, inv = np.unique(docs, return_inverse=True)
@@ -966,14 +1045,16 @@ def _topk_driver(
         s_a, d_a = float(after[0]), int(after[1])
         keep = (totals < s_a) | ((totals == s_a) & (uniq > d_a))
         uniq, totals = uniq[keep], totals[keep]
-        if uniq.size == 0:
-            return spark.createDataFrame([], "rank int, doc_id long, score double")
-    # (score desc, doc_id asc) — identical tiebreak to the Window path
-    order = np.lexsort((uniq, -totals))[: min(k, uniq.size)]
-    out = [
-        (i + 1, int(uniq[j]), float(totals[j])) for i, j in enumerate(order)
-    ]
-    return spark.createDataFrame(out, "rank int, doc_id long, score double")
+    return _topk_frame(spark, uniq, totals, k)
+
+
+def _topk_frame(spark: SparkSession, docs: np.ndarray, scores: np.ndarray, k: int) -> DataFrame:
+    """(rank, doc_id, score) of the k best driver-side (doc, rounded score)
+    pairs as a LocalRelation, in (score desc, doc_id asc) order — the
+    same tiebreak as the Window path."""
+    order = np.lexsort((docs, -scores))[: min(k, docs.size)]
+    out = [(i + 1, int(docs[j]), float(scores[j])) for i, j in enumerate(order)]
+    return _local_frame(spark, out, _TOPK_SCHEMA)
 
 
 def _theta_from_best_term(
@@ -1004,9 +1085,10 @@ def _theta_from_best_term(
     bound), and no θ job runs at all.
 
     These single-term scores are lower bounds on total scores, so the k-th
-    largest is a valid (conservative) threshold. Costs one pruned scan of
-    one term's slices — and the chosen term is the highest-idf (RAREST)
-    one, so its posting list is the smallest in the query.
+    largest is a valid (conservative) threshold. Costs a driver-side read
+    of one term's slices (_read_partitions, no Spark job) — and the chosen
+    term is the highest-idf (RAREST) one, so its posting list is the
+    smallest in the query.
 
     A rounding-quantum margin (10^-SCORE_ROUND_DECIMALS) is subtracted so a
     pruned doc can never tie the k-th kept doc after 6-decimal rounding and
@@ -1035,18 +1117,14 @@ def _theta_from_best_term(
             tomb_bc=tomb_bc, scope_bc=scope_bc,
         ).get(best, 0.0)
         return max(0.0, kth - 10.0 ** (-SCORE_ROUND_DECIMALS))
-    pid = info[best]["partition_id"]
-    rows = (
-        spark.read.parquet(os.path.join(index_dir, "segments"))
-        .filter((F.col("partition_id") == pid) & (F.col("term") == best))
-        .select("blob")
-        .collect()
-    )
+    blobs = _read_partitions(
+        index_dir, "segments", [info[best]["partition_id"]], [best], _BLOB_SCHEMA
+    ).column("blob")
     from .compress import decode_postings
 
     scores: list[np.ndarray] = []
-    for r in rows:
-        doc_ids, tfs, dls = decode_postings(bytes(r["blob"]))
+    for blob in blobs.to_pylist():
+        doc_ids, tfs, dls = decode_postings(blob)
         if tomb_bc is not None and doc_ids.size:
             mask = live_mask(doc_ids, tomb_bc.value)
             doc_ids, tfs, dls = doc_ids[mask], tfs[mask], dls[mask]
@@ -1316,7 +1394,7 @@ def fuzzy_topk(
         spark, index_dir, term, max_edits, prefix_length, max_expansions
     )
     if not terms:
-        return spark.createDataFrame([], "rank int, doc_id long, score double")
+        return _local_frame(spark, [], "rank int, doc_id long, score double")
     return topk_segments(spark, index_dir, terms, k=k, k1=k1, b=b, **kw)
 
 
@@ -1338,7 +1416,7 @@ def prefix_topk(
     pruning, driver short-circuit) unchanged."""
     terms = expand_prefix(spark, index_dir, prefix, max_expansions)
     if not terms:
-        return spark.createDataFrame([], "rank int, doc_id long, score double")
+        return _local_frame(spark, [], "rank int, doc_id long, score double")
     return topk_segments(spark, index_dir, terms, k=k, k1=k1, b=b, **kw)
 
 
@@ -1355,7 +1433,7 @@ def wildcard_topk(
     """prefix_topk with `*`-wildcard expansion."""
     terms = expand_wildcard(spark, index_dir, pattern, max_expansions)
     if not terms:
-        return spark.createDataFrame([], "rank int, doc_id long, score double")
+        return _local_frame(spark, [], "rank int, doc_id long, score double")
     return topk_segments(spark, index_dir, terms, k=k, k1=k1, b=b, **kw)
 
 
@@ -1374,7 +1452,7 @@ def regexp_topk(
     pruned disjunctive executor contract."""
     terms = expand_regexp(spark, index_dir, pattern, max_expansions)
     if not terms:
-        return spark.createDataFrame([], "rank int, doc_id long, score double")
+        return _local_frame(spark, [], "rank int, doc_id long, score double")
     return topk_segments(spark, index_dir, terms, k=k, k1=k1, b=b, **kw)
 
 
@@ -1409,14 +1487,14 @@ def synonym_topk(
         raise ValueError("synonym set must be non-empty")
     info = probe_dictionary(spark, index_dir, qterms, int(stats["n_partitions"]))
     present = sorted(t for t in qterms if t in info)
-    empty = spark.createDataFrame([], "rank int, doc_id long, score double")
+    empty = _local_frame(spark, [], "rank int, doc_id long, score double")
     if not present:
         return empty
     df_blend = max(float(info[t]["df"]) for t in present)
     tomb_bc, tomb_over = _tombstones(spark, index_dir)
 
     pids = sorted({info[t]["partition_id"] for t in present})
-    seg = spark.read.parquet(os.path.join(index_dir, "segments")).filter(
+    seg = _segments(spark, index_dir).filter(
         F.col("partition_id").isin(pids) & F.col("term").isin(present)
     )
     seg = _spread_slices(seg, spark, sum(int(info[t]["df"]) for t in present))
@@ -1502,7 +1580,7 @@ def scoped_topk_segments(
     )
     n_scope = meta.count()
     if n_scope == 0:
-        return spark.createDataFrame([], "rank int, doc_id long, score double")
+        return _local_frame(spark, [], "rank int, doc_id long, score double")
     if n_scope <= TOMBSTONE_BROADCAST_MAX:
         scope = np.fromiter(
             (r["doc_id"] for r in meta.collect()), dtype=np.int64, count=n_scope
@@ -1532,8 +1610,8 @@ def topk_segments_conjunctive(
     top disjunctive docs usually miss a term), so score-based skipping is
     unsound for AND. The sound conjunctive prune is CANDIDATE-based:
     a result must appear in the rarest term's posting list, so when
-    df(rarest) ≤ DRIVER_TOPK_MAX_DF we decode that one list (pruned
-    single-partition scan), broadcast its sorted doc_ids, and the scan
+    df(rarest) ≤ DRIVER_TOPK_MAX_DF we decode that one list (read on the
+    driver, _read_partitions), broadcast its sorted doc_ids, and the scan
     kernel drops every other term's postings outside it via searchsorted —
     the shuffle then carries O(n_terms · df_rarest) rows instead of Σdf.
     Each (term, doc) pair appears exactly once across a term's disjoint
@@ -1551,10 +1629,10 @@ def topk_segments_conjunctive(
     qterms = sorted(set(terms))
     empty = "rank int, doc_id long, score double"
     if not qterms:
-        return spark.createDataFrame([], empty)
+        return _local_frame(spark, [], empty)
     info = probe_dictionary(spark, index_dir, qterms, n_partitions)
     if len(info) < len(qterms):  # some term matches nothing anywhere
-        return spark.createDataFrame([], empty)
+        return _local_frame(spark, [], empty)
     tomb_bc, tomb_over = _tombstones(spark, index_dir)
     idf = {t: _idf(float(info[t]["df"]), n) for t in qterms}
     n_terms = len(qterms)
@@ -1563,22 +1641,16 @@ def topk_segments_conjunctive(
     if rare_filter and n_terms > 1:
         rarest = min(qterms, key=lambda t: int(info[t]["df"]))
         if int(info[rarest]["df"]) <= DRIVER_TOPK_MAX_DF:
-            rows = (
-                spark.read.parquet(os.path.join(index_dir, "segments"))
-                .filter(
-                    (F.col("partition_id") == info[rarest]["partition_id"])
-                    & (F.col("term") == rarest)
-                )
-                .select("blob")
-                .collect()
-            )
-            ids = [decode_postings(bytes(r["blob"]))[0] for r in rows]
+            blobs = _read_partitions(
+                index_dir, "segments", [info[rarest]["partition_id"]], [rarest], _BLOB_SCHEMA
+            ).column("blob")
+            ids = [decode_postings(blob)[0] for blob in blobs.to_pylist()]
             cand_bc = spark.sparkContext.broadcast(
                 np.sort(np.concatenate(ids)) if ids else np.empty(0, np.int64)
             )
 
     pids = sorted({info[t]["partition_id"] for t in qterms})
-    seg = spark.read.parquet(os.path.join(index_dir, "segments")).filter(
+    seg = _segments(spark, index_dir).filter(
         F.col("partition_id").isin(pids) & F.col("term").isin(qterms)
     )
     seg = _spread_slices(seg, spark, sum(int(info[t]["df"]) for t in qterms))
@@ -1671,7 +1743,7 @@ def explain_topk(
     )
     top_rows = topk_segments(spark, index_dir, terms, k=k, k1=k1, b=b).collect()
     if not top_rows:
-        return spark.createDataFrame([], schema)
+        return _local_frame(spark, [], schema)
     info = probe_dictionary(spark, index_dir, sorted(set(terms)), n_partitions)
     matched = sorted(info)
     idf = {t: _idf(float(info[t]["df"]), n) for t in matched}
@@ -1679,7 +1751,7 @@ def explain_topk(
     docs_bc = spark.sparkContext.broadcast(doc_arr)
 
     pids = sorted({info[t]["partition_id"] for t in matched})
-    seg = spark.read.parquet(os.path.join(index_dir, "segments")).filter(
+    seg = _segments(spark, index_dir).filter(
         F.col("partition_id").isin(pids) & F.col("term").isin(matched)
     )
 
@@ -1710,11 +1782,13 @@ def explain_topk(
     comp = seg.mapInPandas(
         explain_slices, schema="term string, doc_id long, tf int, doc_len int"
     )
-    tdf = spark.createDataFrame(
+    tdf = _local_frame(
+        spark,
         [(t, int(info[t]["df"]), float(idf[t])) for t in matched],
         "term string, df long, idf_raw double",
     )
-    topdf = spark.createDataFrame(
+    topdf = _local_frame(
+        spark,
         [(int(r["rank"]), int(r["doc_id"]), float(r["score"])) for r in top_rows],
         "rank int, doc_id long, score double",
     )
@@ -1754,7 +1828,7 @@ def _matched_docs(
     tomb_bc, tomb_over = _tombstones(spark, index_dir)
 
     pids = sorted({info[t]["partition_id"] for t in matched})
-    seg = spark.read.parquet(os.path.join(index_dir, "segments")).filter(
+    seg = _segments(spark, index_dir).filter(
         F.col("partition_id").isin(pids) & F.col("term").isin(matched)
     )
     seg = _spread_slices(seg, spark, sum(int(info[t]["df"]) for t in matched))
@@ -1799,7 +1873,7 @@ def facet_counts(
     nothing driver-side grows with the corpus."""
     docs = _matched_docs(spark, index_dir, terms, n_partitions)
     if docs is None:
-        return spark.createDataFrame([], f"{facet_col} string, n_docs long")
+        return _local_frame(spark, [], f"{facet_col} string, n_docs long")
     meta = spark.read.parquet(os.path.join(index_dir, "doc_meta")).select(
         "doc_id", facet_col
     )
@@ -1832,7 +1906,7 @@ def facet_stats(
         f"avg_{stats_col} double, max_{stats_col} long"
     )
     if docs is None:
-        return spark.createDataFrame([], empty_schema)
+        return _local_frame(spark, [], empty_schema)
     meta = spark.read.parquet(os.path.join(index_dir, "doc_meta")).select(
         "doc_id", facet_col, stats_col
     )
@@ -1887,7 +1961,7 @@ def significant_terms(
     docs = _matched_docs(spark, index_dir, terms, n_partitions)
     out_schema = "rank int, term string, fg long, df long, score double"
     if docs is None:
-        return spark.createDataFrame([], out_schema)
+        return _local_frame(spark, [], out_schema)
     # Arrow-collect the match set as one sorted int64 array. A match set
     # is query-sized; at truly corpus-sized match sets the swap point is
     # a compressed bitmap broadcast (roaring) — the kernel below only
@@ -1897,14 +1971,14 @@ def significant_terms(
     )
     n_fg = int(fg_ids.size)
     if n_fg == 0:
-        return spark.createDataFrame([], out_schema)
+        return _local_frame(spark, [], out_schema)
     fg_bc = spark.sparkContext.broadcast(fg_ids)
     # under-cap tombstones mask the background dfs kernel-side; over-cap
     # deletes were already excluded from the fg set by _matched_docs, and
     # their residual effect on background df only DEFLATES lift scores
     # until the next compaction purges them (documented, conservative)
     tomb_bc, _tomb_over_df = _tombstones(spark, index_dir)
-    seg = spark.read.parquet(os.path.join(index_dir, "segments")).select(
+    seg = _segments(spark, index_dir).select(
         "term", "blob"
     )
 
@@ -1980,7 +2054,7 @@ def match_count(
     engine-specific — so the graded oracle rides the exact form."""
     docs = _matched_docs(spark, index_dir, terms, n_partitions)
     if docs is None:
-        return spark.createDataFrame([(0,)], "n_docs long")
+        return _local_frame(spark, [(0,)], "n_docs long")
     if approximate:
         return docs.agg(
             F.approx_count_distinct("doc_id", rsd=float(rsd)).alias("n_docs")
@@ -2014,7 +2088,7 @@ def _exact_scored_matches(
     idf_b = {t: _idf(float(info[t]["df"]), n) for t in matched}
 
     pids = sorted({info[t]["partition_id"] for t in matched})
-    seg = spark.read.parquet(os.path.join(index_dir, "segments")).filter(
+    seg = _segments(spark, index_dir).filter(
         F.col("partition_id").isin(pids) & F.col("term").isin(matched)
     )
     seg = _spread_slices(seg, spark, sum(int(info[t]["df"]) for t in matched))
@@ -2081,7 +2155,7 @@ def top_hits(
     )
     scored = _exact_scored_matches(spark, index_dir, terms, k1, b, n_partitions)
     if scored is None:
-        return spark.createDataFrame([], out_schema)
+        return _local_frame(spark, [], out_schema)
     meta = spark.read.parquet(os.path.join(index_dir, "doc_meta")).select(
         "doc_id", group_col
     )
@@ -2112,7 +2186,7 @@ def histogram_agg(
         raise ValueError("interval must be ≥ 1")
     docs = _matched_docs(spark, index_dir, terms, n_partitions)
     if docs is None:
-        return spark.createDataFrame([], "bucket long, n_docs long")
+        return _local_frame(spark, [], "bucket long, n_docs long")
     meta = spark.read.parquet(os.path.join(index_dir, "doc_meta")).select(
         "doc_id", field
     )
@@ -2166,7 +2240,7 @@ def collapse_topk(
     out_schema = f"rank int, {collapse_col} string, doc_id long, score double"
     scored = _exact_scored_matches(spark, index_dir, terms, k1, b, n_partitions)
     if scored is None:
-        return spark.createDataFrame([], out_schema)
+        return _local_frame(spark, [], out_schema)
     meta = spark.read.parquet(os.path.join(index_dir, "doc_meta")).select(
         "doc_id", collapse_col
     )
@@ -2260,10 +2334,10 @@ def term_vectors(
         else "doc_id long, term string, tf int"
     )
     if ids.size == 0:
-        return spark.createDataFrame([], out_schema)
+        return _local_frame(spark, [], out_schema)
     tomb_bc, tomb_over = _tombstones(spark, index_dir)
     ids_bc = spark.sparkContext.broadcast(ids)
-    seg = spark.read.parquet(os.path.join(index_dir, "segments")).select("term", "blob")
+    seg = _segments(spark, index_dir).select("term", "blob")
 
     def probe(pdf_iter):
         from .compress import decode_postings
@@ -2337,7 +2411,7 @@ def percentiles_agg(
             raise ValueError(f"percentile must be in [0, 1], got {p}")
     docs = _matched_docs(spark, index_dir, terms, n_partitions)
     if docs is None:
-        return spark.createDataFrame([], "percentile double, value double")
+        return _local_frame(spark, [], "percentile double, value double")
     meta = spark.read.parquet(os.path.join(index_dir, "doc_meta")).select(
         "doc_id", stats_col
     )
@@ -2351,7 +2425,7 @@ def percentiles_agg(
             )
         )
     )
-    pct_df = spark.createDataFrame([(p, i) for i, p in enumerate(pcts)], "percentile double, i int")
+    pct_df = _local_frame(spark, [(p, i) for i, p in enumerate(pcts)], "percentile double, i int")
     return (
         agg.crossJoin(F.broadcast(pct_df))
         .select(
@@ -2382,7 +2456,7 @@ def extended_stats(
         f"var_{stats_col} double, std_{stats_col} double"
     )
     if docs is None:
-        return spark.createDataFrame([], schema)
+        return _local_frame(spark, [], schema)
     meta = spark.read.parquet(os.path.join(index_dir, "doc_meta")).select(
         "doc_id", stats_col
     )
@@ -2432,7 +2506,7 @@ def composite_agg(
     docs = _matched_docs(spark, index_dir, terms, n_partitions)
     schema = f"{group_col} string, bucket long, n_docs long"
     if docs is None:
-        return spark.createDataFrame([], schema)
+        return _local_frame(spark, [], schema)
     meta = spark.read.parquet(os.path.join(index_dir, "doc_meta")).select(
         "doc_id", group_col, stats_col
     )
@@ -2471,7 +2545,7 @@ def mad_agg(
     doc_ids + one long."""
     docs = _matched_docs(spark, index_dir, terms, n_partitions)
     if docs is None:
-        return spark.createDataFrame([], "median double, mad double")
+        return _local_frame(spark, [], "median double, mad double")
     meta = spark.read.parquet(os.path.join(index_dir, "doc_meta")).select(
         "doc_id", stats_col
     )
@@ -2480,7 +2554,7 @@ def mad_agg(
         "m"
     ]
     if med is None:
-        return spark.createDataFrame([], "median double, mad double")
+        return _local_frame(spark, [], "median double, mad double")
     return vals.agg(
         F.round(F.lit(float(med)), 6).alias("median"),
         F.round(
@@ -2513,13 +2587,13 @@ def rare_terms(
     docs = _matched_docs(spark, index_dir, terms, n_partitions)
     out_schema = "rank int, term string, fg long"
     if docs is None:
-        return spark.createDataFrame([], out_schema)
+        return _local_frame(spark, [], out_schema)
     fg_ids = np.unique(docs.distinct().toPandas()["doc_id"].to_numpy(dtype=np.int64))
     if fg_ids.size == 0:
-        return spark.createDataFrame([], out_schema)
+        return _local_frame(spark, [], out_schema)
     fg_bc = spark.sparkContext.broadcast(fg_ids)
     tomb_bc, _tomb_over = _tombstones(spark, index_dir)
-    seg = spark.read.parquet(os.path.join(index_dir, "segments")).select("term", "blob")
+    seg = _segments(spark, index_dir).select("term", "blob")
 
     def overlap(pdf_iter):
         from .compress import decode_postings

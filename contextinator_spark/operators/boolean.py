@@ -69,7 +69,11 @@ from ..config import (
 from .bm25 import idf_expr, tf_norm_expr
 from .bm25_segments import (
     MAX_EXPANSIONS,
+    _BLOB_SCHEMA,
     _idf,
+    _local_frame,
+    _read_partitions,
+    _segments,
     _spread_slices,
     _tf_norm,
     _tombstones,
@@ -484,7 +488,7 @@ def _boolean_scored(
     should_ids = [cid for cid, c in enumerate(clauses) if c.occur == SHOULD]
     if min_should_match > len(should_ids):
         # Lucene: msm above the SHOULD clause count matches nothing
-        return spark.createDataFrame([], _SCORED_SCHEMA)
+        return _local_frame(spark, [], _SCORED_SCHEMA)
 
     # ---- expansion + dictionary probe (metadata-scale, no posting reads)
     termish = [
@@ -508,7 +512,7 @@ def _boolean_scored(
     # a MUST term-group with no indexed expansion can never be satisfied
     for cid, c in termish:
         if c.occur == MUST and not any(t in info for t in cl_terms[cid]):
-            return spark.createDataFrame([], _SCORED_SCHEMA)
+            return _local_frame(spark, [], _SCORED_SCHEMA)
 
     tomb_bc, tomb_over = _tombstones(spark, index_dir)
     idf = {t: _idf(float(info[t]["df"]), n_docs) for t in info}
@@ -531,16 +535,12 @@ def _boolean_scored(
         if rare:
             df_r, t_r = min(rare)
             if df_r <= DRIVER_TOPK_MAX_DF and len(term_clauses) > 1:
-                rows = (
-                    spark.read.parquet(os.path.join(index_dir, "segments"))
-                    .filter(
-                        (F.col("partition_id") == info[t_r]["partition_id"])
-                        & (F.col("term") == t_r)
-                    )
-                    .select("blob")
-                    .collect()
-                )
-                ids = [decode_postings(bytes(r["blob"]))[0] for r in rows]
+                # bounded by the df gate: read on the driver, no Spark job
+                blobs = _read_partitions(
+                    index_dir, "segments", [info[t_r]["partition_id"]], [t_r],
+                    _BLOB_SCHEMA,
+                ).column("blob")
+                ids = [decode_postings(blob)[0] for blob in blobs.to_pylist()]
                 cand_bc = spark.sparkContext.broadcast(
                     np.sort(np.concatenate(ids)) if ids else np.empty(0, np.int64)
                 )
@@ -550,7 +550,7 @@ def _boolean_scored(
     # ---- term-clause partial stream (one pruned scan, Arrow kernel)
     if term_clauses:
         pids = sorted({info[t]["partition_id"] for t in term_clauses})
-        seg = spark.read.parquet(os.path.join(index_dir, "segments")).filter(
+        seg = _segments(spark, index_dir).filter(
             F.col("partition_id").isin(pids)
             & F.col("term").isin(sorted(term_clauses))
         )
@@ -682,7 +682,7 @@ def _boolean_scored(
         # every scoring clause expanded to zero indexed terms (e.g. a
         # SHOULD-only query of unknown words): nothing can score, so the
         # Lucene-faithful result is empty — not an error
-        return spark.createDataFrame([], _SCORED_SCHEMA)
+        return _local_frame(spark, [], _SCORED_SCHEMA)
     allp = parts[0]
     for p in parts[1:]:
         allp = allp.unionByName(p)
@@ -949,7 +949,7 @@ def _excluded_docs(
         info = probe_dictionary(spark, index_dir, sorted(terms), n_partitions)
         if info:
             pids = sorted({v["partition_id"] for v in info.values()})
-            seg = spark.read.parquet(os.path.join(index_dir, "segments")).filter(
+            seg = _segments(spark, index_dir).filter(
                 F.col("partition_id").isin(pids) & F.col("term").isin(sorted(info))
             )
 
@@ -1237,7 +1237,7 @@ def boolean_explain(
         "occur string, kind string, partial double"
     )
     if not sink:
-        return spark.createDataFrame([], out_schema)
+        return _local_frame(spark, [], out_schema)
     allp = sink[0]
     const_ids = [
         cid for cid, c in enumerate(cl)
@@ -1357,7 +1357,7 @@ def boolean_topk_multi(
         for qid, q in queries.items()
     }
     if not parsed:
-        return spark.createDataFrame([], _BATCH_SCHEMA)
+        return _local_frame(spark, [], _BATCH_SCHEMA)
     # per-query minimum_should_match (Lucene setMinimumNumberShouldMatch):
     # an int applies to every query, a dict maps query_id → msm
     msm: dict[int, int] = (
@@ -1426,7 +1426,7 @@ def boolean_topk_multi(
     }
     live = sorted(set(scoring) - dead)
     if not live:
-        return spark.createDataFrame([], _BATCH_SCHEMA)
+        return _local_frame(spark, [], _BATCH_SCHEMA)
     live_set = set(live)
 
     # ---- optional stream bound: estimate per-query partial rows from the
@@ -1507,7 +1507,7 @@ def boolean_topk_multi(
                     ).collect()
                 )
                 spark.sparkContext._jvm.System.gc()
-            return spark.createDataFrame(rows, _BATCH_SCHEMA)
+            return _local_frame(spark, [tuple(r) for r in rows], _BATCH_SCHEMA)
 
     tomb_bc, tomb_over = _tombstones(spark, index_dir)
     parts: list[DataFrame] = []
@@ -1546,7 +1546,7 @@ def boolean_topk_multi(
             for t, v in fan.items()
         }
         pids = sorted({info[t]["partition_id"] for t in fan})
-        seg = spark.read.parquet(os.path.join(index_dir, "segments")).filter(
+        seg = _segments(spark, index_dir).filter(
             F.col("partition_id").isin(pids) & F.col("term").isin(sorted(fan))
         )
         seg = _spread_slices(seg, spark, sum(int(info[t]["df"]) for t in fan))
@@ -1714,7 +1714,7 @@ def boolean_topk_multi(
             parts.append(pm)
 
     if not parts:
-        return spark.createDataFrame([], _BATCH_SCHEMA)
+        return _local_frame(spark, [], _BATCH_SCHEMA)
     allp = parts[0]
     for p in parts[1:]:
         allp = allp.unionByName(p)
@@ -1807,7 +1807,7 @@ def boolean_topk_multi(
                 nf.setdefault(t, []).append(qid)
     if nf:
         pids = sorted({info[t]["partition_id"] for t in nf})
-        nseg = spark.read.parquet(os.path.join(index_dir, "segments")).filter(
+        nseg = _segments(spark, index_dir).filter(
             F.col("partition_id").isin(pids) & F.col("term").isin(sorted(nf))
         )
         nf_arr = {t: np.asarray(v, np.int32) for t, v in nf.items()}

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import BM25_B, BM25_K1, DEFAULT_TOP_K, TOKEN_PATTERN
-from .bm25_segments import _idf, load_stats, probe_dictionary, topk_segments
+from .bm25_segments import _idf, _local_frame, load_stats, probe_dictionary, topk_segments
 
 # Lucene MoreLikeThis defaults (MoreLikeThis.java): minTermFreq=2,
 # minDocFreq=5, maxQueryTerms=25. min_df default here is 2 — the corpus
@@ -92,7 +92,7 @@ def more_like_this(
         spark, index_dir, docs, doc_id, max_query_terms, min_tf, min_df
     )
     if not terms:
-        return spark.createDataFrame([], "rank int, doc_id long, score double")
+        return _local_frame(spark, [], "rank int, doc_id long, score double")
     over = topk_segments(spark, index_dir, terms, k=k + 1, k1=k1, b=b, **kw)
     w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     return (

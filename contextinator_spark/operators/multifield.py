@@ -61,8 +61,6 @@ depends on rows from stores a single-field bound knows nothing about.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -74,6 +72,8 @@ from .bm25_segments import (
     INDEX_PARTITIONS,
     _exact_scored_matches,
     _idf,
+    _local_frame,
+    _segments,
     _spread_slices,
     _tombstones,
     load_stats,
@@ -107,7 +107,7 @@ def term_tf_stream(
         return None
     tomb_bc, tomb_over = _tombstones(spark, index_dir)
     pids = sorted({info[t]["partition_id"] for t in matched})
-    seg = spark.read.parquet(os.path.join(index_dir, "segments")).filter(
+    seg = _segments(spark, index_dir).filter(
         F.col("partition_id").isin(pids) & F.col("term").isin(matched)
     )
     seg = _spread_slices(seg, spark, sum(int(info[t]["df"]) for t in matched))
@@ -196,9 +196,11 @@ def multi_match_topk(
     if not 0.0 <= tie_breaker <= 1.0:
         raise ValueError(f"tie_breaker must be in [0, 1], got {tie_breaker}")
     w = _norm_weights(field_dirs, weights)
+    # the dictionaries hold lowercased terms; both impls see the same terms
+    terms = [t.lower() for t in terms]
     if impl == "kernel":
         return multi_match_topk_multi(
-            spark, field_dirs, {0: list(terms)}, k, weights, tie_breaker, k1, b
+            spark, field_dirs, {0: terms}, k, weights, tie_breaker, k1, b
         ).select("rank", "doc_id", "score")
     if impl != "fold":
         raise ValueError(f"impl must be 'kernel' or 'fold', got {impl!r}")
@@ -209,7 +211,7 @@ def multi_match_topk(
             continue
         parts.append(scored.select("doc_id", (F.col("score") * F.lit(w[field])).alias("ws")))
     if not parts:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
+        return _local_frame(spark, [], _RESULT_SCHEMA)
     allp = parts[0]
     for p in parts[1:]:
         allp = allp.unionByName(p)
@@ -269,7 +271,7 @@ def bm25f_topk(
             continue
         streams.append((field, got[0], got[1], stats))
     if not streams:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
+        return _local_frame(spark, [], _RESULT_SCHEMA)
 
     # blended df per term: max over the fields where the term is indexed
     df_blend: dict[str, float] = {}
@@ -352,7 +354,7 @@ def _bucketed_term_arrays(
             continue
         tomb_bc, tomb_over = _tombstones(spark, d)
         pids = sorted({info[t]["partition_id"] for t in matched})
-        seg = spark.read.parquet(os.path.join(d, "segments")).filter(
+        seg = _segments(spark, d).filter(
             F.col("partition_id").isin(pids) & F.col("term").isin(matched)
         )
         seg = _spread_slices(
@@ -626,7 +628,7 @@ def multi_match_topk_multi(
     w = _norm_weights(field_dirs, weights)
     union_terms = sorted({t.lower() for ts in queries.values() for t in ts})
     if not queries or not union_terms:
-        return spark.createDataFrame([], "query_id int, rank int, doc_id long, score double")
+        return _local_frame(spark, [], "query_id int, rank int, doc_id long, score double")
     if max_partial_rows is not None and len(queries) > 1:
         est = _estimate_rows(spark, field_dirs, queries)
         if sum(est.values()) > max_partial_rows:
@@ -645,7 +647,7 @@ def multi_match_topk_multi(
         spark, field_dirs, union_terms, n_buckets
     )
     if stream is None:
-        return spark.createDataFrame([], "query_id int, rank int, doc_id long, score double")
+        return _local_frame(spark, [], "query_id int, rank int, doc_id long, score double")
 
     from .bm25_segments import _tf_norm
 
@@ -731,7 +733,7 @@ def bm25f_topk_multi(
     w = _norm_weights(field_dirs, weights)
     union_terms = sorted({t.lower() for ts in queries.values() for t in ts})
     if not queries or not union_terms:
-        return spark.createDataFrame([], "query_id int, rank int, doc_id long, score double")
+        return _local_frame(spark, [], "query_id int, rank int, doc_id long, score double")
     if max_partial_rows is not None and len(queries) > 1:
         est = _estimate_rows(spark, field_dirs, queries)
         if sum(est.values()) > max_partial_rows:
@@ -758,7 +760,7 @@ def bm25f_topk_multi(
                 f"{n_docs} vs {stats['n_docs']} ({field_dirs[field]})"
             )
     if stream is None:
-        return spark.createDataFrame([], "query_id int, rank int, doc_id long, score double")
+        return _local_frame(spark, [], "query_id int, rank int, doc_id long, score double")
 
     df_blend: dict[str, float] = {}
     field_params = {}

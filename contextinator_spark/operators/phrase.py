@@ -24,11 +24,19 @@ Two execution strategies, result-identical (test-pinned, shared oracle):
   decodes positions, and intersects per-doc position sets shifted by term
   offset: occurrences = |P0 ∩ (P1−1) ∩ … ∩ (P(n−1)−(n−1))|. Since late
   round 4 the intersection runs in the bucket-packed numpy kernel
-  (_bucketed_matches: sorted composite keys per doc-range bucket) rather
-  than a per-doc JVM pivot; the pivot form survives in
+  (_pack_slot_blobs + _match_bucket: sorted composite keys per doc-range
+  bucket) rather than a per-doc JVM pivot; the pivot form survives in
   _candidate_positions as the semantic reference. At 100 TB the scan form
   touches the whole corpus per query; the indexed form touches df(term)
   postings only.
+
+  The single-query top-k (phrase, multiphrase, span-first, span-near)
+  takes one of two paths (_positional_topk). When the slot terms hold at
+  most DRIVER_TOPK_MAX_DF positions (Σcf) and the tombstones fit the
+  broadcast cap, the driver reads the blobs with pyarrow, runs the two
+  kernel halves in-process and returns a LocalRelation: no Spark job.
+  Otherwise the kernel runs in Spark (_bucketed_matches: mapInPandas
+  pack, groupBy(bucket) match) and _rank_matches ranks the matched set.
 
 Scoring treats the phrase as one synthetic term: BM25 with
 df = |docs containing the phrase|, tf = occurrence count — the natural
@@ -50,9 +58,29 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..config import BM25_B, BM25_K1, DEFAULT_TOP_K, SCORE_ROUND_DECIMALS
+from ..config import (
+    BM25_B,
+    BM25_K1,
+    DEFAULT_TOP_K,
+    DRIVER_TOPK_MAX_DF,
+    SCORE_ROUND_DECIMALS,
+)
 from ..functions.tokenize import tokens_expr
+from ..functions.xxhash import term_partition
 from .bm25 import idf_expr, tf_norm_expr
+from .bm25_segments import (
+    _BLOB_SCHEMA,
+    _idf,
+    _local_frame,
+    _read_partitions,
+    _segments,
+    _spread_slices,
+    _tf_norm,
+    _tombstones,
+    _topk_frame,
+    probe_dictionary,
+)
+from .deletes import live_mask
 from .positions import (
     POSTING_FORMAT_POSITIONS,
     decode_postings_with_positions_flat,
@@ -200,25 +228,13 @@ def _candidate_positions(
     candidate doc with columns "0".."n-1" = that term-slot's position
     array (null if the doc lacks the term). Returns (pivoted, 1-row
     stats_df from stats.json)."""
-    with open(os.path.join(index_dir, "stats.json")) as f:
-        stats = json.load(f)
-    if stats.get("posting_format") != POSTING_FORMAT_POSITIONS:
-        raise ValueError(
-            f"{index_dir} is not a positions index "
-            f"(posting_format={stats.get('posting_format')})"
-        )
+    stats = _positions_stats(index_dir)
     n_partitions = stats["n_partitions"]
     uniq = sorted(set(terms))
-    from ..functions.xxhash import term_partition
-
     parts = sorted({term_partition(t, n_partitions) for t in uniq})
-    store = spark.read.parquet(os.path.join(index_dir, "segments"))
-    probe = store.select("partition_id", "term", "blob").filter(
+    probe = _segments(spark, index_dir).select("partition_id", "term", "blob").filter(
         F.col("partition_id").isin(parts) & F.col("term").isin(uniq)
     )
-    from .bm25_segments import _tombstones
-    from .deletes import live_mask
-
     tomb_bc, tomb_over = _tombstones(spark, index_dir)
 
     def decode(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -269,10 +285,7 @@ def _candidate_positions(
         .pivot("ord", list(range(len(terms))))
         .agg(F.first("positions"))
     )
-    stats_df = spark.createDataFrame(
-        [(float(stats["n_docs"]), float(stats["avgdl"]))], "n_docs double, avgdl double"
-    )
-    return pivoted, stats_df
+    return pivoted, _stats_frame(spark, stats)
 
 
 # ---------------------------------------------------------------------------
@@ -312,6 +325,202 @@ def _bucket_shift(spark: SparkSession, stats: dict) -> int:
     return shift
 
 
+_PACKED_SCHEMA = (
+    "bucket long, slot int, docs array<long>, dls array<int>, "
+    "tfs array<int>, flat array<long>"
+)
+_MATCHED_SCHEMA = "doc_id long, phrase_tf int, doc_len int"
+
+
+def _positions_stats(index_dir: str) -> dict:
+    """stats.json of a positions store (posting_format=2); anything else
+    raises."""
+    with open(os.path.join(index_dir, "stats.json")) as f:
+        stats = json.load(f)
+    if stats.get("posting_format") != POSTING_FORMAT_POSITIONS:
+        raise ValueError(
+            f"{index_dir} is not a positions index "
+            f"(posting_format={stats.get('posting_format')})"
+        )
+    return stats
+
+
+def _stats_frame(spark: SparkSession, stats: dict) -> DataFrame:
+    """The 1-row (n_docs, avgdl) frame _rank_matches scores with."""
+    return _local_frame(
+        spark, [(float(stats["n_docs"]), float(stats["avgdl"]))], "n_docs double, avgdl double"
+    )
+
+
+def _check_span(window: int | None, ordered: bool, first: int | None) -> None:
+    if ordered and window is None:
+        raise ValueError("ordered span-near needs a slop window (≥ 0)")
+    if first is not None:
+        if window is not None and not ordered:
+            raise ValueError(
+                "SpanFirst needs an ordered span (phrase or span-near) — "
+                "unordered NEAR has no span end"
+            )
+        if first < 1:
+            raise ValueError("SpanFirst end must be ≥ 1")
+
+
+def _slot_terms(terms: list) -> list[list[str]]:
+    """Each phrase slot as its sorted list of alternative terms."""
+    slots = [[t] if isinstance(t, str) else sorted(set(t)) for t in terms]
+    if any(not s for s in slots):
+        raise ValueError("every phrase slot needs at least one term")
+    return slots
+
+
+def _pack_slot_blobs(
+    pdf_iter: Iterator[pd.DataFrame],
+    slots: list[list[str]],
+    shift: int,
+    tomb: np.ndarray | None,
+) -> Iterator[pd.DataFrame]:
+    """Decode (term, blob) rows into doc-range-bucketed array rows
+    (_PACKED_SCHEMA), one per (bucket, slot the term fills), with deleted
+    docs (sorted `tomb`) masked out. The pack half of the bucket kernel,
+    run by the executors' mapInPandas and by the driver path alike."""
+    ords: dict[str, list[int]] = {}
+    for j, slot in enumerate(slots):
+        for t in slot:
+            ords.setdefault(t, []).append(j)
+    for pdf in pdf_iter:
+        out = {k: [] for k in ("bucket", "slot", "docs", "dls", "tfs", "flat")}
+        for term, blob in zip(pdf["term"], pdf["blob"]):
+            docs, tfs, dls, flat = decode_postings_with_positions_flat(bytes(blob))
+            if tomb is not None and docs.size:
+                m = live_mask(docs, tomb)
+                if not m.all():
+                    flat = flat[np.repeat(m, tfs.astype(np.int64))]
+                    docs, tfs, dls = docs[m], tfs[m], dls[m]
+            if docs.size == 0:
+                continue
+            docs = docs.astype(np.int64)
+            buckets = docs >> shift  # docs sorted → nondecreasing
+            ub, starts = np.unique(buckets, return_index=True)
+            ends = np.append(starts[1:], docs.size)
+            poff = np.concatenate(([0], np.cumsum(tfs.astype(np.int64))))
+            for bkt, a, z in zip(ub, starts, ends):
+                seg_docs = docs[a:z]
+                seg_tfs = tfs[a:z].astype(np.int32)
+                seg_dls = dls[a:z].astype(np.int32)
+                seg_flat = flat[poff[a]:poff[z]].astype(np.int64)
+                for j in ords[term]:
+                    out["bucket"].append(int(bkt))
+                    out["slot"].append(j)
+                    out["docs"].append(seg_docs)
+                    out["dls"].append(seg_dls)
+                    out["tfs"].append(seg_tfs)
+                    out["flat"].append(seg_flat)
+        if out["bucket"]:
+            yield pd.DataFrame(out)
+
+
+def _match_bucket(
+    pdf: pd.DataFrame,
+    n: int,
+    shift: int,
+    w: int | None,
+    ordered: bool,
+    first: int | None,
+) -> pd.DataFrame:
+    """The match half of the bucket kernel: one bucket's packed rows →
+    (doc_id, phrase_tf, doc_len) of its matching docs (_MATCHED_SCHEMA).
+    n = slot count; w/ordered/first as in _bucketed_matches."""
+    empty = pd.DataFrame(
+        {"doc_id": pd.Series(dtype="int64"),
+         "phrase_tf": pd.Series(dtype="int32"),
+         "doc_len": pd.Series(dtype="int32")}
+    )
+    base = int(pdf["bucket"].iloc[0]) << shift
+    keys, doc0, dl0 = {}, None, None
+    for j in range(n):
+        rows = pdf[pdf["slot"] == j]
+        if rows.empty:
+            return empty  # a slot with no postings in this bucket
+        docs = np.concatenate([np.asarray(d, np.int64) for d in rows["docs"]])
+        tfs = np.concatenate([np.asarray(t, np.int64) for t in rows["tfs"]])
+        flat = np.concatenate([np.asarray(f, np.int64) for f in rows["flat"]])
+        local = docs - base
+        rep = np.repeat(local, tfs)
+        if w is None:  # phrase: shift by −slot (+n keeps it positive)
+            kj = (rep << _POS_BITS) | (flat - j + n)
+        else:  # NEAR: raw positions
+            kj = (rep << _POS_BITS) | flat
+        kj.sort()
+        keys[j] = kj
+        if j == 0:
+            order = np.argsort(docs, kind="stable")
+            doc0, dl0 = docs[order], np.concatenate(
+                [np.asarray(d, np.int64) for d in rows["dls"]]
+            )[order]
+    if w is None:
+        inter = keys[0]
+        for j in range(1, n):
+            kj = keys[j]
+            pos = np.searchsorted(kj, inter)
+            pos = np.minimum(pos, kj.size - 1)
+            inter = inter[kj[pos] == inter]
+            if inter.size == 0:
+                return empty
+        if first is not None:
+            # slot-0 keys carry p0 + n = the span's exclusive end
+            inter = inter[(inter & ((1 << _POS_BITS) - 1)) <= first]
+            if inter.size == 0:
+                return empty
+        ids, counts = np.unique(inter >> _POS_BITS, return_counts=True)
+    elif ordered:
+        # span_near(inOrder): greedy minimal chain per anchor — each
+        # next position is the smallest key strictly greater than the
+        # previous, same doc enforced via the composite key's doc part
+        a0 = keys[0]
+        aloc = a0 >> _POS_BITS
+        cur = a0
+        ok = np.ones(a0.size, dtype=bool)
+        for j in range(1, n):
+            kj = keys[j]
+            idx = np.searchsorted(kj, cur, "right")
+            valid = idx < kj.size
+            nxt = kj[np.minimum(idx, kj.size - 1)]
+            valid &= (nxt >> _POS_BITS) == aloc
+            ok &= valid
+            cur = nxt  # garbage on dead lanes; masked by ok
+        pm = (1 << _POS_BITS) - 1
+        ok &= ((cur & pm) - (a0 & pm) - (n - 1)) <= w
+        if first is not None:  # SpanFirst: chain end p_{n−1}+1 ≤ N
+            ok &= (cur & pm) + 1 <= first
+        if not ok.any():
+            return empty
+        ids, counts = np.unique(aloc[ok], return_counts=True)
+    else:
+        a0 = keys[0]
+        aloc, apos = a0 >> _POS_BITS, a0 & ((1 << _POS_BITS) - 1)
+        ok = np.ones(a0.size, dtype=bool)
+        for j in range(1, n):
+            kj = keys[j]
+            lo = (aloc << _POS_BITS) | np.maximum(apos - w, 0)
+            hi = (aloc << _POS_BITS) | np.minimum(
+                apos + w, (1 << _POS_BITS) - 1
+            )
+            ok &= np.searchsorted(kj, lo, "left") < np.searchsorted(
+                kj, hi, "right"
+            )
+        if not ok.any():
+            return empty
+        ids, counts = np.unique(aloc[ok], return_counts=True)
+    dls = dl0[np.searchsorted(doc0, ids + base)]
+    return pd.DataFrame(
+        {
+            "doc_id": ids + base,
+            "phrase_tf": counts.astype(np.int32),
+            "doc_len": dls.astype(np.int32),
+        }
+    )
+
+
 def _bucketed_matches(
     spark: SparkSession,
     index_dir: str,
@@ -340,33 +549,22 @@ def _bucketed_matches(
     — 0-based exclusive end, so a phrase match at anchor p0 needs
     p0 + n ≤ N and an ordered span-near chain needs p_{n−1} + 1 ≤ N.
     Phrase and ordered spans only (unordered NEAR has no span order, so
-    SpanFirst over it is undefined — rejected by positional_matches)."""
-    with open(os.path.join(index_dir, "stats.json")) as f:
-        stats = json.load(f)
-    if stats.get("posting_format") != POSTING_FORMAT_POSITIONS:
-        raise ValueError(
-            f"{index_dir} is not a positions index "
-            f"(posting_format={stats.get('posting_format')})"
-        )
+    SpanFirst over it is undefined — rejected by positional_matches).
+
+    The executors run the kernel's two halves: _pack_slot_blobs in a
+    mapInPandas over the partition-pruned scan, _match_bucket per
+    groupBy("bucket") group."""
+    stats = _positions_stats(index_dir)
     n_partitions = stats["n_partitions"]
-    slots: list[list[str]] = [
-        [t] if isinstance(t, str) else sorted(set(t)) for t in terms
-    ]
-    if any(not s for s in slots):
-        raise ValueError("every phrase slot needs at least one term")
+    slots = _slot_terms(terms)
     n = len(slots)
     uniq = sorted({t for s in slots for t in s})
-    from ..functions.xxhash import term_partition
-
     parts = sorted({term_partition(t, n_partitions) for t in uniq})
     probe = (
-        spark.read.parquet(os.path.join(index_dir, "segments"))
+        _segments(spark, index_dir)
         .select("partition_id", "term", "blob")
         .filter(F.col("partition_id").isin(parts) & F.col("term").isin(uniq))
     )
-    from .bm25_segments import _spread_slices, _tombstones, probe_dictionary
-    from .deletes import live_mask
-
     # decode parallelism = pruned FILE count without this (see
     # positional_matches_multi) — heavy terms spread across the cluster
     info = probe_dictionary(spark, index_dir, uniq, n_partitions)
@@ -376,154 +574,22 @@ def _bucketed_matches(
 
     tomb_bc, tomb_over = _tombstones(spark, index_dir)
     shift = _bucket_shift(spark, stats)
-    ords: dict[str, list[int]] = {}
-    for j, slot in enumerate(slots):
-        for t in slot:
-            ords.setdefault(t, []).append(j)
 
     def pack(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdf_iter:
-            out = {k: [] for k in ("bucket", "slot", "docs", "dls", "tfs", "flat")}
-            for term, blob in zip(pdf["term"], pdf["blob"]):
-                docs, tfs, dls, flat = decode_postings_with_positions_flat(bytes(blob))
-                if tomb_bc is not None and docs.size:
-                    m = live_mask(docs, tomb_bc.value)
-                    if not m.all():
-                        flat = flat[np.repeat(m, tfs.astype(np.int64))]
-                        docs, tfs, dls = docs[m], tfs[m], dls[m]
-                if docs.size == 0:
-                    continue
-                docs = docs.astype(np.int64)
-                buckets = docs >> shift  # docs sorted → nondecreasing
-                ub, starts = np.unique(buckets, return_index=True)
-                ends = np.append(starts[1:], docs.size)
-                poff = np.concatenate(([0], np.cumsum(tfs.astype(np.int64))))
-                for bkt, a, z in zip(ub, starts, ends):
-                    seg_docs = docs[a:z]
-                    seg_tfs = tfs[a:z].astype(np.int32)
-                    seg_dls = dls[a:z].astype(np.int32)
-                    seg_flat = flat[poff[a]:poff[z]].astype(np.int64)
-                    for j in ords[term]:
-                        out["bucket"].append(int(bkt))
-                        out["slot"].append(j)
-                        out["docs"].append(seg_docs)
-                        out["dls"].append(seg_dls)
-                        out["tfs"].append(seg_tfs)
-                        out["flat"].append(seg_flat)
-            if out["bucket"]:
-                yield pd.DataFrame(out)
-
-    packed = probe.mapInPandas(
-        pack,
-        schema=(
-            "bucket long, slot int, docs array<long>, dls array<int>, "
-            "tfs array<int>, flat array<long>"
-        ),
-    )
-
-    w = window
+        tomb = None if tomb_bc is None else tomb_bc.value
+        return _pack_slot_blobs(pdf_iter, slots, shift, tomb)
 
     def match(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"doc_id": pd.Series(dtype="int64"),
-             "phrase_tf": pd.Series(dtype="int32"),
-             "doc_len": pd.Series(dtype="int32")}
-        )
-        base = int(pdf["bucket"].iloc[0]) << shift
-        keys, doc0, dl0 = {}, None, None
-        for j in range(n):
-            rows = pdf[pdf["slot"] == j]
-            if rows.empty:
-                return empty  # a slot with no postings in this bucket
-            docs = np.concatenate([np.asarray(d, np.int64) for d in rows["docs"]])
-            tfs = np.concatenate([np.asarray(t, np.int64) for t in rows["tfs"]])
-            flat = np.concatenate([np.asarray(f, np.int64) for f in rows["flat"]])
-            local = docs - base
-            rep = np.repeat(local, tfs)
-            if w is None:  # phrase: shift by −slot (+n keeps it positive)
-                kj = (rep << _POS_BITS) | (flat - j + n)
-            else:  # NEAR: raw positions
-                kj = (rep << _POS_BITS) | flat
-            kj.sort()
-            keys[j] = kj
-            if j == 0:
-                order = np.argsort(docs, kind="stable")
-                doc0, dl0 = docs[order], np.concatenate(
-                    [np.asarray(d, np.int64) for d in rows["dls"]]
-                )[order]
-        if w is None:
-            inter = keys[0]
-            for j in range(1, n):
-                kj = keys[j]
-                pos = np.searchsorted(kj, inter)
-                pos = np.minimum(pos, kj.size - 1)
-                inter = inter[kj[pos] == inter]
-                if inter.size == 0:
-                    return empty
-            if first is not None:
-                # slot-0 keys carry p0 + n = the span's exclusive end
-                inter = inter[(inter & ((1 << _POS_BITS) - 1)) <= first]
-                if inter.size == 0:
-                    return empty
-            ids, counts = np.unique(inter >> _POS_BITS, return_counts=True)
-        elif ordered:
-            # span_near(inOrder): greedy minimal chain per anchor — each
-            # next position is the smallest key strictly greater than the
-            # previous, same doc enforced via the composite key's doc part
-            a0 = keys[0]
-            aloc = a0 >> _POS_BITS
-            cur = a0
-            ok = np.ones(a0.size, dtype=bool)
-            for j in range(1, n):
-                kj = keys[j]
-                idx = np.searchsorted(kj, cur, "right")
-                valid = idx < kj.size
-                nxt = kj[np.minimum(idx, kj.size - 1)]
-                valid &= (nxt >> _POS_BITS) == aloc
-                ok &= valid
-                cur = nxt  # garbage on dead lanes; masked by ok
-            pm = (1 << _POS_BITS) - 1
-            ok &= ((cur & pm) - (a0 & pm) - (n - 1)) <= w
-            if first is not None:  # SpanFirst: chain end p_{n−1}+1 ≤ N
-                ok &= (cur & pm) + 1 <= first
-            if not ok.any():
-                return empty
-            ids, counts = np.unique(aloc[ok], return_counts=True)
-        else:
-            a0 = keys[0]
-            aloc, apos = a0 >> _POS_BITS, a0 & ((1 << _POS_BITS) - 1)
-            ok = np.ones(a0.size, dtype=bool)
-            for j in range(1, n):
-                kj = keys[j]
-                lo = (aloc << _POS_BITS) | np.maximum(apos - w, 0)
-                hi = (aloc << _POS_BITS) | np.minimum(
-                    apos + w, (1 << _POS_BITS) - 1
-                )
-                ok &= np.searchsorted(kj, lo, "left") < np.searchsorted(
-                    kj, hi, "right"
-                )
-            if not ok.any():
-                return empty
-            ids, counts = np.unique(aloc[ok], return_counts=True)
-        dls = dl0[np.searchsorted(doc0, ids + base)]
-        return pd.DataFrame(
-            {
-                "doc_id": ids + base,
-                "phrase_tf": counts.astype(np.int32),
-                "doc_len": dls.astype(np.int32),
-            }
-        )
+        return _match_bucket(pdf, n, shift, window, ordered, first)
 
-    matched = packed.groupBy("bucket").applyInPandas(
-        match, schema="doc_id long, phrase_tf int, doc_len int"
+    matched = (
+        probe.mapInPandas(pack, schema=_PACKED_SCHEMA)
+        .groupBy("bucket")
+        .applyInPandas(match, schema=_MATCHED_SCHEMA)
     )
     if tomb_over is not None:  # over-cap tombstones: per-doc predicate, so
         matched = matched.join(tomb_over, "doc_id", "left_anti")  # post-match ok
-    stats_df = spark.createDataFrame(
-        [(float(stats["n_docs"]), float(stats["avgdl"]))],
-        "n_docs double, avgdl double",
-    )
-    return matched, stats_df
+    return matched, _stats_frame(spark, stats)
 
 
 def positional_matches(
@@ -539,28 +605,76 @@ def positional_matches(
     predicate — exact consecutive phrase when window is None, NEAR (all
     terms within ±window of an anchor terms[0] occurrence) otherwise;
     ordered=True upgrades NEAR to Lucene SpanNearQuery(inOrder=true)
-    semantics (terms in order, total gap ≤ window). Feeds
-    phrase_topk_indexed / near_topk_indexed / spannear_topk_indexed and
-    the Boolean executor (operators/boolean.py), which scores a
-    positional clause as one synthetic term over this matched set.
+    semantics (terms in order, total gap ≤ window). Feeds the Boolean
+    executor (operators/boolean.py), which scores a positional clause as
+    one synthetic term over this matched set, and the Spark path of
+    _positional_topk (phrase/multiphrase/spanfirst/spannear top-k).
 
-    Executes via the bucket-packed numpy kernel (_bucketed_matches) — the
-    pivot/array_intersect path survives in _candidate_positions for the
-    batch executor and as the semantic reference the tests pin both
-    against."""
-    if ordered and window is None:
-        raise ValueError("ordered span-near needs a slop window (≥ 0)")
-    if first is not None:
-        if window is not None and not ordered:
-            raise ValueError(
-                "SpanFirst needs an ordered span (phrase or span-near) — "
-                "unordered NEAR has no span end"
-            )
-        if first < 1:
-            raise ValueError("SpanFirst end must be ≥ 1")
+    Always a Spark plan over the bucket-packed numpy kernel
+    (_bucketed_matches); _positional_topk runs the same kernel on the
+    driver when the terms' positions are few. The pivot/array_intersect
+    path survives in _candidate_positions for near_topk_indexed and as
+    the semantic reference the tests pin both against."""
+    _check_span(window, ordered, first)
     return _bucketed_matches(
         spark, index_dir, terms, window, ordered=ordered, first=first
     )
+
+
+def _positional_topk(
+    spark: SparkSession,
+    index_dir: str,
+    terms: list,
+    k: int,
+    k1: float,
+    b: float,
+    window: int | None = None,
+    ordered: bool = False,
+    first: int | None = None,
+) -> DataFrame:
+    """(rank, doc_id, score) of a positional query (positional_matches'
+    arguments) scored by _rank_matches' contract: one synthetic term with
+    df = |matched docs|, tf = phrase_tf.
+
+    Driver path: when the tombstones fit the broadcast cap and the slot
+    terms hold at most DRIVER_TOPK_MAX_DF positions in all (Σcf — the
+    driver holds every position, not just every posting), the driver
+    reads the terms' blobs (_read_partitions), runs the same pack/match
+    kernels in-process, scores with _idf/_tf_norm and ranks as
+    bm25_segments._topk_driver does. No Spark job runs. Otherwise the
+    Spark plan (positional_matches + _rank_matches) runs."""
+    _check_span(window, ordered, first)
+    stats = _positions_stats(index_dir)
+    slots = _slot_terms(terms)
+    uniq = sorted({t for s in slots for t in s})
+    info = probe_dictionary(spark, index_dir, uniq, stats["n_partitions"])
+    tomb_bc, tomb_over = _tombstones(spark, index_dir)
+    if tomb_over is not None or sum(int(v["cf"]) for v in info.values()) > DRIVER_TOPK_MAX_DF:
+        matched, stats_df = positional_matches(
+            spark, index_dir, terms, window, ordered=ordered, first=first
+        )
+        return _rank_matches(matched, stats_df, k, k1, b)
+
+    pids = sorted({info[t]["partition_id"] for t in info})
+    blobs = _read_partitions(index_dir, "segments", pids, sorted(info), _BLOB_SCHEMA)
+    tomb = None if tomb_bc is None else tomb_bc.value
+    packed = list(_pack_slot_blobs([blobs.to_pandas()], slots, _BUCKET_SHIFT, tomb))
+    found = [
+        _match_bucket(grp, len(slots), _BUCKET_SHIFT, window, ordered, first)
+        for pdf in packed
+        for _bkt, grp in pdf.groupby("bucket", sort=False)
+    ]
+    matched = pd.concat(found) if found else pd.DataFrame(
+        {"doc_id": [], "phrase_tf": [], "doc_len": []}
+    )
+    docs = matched["doc_id"].to_numpy(np.int64)
+    idf = _idf(float(docs.size), float(stats["n_docs"]))
+    scores = idf * _tf_norm(
+        matched["phrase_tf"].to_numpy(np.float64),
+        matched["doc_len"].to_numpy(np.float64),
+        float(stats["avgdl"]), k1, b,
+    )
+    return _topk_frame(spark, docs, np.round(scores, SCORE_ROUND_DECIMALS), k)
 
 
 def phrase_topk_indexed(
@@ -573,9 +687,9 @@ def phrase_topk_indexed(
 ) -> DataFrame:
     """(rank, doc_id, score) from the positions index — result-identical to
     phrase_topk on the same corpus (shared oracle), but reads only the
-    phrase terms' blobs instead of scanning the corpus."""
-    matched, stats_df = positional_matches(spark, index_dir, terms)
-    return _rank_matches(matched, stats_df, k, k1, b)
+    phrase terms' blobs instead of scanning the corpus. Small phrases run
+    on the driver with no Spark job (_positional_topk)."""
+    return _positional_topk(spark, index_dir, terms, k, k1, b)
 
 
 def multiphrase_topk_indexed(
@@ -593,8 +707,7 @@ def multiphrase_topk_indexed(
     as phrase_topk_indexed, which is the all-singleton special case).
     Kernel cost is unchanged: a slot's key array is the sorted union of
     its alternatives' postings — no per-alternative re-scan."""
-    matched, stats_df = positional_matches(spark, index_dir, slots)
-    return _rank_matches(matched, stats_df, k, k1, b)
+    return _positional_topk(spark, index_dir, slots, k, k1, b)
 
 
 def phrase_prefix_topk_indexed(
@@ -621,7 +734,7 @@ def phrase_prefix_topk_indexed(
         MAX_EXPANSIONS if max_expansions is None else max_expansions,
     )
     if not exp:
-        return spark.createDataFrame([], "rank int, doc_id long, score double")
+        return _local_frame(spark, [], "rank int, doc_id long, score double")
     return multiphrase_topk_indexed(
         spark, index_dir, [*terms, exp], k=k, k1=k1, b=b
     )
@@ -765,8 +878,8 @@ def positional_matches_multi(
         }
     )
     if not all_terms or not queries:
-        empty = spark.createDataFrame(
-            [], "query_id int, doc_id long, phrase_tf int, doc_len int"
+        empty = _local_frame(
+            spark, [], "query_id int, doc_id long, phrase_tf int, doc_len int"
         )
         return empty, stats
     if stats.get("posting_format") != POSTING_FORMAT_POSITIONS:
@@ -774,17 +887,11 @@ def positional_matches_multi(
             f"{index_dir} is not a positions index "
             f"(posting_format={stats.get('posting_format')})"
         )
-    from ..functions.xxhash import term_partition
-
     n_partitions = stats["n_partitions"]
     parts = sorted({term_partition(t, n_partitions) for t in all_terms})
-    store = spark.read.parquet(os.path.join(index_dir, "segments"))
-    probe = store.select("partition_id", "term", "blob").filter(
+    probe = _segments(spark, index_dir).select("partition_id", "term", "blob").filter(
         F.col("partition_id").isin(parts) & F.col("term").isin(all_terms)
     )
-
-    from .bm25_segments import _spread_slices, _tombstones, probe_dictionary
-    from .deletes import live_mask
 
     # scan-stage parallelism = number of pruned parquet FILES otherwise —
     # a big batch over a compact store decoded on ~a dozen tasks no matter
@@ -1004,8 +1111,6 @@ def positional_topk_indexed_multi(
     topology); this adds per-query phrase-idf BM25 scoring + windows.
     Results are per-query identical to phrase_topk_indexed /
     near_topk_indexed (tested)."""
-    from .bm25_segments import _idf, _tombstones, probe_dictionary
-
     # per-bucket EXACT local top-k (see positional_matches_multi): rank
     # only needs each bucket's best k rows plus an exact df, so the match
     # kernel emits count sentinels + margin-widened local top-ks instead
@@ -1057,7 +1162,7 @@ def positional_topk_indexed_multi(
         spark, index_dir, queries, local_cut=local_cut
     )
     if not queries:
-        return spark.createDataFrame([], "query_id int, rank int, doc_id long, score double")
+        return _local_frame(spark, [], "query_id int, rank int, doc_id long, score double")
     n_docs, avgdl = float(stats["n_docs"]), float(stats["avgdl"])
     if local_cut:
         # sentinel rows (doc_id = -1) carry per-bucket match counts; their
@@ -1166,11 +1271,10 @@ def spanfirst_topk_indexed(
     end=1 is the classic 'first word' query. Scored as one synthetic
     term over the restricted match set; same pruned scan and bucket
     kernel, the bound is one vectorized mask on span ends."""
-    matched, stats_df = positional_matches(
-        spark, index_dir, terms,
+    return _positional_topk(
+        spark, index_dir, terms, k, k1, b,
         window=slop, ordered=slop is not None, first=end,
     )
-    return _rank_matches(matched, stats_df, k, k1, b)
 
 
 def spannear_topk_indexed(
@@ -1188,10 +1292,9 @@ def spannear_topk_indexed(
     greedy-chain contract — see _bucketed_matches). slop=0 degenerates to
     the exact phrase. Same pruned positions-store scan and bucket-packed
     kernel as phrase/NEAR; only the per-anchor predicate differs."""
-    matched, stats_df = positional_matches(
-        spark, index_dir, terms, window=slop, ordered=True
+    return _positional_topk(
+        spark, index_dir, terms, k, k1, b, window=slop, ordered=True
     )
-    return _rank_matches(matched, stats_df, k, k1, b)
 
 
 def phrase_suggest(
@@ -1265,7 +1368,7 @@ def phrase_suggest(
             .collect()
         )
         if not rows:  # a slot nothing in the vocabulary is near → no phrases
-            return spark.createDataFrame([], out_schema)
+            return _local_frame(spark, [], out_schema)
         slot_cands.append([(r["term"], r["dist"]) for r in rows])
 
     from itertools import product
@@ -1278,7 +1381,7 @@ def phrase_suggest(
     cands.sort(key=lambda c: (c[1], c[0]))
     cands = cands[: int(max_candidates)]
     if not cands:
-        return spark.createDataFrame([], out_schema)
+        return _local_frame(spark, [], out_schema)
 
     matched, _stats = positional_matches_multi(
         spark, index_dir, {i: (c[2], None) for i, c in enumerate(cands)}

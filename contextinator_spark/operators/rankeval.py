@@ -22,6 +22,8 @@ k-row side broadcasts. Output is four (metric, value) rows.
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -57,12 +59,18 @@ def rank_eval(
     idcg = sum(1.0 / _log2(i + 1) for i in range(1, ideal_n + 1))
 
     rows = [
-        ("precision_at_k", round(n_hits / float(k), 6)),
-        ("recall_at_k", round(n_hits / n_rel, 6) if n_rel else 0.0),
-        ("mrr", round(1.0 / int(first), 6) if first is not None else 0.0),
-        ("ndcg_at_k", round(dcg / idcg, 6) if idcg > 0 else 0.0),
+        ("precision_at_k", _round6(n_hits / float(k))),
+        ("recall_at_k", _round6(n_hits / n_rel) if n_rel else 0.0),
+        ("mrr", _round6(1.0 / int(first)) if first is not None else 0.0),
+        ("ndcg_at_k", _round6(dcg / idcg) if idcg > 0 else 0.0),
     ]
     return spark.createDataFrame(rows, "metric string, value double")
+
+
+def _round6(x: float) -> float:
+    """Spark/DuckDB round(x, 6): HALF_UP, where Python's round() rounds
+    half to even (1/128 = 0.0078125 → 0.007813, not 0.007812)."""
+    return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
 
 
 def _log2(x: float) -> float:

@@ -78,25 +78,32 @@ DOC_META = T.StructType(
     ]
 )
 
+# one row per (term, doc-range slice) of segments/, as the build and the
+# compaction write it and spark.read.parquet reads it back (every field
+# nullable, partition_id from the partition_id=<p> directories). The query
+# executors read segments/ with this schema pinned, which skips the parquet
+# schema-inference job a schema-less read runs.
 SEGMENTS = T.StructType(
     [
-        T.StructField("term", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("df", T.LongType(), False),
-        T.StructField("cf", T.LongType(), False),
-        T.StructField("postings_blob", T.BinaryType(), False),
+        T.StructField("term", T.StringType()),
+        T.StructField("slice_id", T.IntegerType()),
+        T.StructField("df_slice", T.LongType()),
+        T.StructField("cf_slice", T.LongType()),
+        T.StructField("blob", T.BinaryType()),
         T.StructField(
             "block_max",
             T.ArrayType(
                 T.StructType(
                     [
-                        T.StructField("upper_doc", T.LongType(), False),
-                        T.StructField("max_tf", T.IntegerType(), False),
+                        T.StructField("upper_doc", T.LongType()),
+                        T.StructField("max_tf", T.IntegerType()),
+                        T.StructField("min_dl", T.IntegerType()),
                     ]
                 )
             ),
-            False,
         ),
+        T.StructField("kth_tfnorm", T.DoubleType()),
+        T.StructField("partition_id", T.IntegerType()),
     ]
 )
 

@@ -1,0 +1,226 @@
+"""The zero-job small-query paths.
+
+The dictionary probe, the small-candidate-set BM25 top-k and the small
+positional top-k read the store on the driver and return a LocalRelation,
+so such a query schedules no Spark job at all. Every check runs on one
+positions store (posting_format=2) with a streamed delta (terms_delta/,
+no kth_tfnorm) and a tombstone epoch: the driver-side probe must equal the
+Spark groupBy over the cached dictionary it replaced, and each driver path
+must return what the Spark plan returns.
+"""
+
+from __future__ import annotations
+
+import glob
+import re
+import shutil
+from collections import Counter
+
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import IntegerType, StructField, StructType
+
+from contextinator_spark import schemas
+from contextinator_spark.config import TOKEN_PATTERN
+from contextinator_spark.functions.xxhash import term_partition
+from contextinator_spark.operators import bm25_segments as B
+from contextinator_spark.operators import phrase as PH
+from contextinator_spark.operators import segments as S
+from contextinator_spark.operators.deletes import delete_docs
+from contextinator_spark.streaming.ingest import apply_ingest_batch
+
+_GROUP = "driver-path-test"
+_N_PARTITIONS = 16
+
+
+def _jobs_of(spark, fn):
+    """(fn(), number of Spark jobs it ran) — counted by job group."""
+    sc = spark.sparkContext
+    jvm_sc = sc._jsc.sc()
+    jvm_sc.listenerBus().waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup(_GROUP))
+    sc.setJobGroup(_GROUP, _GROUP)
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    # job-start events reach the status tracker through the listener bus
+    jvm_sc.listenerBus().waitUntilEmpty()
+    return out, len(set(sc.statusTracker().getJobIdsForGroup(_GROUP)) - before)
+
+
+def _rows(df):
+    return [tuple(r) for r in df.collect()]
+
+
+@pytest.fixture(scope="module")
+def store(spark, corpus, corpus_rows, tmp_path_factory):
+    """Positions store: base over the even doc_ids, the odd ones streamed
+    in as one format-2 delta, then one tombstone epoch. Yields
+    (dir, deleted ids, frequent phrases of the corpus)."""
+    d = str(tmp_path_factory.mktemp("driver_path"))
+    c = corpus.withColumn("doc_id", F.pmod(F.xxhash64("repo", "path"), F.lit(2**61)))
+    S.write_index(
+        spark, c.filter(F.col("doc_id") % 2 == 0), d,
+        n_partitions=_N_PARTITIONS, positions=True,
+    )
+    apply_ingest_batch(
+        c.filter(F.col("doc_id") % 2 == 1).select(
+            "doc_id", "repo", "path", "commit", "lang", "content"
+        ),
+        0,
+        d,
+        n_partitions=_N_PARTITIONS,
+    )
+    ids = sorted(r["doc_id"] for r in c.select("doc_id").collect())
+    deleted = set(ids[::9])
+    delete_docs(spark, d, sorted(deleted))
+    # the most frequent 2- and 3-token phrases, so the queries match
+    grams: Counter = Counter()
+    for r in corpus_rows:
+        toks = re.findall(TOKEN_PATTERN, r["content"].lower())
+        for n in (2, 3):
+            grams.update(set(zip(*(toks[i:] for i in range(n)))))
+    phrases = [list(g) for g, _ in grams.most_common(6)]
+    yield d, deleted, phrases
+    shutil.rmtree(d, ignore_errors=True)
+
+
+def _terms_of(spark, d, sub):
+    return {r["term"] for r in spark.read.parquet(f"{d}/{sub}").select("term").collect()}
+
+
+def test_small_single_queries_run_no_spark_job(spark, store):
+    d, _, phrases = store
+    terms = ["def", "import", "return"]
+    # the first query of a delete epoch collects the tombstone set (cached)
+    B.topk_segments(spark, d, terms, k=10).collect()
+
+    info, n = _jobs_of(spark, lambda: B.probe_dictionary(spark, d, terms))
+    assert n == 0 and set(info) == set(terms)
+
+    rows, n = _jobs_of(spark, lambda: _rows(B.topk_segments(spark, d, terms, k=10)))
+    assert n == 0 and len(rows) == 10
+
+    ph, n = _jobs_of(spark, lambda: _rows(PH.phrase_topk_indexed(spark, d, phrases[0], k=10)))
+    assert n == 0 and ph
+
+    # no-match returns: an absent term, a phrase slot no doc holds
+    out, n = _jobs_of(spark, lambda: _rows(B.topk_segments(spark, d, ["zzz_absent"], k=10)))
+    assert n == 0 and out == []
+    out, n = _jobs_of(
+        spark, lambda: _rows(PH.phrase_topk_indexed(spark, d, ["def", "zzz_absent"], k=10))
+    )
+    assert n == 0 and out == []
+
+    # the counter does see jobs: the distributed plan of the same query
+    dist, n = _jobs_of(
+        spark, lambda: _rows(B.topk_segments(spark, d, terms, k=10, driver_path=False))
+    )
+    assert n > 0 and dist == rows
+
+
+def _spark_probe(spark, index_dir, terms, n_partitions):
+    """Reference: the Spark groupBy over the cached dictionary that the
+    driver-side probe replaced."""
+    base = B._terms_df(spark, index_dir)
+    pids = sorted({term_partition(t, n_partitions) for t in terms})
+    has_impact = "kth_tfnorm" in base.columns
+    aggs = [F.sum("df").alias("df"), F.sum("cf").alias("cf")]
+    if has_impact:
+        aggs.append(F.max("kth_tfnorm").alias("kth_tfnorm"))
+    rows = (
+        base.filter(F.col("partition_id").isin(pids) & F.col("term").isin(terms))
+        .groupBy("term", "partition_id")
+        .agg(*aggs)
+        .collect()
+    )
+    return {
+        r["term"]: {
+            "df": r["df"],
+            "cf": r["cf"],
+            "partition_id": r["partition_id"],
+            "kth_tfnorm": r["kth_tfnorm"] if has_impact else None,
+        }
+        for r in rows
+    }
+
+
+def test_driver_probe_equals_spark_groupby(spark, store):
+    d, _, _ = store
+    base_terms = _terms_of(spark, d, "terms")
+    delta_terms = _terms_of(spark, d, "terms_delta")
+    only_base = sorted(base_terms - delta_terms)
+    only_delta = sorted(delta_terms - base_terms)
+    assert only_base and only_delta, "base and delta must each hold terms the other lacks"
+    terms = sorted(
+        set(sorted(base_terms & delta_terms)[::10])
+        | set(only_base[:30])
+        | set(only_delta[:30])
+        | {"def", "zzz_absent"}
+    )
+
+    got = B.probe_dictionary(spark, d, terms, _N_PARTITIONS)
+    assert got == _spark_probe(spark, d, terms, _N_PARTITIONS)
+    assert "zzz_absent" not in got
+    assert all(got[t]["kth_tfnorm"] is None for t in only_delta[:30])
+    # base terms with at least k postings carry it
+    assert any(v["kth_tfnorm"] is not None for v in got.values())
+
+
+def test_bm25_driver_path_equals_distributed(spark, store):
+    d, deleted, _ = store
+    delta_terms = sorted(_terms_of(spark, d, "terms_delta") - _terms_of(spark, d, "terms"))
+    for terms in (
+        ["def"],
+        ["import", "return", "class"],
+        ["zzz_no_such_term"],
+        delta_terms[:3],
+        delta_terms[10:12] + ["def"],
+    ):
+        a = _rows(B.topk_segments(spark, d, terms, k=10, driver_path=True))
+        b = _rows(B.topk_segments(spark, d, terms, k=10, driver_path=False))
+        assert a == b, terms
+        assert not {r[1] for r in a} & deleted, terms
+
+
+def test_positional_driver_path_equals_spark_path(spark, store, monkeypatch):
+    """phrase, multiphrase, spanfirst and spannear: the driver path and the
+    Spark path (forced by a zero gate) return the same rows and scores,
+    and never a deleted doc."""
+    d, deleted, phrases = store
+    two = [p for p in phrases if len(p) == 2][0]
+    calls = [
+        *[(PH.phrase_topk_indexed, (p,), {}) for p in phrases],
+        (PH.multiphrase_topk_indexed, ([two[0], [two[1], "def", "return"]],), {}),
+        (PH.spanfirst_topk_indexed, (two, 40), {}),
+        (PH.spanfirst_topk_indexed, (["def", "return"], 60), {"slop": 8}),
+        (PH.spannear_topk_indexed, (["def", "return"], 6), {}),
+        (PH.spannear_topk_indexed, (two, 0), {}),
+    ]
+
+    def run_all():
+        return [_rows(fn(spark, d, *args, k=10, **kw)) for fn, args, kw in calls]
+
+    driver, n = _jobs_of(spark, run_all)
+    assert n == 0
+    monkeypatch.setattr(PH, "DRIVER_TOPK_MAX_DF", 0)
+    via_spark = run_all()
+    assert driver == via_spark
+    assert all(driver), "every query should match"
+    assert not {r[1] for rows in driver for r in rows} & deleted
+
+
+def test_segments_schema_is_the_on_disk_schema(spark, store):
+    d, _, _ = store
+    files = sorted(glob.glob(f"{d}/segments/partition_id=*/*.parquet"))
+    assert files
+    on_disk = StructType(
+        from_arrow_schema(pq.read_schema(files[0])).fields
+        + [StructField("partition_id", IntegerType())]
+    )
+    assert schemas.SEGMENTS == on_disk
+    assert schemas.SEGMENTS == spark.read.parquet(f"{d}/segments").schema

@@ -319,6 +319,16 @@ def test_single_kernel_equals_fold_impl(spark, stores):
         bm25f_topk(spark, stores, ["hash"], impl="nope")
 
 
+def test_mixed_case_terms_kernel_equals_fold(spark, stores):
+    """Mixed-case query terms score as their lowercase forms in both
+    multi_match_topk impls (the dictionaries hold lowercased terms)."""
+    mixed, lower = ["Hash", "SPARK", "merge"], ["hash", "spark", "merge"]
+    kern = _rows(multi_match_topk(spark, stores, mixed, k=8, tie_breaker=0.3))
+    fold = _rows(multi_match_topk(spark, stores, mixed, k=8, tie_breaker=0.3, impl="fold"))
+    ref = _rows(multi_match_topk(spark, stores, lower, k=8, tie_breaker=0.3, impl="fold"))
+    assert kern == fold == ref and len(kern) >= 1
+
+
 def test_batch_kernel_plan_has_bounded_exchanges(spark, stores):
     """The bucketed batch plan carries exactly the intended shuffles: the
     doc-range bucket co-location and the (tiny) per-query rank window —

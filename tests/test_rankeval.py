@@ -59,3 +59,12 @@ def test_rank_eval_k_cuts_ranking(spark):
     assert m4["mrr"] == 0.25
     with pytest.raises(ValueError, match="k must be"):
         _metrics(spark, [1], [1], k=0)
+
+
+def test_rank_eval_rounds_half_up(spark):
+    # 1/128 = 0.0078125 exactly: HALF_UP (Spark/DuckDB round) gives
+    # 0.007813 where Python's half-to-even round() gives 0.007812
+    m = _metrics(spark, list(range(1, 129)), [128], k=128)
+    assert m["mrr"] == 0.007813
+    assert m["precision_at_k"] == 0.007813
+    assert m["recall_at_k"] == 1.0
