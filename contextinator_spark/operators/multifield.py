@@ -322,7 +322,7 @@ def _bucketed_term_arrays(
     (field, term, bucket, docs, tfs, dls) with one row per
     (field, term, doc-range bucket, slice) and docs RELATIVE to the
     bucket start (int32). The doc-range bucketing is the same layout the
-    positional batch executor uses (phrase._bucketed_matches): the
+    positional match kernel uses (phrase._pack_term_blobs): the
     exchange then moves ~10³ primitive-array rows instead of one row per
     posting — the 4→16 pair measured the per-posting row stream (27M
     rows through decode → Arrow → shuffle) as the non-scaling residual

@@ -107,6 +107,8 @@ def test_small_single_queries_run_no_spark_job(spark, store):
 
     ph, n = _jobs_of(spark, lambda: _rows(PH.phrase_topk_indexed(spark, d, phrases[0], k=10)))
     assert n == 0 and ph
+    near, n = _jobs_of(spark, lambda: _rows(PH.near_topk_indexed(spark, d, phrases[0], 4, k=10)))
+    assert n == 0 and near
 
     # no-match returns: an absent term, a phrase slot no doc holds
     out, n = _jobs_of(spark, lambda: _rows(B.topk_segments(spark, d, ["zzz_absent"], k=10)))
@@ -188,9 +190,9 @@ def test_bm25_driver_path_equals_distributed(spark, store):
 
 
 def test_positional_driver_path_equals_spark_path(spark, store, monkeypatch):
-    """phrase, multiphrase, spanfirst and spannear: the driver path and the
-    Spark path (forced by a zero gate) return the same rows and scores,
-    and never a deleted doc."""
+    """phrase, multiphrase, spanfirst, spannear and NEAR: the driver path
+    and the Spark path (forced by a zero gate) return the same rows and
+    scores, and never a deleted doc."""
     d, deleted, phrases = store
     two = [p for p in phrases if len(p) == 2][0]
     calls = [
@@ -200,6 +202,8 @@ def test_positional_driver_path_equals_spark_path(spark, store, monkeypatch):
         (PH.spanfirst_topk_indexed, (["def", "return"], 60), {"slop": 8}),
         (PH.spannear_topk_indexed, (["def", "return"], 6), {}),
         (PH.spannear_topk_indexed, (two, 0), {}),
+        (PH.near_topk_indexed, (["def", "return"], 6), {}),
+        (PH.near_topk_indexed, (phrases[0], 2), {}),
     ]
 
     def run_all():

@@ -197,9 +197,9 @@ def test_near_scan_and_indexed_identical(spark, docs, phrase_idx):
 
 
 def test_positional_batch_matches_single_query_paths(spark, docs, phrase_idx):
-    """positional_topk_indexed_multi must equal per-query phrase/NEAR
-    indexed executors for a mixed batch (exact phrases, NEAR, duplicates,
-    absent terms, single-term)."""
+    """positional_topk_indexed_multi must equal the scan forms phrase_topk
+    / near_topk over the same docs for a mixed batch (exact phrases, NEAR,
+    duplicates, absent terms, single-term)."""
     queries = {
         1: (["table", "hash"], None),
         2: (["hash", "table"], None),
@@ -215,27 +215,46 @@ def test_positional_batch_matches_single_query_paths(spark, docs, phrase_idx):
         got.setdefault(r.query_id, []).append((r.rank, r.doc_id, r.score))
     for qid, (terms, w) in queries.items():
         if w is None:
-            want = [
-                (r.rank, r.doc_id, r.score)
-                for r in PH.phrase_topk_indexed(spark, phrase_idx, terms, k=10).collect()
-            ]
+            want = PH.phrase_topk(docs, terms, k=10)
         else:
-            want = [
-                (r.rank, r.doc_id, r.score)
-                for r in PH.near_topk_indexed(spark, phrase_idx, terms, w, k=10).collect()
-            ]
-        assert sorted(got.get(qid, [])) == sorted(want), (qid, terms, w)
+            want = PH.near_topk(docs, terms, w, k=10)
+        assert sorted(got.get(qid, [])) == sorted(
+            (r.rank, r.doc_id, r.score) for r in want.collect()
+        ), (qid, terms, w)
+
+
+def test_positional_batch_local_cut_honours_k1_b(spark, tmp_path_factory):
+    """The batch local cut ranks each bucket by the caller's k1/b: with
+    b=0 the long doc's two matches beat the short doc's one, although at
+    the default b the short doc ranks first."""
+    rows = [
+        (0, "x y x y " + " ".join(["f"] * 40)),
+        (1, "x y"),
+        (2, "z z z"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, content string")
+    d = str(tmp_path_factory.mktemp("k1b_idx"))
+    PH.write_phrase_index(spark, docs, d)
+    for k1, b in ((PH.BM25_K1, 0.0), (2.0, 0.0), (PH.BM25_K1, PH.BM25_B)):
+        multi = PH.positional_topk_indexed_multi(
+            spark, d, {1: (["x", "y"], None)}, k=1, k1=k1, b=b
+        )
+        want = PH.phrase_topk(docs, ["x", "y"], k=1, k1=k1, b=b)
+        assert [(r.doc_id, r.score) for r in multi.collect()] == [
+            (r.doc_id, r.score) for r in want.collect()
+        ], (k1, b)
+    assert [r.doc_id for r in PH.phrase_topk(docs, ["x", "y"], k=1, b=0.0).collect()] == [0]
 
 
 def test_positional_batch_local_cut_exact_under_ties(spark, tmp_path_factory):
     """The batch executor's per-bucket local top-k must stay EXACT when
     tf_norm values tie heavily (replicated docs — identical (tf, dl) ⇒
     FP-identical tf_norm ⇒ the doc_id tiebreak decides): per-query results
-    must match the single-query indexed path bit-for-bit, including which
-    of the tied replicas rank."""
+    must match the scan forms bit-for-bit, including which of the tied
+    replicas rank."""
     from contextinator_spark.operators.phrase import (
-        phrase_topk_indexed,
-        near_topk_indexed,
+        near_topk,
+        phrase_topk,
         positional_topk_indexed_multi,
     )
     from contextinator_spark.operators.segments import write_index
@@ -262,9 +281,9 @@ def test_positional_batch_local_cut_exact_under_ties(spark, tmp_path_factory):
     for r in out.collect():
         got.setdefault(r.query_id, []).append((r.rank, r.doc_id, r.score))
     want1 = [(r.rank, r.doc_id, r.score)
-             for r in phrase_topk_indexed(spark, d, ["alpha", "beta"], k=10).collect()]
+             for r in phrase_topk(rep, ["alpha", "beta"], k=10).collect()]
     want2 = [(r.rank, r.doc_id, r.score)
-             for r in near_topk_indexed(spark, d, ["gamma", "beta"], 4, k=10).collect()]
+             for r in near_topk(rep, ["gamma", "beta"], 4, k=10).collect()]
     assert sorted(got[1]) == sorted(want1)
     assert sorted(got[2]) == sorted(want2)
     # the tie classes resolved by doc_id: rank 1..k are the smallest ids
@@ -287,7 +306,7 @@ SPAN_DOCS = [
 
 def _brute_spannear(text: str, terms: list[str], slop: int) -> int:
     """EXHAUSTIVE in-order chain search — the semantic reference the
-    greedy kernel (phrase.py _bucketed_matches ordered branch) is pinned
+    greedy kernel (phrase.py _match_bucket ordered branch) is pinned
     against: tf = number of anchor positions p0 of terms[0] for which ANY
     strictly-increasing chain p0 < p1 < … < p_{n-1} over the terms'
     position lists satisfies p_{n-1} - p0 - (n-1) <= slop."""
@@ -373,6 +392,12 @@ def test_spannear_requires_slop():
 
     with _pt.raises(ValueError, match="slop"):
         PH.positional_matches(None, "/nonexistent", ["a", "b"], None, ordered=True)
+    # a batch spec gets the single query's error, before any read
+    spec = {0: (["a", "b"], None, True)}
+    with _pt.raises(ValueError, match="slop"):
+        PH.positional_matches_multi(None, "/nonexistent", spec)
+    with _pt.raises(ValueError, match="slop"):
+        PH.positional_topk_indexed_multi(None, "/nonexistent", spec)
 
 
 def test_positional_batch_ordered_spec(spark, span_idx):
@@ -573,6 +598,21 @@ def test_spanfirst_matches_exhaustive_reference(spark, span_idx):
             if (tf := _brute_spanfirst(text, terms, end, slop))
         }
         assert got == want, (terms, end, slop)
+    # every case again as ONE batch of 4-tuple specs
+    batch, _ = PH.positional_matches_multi(
+        spark, span_idx,
+        {i: (terms, slop, slop is not None, end) for i, (terms, end, slop) in enumerate(cases)},
+    )
+    got = {}
+    for r in batch.collect():
+        got.setdefault(r.query_id, {})[r.doc_id] = r.phrase_tf
+    for i, (terms, end, slop) in enumerate(cases):
+        want = {
+            did: tf
+            for did, text in SPAN_DOCS
+            if (tf := _brute_spanfirst(text, terms, end, slop))
+        }
+        assert got.get(i, {}) == want, (terms, end, slop)
 
 
 def test_spanfirst_topk_and_guards(spark, span_idx):
@@ -590,6 +630,12 @@ def test_spanfirst_topk_and_guards(spark, span_idx):
         PH.positional_matches(spark, span_idx, ["a", "b"], window=2, first=3)
     with pytest.raises(ValueError, match="≥ 1"):
         PH.positional_matches(spark, span_idx, ["a"], first=0)
+    # batch specs (terms, window, ordered, first) get the same errors
+    for batch in (PH.positional_matches_multi, PH.positional_topk_indexed_multi):
+        with pytest.raises(ValueError, match="NEAR"):
+            batch(spark, span_idx, {0: (["a", "b"], 2, False, 3)})
+        with pytest.raises(ValueError, match="≥ 1"):
+            batch(spark, span_idx, {0: (["a"], None, False, 0)})
 
 
 # ---------------------------------------------------------------------------
