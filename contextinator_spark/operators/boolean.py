@@ -632,10 +632,14 @@ def _boolean_scored(
                 )
             )
             continue
-        dfp = matched.agg(F.count(F.lit(1)).cast("double").alias("df_phrase"))
+        # df_phrase as a count window: the kernel plan runs once (an
+        # aggregate crossJoined back would evaluate it twice)
         parts.append(
-            matched.crossJoin(F.broadcast(stats_df))
-            .crossJoin(F.broadcast(dfp))
+            matched.withColumn(
+                "df_phrase",
+                F.count(F.lit(1)).over(Window.partitionBy()).cast("double"),
+            )
+            .crossJoin(F.broadcast(stats_df))
             .select(
                 "doc_id",
                 F.lit(cid).cast("int").alias("clause_id"),

@@ -129,14 +129,17 @@ def _rank_matches(
 ) -> DataFrame:
     """Shared ranking tail: BM25 single-synthetic-term scoring of the
     matched set (doc_id, phrase_tf, doc_len). `stats` is a 1-row
-    (n_docs, avgdl) frame; df_phrase is counted from the matched set —
-    both broadcast crossJoins, so everything stays one lazy plan ending in
+    (n_docs, avgdl) frame joined by broadcast; df_phrase is a count window
+    over the matched set, so the plan computing `matches` runs once (an
+    aggregate crossJoined back would evaluate it twice — the kernel or
+    the corpus scan included). One lazy plan ending in
     TakeOrderedAndProject."""
-    dfp = matches.agg(F.count(F.lit(1)).cast("double").alias("df_phrase"))
     w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     return (
-        matches.crossJoin(F.broadcast(stats))
-        .crossJoin(F.broadcast(dfp))
+        matches.withColumn(
+            "df_phrase", F.count(F.lit(1)).over(Window.partitionBy()).cast("double")
+        )
+        .crossJoin(F.broadcast(stats))
         .withColumn(
             "score",
             F.round(
