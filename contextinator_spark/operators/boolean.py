@@ -14,7 +14,7 @@ Clause kinds: ``term``, ``prefix``/``wildcard``/``fuzzy`` (bounded
 MultiTermQuery rewrite via bm25_segments.expand_prefix/expand_wildcard/
 expand_fuzzy), ``phrase`` / ``near`` / ``phrase_prefix`` (positional,
 scored as ONE synthetic term over the matched set —
-phrase.positional_matches; phrase_prefix = `"table s*"`, ES
+phrase.positional_matches_multi; phrase_prefix = `"table s*"`, ES
 match_phrase_prefix, its trailing prefix expanded into a MultiPhraseQuery
 alternatives slot), ``predicate`` (FILTER / negated FILTER).
 
@@ -28,19 +28,25 @@ phrase_topk_indexed's scoring), and boost_c is the Lucene `^w` multiplier
 
     +hash spark^0.5 -join "table hash"^2 "big table"~3 mer* grup~1 lang:en
 
-Scale shape (the reason this is one plan, not k plans):
-  * every posting read is partition-pruned (dictionary probe first; a
-    clause term absent everywhere costs zero scan jobs);
-  * each needed term is decoded ONCE even when several clauses share it;
-  * one shuffle: groupBy(doc_id) folds clause partials + the MUST-coverage
-    count; MUST_NOT and FILTER resolve as anti/semi joins on the (already
-    aggregated, candidate-sized) stream — AQE broadcasts small sides;
-  * a rare single-term MUST clause (df ≤ DRIVER_TOPK_MAX_DF) short-circuits
-    into a broadcast candidate mask applied kernel-side to every other
-    term's postings (searchsorted), the same sound candidate-based prune as
-    topk_segments_conjunctive — θ/block-max pruning is intentionally ABSENT
-    here: θ lower-bounds the disjunctive k-th best, which bounds nothing
-    once MUST/MUST_NOT constraints reshape the candidate set.
+Scale shape: ONE scorer, _batch_scored, builds every Boolean plan. It
+takes a batch of queries (boolean_topk_multi); a single query is a batch
+of one (_boolean_scored → boolean_topk and every re-scoring composer).
+  * every posting read is partition-pruned (one dictionary probe first; a
+    MUST term absent everywhere costs zero scan jobs);
+  * each needed term is decoded ONCE even when several clauses or queries
+    share it, and positional clauses run the positional kernel once for
+    the scoring clauses and once for the MUST_NOT clauses;
+  * one shuffle: groupBy(query_id, doc_id) folds clause partials + the
+    MUST-coverage count; MUST_NOT and FILTER resolve as one anti- and one
+    semi-join on the (already aggregated, candidate-sized) stream — AQE
+    broadcasts small sides;
+  * a query's rare single-term MUST clause (the batch's chosen terms
+    holding ≤ DRIVER_TOPK_MAX_DF postings in all) becomes a broadcast
+    candidate mask applied kernel-side to that query's term rows
+    (searchsorted), the same sound candidate-based prune as
+    topk_segments_conjunctive — θ/block-max pruning is intentionally
+    ABSENT here: θ lower-bounds the disjunctive k-th best, which bounds
+    nothing once MUST/MUST_NOT constraints reshape the candidate set.
 
 No reference parity: Contextinator has no Boolean search (its query surface
 is grep + vector retrieval, search.rs / chroma_ops.py); this is new engine
@@ -50,13 +56,15 @@ positional) into the standard IR algebra.
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import (
@@ -70,6 +78,7 @@ from .bm25 import idf_expr, tf_norm_expr
 from .bm25_segments import (
     MAX_EXPANSIONS,
     _BLOB_SCHEMA,
+    _OUT_CHUNK_ROWS,
     _idf,
     _local_frame,
     _read_partitions,
@@ -85,12 +94,10 @@ from .bm25_segments import (
     probe_dictionary,
 )
 from .compress import decode_postings
-from .deletes import live_mask
-from .phrase import positional_matches
+from .deletes import live_mask, member_mask
+from .phrase import positional_matches_multi
 
 MUST, SHOULD, MUST_NOT, FILTER = "MUST", "SHOULD", "MUST_NOT", "FILTER"
-
-_RESULT_SCHEMA = "rank int, doc_id long, score double"
 
 
 @dataclass(frozen=True)
@@ -425,7 +432,619 @@ def _positional_slots(
     return [*c.terms, exp]
 
 
-_SCORED_SCHEMA = "doc_id long, score double"
+_SLOT_BASE = 1024  # positional keys pack (qid, clause-slot); slots < 1024
+_TERMISH = ("term", "prefix", "wildcard", "fuzzy", "regexp")
+_POSITIONAL = ("phrase", "near", "phrase_prefix")
+_SCORED_SCHEMA = "query_id int, doc_id long, score double"
+
+
+def _by_key(key: str, values: dict) -> Column:
+    """values[<key column>] as a Column: one literal when every key maps to
+    the same value, else a map literal indexed by the key. Per-query
+    driver constants ride the plan this way instead of a join against a
+    driver-built frame."""
+    distinct = set(values.values())
+    if len(distinct) == 1:
+        return F.lit(distinct.pop())
+    return F.create_map(*[F.lit(x) for kv in values.items() for x in kv])[F.col(key)]
+
+
+def _batch_scored(
+    spark: SparkSession,
+    index_dir: str,
+    parsed: dict[int, list[Clause]],
+    k1: float,
+    b: float,
+    max_expansions: int,
+    combine: str,
+    tie_breaker: float,
+    msm: dict[int, int],
+    rare_filter: bool = True,
+    max_partial_rows: int | None = None,
+    k: int = DEFAULT_TOP_K,
+    _partials_out: list | None = None,
+) -> DataFrame:
+    """The Boolean scorer: (query_id, doc_id, score) for every doc that
+    satisfies its query's occur algebra, for a batch of parsed queries
+    (query_id → clauses, ids in [0, 2^20)) in ONE plan.
+    boolean_topk_multi adds the per-query rank window; a single query is a
+    batch of one (_boolean_scored).
+
+    Per query, `combine` picks the cross-clause combiner: "sum" is
+    BooleanQuery (Σ over matching scoring clauses); "dismax" is
+    DisjunctionMaxQuery — each scoring clause first folds to its own score
+    (a prefix/fuzzy clause is still a sum over its expansion, per Lucene's
+    rewrite), then score = max_c + tie_breaker · Σ_{c' ≠ argmax} c'.
+    msm[qid] is Lucene's setMinimumNumberShouldMatch: a doc must match ≥
+    that many DISTINCT SHOULD clauses on top of full MUST coverage (a
+    clause matching through several expansion terms counts once); more
+    than the query's SHOULD clauses matches nothing. Positional clauses
+    need a positions store (posting_format=2); term-only queries run on
+    either format.
+
+    Topology:
+      * ONE dictionary probe for the union of every query's scoring and
+        MUST_NOT terms (prefix/wildcard/fuzzy/regexp expansions are
+        per-clause dictionary reads, as in Lucene's MultiTermQuery
+        rewrite); a MUST term clause with no indexed expansion empties its
+        query with no scan;
+      * ONE pruned segment scan decodes each term's blob once and fans the
+        partials out to every (query, clause-slot) using it — rows carry
+        (query_id, slot, is_must, partial, is_const);
+      * rare-MUST candidate masks: a query's rarest single-term MUST
+        clause, when the batch's chosen terms hold ≤ DRIVER_TOPK_MAX_DF
+        postings in all, is read on the driver and broadcast; the scan
+        kernel drops that query's rows outside it (searchsorted) — the
+        sound candidate prune of topk_segments_conjunctive. θ/block-max
+        pruning is absent: θ bounds the disjunctive k-th best, which
+        bounds nothing once MUST/MUST_NOT reshape the candidate set;
+      * positional clauses run the positional kernel
+        (phrase.positional_matches_multi) once for every scoring clause of
+        the batch and once for every MUST_NOT clause; df_phrase is a count
+        window per clause, so each kernel plan is consumed once;
+      * ONE exchange folds the partials per (query, doc): per-slot sums
+        pivoted inside the same aggregate (a slot-then-doc chain would be
+        two exchanges over the partial stream) give both Σ and
+        max + tie·rest, plus MUST (and msm SHOULD) coverage;
+      * MUST_NOT doc sets fold into ONE (query_id, doc_id) anti-join and
+        FILTER predicates into ONE semi-join (idf/df/avgdl stay
+        collection-global), so joins never multiply with batch size.
+
+    `max_partial_rows` bounds the (query, slot, doc) partial stream one
+    plan may carry: per-query stream sizes are estimated from the
+    dictionary's df column (Σ df over each term clause's expansion, min df
+    over a positional clause's terms), and a batch over the bound is
+    greedily packed into sub-batches that each fit. Each runs eagerly as
+    boolean_topk_multi(k) and the result is their (≤ k per query) rows —
+    exact, because queries never interact. This is the single-node safety
+    valve for the 64M-doc fold (BENCH/BASELINE.md); on a cluster the fold
+    exchange distributes and the bound can stay None.
+
+    `_partials_out`, when given, receives the pre-fold partial stream
+    (boolean_explain decomposes hits with it)."""
+    if combine not in ("sum", "dismax"):
+        raise ValueError(f"combine must be sum|dismax, got {combine!r}")
+    if not parsed:
+        return _local_frame(spark, [], _SCORED_SCHEMA)
+    stats = load_stats(index_dir)
+    n_partitions = int(stats["n_partitions"])
+    n_docs, avgdl = float(stats["n_docs"]), float(stats["avgdl"])
+
+    # ---- per-query clause partition + slot assignment
+    scoring: dict[int, list[tuple[int, Clause]]] = {}  # qid -> [(slot, c)]
+    nots: dict[int, list[Clause]] = {}
+    filters: dict[int, list[Clause]] = {}
+    for qid, cls in parsed.items():
+        if qid < 0 or qid >= 2**20:
+            raise ValueError(f"query_id out of range [0, 2^20): {qid}")
+        if msm[qid] < 0:
+            raise ValueError(f"min_should_match must be ≥ 0, got {msm[qid]}")
+        sc = [c for c in cls if c.occur in (MUST, SHOULD)]
+        if not sc:
+            raise ValueError(
+                f"query {qid}: BooleanQuery needs ≥1 scoring (MUST/SHOULD) "
+                "clause — pure filter/exclusion queries have no ranking signal"
+            )
+        if any(c.kind == "predicate" and c.const_score is None for c in sc):
+            raise ValueError(
+                f"query {qid}: predicate clauses are FILTER/MUST_NOT only "
+                "(add ^=v for a scoring ConstantScore filter)"
+            )
+        if len(sc) > _SLOT_BASE:
+            raise ValueError(f"query {qid}: >{_SLOT_BASE} scoring clauses")
+        scoring[qid] = list(enumerate(sc))
+        nots[qid] = [c for c in cls if c.occur == MUST_NOT]
+        filters[qid] = [c for c in cls if c.occur == FILTER]
+
+    # ---- expansion + ONE dictionary probe over the union
+    cl_terms: dict[tuple[int, int], list[str]] = {}
+    for qid, slots in scoring.items():
+        for slot, c in slots:
+            if c.kind in _TERMISH:
+                cl_terms[(qid, slot)] = _clause_terms(spark, index_dir, c, max_expansions)
+    not_terms: dict[int, list[str]] = {}
+    for qid, cs in nots.items():
+        ts = [
+            t
+            for c in cs
+            if c.kind in _TERMISH
+            for t in _clause_terms(spark, index_dir, c, max_expansions)
+        ]
+        if ts:
+            not_terms[qid] = sorted(set(ts))
+    all_terms = sorted(
+        {t for ts in cl_terms.values() for t in ts}
+        | {t for ts in not_terms.values() for t in ts}
+    )
+    info = probe_dictionary(spark, index_dir, all_terms, n_partitions) if all_terms else {}
+    idf = {t: _idf(float(info[t]["df"]), n_docs) for t in info}
+
+    # a query matches nothing when a MUST term clause has no indexed
+    # expansion, or when its msm exceeds its SHOULD clause count (Lucene)
+    dead = {
+        qid
+        for qid, slots in scoring.items()
+        for slot, c in slots
+        if c.occur == MUST
+        and c.kind in _TERMISH
+        and not any(t in info for t in cl_terms[(qid, slot)])
+    } | {
+        qid
+        for qid, slots in scoring.items()
+        if msm[qid] > sum(c.occur == SHOULD for _s, c in slots)
+    }
+    live = sorted(set(scoring) - dead)
+    if not live:
+        return _local_frame(spark, [], _SCORED_SCHEMA)
+    live_set = set(live)
+    m_slots = max(len(scoring[qid]) for qid in live)
+
+    # ---- optional stream bound: estimate per-query partial rows from the
+    # dictionary (metadata only) and sub-batch greedily when over
+    if max_partial_rows is not None and len(live) > 1:
+        pos_terms = sorted(
+            {
+                t
+                for qid in live
+                for _slot, c in scoring[qid]
+                if c.kind in _POSITIONAL
+                for t in c.terms
+            }
+        )
+        pos_info = (
+            probe_dictionary(spark, index_dir, pos_terms, n_partitions)
+            if pos_terms
+            else {}
+        )
+        est: dict[int, int] = {}
+        for qid in live:
+            rows = 0
+            for slot, c in scoring[qid]:
+                if c.kind in _POSITIONAL:
+                    # estimate from the EXACT terms' dfs (sound row bound:
+                    # matches ⊆ any exact term's postings; phrase_prefix
+                    # always carries ≥1 exact head term by the parser)
+                    dfs = [
+                        int(pos_info[t]["df"]) for t in c.terms if t in pos_info
+                    ]
+                    rows += min(dfs) if dfs else 0
+                elif c.kind == "predicate":
+                    # ConstantScore(filter): selectivity unknown without a
+                    # scan, so budget the worst case (every doc matches)
+                    rows += int(n_docs)
+                else:
+                    rows += sum(
+                        int(info[t]["df"])
+                        for t in cl_terms.get((qid, slot), ())
+                        if t in info
+                    )
+            est[qid] = rows
+        if sum(est.values()) > max_partial_rows:
+            groups: list[list[int]] = []
+            cur: list[int] = []
+            cur_rows = 0
+            for qid in live:
+                if cur and cur_rows + est[qid] > max_partial_rows:
+                    groups.append(cur)
+                    cur, cur_rows = [], 0
+                cur.append(qid)
+                cur_rows += est[qid]
+            if cur:
+                groups.append(cur)
+            # sub-batches run EAGERLY (collect per group, ≤ k rows/query)
+            # instead of folding into one lazy union: a lazy union keeps
+            # every group's multi-GB shuffle files live until the final
+            # collect — on tmpfs scratch that accumulation re-creates the
+            # very memory cliff the bound exists to avoid (observed: the
+            # 64M-doc 100-query run was OOM-killed by ~53 GB of retained
+            # sub-batch shuffle on /dev/shm plus the driver heap). After
+            # each group the plan is dropped and a JVM GC nudge lets
+            # ContextCleaner reap its shuffle files before the next runs.
+            rows: list = []
+            for g in groups:
+                rows.extend(
+                    boolean_topk_multi(
+                        spark,
+                        index_dir,
+                        {qid: parsed[qid] for qid in g},
+                        k=k,
+                        k1=k1,
+                        b=b,
+                        max_expansions=max_expansions,
+                        combine=combine,
+                        tie_breaker=tie_breaker,
+                        min_should_match={qid: msm[qid] for qid in g},
+                    )
+                    .select("query_id", "doc_id", "score")
+                    .collect()
+                )
+                spark.sparkContext._jvm.System.gc()
+            return _local_frame(spark, [tuple(r) for r in rows], _SCORED_SCHEMA)
+
+    tomb_bc, tomb_over = _tombstones(spark, index_dir)
+    parts: list[DataFrame] = []
+
+    # ---- rare-MUST candidate masks (sound conjunctive prune, kernel-side):
+    # per query, its rarest indexed single-term MUST clause, when the query
+    # scores more than that one term; one gate for the whole batch, since
+    # the driver reads and holds every chosen term's postings
+    rare: dict[int, str] = {}
+    if rare_filter:
+        for qid in live:
+            must_terms = [
+                c.terms[0]
+                for _s, c in scoring[qid]
+                if c.occur == MUST and c.kind == "term" and c.terms[0] in info
+            ]
+            n_terms = len(
+                {t for s, _c in scoring[qid] for t in cl_terms.get((qid, s), ()) if t in info}
+            )
+            if must_terms and n_terms > 1:
+                rare[qid] = min(must_terms, key=lambda t: (int(info[t]["df"]), t))
+        if sum(int(info[t]["df"]) for t in rare.values()) > DRIVER_TOPK_MAX_DF:
+            rare = {}
+    cand_bc = None
+    if rare:
+        rare_terms = sorted(set(rare.values()))
+        blobs = _read_partitions(
+            index_dir, "segments", sorted({info[t]["partition_id"] for t in rare_terms}),
+            rare_terms, _BLOB_SCHEMA,
+        )
+        ids: dict[str, list] = {}
+        for t, blob in zip(blobs.column("term").to_pylist(), blobs.column("blob").to_pylist()):
+            ids.setdefault(t, []).append(decode_postings(blob)[0])
+        cand = {t: np.sort(np.concatenate(v)) for t, v in ids.items()}
+        cand_bc = spark.sparkContext.broadcast(
+            {qid: cand.get(t, np.empty(0, np.int64)) for qid, t in rare.items()}
+        )
+
+    # ---- term-clause partial stream: decode once, fan out per (qid, slot).
+    # For a ConstantScore clause the weight IS the per-doc partial (const
+    # flag set); for BM25 clauses it is idf·boost, multiplied by tf_norm.
+    fan: dict[str, list[tuple]] = {}
+    for (qid, slot), ts in cl_terms.items():
+        if qid not in live_set:
+            continue
+        c = scoring[qid][slot][1]
+        for t in ts:
+            if t in info:
+                fan.setdefault(t, []).append(
+                    (qid, slot, c.occur == MUST,
+                     float(c.const_score) if c.const_score is not None
+                     else idf[t] * float(c.boost),
+                     c.const_score is not None)
+                )
+    if fan:
+        fan_arr = {
+            t: (
+                np.asarray([e[0] for e in v], np.int32),
+                np.asarray([e[1] for e in v], np.int32),
+                np.asarray([e[2] for e in v], bool),
+                np.asarray([e[3] for e in v], np.float64),
+                np.asarray([e[4] for e in v], bool),
+            )
+            for t, v in fan.items()
+        }
+        pids = sorted({info[t]["partition_id"] for t in fan})
+        seg = _segments(spark, index_dir).filter(
+            F.col("partition_id").isin(pids) & F.col("term").isin(sorted(fan))
+        )
+        seg = _spread_slices(seg, spark, sum(int(info[t]["df"]) for t in fan))
+
+        def score_slices(pdf_iter):
+            cand = {} if cand_bc is None else cand_bc.value
+            oq, os_, om, od, op, ok, n_out = [], [], [], [], [], [], 0
+
+            def flush():
+                return pd.DataFrame(
+                    {
+                        "query_id": np.concatenate(oq),
+                        "slot": np.concatenate(os_),
+                        "is_must": np.concatenate(om),
+                        "doc_id": np.concatenate(od),
+                        "partial": np.concatenate(op),
+                        "is_const": np.concatenate(ok),
+                    }
+                )
+
+            for pdf in pdf_iter:
+                for term, blob in zip(pdf["term"], pdf["blob"]):
+                    doc_ids, tfs, dls = decode_postings(bytes(blob))
+                    if tomb_bc is not None and doc_ids.size:
+                        mliv = live_mask(doc_ids, tomb_bc.value)
+                        if not mliv.all():
+                            doc_ids, tfs, dls = doc_ids[mliv], tfs[mliv], dls[mliv]
+                    if doc_ids.size == 0:
+                        continue
+                    qa, sa, ma, wa, ka = fan_arr[term]
+                    tfn = (
+                        None
+                        if ka.all()  # const-only term: skip the BM25 math
+                        else _tf_norm(
+                            tfs.astype(np.float64), dls.astype(np.float64),
+                            avgdl, k1, b,
+                        )
+                    )
+                    for i in range(qa.size):
+                        d = doc_ids
+                        p = np.full(d.size, wa[i], np.float64) if ka[i] else tfn * wa[i]
+                        mask = cand.get(int(qa[i]))
+                        if mask is not None:
+                            keep = member_mask(d, mask)
+                            d, p = d[keep], p[keep]
+                            if d.size == 0:
+                                continue
+                        oq.append(np.full(d.size, qa[i], np.int32))
+                        os_.append(np.full(d.size, sa[i], np.int32))
+                        om.append(np.full(d.size, ma[i], bool))
+                        od.append(d)
+                        op.append(p)
+                        ok.append(np.full(d.size, ka[i], bool))
+                        n_out += d.size
+                        if n_out >= _OUT_CHUNK_ROWS:
+                            yield flush()
+                            oq, os_, om, od, op, ok, n_out = (
+                                [], [], [], [], [], [], 0,
+                            )
+            if od:
+                yield flush()
+
+        parts.append(
+            seg.mapInPandas(
+                score_slices,
+                schema="query_id int, slot int, is_must boolean, doc_id long, "
+                       "partial double, is_const boolean",
+            )
+        )
+
+    # ---- positional clauses: one kernel plan for the scoring clauses and
+    # one for the MUST_NOT clauses, keyed qid·_SLOT_BASE + clause position
+    pos_spec: dict[int, tuple[list, int | None]] = {}
+    pos_clause: dict[int, Clause] = {}
+    not_spec: dict[int, tuple[list, int | None]] = {}
+    for qid in live:
+        for slot, c in scoring[qid]:
+            if c.kind in _POSITIONAL:
+                slots = _positional_slots(spark, index_dir, c, max_expansions)
+                if slots is None:
+                    continue  # unexpandable prefix: n_must coverage empties
+                pos_spec[qid * _SLOT_BASE + slot] = (slots, c.window)
+                pos_clause[qid * _SLOT_BASE + slot] = c
+        for j, c in enumerate(nots[qid]):
+            if c.kind in _POSITIONAL:
+                slots = _positional_slots(spark, index_dir, c, max_expansions)
+                if slots is None:
+                    continue  # unexpandable -"a b*" excludes nothing
+                not_spec[qid * _SLOT_BASE + j] = (slots, c.window)
+    key_qid = (F.col("query_id") / _SLOT_BASE).cast("int").alias("query_id")
+    if pos_spec:
+        matched, _ = positional_matches_multi(spark, index_dir, pos_spec)
+        # ConstantScore(phrase) is v per match; otherwise BM25 of one
+        # synthetic term with df = the clause's live match count
+        const = _by_key(
+            "query_id", {key: c.const_score for key, c in pos_clause.items()}
+        ).cast("double")
+        df_phrase = F.count(F.lit(1)).over(Window.partitionBy("query_id"))
+        parts.append(
+            matched.select(
+                key_qid,
+                (F.col("query_id") % _SLOT_BASE).cast("int").alias("slot"),
+                _by_key(
+                    "query_id", {key: c.occur == MUST for key, c in pos_clause.items()}
+                ).alias("is_must"),
+                "doc_id",
+                F.coalesce(
+                    const,
+                    idf_expr(df_phrase.cast("double"), F.lit(n_docs))
+                    * tf_norm_expr(
+                        F.col("phrase_tf").cast("double"),
+                        F.col("doc_len").cast("double"),
+                        F.lit(avgdl),
+                        k1,
+                        b,
+                    )
+                    * _by_key(
+                        "query_id", {key: float(c.boost) for key, c in pos_clause.items()}
+                    ),
+                ).alias("partial"),
+                const.isNotNull().alias("is_const"),
+            )
+        )
+
+    # ---- scoring-predicate streams (ConstantScore over metadata filters):
+    # doc_meta scans (metadata-scale). doc_meta is not tombstone-masked on
+    # disk, so mask here — the term/positional streams mask kernel-side.
+    meta_path = os.path.join(index_dir, "doc_meta")
+    preds = [
+        spark.read.parquet(meta_path)
+        .filter(c.predicate)
+        .select(
+            F.lit(qid).cast("int").alias("query_id"),
+            F.lit(slot).cast("int").alias("slot"),
+            F.lit(c.occur == MUST).alias("is_must"),
+            "doc_id",
+            F.lit(float(c.const_score)).alias("partial"),
+            F.lit(True).alias("is_const"),
+        )
+        for qid in live
+        for slot, c in scoring[qid]
+        if c.kind == "predicate"
+    ]
+    if preds:
+        pm = functools.reduce(DataFrame.unionByName, preds)
+        if tomb_bc is not None:
+            # an Arrow LocalRelation: no Spark job, no Python row per id
+            deleted = spark.createDataFrame(pa.table({"doc_id": tomb_bc.value}))
+            pm = pm.join(F.broadcast(deleted), "doc_id", "left_anti")
+        parts.append(pm)
+
+    if not parts:
+        # every scoring clause expanded to zero indexed terms (e.g. a
+        # SHOULD-only query of unknown words): nothing can score, so the
+        # Lucene-faithful result is empty — not an error
+        return _local_frame(spark, [], _SCORED_SCHEMA)
+    allp = functools.reduce(DataFrame.unionByName, parts)
+    if tomb_over is not None:  # over-cap tombstones: distributed anti-join
+        allp = allp.join(tomb_over, "doc_id", "left_anti")
+    if _partials_out is not None:
+        _partials_out.append(allp)
+
+    # ---- ONE exchange: per-slot pivot + MUST coverage per (query, doc).
+    # Const slots fold with MAX (v once per doc, expansion-term dupes all
+    # equal v); a (query, slot) is either const or BM25, so exactly one of
+    # the two legs is non-null per group — their coalesced sum is the slot.
+    if any(c.const_score is not None for qid in live for _s, c in scoring[qid]):
+        aggs = [
+            (
+                F.coalesce(
+                    F.sum(
+                        F.when(
+                            (F.col("slot") == j) & ~F.col("is_const"),
+                            F.col("partial"),
+                        )
+                    ),
+                    F.lit(0.0),
+                )
+                + F.coalesce(
+                    F.max(
+                        F.when(
+                            (F.col("slot") == j) & F.col("is_const"),
+                            F.col("partial"),
+                        )
+                    ),
+                    F.lit(0.0),
+                )
+            ).alias(f"_s{j}")
+            for j in range(m_slots)
+        ]
+    else:
+        aggs = [
+            F.coalesce(
+                F.sum(F.when(F.col("slot") == j, F.col("partial"))), F.lit(0.0)
+            ).alias(f"_s{j}")
+            for j in range(m_slots)
+        ]
+    n_must = {qid: sum(c.occur == MUST for _s, c in scoring[qid]) for qid in live}
+    if any(n_must.values()):
+        aggs.append(
+            F.count_distinct(F.when(F.col("is_must"), F.col("slot"))).alias("n_cov")
+        )
+    if any(msm[qid] for qid in live):
+        # SHOULD coverage (minimum_should_match): distinct non-MUST slots
+        aggs.append(
+            F.count_distinct(F.when(~F.col("is_must"), F.col("slot"))).alias("n_scov")
+        )
+    scored = allp.groupBy("query_id", "doc_id").agg(*aggs)
+    if any(n_must.values()):
+        scored = scored.filter(F.col("n_cov") == _by_key("query_id", n_must))
+    if any(msm[qid] for qid in live):
+        scored = scored.filter(
+            F.col("n_scov") >= _by_key("query_id", {qid: msm[qid] for qid in live})
+        )
+    cols = [F.col(f"_s{j}") for j in range(m_slots)]
+    total = functools.reduce(lambda x, y: x + y, cols)
+    if combine == "dismax":
+        best = F.greatest(*cols) if m_slots > 1 else cols[0]
+        expr = best + F.lit(float(tie_breaker)) * (total - best)
+    else:
+        expr = total
+    scored = scored.select(
+        "query_id", "doc_id", F.round(expr, SCORE_ROUND_DECIMALS).alias("score")
+    )
+
+    # ---- MUST_NOT: term-ish sets via one pruned scan, positional matches,
+    # negated predicates — ONE (query_id, doc_id) anti-join for all.
+    # Deleted docs need no masking: they never enter the scored stream.
+    excl: list[DataFrame] = []
+    nf: dict[str, list[int]] = {}
+    for qid, ts in not_terms.items():
+        if qid not in live_set:
+            continue
+        for t in ts:
+            if t in info:
+                nf.setdefault(t, []).append(qid)
+    if nf:
+        pids = sorted({info[t]["partition_id"] for t in nf})
+        nseg = _segments(spark, index_dir).filter(
+            F.col("partition_id").isin(pids) & F.col("term").isin(sorted(nf))
+        )
+        nf_arr = {t: np.asarray(v, np.int32) for t, v in nf.items()}
+
+        def excl_docs(pdf_iter):
+            for pdf in pdf_iter:
+                oq, od = [], []
+                for term, blob in zip(pdf["term"], pdf["blob"]):
+                    ids = decode_postings(bytes(blob))[0]
+                    if ids.size == 0:
+                        continue
+                    for qid in nf_arr[term]:
+                        oq.append(np.full(ids.size, qid, np.int32))
+                        od.append(ids)
+                if od:
+                    yield pd.DataFrame(
+                        {"query_id": np.concatenate(oq), "doc_id": np.concatenate(od)}
+                    )
+
+        excl.append(nseg.mapInPandas(excl_docs, schema="query_id int, doc_id long"))
+    if not_spec:
+        not_matched, _ = positional_matches_multi(spark, index_dir, not_spec)
+        excl.append(not_matched.select(key_qid, "doc_id"))
+    excl.extend(
+        spark.read.parquet(meta_path)
+        .filter(c.predicate)
+        .select(F.lit(qid).cast("int").alias("query_id"), "doc_id")
+        for qid in live
+        for c in nots[qid]
+        if c.kind == "predicate"
+    )
+    if excl:
+        ex = functools.reduce(DataFrame.unionByName, excl)
+        scored = scored.join(ex.distinct(), ["query_id", "doc_id"], "left_anti")
+
+    # ---- FILTER: a doc must satisfy every FILTER of its query — one
+    # doc_meta scan per filtered query (its predicates ANDed), ONE
+    # (query_id, doc_id) semi-join; scores stay global
+    has_flt = [qid for qid in live if filters[qid]]
+    if has_flt:
+        ok = functools.reduce(
+            DataFrame.unionByName,
+            [
+                spark.read.parquet(meta_path)
+                .filter(" AND ".join(f"({c.predicate})" for c in filters[qid]))
+                .select(F.lit(qid).cast("int").alias("query_id"), "doc_id")
+                for qid in has_flt
+            ],
+        )
+        if len(has_flt) == len(live):
+            scored = scored.join(ok, ["query_id", "doc_id"], "left_semi")
+        else:
+            in_flt = F.col("query_id").isin(has_flt)
+            scored = (
+                scored.filter(in_flt)
+                .join(ok, ["query_id", "doc_id"], "left_semi")
+                .unionByName(scored.filter(~in_flt))
+            )
+    return scored
 
 
 def _boolean_scored(
@@ -441,377 +1060,18 @@ def _boolean_scored(
     min_should_match: int = 0,
     _partials_out: list | None = None,
 ) -> DataFrame:
-    """The FULL scored match stream (doc_id, score) of a Boolean query —
-    everything boolean_topk does except the final rank/limit, so
-    composers that re-weight scores before ranking (boosting_topk) can
-    reuse the whole executor: occur semantics, expansions, positional
-    clauses, const scores, msm, MUST_NOT, FILTER.
-
-    `combine` picks the cross-clause score combiner: "sum" is
-    BooleanQuery (Σ over matching scoring clauses); "dismax" is
-    DisjunctionMaxQuery — each scoring CLAUSE first folds to its own
-    score (a prefix/fuzzy clause is internally still a sum over its
-    expansion, per Lucene's rewrite), then
-    score(d) = max_c + tie_breaker · Σ_{c' ≠ argmax} c'. Occur semantics
-    (MUST coverage, MUST_NOT, FILTER) are combiner-independent.
-
-    `min_should_match` is Lucene's BooleanQuery.setMinimumNumberShouldMatch:
-    a doc must match ≥ that many DISTINCT SHOULD clauses (on top of full
-    MUST coverage). A clause matching through several expansion terms
-    counts once — coverage counts clauses, not terms. A value larger than
-    the number of SHOULD clauses is unsatisfiable → empty result.
-
-    Positional clauses (phrase/near) require a positions store
-    (posting_format=2, segments.write_index(positions=True)); term-only
-    queries run on either format."""
-    if combine not in ("sum", "dismax"):
-        raise ValueError(f"combine must be sum|dismax, got {combine!r}")
-    stats = load_stats(index_dir)
-    n_partitions = int(stats["n_partitions"])
-    n_docs, avgdl = float(stats["n_docs"]), float(stats["avgdl"])
-
-    scoring = [c for c in clauses if c.occur in (MUST, SHOULD)]
-    if not scoring:
-        raise ValueError(
-            "BooleanQuery needs ≥1 scoring (MUST/SHOULD) clause — pure "
-            "filter/exclusion queries have no ranking signal"
-        )
-    nots = [c for c in clauses if c.occur == MUST_NOT]
-    filters = [c for c in clauses if c.occur == FILTER]
-    if any(c.kind == "predicate" and c.const_score is None for c in scoring):
-        raise ValueError(
-            "predicate clauses are FILTER/MUST_NOT only (add ^=v for a "
-            "scoring ConstantScore filter)"
-        )
-    if min_should_match < 0:
-        raise ValueError(f"min_should_match must be ≥ 0, got {min_should_match}")
-    should_ids = [cid for cid, c in enumerate(clauses) if c.occur == SHOULD]
-    if min_should_match > len(should_ids):
-        # Lucene: msm above the SHOULD clause count matches nothing
-        return _local_frame(spark, [], _SCORED_SCHEMA)
-
-    # ---- expansion + dictionary probe (metadata-scale, no posting reads)
-    termish = [
-        (cid, c) for cid, c in enumerate(clauses)
-        if c.occur in (MUST, SHOULD)
-        and c.kind in ("term", "prefix", "wildcard", "fuzzy", "regexp")
-    ]
-    positional = [
-        (cid, c) for cid, c in enumerate(clauses)
-        if c.occur in (MUST, SHOULD)
-        and c.kind in ("phrase", "near", "phrase_prefix")
-    ]
-    must_ids = [cid for cid, c in enumerate(clauses) if c.occur == MUST]
-
-    cl_terms: dict[int, list[str]] = {
-        cid: _clause_terms(spark, index_dir, c, max_expansions)
-        for cid, c in termish
-    }
-    all_terms = sorted({t for ts in cl_terms.values() for t in ts})
-    info = probe_dictionary(spark, index_dir, all_terms, n_partitions) if all_terms else {}
-    # a MUST term-group with no indexed expansion can never be satisfied
-    for cid, c in termish:
-        if c.occur == MUST and not any(t in info for t in cl_terms[cid]):
-            return _local_frame(spark, [], _SCORED_SCHEMA)
-
-    tomb_bc, tomb_over = _tombstones(spark, index_dir)
-    idf = {t: _idf(float(info[t]["df"]), n_docs) for t in info}
-    # term → clause ids that score it (several clauses may share a term;
-    # the blob is decoded once and fanned out per clause)
-    term_clauses: dict[str, list[int]] = {}
-    for cid, _c in termish:
-        for t in cl_terms[cid]:
-            if t in info:
-                term_clauses.setdefault(t, []).append(cid)
-
-    # ---- rare-MUST candidate mask (sound conjunctive prune, kernel-side)
-    cand_bc = None
-    if rare_filter and must_ids:
-        rare = [
-            (int(info[c.terms[0]]["df"]), c.terms[0])
-            for cid, c in termish
-            if c.occur == MUST and c.kind == "term" and c.terms[0] in info
-        ]
-        if rare:
-            df_r, t_r = min(rare)
-            if df_r <= DRIVER_TOPK_MAX_DF and len(term_clauses) > 1:
-                # bounded by the df gate: read on the driver, no Spark job
-                blobs = _read_partitions(
-                    index_dir, "segments", [info[t_r]["partition_id"]], [t_r],
-                    _BLOB_SCHEMA,
-                ).column("blob")
-                ids = [decode_postings(blob)[0] for blob in blobs.to_pylist()]
-                cand_bc = spark.sparkContext.broadcast(
-                    np.sort(np.concatenate(ids)) if ids else np.empty(0, np.int64)
-                )
-
-    parts: list[DataFrame] = []
-
-    # ---- term-clause partial stream (one pruned scan, Arrow kernel)
-    if term_clauses:
-        pids = sorted({info[t]["partition_id"] for t in term_clauses})
-        seg = _segments(spark, index_dir).filter(
-            F.col("partition_id").isin(pids)
-            & F.col("term").isin(sorted(term_clauses))
-        )
-        seg = _spread_slices(
-            seg, spark, sum(int(info[t]["df"]) for t in term_clauses)
-        )
-        idf_b, tc_b = dict(idf), dict(term_clauses)
-        boost_b = {cid: float(c.boost) for cid, c in termish}
-        const_b = {cid: c.const_score for cid, c in termish}
-
-        def score_slices(pdf_iter):
-            cand = cand_bc.value if cand_bc is not None else None
-            for pdf in pdf_iter:
-                out_d, out_c, out_p = [], [], []
-                for term, blob in zip(pdf["term"], pdf["blob"]):
-                    doc_ids, tfs, dls = decode_postings(bytes(blob))
-                    if tomb_bc is not None and doc_ids.size:
-                        m = live_mask(doc_ids, tomb_bc.value)
-                        doc_ids, tfs, dls = doc_ids[m], tfs[m], dls[m]
-                    if cand is not None and doc_ids.size:
-                        if cand.size:
-                            pos = np.minimum(
-                                np.searchsorted(cand, doc_ids), cand.size - 1
-                            )
-                            m = cand[pos] == doc_ids
-                        else:
-                            m = np.zeros(doc_ids.size, bool)
-                        doc_ids, tfs, dls = doc_ids[m], tfs[m], dls[m]
-                    if doc_ids.size == 0:
-                        continue
-                    partial = None  # BM25 math skipped for const-only terms
-                    for cid in tc_b[term]:
-                        out_d.append(doc_ids)
-                        out_c.append(np.full(doc_ids.size, cid, np.int32))
-                        cv = const_b[cid]
-                        if cv is not None:  # ConstantScoreQuery partial
-                            out_p.append(np.full(doc_ids.size, cv, np.float64))
-                            continue
-                        if partial is None:
-                            partial = idf_b[term] * _tf_norm(
-                                tfs.astype(np.float64), dls.astype(np.float64),
-                                avgdl, k1, b,
-                            )
-                        w = boost_b[cid]
-                        out_p.append(partial if w == 1.0 else partial * w)
-                if out_d:
-                    yield pd.DataFrame(
-                        {
-                            "doc_id": np.concatenate(out_d),
-                            "clause_id": np.concatenate(out_c),
-                            "partial": np.concatenate(out_p),
-                        }
-                    )
-
-        parts.append(
-            seg.mapInPandas(
-                score_slices, schema="doc_id long, clause_id int, partial double"
-            )
-        )
-
-    # ---- positional-clause partial streams (phrase/NEAR/phrase-prefix as
-    # ONE synthetic term over the matched set)
-    for cid, c in positional:
-        slots = _positional_slots(spark, index_dir, c, max_expansions)
-        if slots is None:
-            # prefix expanded to nothing: a SHOULD contributes no stream;
-            # a MUST still counts in len(must_ids), so coverage empties
-            # the result — same contract as an unindexed MUST term
-            continue
-        matched, stats_df = positional_matches(
-            spark, index_dir, slots, window=c.window
-        )
-        if c.const_score is not None:  # ConstantScore(phrase): v per match
-            parts.append(
-                matched.select(
-                    "doc_id",
-                    F.lit(cid).cast("int").alias("clause_id"),
-                    F.lit(float(c.const_score)).alias("partial"),
-                )
-            )
-            continue
-        # df_phrase as a count window: the kernel plan runs once (an
-        # aggregate crossJoined back would evaluate it twice)
-        parts.append(
-            matched.withColumn(
-                "df_phrase",
-                F.count(F.lit(1)).over(Window.partitionBy()).cast("double"),
-            )
-            .crossJoin(F.broadcast(stats_df))
-            .select(
-                "doc_id",
-                F.lit(cid).cast("int").alias("clause_id"),
-                (
-                    idf_expr(F.col("df_phrase"), F.col("n_docs"))
-                    * tf_norm_expr(
-                        F.col("phrase_tf").cast("double"),
-                        F.col("doc_len").cast("double"),
-                        F.col("avgdl"),
-                        k1,
-                        b,
-                    )
-                    * F.lit(float(c.boost))
-                ).alias("partial"),
-            )
-        )
-
-    # ---- scoring-predicate streams (ConstantScore over a metadata filter):
-    # doc_meta scan filtered by the predicate, v per live doc. doc_meta is
-    # not tombstone-masked on disk, so mask here — the term/positional
-    # streams mask kernel-side and would never resurrect a deleted doc.
-    const_preds = [
-        (cid, c) for cid, c in enumerate(clauses)
-        if c.occur in (MUST, SHOULD) and c.kind == "predicate"
-    ]
-    for cid, c in const_preds:
-        pm = (
-            spark.read.parquet(os.path.join(index_dir, "doc_meta"))
-            .filter(c.predicate)
-            .select(
-                "doc_id",
-                F.lit(cid).cast("int").alias("clause_id"),
-                F.lit(float(c.const_score)).alias("partial"),
-            )
-        )
-        if tomb_bc is not None and tomb_bc.value.size:
-            dead = spark.createDataFrame(
-                [(int(d),) for d in tomb_bc.value], "doc_id long"
-            )
-            pm = pm.join(F.broadcast(dead), "doc_id", "left_anti")
-        parts.append(pm)
-
-    if not parts:
-        # every scoring clause expanded to zero indexed terms (e.g. a
-        # SHOULD-only query of unknown words): nothing can score, so the
-        # Lucene-faithful result is empty — not an error
-        return _local_frame(spark, [], _SCORED_SCHEMA)
-    allp = parts[0]
-    for p in parts[1:]:
-        allp = allp.unionByName(p)
-    if tomb_over is not None:  # over-cap tombstones: distributed anti-join
-        allp = allp.join(tomb_over, "doc_id", "left_anti")
-    if _partials_out is not None:
-        _partials_out.append(allp)
-
-    # ---- ONE shuffle: fold partials + MUST coverage per doc. For dismax
-    # the per-clause fold is pivoted into one column per scoring clause
-    # (clause count is small and known) inside the SAME aggregate — a
-    # groupBy(doc_id, clause_id) → groupBy(doc_id) chain would be two
-    # exchanges over the posting-sized partial stream (measured 2× slower
-    # at 8M docs, scripts/new_surface_probe.py).
-    must_set = F.array(*[F.lit(i) for i in must_ids]) if must_ids else None
-    # SHOULD-coverage agg (minimum_should_match): count DISTINCT matched
-    # SHOULD clause ids per doc, same shape as the MUST-coverage count
-    should_cov = None
-    if min_should_match > 0:
-        should_set = F.array(*[F.lit(i) for i in should_ids])
-        should_cov = F.count_distinct(
-            F.when(F.array_contains(should_set, F.col("clause_id")),
-                   F.col("clause_id"))
-        ).alias("n_should")
-    # ConstantScore clauses fold with per-clause MAX, not SUM: a doc
-    # matching a const clause through several expansion terms carries
-    # several identical const partials, and Lucene's contract is exactly v
-    # once per doc (all rows equal v, so max == v)
-    const_ids = [
-        cid for cid, c in enumerate(clauses)
-        if c.occur in (MUST, SHOULD) and c.const_score is not None
-    ]
-    if combine == "dismax":
-        scids = [cid for cid, c in enumerate(clauses) if c.occur in (MUST, SHOULD)]
-        # BM25 partials are strictly positive, so coalesce-to-0 is a safe
-        # identity for both the max and the sum of absent clauses
-        cs = [
-            F.coalesce(
-                (F.max if cid in const_ids else F.sum)(
-                    F.when(F.col("clause_id") == cid, F.col("partial"))
-                ),
-                F.lit(0.0),
-            ).alias(f"_c{cid}")
-            for cid in scids
-        ]
-        agg_cols = list(cs)
-        if must_ids:
-            agg_cols.append(
-                F.count_distinct(
-                    F.when(F.array_contains(must_set, F.col("clause_id")),
-                           F.col("clause_id"))
-                ).alias("n_must")
-            )
-        if should_cov is not None:
-            agg_cols.append(should_cov)
-        ccols = [F.col(f"_c{cid}") for cid in scids]
-        best = F.greatest(*ccols) if len(ccols) > 1 else ccols[0]
-        total = ccols[0]
-        for c in ccols[1:]:
-            total = total + c
-        scored = (
-            allp.groupBy("doc_id")
-            .agg(*agg_cols)
-            .withColumn(
-                "score",
-                F.round(
-                    best + F.lit(float(tie_breaker)) * (total - best),
-                    SCORE_ROUND_DECIMALS,
-                ),
-            )
-            .drop(*[f"_c{cid}" for cid in scids])
-        )
-    else:
-        if const_ids:
-            # split the sum: BM25 clauses sum as before, each const clause
-            # contributes max(=v) once; absent clauses coalesce to 0
-            nc = F.coalesce(
-                F.sum(
-                    F.when(~F.col("clause_id").isin(const_ids), F.col("partial"))
-                ),
-                F.lit(0.0),
-            )
-            total = nc
-            for cid in const_ids:
-                total = total + F.coalesce(
-                    F.max(F.when(F.col("clause_id") == cid, F.col("partial"))),
-                    F.lit(0.0),
-                )
-            agg_cols = [F.round(total, SCORE_ROUND_DECIMALS).alias("score")]
-        else:
-            agg_cols = [
-                F.round(F.sum("partial"), SCORE_ROUND_DECIMALS).alias("score")
-            ]
-        if must_ids:
-            agg_cols.append(
-                F.count_distinct(
-                    F.when(F.array_contains(must_set, F.col("clause_id")),
-                           F.col("clause_id"))
-                ).alias("n_must")
-            )
-        if should_cov is not None:
-            agg_cols.append(should_cov)
-        scored = allp.groupBy("doc_id").agg(*agg_cols)
-    if must_ids:
-        scored = scored.filter(F.col("n_must") == len(must_ids)).drop("n_must")
-    if should_cov is not None:
-        scored = scored.filter(
-            F.col("n_should") >= min_should_match
-        ).drop("n_should")
-
-    # ---- MUST_NOT: anti-join the union of excluded doc sets
-    ex = _excluded_docs(spark, index_dir, nots, n_partitions, max_expansions)
-    if ex is not None:
-        scored = scored.join(ex, "doc_id", "left_anti")
-
-    # ---- FILTER: doc_meta predicate semi-join (global scores preserved)
-    for c in filters:
-        meta = (
-            spark.read.parquet(os.path.join(index_dir, "doc_meta"))
-            .filter(c.predicate)
-            .select("doc_id")
-        )
-        scored = scored.join(meta, "doc_id", "left_semi")
-
-    return scored.select("doc_id", "score")
+    """The FULL scored match stream (doc_id, score) of one Boolean query:
+    _batch_scored over a batch of one (see it for the occur, combine and
+    msm contract), query_id dropped. Everything boolean_topk does except
+    the rank/limit, so composers that re-weight scores before ranking
+    (boosting, rescore, function/decay/script score, explain) reuse the
+    whole executor. `rare_filter=False` turns the rare-MUST candidate mask
+    off (its parity test)."""
+    return _batch_scored(
+        spark, index_dir, {0: list(clauses)}, k1, b, max_expansions, combine,
+        tie_breaker, {0: int(min_should_match)}, rare_filter=rare_filter,
+        _partials_out=_partials_out,
+    ).drop("query_id")
 
 
 def _rank_tail(scored: DataFrame, k: int) -> DataFrame:
@@ -840,8 +1100,10 @@ def boolean_topk(
     min_should_match: int = 0,
 ) -> DataFrame:
     """(rank, doc_id, score) for a Boolean query over the segment store —
-    _boolean_scored (see its docstring for the full occur/scoring
-    contract) plus the top-k collector tail."""
+    _boolean_scored (the batch scorer as a batch of one; _batch_scored has
+    the full occur/scoring contract) plus the top-k collector tail, a
+    TakeOrderedAndProject rather than the batch's rank window, which would
+    sort the whole match set on one task."""
     return _rank_tail(
         _boolean_scored(
             spark, index_dir, clauses, k1=k1, b=b,
@@ -914,64 +1176,6 @@ def boosting_topk(
         ).alias("score"),
     )
     return _rank_tail(demoted, k)
-
-
-def _excluded_docs(
-    spark: SparkSession,
-    index_dir: str,
-    nots: list[Clause],
-    n_partitions: int,
-    max_expansions: int,
-) -> DataFrame | None:
-    """Union of doc_id sets matching any MUST_NOT clause. Term-ish kinds
-    decode doc_ids from a pruned segments scan (tfs/positions ignored);
-    positional kinds reuse positional_matches; predicate kinds read
-    doc_meta. Tombstoned docs need no masking here — they never enter the
-    scored stream, so extra ids in the anti-join side are inert."""
-    if not nots:
-        return None
-    outs: list[DataFrame] = []
-    terms: set[str] = set()
-    for c in nots:
-        if c.kind in ("term", "prefix", "wildcard", "fuzzy", "regexp"):
-            terms.update(_clause_terms(spark, index_dir, c, max_expansions))
-        elif c.kind in ("phrase", "near", "phrase_prefix"):
-            slots = _positional_slots(spark, index_dir, c, max_expansions)
-            if slots is None:
-                continue  # unexpandable -"a b*" excludes nothing
-            matched, _ = positional_matches(
-                spark, index_dir, slots, window=c.window
-            )
-            outs.append(matched.select("doc_id"))
-        else:  # negated metadata predicate
-            outs.append(
-                spark.read.parquet(os.path.join(index_dir, "doc_meta"))
-                .filter(c.predicate)
-                .select("doc_id")
-            )
-    if terms:
-        info = probe_dictionary(spark, index_dir, sorted(terms), n_partitions)
-        if info:
-            pids = sorted({v["partition_id"] for v in info.values()})
-            seg = _segments(spark, index_dir).filter(
-                F.col("partition_id").isin(pids) & F.col("term").isin(sorted(info))
-            )
-
-            def just_docs(pdf_iter):
-                for pdf in pdf_iter:
-                    ids = [
-                        decode_postings(bytes(blob))[0] for blob in pdf["blob"]
-                    ]
-                    if ids:
-                        yield pd.DataFrame({"doc_id": np.concatenate(ids)})
-
-            outs.append(seg.mapInPandas(just_docs, schema="doc_id long"))
-    if not outs:
-        return None
-    ex = outs[0]
-    for o in outs[1:]:
-        ex = ex.unionByName(o)
-    return ex.distinct()
 
 
 def rescore_topk(
@@ -1223,11 +1427,11 @@ def boolean_explain(
     re-rounds to the hit's score (tested); under dismax the clause rows
     expose max + tie·rest directly.
 
-    Plan: ONE extra consumer of the executor's own partial stream
-    (_boolean_scored's `allp`, pre-fold) — the ranking is the standard
-    collector output; the decomposition restricts `allp` to the k
-    surviving docs with a broadcast join, then folds per (doc, clause).
-    No second scan of the store, no new exchange shapes."""
+    Plan: ONE extra consumer of the scorer's own pre-fold partial stream
+    (_batch_scored's `_partials_out`) — the ranking is the standard
+    collector output; the decomposition restricts the partials to the k
+    surviving docs with a broadcast join, then folds per (doc, clause
+    slot). No second scan of the store, no new exchange shapes."""
     cl = parse_query(query) if isinstance(query, str) else list(query)
     sink: list = []
     scored = _boolean_scored(
@@ -1242,37 +1446,31 @@ def boolean_explain(
     )
     if not sink:
         return _local_frame(spark, [], out_schema)
-    allp = sink[0]
-    const_ids = [
-        cid for cid, c in enumerate(cl)
-        if c.occur in (MUST, SHOULD) and c.const_score is not None
-    ]
-    meta = spark.createDataFrame(
-        [
-            (cid, c.occur, c.kind)
-            for cid, c in enumerate(cl)
-            if c.occur in (MUST, SHOULD)
-        ],
-        "clause_id int, occur string, kind string",
-    )
+    # the scorer keys partials by scoring slot j; cids[j] is that clause's
+    # index in the full clause list
+    cids = [cid for cid, c in enumerate(cl) if c.occur in (MUST, SHOULD)]
     folded = (
-        allp.join(F.broadcast(top), "doc_id")
-        .groupBy("rank", "doc_id", "score", "clause_id")
+        sink[0].join(F.broadcast(top), "doc_id")
+        .groupBy("rank", "doc_id", "score", "slot")
         .agg(
-            F.sum("partial").alias("_sum"), F.max("partial").alias("_max")
-        )
-        .withColumn(
-            "partial",
-            F.round(
-                F.when(F.col("clause_id").isin(const_ids), F.col("_max"))
-                .otherwise(F.col("_sum")),
-                SCORE_ROUND_DECIMALS,
-            ),
+            F.sum("partial").alias("_sum"),
+            F.max("partial").alias("_max"),
+            F.max("is_const").alias("_const"),
         )
     )
     return (
-        folded.join(F.broadcast(meta), "clause_id")
-        .select("rank", "doc_id", "score", "clause_id", "occur", "kind", "partial")
+        folded.select(
+            "rank",
+            "doc_id",
+            "score",
+            _by_key("slot", dict(enumerate(cids))).cast("int").alias("clause_id"),
+            _by_key("slot", {j: cl[cid].occur for j, cid in enumerate(cids)}).alias("occur"),
+            _by_key("slot", {j: cl[cid].kind for j, cid in enumerate(cids)}).alias("kind"),
+            F.round(
+                F.when(F.col("_const"), F.col("_max")).otherwise(F.col("_sum")),
+                SCORE_ROUND_DECIMALS,
+            ).alias("partial"),
+        )
         .orderBy("rank", "clause_id")
     )
 
@@ -1286,14 +1484,6 @@ def boolean_topk_query(
 ) -> DataFrame:
     """parse_query + boolean_topk: the one-call query-string surface."""
     return boolean_topk(spark, index_dir, parse_query(query), k=k, **kw)
-
-
-# ---------------------------------------------------------------------------
-# batch executor (S10): many Boolean queries, ONE plan
-# ---------------------------------------------------------------------------
-
-_SLOT_BASE = 1024  # positional keys pack (qid, clause-slot); slots < 1024
-_BATCH_SCHEMA = "query_id int, rank int, doc_id long, score double"
 
 
 def boolean_topk_multi(
@@ -1312,574 +1502,28 @@ def boolean_topk_multi(
     """Batch Boolean executor: (query_id, rank, doc_id, score) for many
     Boolean queries in ONE plan — the Boolean twin of
     bm25_segments.topk_segments_multi / phrase.positional_topk_indexed_multi.
-    Per-query results are identical to boolean_topk with the same combine
-    (tested); `queries` values are query strings (parsed here) or
-    pre-parsed clause lists.
+    `queries` values are query strings (parsed here) or pre-parsed clause
+    lists; `min_should_match` is an int for every query or a dict
+    query_id → msm.
 
-    Topology (a query log is mostly Boolean-shaped, so this is the
-    throughput path):
-      * ONE dictionary probe for the union of every query's scoring +
-        MUST_NOT terms (prefix/wildcard/fuzzy expansions are per-clause
-        dictionary probes — bounded, metadata-only, as in Lucene's
-        MultiTermQuery rewrite);
-      * ONE pruned segment scan decodes each term's blob ONCE and fans the
-        tf-normalized scores out to every (query, clause-slot) using it —
-        rows carry (query_id, slot, is_must, partial);
-      * positional clauses across ALL queries ride ONE
-        phrase.positional_matches_multi pass (each term decoded once into
-        the bucket-packed layout, every clause answered from offset views);
-      * MUST_NOT doc sets fold into ONE (query_id, doc_id) anti-join;
-        FILTER predicates into ONE semi-join — per-query joins never
-        multiply with batch size;
-      * ONE exchange folds partials: per-slot sums are pivoted inside the
-        same aggregate (the single-query dismax lesson — a slot-then-doc
-        chain would be two exchanges over the partial stream), giving both
-        Σ (BooleanQuery) and max+tie·rest (DisMax) per (query, doc), plus
-        MUST coverage via count_distinct over must slots.
-
-    Not carried over from the latency path: the rare-MUST candidate
-    broadcast (per-query driver state that doesn't compose across a
-    batch; MUST coverage still guarantees correctness, it's purely a
-    pruning loss) and θ/block-max pruning (unsound under MUST coverage,
-    same as boolean_topk).
-
-    `max_partial_rows` bounds the (query, slot, doc) partial stream a
-    single plan may carry: per-query stream sizes are estimated from the
-    dictionary's df column (zero posting reads — Σ df over each term
-    clause's expansion, min df over a positional clause's terms), and
-    when the batch total exceeds the bound it is greedily packed into
-    sub-batches that each fit, run independently, and unioned — exact,
-    because per-query results never interact. This is the single-node
-    safety valve for the fold documented in BENCH/BASELINE.md's 64M-doc
-    probe (unpruned MUST coverage × heavy terms × 100 queries exceeded
-    RAM): on a cluster the fold exchange distributes and the bound can
-    stay None."""
-    if combine not in ("sum", "dismax"):
-        raise ValueError(f"combine must be sum|dismax, got {combine!r}")
+    The plan is _batch_scored (its docstring has the topology, the
+    rare-MUST masks and the `max_partial_rows` sub-batching) plus a
+    per-query rank window (score desc, doc_id asc). boolean_topk runs the
+    same scorer as a batch of one, so per-query results are identical to
+    boolean_topk with the same combine and msm."""
     parsed: dict[int, list[Clause]] = {
         int(qid): (parse_query(q) if isinstance(q, str) else list(q))
         for qid, q in queries.items()
     }
-    if not parsed:
-        return _local_frame(spark, [], _BATCH_SCHEMA)
-    # per-query minimum_should_match (Lucene setMinimumNumberShouldMatch):
-    # an int applies to every query, a dict maps query_id → msm
     msm: dict[int, int] = (
-        {int(q): int(min_should_match.get(q, 0)) for q in parsed}
+        {q: int(min_should_match.get(q, 0)) for q in parsed}
         if isinstance(min_should_match, dict)
-        else {int(q): int(min_should_match) for q in parsed}
+        else {q: int(min_should_match) for q in parsed}
     )
-    if any(v < 0 for v in msm.values()):
-        raise ValueError("min_should_match must be ≥ 0")
-    any_msm = any(v > 0 for v in msm.values())
-    stats = load_stats(index_dir)
-    n_partitions = int(stats["n_partitions"])
-    n_docs, avgdl = float(stats["n_docs"]), float(stats["avgdl"])
-
-    # ---- per-query clause partition + slot assignment
-    scoring: dict[int, list[tuple[int, Clause]]] = {}  # qid -> [(slot, c)]
-    nots: dict[int, list[Clause]] = {}
-    filters: dict[int, list[Clause]] = {}
-    for qid, cls in parsed.items():
-        if qid < 0 or qid >= 2**20:
-            raise ValueError(f"query_id out of range [0, 2^20): {qid}")
-        sc = [c for c in cls if c.occur in (MUST, SHOULD)]
-        if not sc:
-            raise ValueError(f"query {qid}: needs ≥1 scoring clause")
-        if any(c.kind == "predicate" and c.const_score is None for c in sc):
-            raise ValueError(
-                f"query {qid}: predicate clauses are FILTER/MUST_NOT only "
-                "(add ^=v for a scoring ConstantScore filter)"
-            )
-        if len(sc) > _SLOT_BASE:
-            raise ValueError(f"query {qid}: >{_SLOT_BASE} scoring clauses")
-        scoring[qid] = list(enumerate(sc))
-        nots[qid] = [c for c in cls if c.occur == MUST_NOT]
-        filters[qid] = [c for c in cls if c.occur == FILTER]
-    m_slots = max(len(v) for v in scoring.values())
-
-    # ---- expansion + ONE dictionary probe over the union
-    cl_terms: dict[tuple[int, int], list[str]] = {}
-    for qid, slots in scoring.items():
-        for slot, c in slots:
-            if c.kind in ("term", "prefix", "wildcard", "fuzzy", "regexp"):
-                cl_terms[(qid, slot)] = _clause_terms(spark, index_dir, c, max_expansions)
-    not_terms: dict[int, list[str]] = {}
-    for qid, cs in nots.items():
-        ts: list[str] = []
-        for c in cs:
-            if c.kind in ("term", "prefix", "wildcard", "fuzzy", "regexp"):
-                ts.extend(_clause_terms(spark, index_dir, c, max_expansions))
-        if ts:
-            not_terms[qid] = sorted(set(ts))
-    all_terms = sorted(
-        {t for ts in cl_terms.values() for t in ts}
-        | {t for ts in not_terms.values() for t in ts}
+    scored = _batch_scored(
+        spark, index_dir, parsed, k1, b, max_expansions, combine, tie_breaker,
+        msm, max_partial_rows=max_partial_rows, k=k,
     )
-    info = probe_dictionary(spark, index_dir, all_terms, n_partitions) if all_terms else {}
-    idf = {t: _idf(float(info[t]["df"]), n_docs) for t in info}
-
-    # a MUST term-group with no indexed expansion ⇒ that query is empty
-    dead = {
-        qid
-        for qid, slots in scoring.items()
-        for slot, c in slots
-        if c.occur == MUST
-        and c.kind in ("term", "prefix", "wildcard", "fuzzy", "regexp")
-        and not any(t in info for t in cl_terms[(qid, slot)])
-    }
-    live = sorted(set(scoring) - dead)
-    if not live:
-        return _local_frame(spark, [], _BATCH_SCHEMA)
-    live_set = set(live)
-
-    # ---- optional stream bound: estimate per-query partial rows from the
-    # dictionary (metadata only) and sub-batch greedily when over
-    if max_partial_rows is not None and len(live) > 1:
-        pos_terms = sorted(
-            {
-                t
-                for qid in live
-                for _slot, c in scoring[qid]
-                if c.kind in ("phrase", "near", "phrase_prefix")
-                for t in c.terms
-            }
-        )
-        pos_info = (
-            probe_dictionary(spark, index_dir, pos_terms, n_partitions)
-            if pos_terms
-            else {}
-        )
-        est: dict[int, int] = {}
-        for qid in live:
-            rows = 0
-            for slot, c in scoring[qid]:
-                if c.kind in ("phrase", "near", "phrase_prefix"):
-                    # estimate from the EXACT terms' dfs (sound row bound:
-                    # matches ⊆ any exact term's postings; phrase_prefix
-                    # always carries ≥1 exact head term by the parser)
-                    dfs = [
-                        int(pos_info[t]["df"]) for t in c.terms if t in pos_info
-                    ]
-                    rows += min(dfs) if dfs else 0
-                elif c.kind == "predicate":
-                    # ConstantScore(filter): selectivity unknown without a
-                    # scan, so budget the worst case (every doc matches)
-                    rows += int(n_docs)
-                else:
-                    rows += sum(
-                        int(info[t]["df"])
-                        for t in cl_terms.get((qid, slot), ())
-                        if t in info
-                    )
-            est[qid] = rows
-        if sum(est.values()) > max_partial_rows:
-            groups: list[list[int]] = []
-            cur: list[int] = []
-            cur_rows = 0
-            for qid in live:
-                if cur and cur_rows + est[qid] > max_partial_rows:
-                    groups.append(cur)
-                    cur, cur_rows = [], 0
-                cur.append(qid)
-                cur_rows += est[qid]
-            if cur:
-                groups.append(cur)
-            # sub-batches run EAGERLY (collect per group, ≤ k rows/query)
-            # instead of folding into one lazy union: a lazy union keeps
-            # every group's multi-GB shuffle files live until the final
-            # collect — on tmpfs scratch that accumulation re-creates the
-            # very memory cliff the bound exists to avoid (observed: the
-            # 64M-doc 100-query run was OOM-killed by ~53 GB of retained
-            # sub-batch shuffle on /dev/shm plus the driver heap). After
-            # each group the plan is dropped and a JVM GC nudge lets
-            # ContextCleaner reap its shuffle files before the next runs.
-            rows: list = []
-            for g in groups:
-                rows.extend(
-                    boolean_topk_multi(
-                        spark,
-                        index_dir,
-                        {qid: parsed[qid] for qid in g},
-                        k=k,
-                        k1=k1,
-                        b=b,
-                        max_expansions=max_expansions,
-                        combine=combine,
-                        tie_breaker=tie_breaker,
-                        min_should_match={qid: msm[qid] for qid in g},
-                    ).collect()
-                )
-                spark.sparkContext._jvm.System.gc()
-            return _local_frame(spark, [tuple(r) for r in rows], _BATCH_SCHEMA)
-
-    tomb_bc, tomb_over = _tombstones(spark, index_dir)
-    parts: list[DataFrame] = []
-
-    # ---- term-clause partial stream: decode once, fan out per (qid, slot).
-    # For a ConstantScore clause the weight IS the per-doc partial (const
-    # flag set); for BM25 clauses it is idf·boost, multiplied by tf_norm.
-    any_const = any(
-        c.const_score is not None
-        for qid in live
-        for _s, c in scoring[qid]
-    )
-    fan: dict[str, tuple] = {}
-    for (qid, slot), ts in cl_terms.items():
-        if qid not in live_set:
-            continue
-        c = scoring[qid][slot][1]
-        is_m = c.occur == MUST
-        for t in ts:
-            if t in info:
-                fan.setdefault(t, []).append(
-                    (qid, slot, is_m,
-                     float(c.const_score) if c.const_score is not None
-                     else idf[t] * float(c.boost),
-                     c.const_score is not None)
-                )
-    if fan:
-        fan_arr = {
-            t: (
-                np.asarray([e[0] for e in v], np.int32),
-                np.asarray([e[1] for e in v], np.int32),
-                np.asarray([e[2] for e in v], bool),
-                np.asarray([e[3] for e in v], np.float64),
-                np.asarray([e[4] for e in v], bool),
-            )
-            for t, v in fan.items()
-        }
-        pids = sorted({info[t]["partition_id"] for t in fan})
-        seg = _segments(spark, index_dir).filter(
-            F.col("partition_id").isin(pids) & F.col("term").isin(sorted(fan))
-        )
-        seg = _spread_slices(seg, spark, sum(int(info[t]["df"]) for t in fan))
-
-        from .bm25_segments import _OUT_CHUNK_ROWS
-
-        def score_slices(pdf_iter):
-            oq, os_, om, od, op, ok, n_out = [], [], [], [], [], [], 0
-
-            def flush():
-                return pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(oq),
-                        "slot": np.concatenate(os_),
-                        "is_must": np.concatenate(om),
-                        "doc_id": np.concatenate(od),
-                        "partial": np.concatenate(op),
-                        "is_const": np.concatenate(ok),
-                    }
-                )
-
-            for pdf in pdf_iter:
-                for term, blob in zip(pdf["term"], pdf["blob"]):
-                    doc_ids, tfs, dls = decode_postings(bytes(blob))
-                    if tomb_bc is not None and doc_ids.size:
-                        mliv = live_mask(doc_ids, tomb_bc.value)
-                        if not mliv.all():
-                            doc_ids, tfs, dls = doc_ids[mliv], tfs[mliv], dls[mliv]
-                    if doc_ids.size == 0:
-                        continue
-                    qa, sa, ma, wa, ka = fan_arr[term]
-                    tfn = (
-                        None
-                        if ka.all()  # const-only term: skip the BM25 math
-                        else _tf_norm(
-                            tfs.astype(np.float64), dls.astype(np.float64),
-                            avgdl, k1, b,
-                        )
-                    )
-                    for i in range(qa.size):
-                        oq.append(np.full(doc_ids.size, qa[i], np.int32))
-                        os_.append(np.full(doc_ids.size, sa[i], np.int32))
-                        om.append(np.full(doc_ids.size, ma[i], bool))
-                        od.append(doc_ids)
-                        op.append(
-                            np.full(doc_ids.size, wa[i], np.float64)
-                            if ka[i]
-                            else tfn * wa[i]
-                        )
-                        ok.append(np.full(doc_ids.size, ka[i], bool))
-                        n_out += doc_ids.size
-                        if n_out >= _OUT_CHUNK_ROWS:
-                            yield flush()
-                            oq, os_, om, od, op, ok, n_out = (
-                                [], [], [], [], [], [], 0,
-                            )
-            if od:
-                yield flush()
-
-        parts.append(
-            seg.mapInPandas(
-                score_slices,
-                schema="query_id int, slot int, is_must boolean, doc_id long, "
-                       "partial double, is_const boolean",
-            )
-        )
-
-    # ---- positional clauses (scoring AND MUST_NOT) in ONE matcher pass
-    pos_spec: dict[int, tuple[list, int | None]] = {}
-    # key, qid, slot, is_must, boost, const (null = BM25-scored)
-    pos_meta: list[tuple[int, int, int, bool, float, float | None]] = []
-    not_pos_keys: dict[int, int] = {}  # key -> qid (exclusion matches)
-    for qid in live:
-        for slot, c in scoring[qid]:
-            if c.kind in ("phrase", "near", "phrase_prefix"):
-                slots = _positional_slots(spark, index_dir, c, max_expansions)
-                if slots is None:
-                    continue  # unexpandable prefix: n_must coverage empties
-                key = qid * _SLOT_BASE + slot
-                pos_spec[key] = (slots, c.window)
-                pos_meta.append(
-                    (key, qid, slot, c.occur == MUST, float(c.boost),
-                     c.const_score)
-                )
-        for j, c in enumerate(nots[qid]):
-            if c.kind in ("phrase", "near", "phrase_prefix"):
-                slots = _positional_slots(spark, index_dir, c, max_expansions)
-                if slots is None:
-                    continue  # unexpandable -"a b*" excludes nothing
-                key = -(qid * _SLOT_BASE + j + 1)
-                pos_spec[key] = (slots, c.window)
-                not_pos_keys[key] = qid
-    excl: list[DataFrame] = []
-    if pos_spec:
-        from .phrase import positional_matches_multi
-
-        matched, _pstats = positional_matches_multi(spark, index_dir, pos_spec)
-        matched = matched.persist()
-        if pos_meta:
-            meta_df = spark.createDataFrame(
-                pos_meta,
-                "query_id_key int, qid int, slot int, is_must boolean, "
-                "boost double, const double",
-            )
-            sc_m = matched.withColumnRenamed("query_id", "query_id_key").join(
-                F.broadcast(meta_df), "query_id_key"
-            )
-            dfp = sc_m.groupBy("query_id_key").agg(
-                F.count(F.lit(1)).cast("double").alias("df_phrase")
-            )
-            parts.append(
-                sc_m.join(F.broadcast(dfp), "query_id_key").select(
-                    F.col("qid").alias("query_id"),
-                    "slot",
-                    "is_must",
-                    "doc_id",
-                    F.coalesce(
-                        F.col("const"),
-                        idf_expr(F.col("df_phrase"), F.lit(n_docs))
-                        * tf_norm_expr(
-                            F.col("phrase_tf").cast("double"),
-                            F.col("doc_len").cast("double"),
-                            F.lit(avgdl),
-                            k1,
-                            b,
-                        )
-                        * F.col("boost"),
-                    ).alias("partial"),
-                    F.col("const").isNotNull().alias("is_const"),
-                )
-            )
-        if not_pos_keys:
-            nk = spark.createDataFrame(
-                list(not_pos_keys.items()), "query_id_key int, qid int"
-            )
-            excl.append(
-                matched.withColumnRenamed("query_id", "query_id_key")
-                .join(F.broadcast(nk), "query_id_key")
-                .select(F.col("qid").alias("query_id"), "doc_id")
-            )
-
-    # ---- scoring-predicate streams (ConstantScore over metadata filters):
-    # doc_meta scans (metadata-scale), tombstone-masked like the single path
-    for qid in live:
-        for slot, c in scoring[qid]:
-            if c.kind != "predicate":
-                continue
-            pm = (
-                spark.read.parquet(os.path.join(index_dir, "doc_meta"))
-                .filter(c.predicate)
-                .select(
-                    F.lit(qid).cast("int").alias("query_id"),
-                    F.lit(slot).cast("int").alias("slot"),
-                    F.lit(c.occur == MUST).alias("is_must"),
-                    "doc_id",
-                    F.lit(float(c.const_score)).alias("partial"),
-                    F.lit(True).alias("is_const"),
-                )
-            )
-            if tomb_bc is not None and tomb_bc.value.size:
-                dead = spark.createDataFrame(
-                    [(int(d),) for d in tomb_bc.value], "doc_id long"
-                )
-                pm = pm.join(F.broadcast(dead), "doc_id", "left_anti")
-            parts.append(pm)
-
-    if not parts:
-        return _local_frame(spark, [], _BATCH_SCHEMA)
-    allp = parts[0]
-    for p in parts[1:]:
-        allp = allp.unionByName(p)
-    if tomb_over is not None:
-        allp = allp.join(tomb_over, "doc_id", "left_anti")
-
-    # ---- ONE exchange: per-slot pivot + MUST coverage per (query, doc).
-    # Const slots fold with MAX (v once per doc, expansion-term dupes all
-    # equal v); a (query, slot) is either const or BM25, so exactly one of
-    # the two legs is non-null per group — their coalesced sum is the slot.
-    if any_const:
-        aggs = [
-            (
-                F.coalesce(
-                    F.sum(
-                        F.when(
-                            (F.col("slot") == j) & ~F.col("is_const"),
-                            F.col("partial"),
-                        )
-                    ),
-                    F.lit(0.0),
-                )
-                + F.coalesce(
-                    F.max(
-                        F.when(
-                            (F.col("slot") == j) & F.col("is_const"),
-                            F.col("partial"),
-                        )
-                    ),
-                    F.lit(0.0),
-                )
-            ).alias(f"_s{j}")
-            for j in range(m_slots)
-        ]
-    else:
-        aggs = [
-            F.coalesce(
-                F.sum(F.when(F.col("slot") == j, F.col("partial"))), F.lit(0.0)
-            ).alias(f"_s{j}")
-            for j in range(m_slots)
-        ]
-    aggs.append(
-        F.count_distinct(F.when(F.col("is_must"), F.col("slot"))).alias("n_cov")
-    )
-    if any_msm:
-        # SHOULD coverage (minimum_should_match): distinct non-MUST slots
-        aggs.append(
-            F.count_distinct(
-                F.when(~F.col("is_must"), F.col("slot"))
-            ).alias("n_scov")
-        )
-    scored = allp.groupBy("query_id", "doc_id").agg(*aggs)
-    qmeta = spark.createDataFrame(
-        [
-            (
-                qid,
-                sum(1 for _s, c in scoring[qid] if c.occur == MUST),
-                msm[qid],
-            )
-            for qid in live
-        ],
-        "query_id int, n_must int, msm int",
-    )
-    scored = scored.join(F.broadcast(qmeta), "query_id").filter(
-        F.col("n_cov") == F.col("n_must")
-    )
-    if any_msm:
-        scored = scored.filter(F.col("n_scov") >= F.col("msm"))
-    cols = [F.col(f"_s{j}") for j in range(m_slots)]
-    total = cols[0]
-    for c in cols[1:]:
-        total = total + c
-    if combine == "dismax":
-        best = F.greatest(*cols) if m_slots > 1 else cols[0]
-        expr = best + F.lit(float(tie_breaker)) * (total - best)
-    else:
-        expr = total
-    scored = scored.withColumn(
-        "score", F.round(expr, SCORE_ROUND_DECIMALS)
-    ).select("query_id", "doc_id", "score")
-
-    # ---- MUST_NOT: term-ish sets via one pruned scan; + positional above;
-    # + negated predicates — ONE (query_id, doc_id) anti-join for all
-    nf: dict[str, list[int]] = {}
-    for qid, ts in not_terms.items():
-        if qid not in live_set:
-            continue
-        for t in ts:
-            if t in info:
-                nf.setdefault(t, []).append(qid)
-    if nf:
-        pids = sorted({info[t]["partition_id"] for t in nf})
-        nseg = _segments(spark, index_dir).filter(
-            F.col("partition_id").isin(pids) & F.col("term").isin(sorted(nf))
-        )
-        nf_arr = {t: np.asarray(v, np.int32) for t, v in nf.items()}
-
-        def excl_docs(pdf_iter):
-            for pdf in pdf_iter:
-                oq, od = [], []
-                for term, blob in zip(pdf["term"], pdf["blob"]):
-                    ids = decode_postings(bytes(blob))[0]
-                    if ids.size == 0:
-                        continue
-                    for qid in nf_arr[term]:
-                        oq.append(np.full(ids.size, qid, np.int32))
-                        od.append(ids)
-                if od:
-                    yield pd.DataFrame(
-                        {"query_id": np.concatenate(oq), "doc_id": np.concatenate(od)}
-                    )
-
-        excl.append(nseg.mapInPandas(excl_docs, schema="query_id int, doc_id long"))
-    meta_path = os.path.join(index_dir, "doc_meta")
-    for qid in live:
-        for c in nots[qid]:
-            if c.kind == "predicate":
-                excl.append(
-                    spark.read.parquet(meta_path)
-                    .filter(c.predicate)
-                    .select(F.lit(qid).cast("int").alias("query_id"), "doc_id")
-                )
-    if excl:
-        ex = excl[0]
-        for e in excl[1:]:
-            ex = ex.unionByName(e)
-        scored = scored.join(ex.distinct(), ["query_id", "doc_id"], "left_anti")
-
-    # ---- FILTER: ONE (query_id, doc_id) semi-join over all predicates
-    flt: list[DataFrame] = []
-    for qid in live:
-        for c in filters[qid]:
-            flt.append(
-                spark.read.parquet(meta_path)
-                .filter(c.predicate)
-                .select(F.lit(qid).cast("int").alias("query_id"), "doc_id")
-            )
-    if flt:
-        # a doc must satisfy EVERY filter of its query: count matches
-        fu = flt[0]
-        for f2 in flt[1:]:
-            fu = fu.unionByName(f2)
-        need = spark.createDataFrame(
-            [(qid, len(filters[qid])) for qid in live if filters[qid]],
-            "query_id int, n_flt int",
-        )
-        ok = (
-            fu.groupBy("query_id", "doc_id")
-            .agg(F.count(F.lit(1)).alias("n_hit"))
-            .join(F.broadcast(need), "query_id")
-            .filter(F.col("n_hit") == F.col("n_flt"))
-            .select("query_id", "doc_id")
-        )
-        has_flt = {qid for qid in live if filters[qid]}
-        no_flt = scored.filter(~F.col("query_id").isin(sorted(has_flt)))
-        scored = (
-            scored.filter(F.col("query_id").isin(sorted(has_flt)))
-            .join(ok, ["query_id", "doc_id"], "left_semi")
-            .unionByName(no_flt)
-        )
-
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))

@@ -234,6 +234,16 @@ def test_rare_must_filter_parity(spark, idx):
     b = boolean_topk(spark, idx, clauses, rare_filter=False)
     assert _rows(a) == _rows(b)
     assert {d for _, d, _ in _rows(a)} == {2, 5}
+    # in a batch the mask is per query: a query without MUST (sharing the
+    # SHOULD terms) must not be restricted to the rare term's docs
+    from contextinator_spark.operators.boolean import boolean_topk_multi
+
+    mixed = {0: clauses, 1: clauses[1:]}
+    got = {}
+    for r in boolean_topk_multi(spark, idx, mixed).collect():
+        got.setdefault(r.query_id, []).append((r.rank, r.doc_id, r.score))
+    for qid, cs in mixed.items():
+        assert sorted(got[qid]) == _rows(boolean_topk(spark, idx, cs, rare_filter=False)), qid
 
 
 def test_must_absent_term_short_circuits(spark, idx):
@@ -554,6 +564,47 @@ def test_boolean_batch_validations(spark, idx):
         boolean_topk_multi(spark, idx, {0: "hash"}, combine="best")
 
 
+def _plan_nodes(node):
+    """Every physical operator of an executed plan, descending through
+    adaptive plans and query stages."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _plan_nodes(node.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return [node, *_plan_nodes(node.plan())]
+    kids = node.children()
+    return [node, *(n for i in range(kids.size()) for n in _plan_nodes(kids.apply(i)))]
+
+
+def test_boolean_plans_read_no_rdd_and_cache_nothing(spark, idx):
+    """A phrase SHOULD, a MUST_NOT phrase and a FILTER, single and
+    batched: driver-built frames are Arrow LocalRelations (no ExistingRDD
+    scan), nothing is persisted, and each of the two positional kernel
+    plans (scoring clauses, MUST_NOT clauses) is consumed once — one pack
+    mapInPandas under one bucket applyInPandas."""
+    from contextinator_spark.operators.boolean import boolean_topk_multi
+
+    q = 'hash "table hash" -"spark join" lang:en'
+    jsc = spark.sparkContext._jsc
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for df in (
+        boolean_topk_query(spark, idx, q, k=5),
+        boolean_topk_multi(spark, idx, {0: q, 1: '+merge "hash join" -"join hash" lang:de'}, k=5),
+    ):
+        n_cached, was_empty = jsc.getPersistentRDDs().size(), cache.isEmpty()
+        assert df.collect()
+        nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
+        names = [n.getClass().getSimpleName() for n in nodes]
+        assert not any("ExistingRDD" in n.toString() for n in nodes), names
+        assert jsc.getPersistentRDDs().size() == n_cached
+        assert cache.isEmpty() == was_empty
+        kernels = [n for n in nodes if n.getClass().getSimpleName() == "FlatMapGroupsInPandasExec"]
+        assert len(kernels) == 2, names
+        for kern in kernels:
+            below = [n.getClass().getSimpleName() for n in _plan_nodes(kern)]
+            assert below.count("MapInPandasExec") == 1, below
+
+
 # ---------------------------------------------------------------------------
 # minimum_should_match (Lucene setMinimumNumberShouldMatch)
 # ---------------------------------------------------------------------------
@@ -767,6 +818,7 @@ def test_boolean_batch_const_matches_single(spark, idx):
         1: "*a*^=1 merge",
         2: "+hash table^=1.5",
         3: '"hash join"^=2 spark',
+        4: '"table hash" merge',  # a BM25 phrase beside a const one
     }
     out = boolean_topk_multi(spark, idx, qs, k=10)
     got = {}

@@ -105,10 +105,13 @@ def test_match_count_and_facet_random(spark, store):
 
 
 def test_boolean_random_shapes(spark, store):
-    from contextinator_spark.operators.boolean import boolean_topk_query
+    """Each random query alone, then all of them as one batch, against
+    the brute-force scores."""
+    from contextinator_spark.operators.boolean import boolean_topk_multi, boolean_topk_query
 
     ref = BruteForceBM25(DOCS)
     rng = random.Random(SEED + 5)
+    wanted = {}
     for _ in range(6):
         must, should, mustnot = (
             rng.sample(VOCAB[:40], 1),
@@ -130,3 +133,10 @@ def test_boolean_random_shapes(spark, store):
         scored.sort(key=lambda x: (-x[1], x[0]))
         want = [(i + 1, d, s) for i, (d, s) in enumerate(scored[:50])]
         assert got == want, q
+        wanted[q] = want
+    queries = dict(enumerate(wanted))
+    batch = {}
+    for r in boolean_topk_multi(spark, store, queries, k=50).collect():
+        batch.setdefault(r["query_id"], []).append((r["rank"], r["doc_id"], r["score"]))
+    for qid, q in queries.items():
+        assert sorted(batch.get(qid, [])) == wanted[q], q
