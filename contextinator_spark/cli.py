@@ -337,7 +337,9 @@ def cmd_query(args, spark) -> None:
         fold,
     )
     if getattr(args, "facets", False):
-        meta = spark.read.parquet(f"{args.index}/doc_meta")
+        from .operators.bm25_segments import _doc_meta
+
+        meta = _doc_meta(spark, args.index)
         cols = [c for c in ("lang", "repo") if c in meta.columns]
         hits = spark.createDataFrame(
             [(r["doc_id"],) for r in rows], "doc_id long"

@@ -84,9 +84,11 @@ QUERY_REPARTITION_MIN_DF = 50_000
 # bytes/posting → ~1 MB here) and scored and ranked in numpy, with no
 # Spark job — a driver read of a few MB beats a distributed scan whose
 # job/task/shuffle overhead dwarfs the work (Lucene executes a whole query
-# on one node for the same reason). BM25 top-k (topk_segments) and its
-# one-term θ fetch gate on the query terms' Σdf, Boolean's rare-MUST
-# candidate fetch on that term's df; the positional top-k (phrase,
+# on one node for the same reason). BM25 top-k (topk_segments) gates on
+# the query terms' Σdf; the BM25 θ fetch (bm25_segments._batch_thetas,
+# single queries being a batch of one) gates per batch on the Σdf of the
+# θ terms it must read, Boolean's rare-MUST candidate fetch on the Σdf of
+# the batch's chosen MUST terms; the positional top-k (phrase,
 # multiphrase, span-first, span-near) gates on the slot terms' Σcf, since
 # the driver then holds every position. Results equal the Spark plan's:
 # same decode/score kernels, same tie-break.

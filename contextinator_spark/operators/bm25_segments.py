@@ -10,19 +10,29 @@ re-expressed over the segment store):
                blobs are read on the driver the same way and scored and
                ranked in numpy; the result is a LocalRelation — zero
                Spark jobs end to end (_topk_driver)
-             → otherwise: partition-pruned scan of segments/ (_segments:
-               schema pinned to schemas.SEGMENTS, so no inference job;
-               only the query terms' partition_ids reach the parquet
-               reader: PushedFilters)
-             → Arrow UDF per slice: decode blob → exact BM25 partial scores
-               (doc_len from the blob; N/avgdl broadcast as literals)
-               with block-max pruning against a threshold θ
-             → groupBy(doc_id).sum → TakeOrderedAndProject(k)
-             → broadcast join doc_meta for enrichment (J4)
+             → otherwise the one BM25 scorer (_bm25_scored), a single
+               query being a batch of one:
+               θ per query (_batch_thetas: stored kth_tfnorm, else a
+               driver read of the θ terms under the same Σdf gate, else
+               one _distributed_term_kth job)
+             → partition-pruned scan of segments/ (_segments: schema
+               pinned to schemas.SEGMENTS, so no inference job; only the
+               query terms' partition_ids reach the parquet reader:
+               PushedFilters)
+             → Arrow UDF per slice: decode blob once → exact BM25 partial
+               scores (doc_len from the blob; N/avgdl broadcast as
+               literals) for every query using the term, with block-max
+               and posting pruning against each query's θ
+             → groupBy(query_id, doc_id).sum
+             → single query: TakeOrderedAndProject(k) (_rank_tail);
+               batch: per-partition local top-k + per-query rank window
+             → broadcast join doc_meta for enrichment (J4; _doc_meta
+               pins its schema, so that read runs no job either)
 
 Pruning correctness (exactness proof, tested vs exhaustive):
-θ is a LOWER bound on the true k-th best total score (from exactly scoring
-the single highest-impact term's postings). A posting (d, t) is dropped
+θ is a LOWER bound on the true k-th best total score (a lower bound on
+the k-th best single-term score of the query's rarest term, _batch_thetas).
+A posting (d, t) is dropped
 only when score_t(d) + Σ_{t'≠t} global_ub(t') < θ — which implies d's total
 score < θ, so d cannot be in the top-k; and any true top-k doc (total ≥ θ)
 is never pruned anywhere, so its sum stays exact. Block-level: a whole
@@ -266,6 +276,29 @@ def _segments(spark: SparkSession, index_dir: str) -> DataFrame:
     return spark.read.schema(SEGMENTS).parquet(os.path.join(index_dir, "segments"))
 
 
+def _doc_meta(spark: SparkSession, index_dir: str) -> DataFrame:
+    """doc_meta/ as a DataFrame whose schema is read on the driver, so the
+    read runs no schema-inference job (~0.1 s warm, 2 s cold).
+
+    doc_meta's columns depend on the builder (a write_phrase_index store
+    has no repo/path), so no schema is fixed in schemas.py. Spark's
+    inference reads one part file's footer and takes the Spark schema the
+    writer stored there; this reads the same key from the first part file
+    (pyarrow skips `_`/`.` files as Spark does) and makes every field
+    nullable, as Spark does for any file source. Every doc_meta part file
+    is written by Spark (build, streaming delta, compaction)."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructField, StructType
+
+    path = os.path.join(index_dir, "doc_meta")
+    first = sorted(ds.dataset(path, format="parquet").files)[0]
+    stored = pq.read_metadata(first).metadata[b"org.apache.spark.sql.parquet.row.metadata"]
+    schema = StructType(
+        [StructField(f.name, f.dataType, True, f.metadata) for f in StructType.fromJson(json.loads(stored))]
+    )
+    return spark.read.schema(schema).parquet(path)
+
+
 def probe_dictionary(
     spark: SparkSession, index_dir: str, terms: list[str], n_partitions: int | None = None
 ) -> dict[str, dict]:
@@ -417,6 +450,15 @@ def topk_segments(
 ) -> DataFrame:
     """(rank, doc_id, score) from the compressed segment store.
 
+    Small candidate sets (Σdf ≤ DRIVER_TOPK_MAX_DF) short-circuit to a
+    driver-side scatter-gather: the driver reads the pruned blobs, numpy
+    scores and ranks exactly — identical results (tested), no Spark job.
+    driver_path=False forces the distributed plan. That plan is the batch
+    scorer (_bm25_scored) run as a batch of one, followed by a
+    TakeOrderedAndProject tail (_rank_tail) instead of the batch's
+    per-query rank window, which would sort the whole match set on one
+    task.
+
     `after` = (score, doc_id) of the last hit already served (Lucene
     searchAfter): only docs STRICTLY after that cursor in the
     (score desc, doc_id asc) order rank, with page-local ranks 1..k —
@@ -426,11 +468,6 @@ def topk_segments(
     dictionary/partition pruning (and the driver short-circuit) still
     apply.
 
-    Small candidate sets (Σdf ≤ DRIVER_TOPK_MAX_DF) short-circuit to a
-    driver-side scatter-gather: the driver reads the pruned blobs, numpy
-    scores and ranks exactly — identical results (tested), no Spark job.
-    driver_path=False forces the distributed plan.
-
     `scope` restricts the ranking to a doc_id subset (Lucene FILTER
     clause: idf/df stay GLOBAL, so in-scope docs keep their unscoped
     scores — tested; use scoped_topk_segments for the doc_meta-predicate
@@ -438,171 +475,68 @@ def topk_segments(
     (member_mask, same machinery as tombstones); a DataFrame (sets too
     big to broadcast) semi-joins the partial stream with θ pruning off —
     θ over a superset of the scope is not a valid lower bound."""
-    stats = load_stats(index_dir)
-    if n_partitions is None:
-        n_partitions = int(stats.get("n_partitions", INDEX_PARTITIONS))
-    n, avgdl = float(stats["n_docs"]), float(stats["avgdl"])
-    info = probe_dictionary(spark, index_dir, terms, n_partitions)
-    matched = sorted(info)
-    if not matched:
+    probed = _probe(spark, index_dir, terms, n_partitions)
+    if probed is None:
         return _local_frame(spark, [], _TOPK_SCHEMA)
+    stats, info, (tomb_bc, tomb_over) = probed
+    if isinstance(scope, np.ndarray):
+        if scope.size == 0:
+            return _local_frame(spark, [], _TOPK_SCHEMA)
+        scope = np.sort(scope)
 
-    # live-docs (deletes.py): n/avgdl/df stay at build-time values until
-    # compaction (Lucene semantics — surviving docs keep identical scores);
-    # deleted postings are masked out kernel-side below
-    tomb_bc, tomb_over = _tombstones(spark, index_dir)
-    scope_bc = scope_over = None
-    if scope is not None:
-        if isinstance(scope, np.ndarray):
-            if scope.size == 0:
-                return _local_frame(spark, [], _TOPK_SCHEMA)
-            scope_bc = spark.sparkContext.broadcast(np.sort(scope))
-        else:
-            scope_over = scope.select("doc_id")
-
-    idf = {t: _idf(float(info[t]["df"]), n) for t in matched}
     if (
         driver_path
         and tomb_over is None
-        and scope_over is None
-        and sum(info[t]["df"] for t in matched) <= DRIVER_TOPK_MAX_DF
+        and not isinstance(scope, DataFrame)
+        and sum(v["df"] for v in info.values()) <= DRIVER_TOPK_MAX_DF
     ):
+        n, avgdl = float(stats["n_docs"]), float(stats["avgdl"])
+        idf = {t: _idf(float(v["df"]), n) for t, v in info.items()}
+        scope_bc = None if scope is None else spark.sparkContext.broadcast(scope)
         return _topk_driver(
             spark, index_dir, info, idf, k, k1, b, n, avgdl,
             tomb_bc=tomb_bc, scope_bc=scope_bc, after=after,
         )
-    # global per-term upper bound: tf→∞ limit of tf_norm is (k1+1); tighter:
-    # computed per slice from block maxima below. For the cross-term rest_ub
-    # we use the conservative idf·(k1+1).
-    global_ub = {t: idf[t] * (k1 + 1.0) for t in matched}
-
-    theta = 0.0
-    # the θ pass costs one extra job — only worth it when the candidate set
-    # is big enough for pruning to pay (heavy lists), so gate on total df.
-    # Over-cap tombstone sets force θ off: a threshold computed over a
-    # SUPERSET of the live docs is not a lower bound on the live k-th best.
-    total_df = sum(info[t]["df"] for t in matched)
-    if (
-        prune
-        and after is None  # θ bounds the GLOBAL top-k, not an after-page
-        and tomb_over is None
-        and scope_over is None
-        and len(matched) > 1
-        and total_df > 50 * k
-    ):
-        theta = _theta_from_best_term(
-            spark, index_dir, info, idf, k, k1, b, avgdl, stats,
-            tomb_bc=tomb_bc, scope_bc=scope_bc,
-        )
-
-    # DAAT-flavored refinement (one extra METADATA-only job, gated on the
-    # same heavy-query condition as θ): per-term doc-range impact sketches
-    # tighten both bounds the scan prunes with —
-    #   rest_ub[t]   Σ of the OTHER terms' true max block bounds (vs the
-    #                idf·(k1+1) tf→∞ corner)
-    #   rest_sk[t]   per-BUCKET rest bound: a posting of t at doc d needs
-    #                scores[d] + Σ_{t'≠t} sketch_{t'}[bucket(d)] ≥ θ, so
-    #                t's postings die wherever the other terms are weak or
-    #                absent — cross-term skipping the global bound cannot do
-    rest_sk: dict[str, np.ndarray] | None = None
-    span = float(int(stats["max_doc_id"]) + 1)
-    if sketch is None:  # auto: the job must be noise vs the volume it prunes
-        sketch = total_df >= SKETCH_MIN_DF
-    if theta > 0.0 and sketch and len(matched) > 1:
-        sketches = _term_impact_sketch(
-            spark, index_dir, info, idf, avgdl, k1, b, int(stats["max_doc_id"])
-        )
-        global_ub = {t: min(global_ub[t], sketches[t][0]) for t in matched}
-        total_sk = np.sum([sketches[t][1] for t in matched], axis=0)
-        rest_sk = {t: total_sk - sketches[t][1] for t in matched}
-
-    pids = sorted({info[t]["partition_id"] for t in matched})
-    seg = _segments(spark, index_dir).filter(
-        F.col("partition_id").isin(pids) & F.col("term").isin(matched)
-    )
-    seg = _spread_slices(seg, spark, total_df)
-
-    idf_b = dict(idf)
-    ub_sum = sum(global_ub.values())
-    rest_ub = {t: ub_sum - global_ub[t] for t in matched}
-    n_buckets = _SKETCH_BUCKETS
-
-    def score_slices(pdf_iter):
-        from .compress import decode_postings
-
-        for pdf in pdf_iter:
-            out_docs, out_scores = [], []
-            for term, blob, bm in zip(pdf["term"], pdf["blob"], pdf["block_max"]):
-                t_idf = idf_b[term]
-                t_rest = rest_ub[term]
-                doc_ids, tfs, dls = decode_postings(bytes(blob))
-                if theta > 0.0 and bm is not None and len(bm) > 0:
-                    # block-level skip: ub(block) + rest < θ ⇒ drop block
-                    bmax = np.asarray([(e["max_tf"], e["min_dl"]) for e in bm], dtype=np.float64)
-                    blk_ub = t_idf * _tf_norm(bmax[:, 0], bmax[:, 1], avgdl, k1, b)
-                    keep_blk = (blk_ub + t_rest) >= theta
-                    if not keep_blk.all():
-                        blk_idx = np.arange(doc_ids.size) // BLOCK_SIZE
-                        mask = keep_blk[blk_idx]
-                        doc_ids, tfs, dls = doc_ids[mask], tfs[mask], dls[mask]
-                if tomb_bc is not None and doc_ids.size:
-                    # live-docs mask AFTER block skip (block indices are
-                    # positions in the original array) and BEFORE scoring
-                    mask = live_mask(doc_ids, tomb_bc.value)
-                    if not mask.all():
-                        doc_ids, tfs, dls = doc_ids[mask], tfs[mask], dls[mask]
-                if scope_bc is not None and doc_ids.size:
-                    # metadata-scope keep mask (FILTER clause)
-                    mask = member_mask(doc_ids, scope_bc.value)
-                    if not mask.all():
-                        doc_ids, tfs, dls = doc_ids[mask], tfs[mask], dls[mask]
-                if doc_ids.size == 0:
-                    continue
-                scores = t_idf * _tf_norm(
-                    tfs.astype(np.float64), dls.astype(np.float64), avgdl, k1, b
-                )
-                if theta > 0.0:
-                    if rest_sk is not None:
-                        # per-posting doc-range rest bound: one gather
-                        buck = np.minimum(
-                            (doc_ids.astype(np.float64) / span * n_buckets).astype(np.int64),
-                            n_buckets - 1,
-                        )
-                        mask = (scores + rest_sk[term][buck]) >= theta
-                    else:
-                        mask = (scores + t_rest) >= theta
-                    doc_ids, scores = doc_ids[mask], scores[mask]
-                out_docs.append(doc_ids)
-                out_scores.append(scores)
-            if out_docs:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.concatenate(out_docs),
-                        "partial": np.concatenate(out_scores),
-                    }
-                )
-
-    partials = seg.mapInPandas(score_slices, schema="doc_id long, partial double")
-    if tomb_over is not None:  # over-cap tombstones: distributed anti-join
-        partials = partials.join(tomb_over, "doc_id", "left_anti")
-    if scope_over is not None:  # over-cap scope: distributed semi-join
-        partials = partials.join(scope_over, "doc_id", "left_semi")
-    scored = partials.groupBy("doc_id").agg(
-        F.round(F.sum("partial"), SCORE_ROUND_DECIMALS).alias("score")
-    )
+    scored = _bm25_scored(
+        spark, index_dir, {0: terms}, k, k1, b, prune=prune and after is None,
+        sketch=sketch, scope=scope, probed=probed,
+    ).drop("query_id")
     if after is not None:
         s_a, d_a = float(after[0]), int(after[1])
         scored = scored.filter(
             (F.col("score") < s_a)
             | ((F.col("score") == s_a) & (F.col("doc_id") > d_a))
         )
+    return _rank_tail(scored, k)
+
+
+def _rank_tail(scored: DataFrame, k: int) -> DataFrame:
+    """(rank, doc_id, score) top-k of a (doc_id, score) stream — the
+    shared collector tail (score desc, doc_id asc). orderBy+limit
+    compiles to TakeOrderedAndProject: per-partition k-row heaps and a
+    k-row merge, never a sort of the whole stream on one task."""
     w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         scored.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+        .limit(int(k))
         .withColumn("rank", F.row_number().over(w).cast("int"))
         .select("rank", "doc_id", "score")
     )
+
+
+def _probe(
+    spark: SparkSession, index_dir: str, terms: list[str], n_partitions: int | None = None
+) -> tuple[dict, dict[str, dict], tuple] | None:
+    """(stats, dictionary info, (tomb_bc, tomb_over)) — the driver-side
+    state a BM25 query starts from; None when no term is indexed (no
+    tombstone fetch then)."""
+    stats = load_stats(index_dir)
+    if n_partitions is None:
+        n_partitions = int(stats.get("n_partitions", INDEX_PARTITIONS))
+    info = probe_dictionary(spark, index_dir, terms, n_partitions)
+    if not info:
+        return None
+    return stats, info, _tombstones(spark, index_dir)
 
 
 def _tombstones(spark: SparkSession, index_dir: str):
@@ -626,7 +560,7 @@ def _impact_ok(stats: dict, k: int, k1: float, b: float) -> bool:
     equality — same build wrote both), and the stored k is ≥ the query k
     (the k0-th largest lower-bounds the k-th largest for k ≤ k0). A
     streaming delta rewrites stats.json's avgdl, which breaks the equality
-    and auto-falls back to the job-based θ pass."""
+    and auto-falls back to a computed θ."""
     imp = stats.get("impact")
     return (
         imp is not None
@@ -649,18 +583,33 @@ def _batch_thetas(
     avgdl: float,
     stats: dict | None = None,
     tomb_bc=None,
+    scope_bc=None,
 ) -> dict[int, float]:
-    """Per-query pruning thresholds for the batch executor, ONE Spark job.
+    """Per-query pruning thresholds θ_q — the one θ rule of every BM25
+    top-k that reaches Spark, single queries included (a batch of one).
 
-    For each query take its rarest matched term (highest idf ⇒ smallest
-    posting list AND largest single-term bound). Scan only those terms'
-    slices; each slice contributes its LOCAL k-th best single-term score,
-    and θ_q = max over the best term's slices. Validity: single-term
-    scores lower-bound total scores, and the k-th largest of any SUBSET
-    lower-bounds the global k-th best total — so θ is conservative
-    (slightly looser than the latency path's exact k-th, but computed
-    distributed instead of collecting blobs to the driver). The rounding
-    quantum is subtracted as in _theta_from_best_term."""
+    Each query's θ comes from its rarest matched term (highest idf ⇒
+    smallest posting list AND largest single-term bound): single-term
+    scores lower-bound total scores, so any lower bound on that term's
+    k-th best single-term score is a valid (conservative) θ. Per term,
+    the first source that applies:
+
+      1. the stored kth_tfnorm the dictionary probe already carries, when
+         _impact_ok holds and there are no tombstones (stored values
+         counted docs that are now deleted) and no scope (they counted
+         docs outside it): no read at all;
+      2. the exact k-th best over the term's live, in-scope postings,
+         read on the driver (_read_partitions), when Σdf of the batch's
+         remaining θ terms ≤ DRIVER_TOPK_MAX_DF — one gate for the batch,
+         no Spark job;
+      3. otherwise _distributed_term_kth: one job, each slice's local
+         k-th best, max per term (looser than the exact k-th, nothing
+         posting-sized reaches the driver).
+
+    A rounding-quantum margin (10^-SCORE_ROUND_DECIMALS) is subtracted so a
+    pruned doc can never tie the k-th kept doc after 6-decimal rounding and
+    win the ascending-doc_id tiebreak — keeps pruned output bit-identical
+    to the exhaustive path."""
     best_term = {}
     for qid, ts in queries.items():
         m = [t for t in ts if t in info]
@@ -669,26 +618,61 @@ def _batch_thetas(
     need = sorted(set(best_term.values()))
     if not need:
         return {}
-    # build-time impact metadata first: terms whose stored per-slice k-th
-    # rode the dictionary probe cost ZERO extra jobs here (skipped under
-    # tombstones — stored values counted docs that are now deleted)
     term_kth: dict[str, float] = {}
-    if tomb_bc is None and stats is not None and _impact_ok(stats, k, k1, b):
+    if tomb_bc is None and scope_bc is None and stats is not None and _impact_ok(stats, k, k1, b):
         for t in need:
             v = info[t].get("kth_tfnorm")
             if v is not None:
                 term_kth[t] = idf[t] * float(v)
     missing = [t for t in need if t not in term_kth]
-    if missing:
+    if missing and sum(int(info[t]["df"]) for t in missing) <= DRIVER_TOPK_MAX_DF:
+        pids = sorted({info[t]["partition_id"] for t in missing})
+        rows = _read_partitions(index_dir, "segments", pids, missing, _BLOB_SCHEMA)
+        blobs: dict[str, list[bytes]] = {}
+        for term, blob in zip(rows.column("term").to_pylist(), rows.column("blob").to_pylist()):
+            blobs.setdefault(term, []).append(blob)
+        tomb = None if tomb_bc is None else tomb_bc.value
+        scope = None if scope_bc is None else scope_bc.value
+        for t, bl in blobs.items():
+            kth = _term_kth(bl, idf[t], k, k1, b, avgdl, tomb, scope)
+            if kth is not None:
+                term_kth[t] = kth
+    elif missing:
         term_kth.update(
             _distributed_term_kth(
-                spark, index_dir, missing, info, idf, k, k1, b, avgdl, tomb_bc=tomb_bc
+                spark, index_dir, missing, info, idf, k, k1, b, avgdl,
+                tomb_bc=tomb_bc, scope_bc=scope_bc,
             )
         )
     quantum = 10.0 ** (-SCORE_ROUND_DECIMALS)
     return {
         qid: max(0.0, term_kth.get(t, 0.0) - quantum) for qid, t in best_term.items()
     }
+
+
+def _term_kth(
+    blobs: list[bytes], t_idf: float, k: int, k1: float, b: float, avgdl: float,
+    tomb: np.ndarray | None = None, scope: np.ndarray | None = None,
+) -> float | None:
+    """The k-th best single-term score over the live, in-scope postings of
+    `blobs` (one term's slices), None when fewer than k remain."""
+    from .compress import decode_postings
+
+    scores = []
+    for blob in blobs:
+        doc_ids, tfs, dls = decode_postings(bytes(blob))
+        keep = np.ones(doc_ids.size, dtype=bool)
+        if tomb is not None:
+            keep &= live_mask(doc_ids, tomb)
+        if scope is not None:
+            keep &= member_mask(doc_ids, scope)
+        scores.append(
+            t_idf * _tf_norm(tfs[keep].astype(np.float64), dls[keep].astype(np.float64), avgdl, k1, b)
+        )
+    sc = np.concatenate(scores) if scores else np.empty(0)
+    if sc.size < k:
+        return None
+    return float(np.partition(sc, sc.size - k)[sc.size - k])
 
 
 def _distributed_term_kth(
@@ -718,25 +702,15 @@ def _distributed_term_kth(
     )
 
     def local_kth(pdf_iter):
-        from .compress import decode_postings
-
+        tomb = None if tomb_bc is None else tomb_bc.value
+        scope = None if scope_bc is None else scope_bc.value
         for pdf in pdf_iter:
             terms_out, kth_out = [], []
             for term, blob in zip(pdf["term"], pdf["blob"]):
-                doc_ids, tfs, dls = decode_postings(bytes(blob))
-                if tomb_bc is not None and doc_ids.size:
-                    mask = live_mask(doc_ids, tomb_bc.value)
-                    doc_ids, tfs, dls = doc_ids[mask], tfs[mask], dls[mask]
-                if scope_bc is not None and doc_ids.size:
-                    mask = member_mask(doc_ids, scope_bc.value)
-                    tfs, dls = tfs[mask], dls[mask]
-                if tfs.size < k:
-                    continue
-                sc = idf[term] * _tf_norm(
-                    tfs.astype(np.float64), dls.astype(np.float64), avgdl, k1, b
-                )
-                terms_out.append(term)
-                kth_out.append(float(np.partition(sc, sc.size - k)[sc.size - k]))
+                kth = _term_kth([blob], idf[term], k, k1, b, avgdl, tomb, scope)
+                if kth is not None:
+                    terms_out.append(term)
+                    kth_out.append(kth)
             if terms_out:
                 yield pd.DataFrame({"term": terms_out, "kth": kth_out})
 
@@ -749,7 +723,7 @@ def _distributed_term_kth(
     return {r["term"]: float(r["kth"]) for r in rows}
 
 
-def topk_segments_multi(
+def _bm25_scored(
     spark: SparkSession,
     index_dir: str,
     queries: dict[int, list[str]],
@@ -759,38 +733,60 @@ def topk_segments_multi(
     n_partitions: int | None = None,
     prune: bool = True,
     sketch: bool | None = None,
-) -> DataFrame:
-    """Batch executor: (query_id, rank, doc_id, score) for many queries in
-    ONE plan — one dictionary probe for the union of terms, one pruned
-    segment scan, per-query windows. This is the throughput path; per-query
-    `topk_segments` is the latency path.
+    scope: "np.ndarray | DataFrame | None" = None,
+    probed: tuple | None = None,
+) -> DataFrame | None:
+    """(query_id, doc_id, score) of every live doc a query's pruned scan
+    keeps — the one BM25 scorer. topk_segments_multi adds a per-query rank
+    window, topk_segments' Spark branch runs it as a batch of one with a
+    TakeOrderedAndProject tail, and _exact_scored_matches runs it with
+    prune=False. None when no query term is indexed.
 
-    With prune=True a single extra job computes per-query θ thresholds
-    (_batch_thetas) and the scan masks both blocks and postings per query
-    before anything reaches the shuffle — results stay bit-identical to
-    exhaustive (same argument as the latency path, tested).
+    One partition+term-pruned segment scan for the union of the batch's
+    terms; a mapInPandas kernel decodes each slice once, masks tombstones
+    and the scope, scores exact BM25 partials and emits (query_id,
+    doc_id, partial) for every query using the term; groupBy(query_id,
+    doc_id).sum folds them.
 
-    sketch (None = auto at total_df ≥ SKETCH_MIN_DF, same gate as the
-    latency path) adds the doc-range impact sketches: the metadata-only
-    _term_impact_sketch job runs ONCE for the union of matched terms —
-    amortized over the whole batch — and tightens (a) every per-(term,
-    query) rest bound from the idf·(k1+1) tf→∞ corner down to the terms'
-    true max block bounds and (b) the per-posting mask down to the
-    OTHER-terms bound in the posting's doc-range bucket, so a term's
-    postings die wherever its co-query terms are weak or absent. At 64M
-    docs the un-sketched batch masks let nearly everything through and
-    the groupBy(query_id, doc_id) shuffle dominates (measured 4.2× slower
-    than 10 sequential latency queries); this is the fix."""
-    stats = load_stats(index_dir)
-    if n_partitions is None:
-        n_partitions = int(stats.get("n_partitions", INDEX_PARTITIONS))
+    With prune=True (and no over-cap tombstones or DataFrame scope — a θ
+    over a superset of the live/in-scope docs is not a lower bound) the
+    batch's θ_q come from _batch_thetas and the kernel drops a block when
+    its bound plus the rest of the query's bound is below θ_q for every
+    query using the term, and a posting when its score plus that rest is
+    below θ_q: a dropped posting's doc totals < θ_q ≤ the true k-th best,
+    so every top-k doc keeps its exact sum (tested bit-identical to
+    prune=False). Scores of docs outside a query's top-k may be partial.
+
+    sketch (None = auto at total_df ≥ SKETCH_MIN_DF) adds the doc-range
+    impact sketches: the metadata-only _term_impact_sketch job runs ONCE
+    for the union of matched terms — amortized over the whole batch — and
+    tightens (a) every per-(term, query) rest bound from the idf·(k1+1)
+    tf→∞ corner down to the terms' true max block bounds and (b) the
+    per-posting mask down to the OTHER-terms bound in the posting's
+    doc-range bucket, so a term's postings die wherever its co-query terms
+    are weak or absent. At 64M docs the un-sketched batch masks let nearly
+    everything through and the groupBy(query_id, doc_id) shuffle dominates
+    (measured 4.2× slower than 10 sequential latency queries).
+
+    `scope` applies to every query of the batch: a sorted int64 array is
+    broadcast and masked kernel-side (member_mask), θ then counts only
+    in-scope postings (the stored kth_tfnorm shortcut is skipped); a
+    (doc_id) DataFrame semi-joins the partials with θ off. `probed` is
+    _probe's result when the caller already has it."""
+    if probed is None:
+        probed = _probe(
+            spark, index_dir, sorted({t for ts in queries.values() for t in ts}), n_partitions
+        )
+        if probed is None:
+            return None
+    stats, info, (tomb_bc, tomb_over) = probed
     n, avgdl = float(stats["n_docs"]), float(stats["avgdl"])
-    all_terms = sorted({t for ts in queries.values() for t in ts})
-    info = probe_dictionary(spark, index_dir, all_terms, n_partitions)
     matched = sorted(info)
-    if not matched:
-        return _local_frame(spark, [], "query_id int, rank int, doc_id long, score double")
-    tomb_bc, tomb_over = _tombstones(spark, index_dir)
+    scope_bc = scope_over = None
+    if isinstance(scope, DataFrame):
+        scope_over = scope.select("doc_id")
+    elif scope is not None:
+        scope_bc = spark.sparkContext.broadcast(scope)
     idf = {t: _idf(float(info[t]["df"]), n) for t in matched}
     term_queries = {
         t: [qid for qid, ts in queries.items() if t in set(ts)] for t in matched
@@ -798,10 +794,10 @@ def topk_segments_multi(
     global_ub = {t: idf[t] * (k1 + 1.0) for t in matched}
     total_df = sum(info[t]["df"] for t in matched)
     thetas: dict[int, float] = {}
-    if prune and tomb_over is None and total_df > 50 * k:
+    if prune and tomb_over is None and scope_over is None and total_df > 50 * k:
         thetas = _batch_thetas(
             spark, index_dir, queries, info, idf, k, k1, b, avgdl, stats,
-            tomb_bc=tomb_bc,
+            tomb_bc=tomb_bc, scope_bc=scope_bc,
         )
 
     # doc-range sketches (see docstring): one metadata job for the union
@@ -810,7 +806,7 @@ def topk_segments_multi(
     term_sk: dict[str, np.ndarray] | None = None
     qtot: dict[int, np.ndarray] | None = None
     span = float(int(stats["max_doc_id"]) + 1)
-    if thetas and sketch:
+    if thetas and sketch and len(matched) > 1:
         sketches = _term_impact_sketch(
             spark, index_dir, info, idf, avgdl, k1, b, int(stats["max_doc_id"])
         )
@@ -828,7 +824,7 @@ def topk_segments_multi(
     # (computed AFTER the sketch tightening of global_ub)
     rest_ub = {
         (t, qid): sum(
-            global_ub[t2] for t2 in queries[qid] if t2 in info and t2 != t
+            global_ub[t2] for t2 in set(queries[qid]) if t2 in info and t2 != t
         )
         for t in matched
         for qid in term_queries[t]
@@ -909,13 +905,18 @@ def topk_segments_multi(
                         doc_ids, tfs, dls = doc_ids[m], tfs[m], dls[m]
                         if doc_ids.size == 0:
                             continue
+                # live-docs and scope masks after block skip (block indices
+                # are positions in the original array), before scoring
                 if tomb_bc is not None:
-                    # live-docs mask after block skip, before scoring
                     m = live_mask(doc_ids, tomb_bc.value)
                     if not m.all():
                         doc_ids, tfs, dls = doc_ids[m], tfs[m], dls[m]
-                        if doc_ids.size == 0:
-                            continue
+                if scope_bc is not None:
+                    m = member_mask(doc_ids, scope_bc.value)
+                    if not m.all():
+                        doc_ids, tfs, dls = doc_ids[m], tfs[m], dls[m]
+                if doc_ids.size == 0:
+                    continue
                 scores = idf[term] * _tf_norm(
                     tfs.astype(np.float64), dls.astype(np.float64), avgdl, k1, b
                 )
@@ -962,9 +963,34 @@ def topk_segments_multi(
     partials = seg.mapInPandas(score_slices, schema="query_id int, doc_id long, partial double")
     if tomb_over is not None:  # over-cap tombstones: distributed anti-join
         partials = partials.join(tomb_over, "doc_id", "left_anti")
-    scored = partials.groupBy("query_id", "doc_id").agg(
+    if scope_over is not None:  # over-cap scope: distributed semi-join
+        partials = partials.join(scope_over, "doc_id", "left_semi")
+    return partials.groupBy("query_id", "doc_id").agg(
         F.round(F.sum("partial"), SCORE_ROUND_DECIMALS).alias("score")
     )
+
+
+def topk_segments_multi(
+    spark: SparkSession,
+    index_dir: str,
+    queries: dict[int, list[str]],
+    k: int = DEFAULT_TOP_K,
+    k1: float = BM25_K1,
+    b: float = BM25_B,
+    n_partitions: int | None = None,
+    prune: bool = True,
+    sketch: bool | None = None,
+) -> DataFrame:
+    """Batch executor: (query_id, rank, doc_id, score) for many queries in
+    ONE plan — _bm25_scored (one dictionary probe for the union of terms,
+    one pruned segment scan; its docstring has the θ/sketch contract) plus
+    a per-query rank window. prune=False scores exhaustively; prune=True
+    is bit-identical to it (tested)."""
+    scored = _bm25_scored(
+        spark, index_dir, queries, k, k1, b, n_partitions, prune=prune, sketch=sketch
+    )
+    if scored is None:
+        return _local_frame(spark, [], "query_id int, rank int, doc_id long, score double")
 
     # Per-partition local top-k BEFORE the per-query window. The window must
     # repartition by query_id — at most n_queries partitions, a parallelism
@@ -1055,90 +1081,6 @@ def _topk_frame(spark: SparkSession, docs: np.ndarray, scores: np.ndarray, k: in
     order = np.lexsort((docs, -scores))[: min(k, docs.size)]
     out = [(i + 1, int(docs[j]), float(scores[j])) for i, j in enumerate(order)]
     return _local_frame(spark, out, _TOPK_SCHEMA)
-
-
-def _theta_from_best_term(
-    spark: SparkSession,
-    index_dir: str,
-    info: dict[str, dict],
-    idf: dict[str, float],
-    k: int,
-    k1: float,
-    b: float,
-    avgdl: float,
-    stats: dict | None = None,
-    tomb_bc=None,
-    scope_bc=None,
-) -> float:
-    """Exact scores of the highest-ub term's postings → k-th best = θ.
-
-    Live-docs: with tombstones present (tomb_bc) θ must be the k-th best
-    over LIVE docs only — deleted high scorers would inflate it and prune
-    survivors — so the build-time impact shortcut (which counted every
-    doc) is skipped and both computation paths mask deleted postings
-    before taking the k-th.
-
-    FAST PATH (zero jobs): when the index carries build-time impact
-    metadata valid for this query's (k, k1, b, avgdl) — see _impact_ok —
-    θ comes straight from the dictionary probe's stored kth_tfnorm
-    (slightly looser than the exact k-th below, still a valid lower
-    bound), and no θ job runs at all.
-
-    These single-term scores are lower bounds on total scores, so the k-th
-    largest is a valid (conservative) threshold. Costs a driver-side read
-    of one term's slices (_read_partitions, no Spark job) — and the chosen
-    term is the highest-idf (RAREST) one, so its posting list is the
-    smallest in the query.
-
-    A rounding-quantum margin (10^-SCORE_ROUND_DECIMALS) is subtracted so a
-    pruned doc can never tie the k-th kept doc after 6-decimal rounding and
-    win the ascending-doc_id tiebreak — keeps pruned output bit-identical
-    to the exhaustive path.
-
-    Driver-collect is BOUNDED: when even the rarest term's df exceeds
-    DRIVER_TOPK_MAX_DF (every query term is a heavy hitter — "def import"
-    class queries), the k-th is computed distributed via the same
-    per-slice local-kth job the batch path uses (_distributed_term_kth) —
-    slightly looser θ, zero unbounded driver fetch at any corpus scale.
-    """
-    best = max(idf, key=lambda t: idf[t] * (k1 + 1.0))
-    if (
-        tomb_bc is None
-        and scope_bc is None
-        and stats is not None
-        and _impact_ok(stats, k, k1, b)
-    ):
-        v = info[best].get("kth_tfnorm")
-        if v is not None:
-            return max(0.0, idf[best] * float(v) - 10.0 ** (-SCORE_ROUND_DECIMALS))
-    if int(info[best]["df"]) > DRIVER_TOPK_MAX_DF:
-        kth = _distributed_term_kth(
-            spark, index_dir, [best], info, idf, k, k1, b, avgdl,
-            tomb_bc=tomb_bc, scope_bc=scope_bc,
-        ).get(best, 0.0)
-        return max(0.0, kth - 10.0 ** (-SCORE_ROUND_DECIMALS))
-    blobs = _read_partitions(
-        index_dir, "segments", [info[best]["partition_id"]], [best], _BLOB_SCHEMA
-    ).column("blob")
-    from .compress import decode_postings
-
-    scores: list[np.ndarray] = []
-    for blob in blobs.to_pylist():
-        doc_ids, tfs, dls = decode_postings(blob)
-        if tomb_bc is not None and doc_ids.size:
-            mask = live_mask(doc_ids, tomb_bc.value)
-            doc_ids, tfs, dls = doc_ids[mask], tfs[mask], dls[mask]
-        if scope_bc is not None and doc_ids.size:
-            mask = member_mask(doc_ids, scope_bc.value)
-            tfs, dls = tfs[mask], dls[mask]
-        scores.append(idf[best] * _tf_norm(tfs.astype(np.float64), dls.astype(np.float64), avgdl, k1, b))
-    if not scores:
-        return 0.0
-    allsc = np.concatenate(scores)
-    if allsc.size < k:
-        return 0.0
-    theta = float(np.partition(allsc, allsc.size - k)[allsc.size - k])
-    return theta - 10.0 ** (-SCORE_ROUND_DECIMALS)
 
 
 # ---------------------------------------------------------------------------
@@ -1543,13 +1485,7 @@ def synonym_topk(
             ).alias("score"),
         )
     )
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(int(k))
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .select("rank", "doc_id", "score")
-    )
+    return _rank_tail(scored, k)
 
 
 def scoped_topk_segments(
@@ -1574,7 +1510,7 @@ def scoped_topk_segments(
     a DataFrame semi-join on the partial stream — no driver collect at
     any size."""
     meta = (
-        spark.read.parquet(os.path.join(index_dir, "doc_meta"))
+        _doc_meta(spark, index_dir)
         .filter(predicate)
         .select("doc_id")
     )
@@ -1701,13 +1637,7 @@ def topk_segments_conjunctive(
         .filter(F.col("n_matched") == F.lit(n_terms))
         .select("doc_id", "score")
     )
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .select("rank", "doc_id", "score")
-    )
+    return _rank_tail(scored, k)
 
 
 def explain_topk(
@@ -1874,7 +1804,7 @@ def facet_counts(
     docs = _matched_docs(spark, index_dir, terms, n_partitions)
     if docs is None:
         return _local_frame(spark, [], f"{facet_col} string, n_docs long")
-    meta = spark.read.parquet(os.path.join(index_dir, "doc_meta")).select(
+    meta = _doc_meta(spark, index_dir).select(
         "doc_id", facet_col
     )
     return (
@@ -1907,7 +1837,7 @@ def facet_stats(
     )
     if docs is None:
         return _local_frame(spark, [], empty_schema)
-    meta = spark.read.parquet(os.path.join(index_dir, "doc_meta")).select(
+    meta = _doc_meta(spark, index_dir).select(
         "doc_id", facet_col, stats_col
     )
     return (
@@ -2071,62 +2001,15 @@ def _exact_scored_matches(
     n_partitions: int | None = None,
 ) -> DataFrame | None:
     """(doc_id, score) for EVERY live matching doc of the disjunction —
-    the unpruned exact BM25 fold (same kernel math as topk_segments,
-    rank-identical pre-cut). Shared by the group-shaped collectors
-    (collapse_topk, top_hits) where doc-level θ/block-max bounds are
-    unsound: a group winner can score below the global k-th doc. None
-    when no query term is indexed."""
-    stats = load_stats(index_dir)
-    if n_partitions is None:
-        n_partitions = int(stats.get("n_partitions", INDEX_PARTITIONS))
-    n, avgdl = float(stats["n_docs"]), float(stats["avgdl"])
-    info = probe_dictionary(spark, index_dir, sorted(set(terms)), n_partitions)
-    matched = sorted(info)
-    if not matched:
-        return None
-    tomb_bc, tomb_over = _tombstones(spark, index_dir)
-    idf_b = {t: _idf(float(info[t]["df"]), n) for t in matched}
-
-    pids = sorted({info[t]["partition_id"] for t in matched})
-    seg = _segments(spark, index_dir).filter(
-        F.col("partition_id").isin(pids) & F.col("term").isin(matched)
+    the batch scorer with prune=False as a batch of one (same kernel as
+    topk_segments, rank-identical pre-cut). Shared by the group-shaped
+    collectors (collapse_topk, top_hits) where doc-level θ/block-max
+    bounds are unsound: a group winner can score below the global k-th
+    doc. None when no query term is indexed."""
+    scored = _bm25_scored(
+        spark, index_dir, {0: list(terms)}, k1=k1, b=b, n_partitions=n_partitions, prune=False
     )
-    seg = _spread_slices(seg, spark, sum(int(info[t]["df"]) for t in matched))
-
-    def score_slices(pdf_iter):
-        from .compress import decode_postings
-
-        for pdf in pdf_iter:
-            out_docs, out_scores = [], []
-            for term, blob in zip(pdf["term"], pdf["blob"]):
-                doc_ids, tfs, dls = decode_postings(bytes(blob))
-                if tomb_bc is not None and doc_ids.size:
-                    m = live_mask(doc_ids, tomb_bc.value)
-                    if not m.all():
-                        doc_ids, tfs, dls = doc_ids[m], tfs[m], dls[m]
-                if doc_ids.size == 0:
-                    continue
-                out_docs.append(doc_ids)
-                out_scores.append(
-                    idf_b[term]
-                    * _tf_norm(
-                        tfs.astype(np.float64), dls.astype(np.float64), avgdl, k1, b
-                    )
-                )
-            if out_docs:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.concatenate(out_docs),
-                        "partial": np.concatenate(out_scores),
-                    }
-                )
-
-    partials = seg.mapInPandas(score_slices, schema="doc_id long, partial double")
-    if tomb_over is not None:  # over-cap tombstones: distributed anti-join
-        partials = partials.join(tomb_over, "doc_id", "left_anti")
-    return partials.groupBy("doc_id").agg(
-        F.round(F.sum("partial"), SCORE_ROUND_DECIMALS).alias("score")
-    )
+    return None if scored is None else scored.drop("query_id")
 
 
 def top_hits(
@@ -2156,7 +2039,7 @@ def top_hits(
     scored = _exact_scored_matches(spark, index_dir, terms, k1, b, n_partitions)
     if scored is None:
         return _local_frame(spark, [], out_schema)
-    meta = spark.read.parquet(os.path.join(index_dir, "doc_meta")).select(
+    meta = _doc_meta(spark, index_dir).select(
         "doc_id", group_col
     )
     wg = Window.partitionBy(group_col).orderBy(F.desc("score"), F.asc("doc_id"))
@@ -2187,7 +2070,7 @@ def histogram_agg(
     docs = _matched_docs(spark, index_dir, terms, n_partitions)
     if docs is None:
         return _local_frame(spark, [], "bucket long, n_docs long")
-    meta = spark.read.parquet(os.path.join(index_dir, "doc_meta")).select(
+    meta = _doc_meta(spark, index_dir).select(
         "doc_id", field
     )
     bucket = (
@@ -2241,7 +2124,7 @@ def collapse_topk(
     scored = _exact_scored_matches(spark, index_dir, terms, k1, b, n_partitions)
     if scored is None:
         return _local_frame(spark, [], out_schema)
-    meta = spark.read.parquet(os.path.join(index_dir, "doc_meta")).select(
+    meta = _doc_meta(spark, index_dir).select(
         "doc_id", collapse_col
     )
     wg = Window.partitionBy(collapse_col).orderBy(F.desc("score"), F.asc("doc_id"))
@@ -2281,7 +2164,7 @@ def sort_topk(
     per-partition k-row heaps, a k-row driver merge — the exchange
     carries k rows per partition regardless of match count, so at
     cluster scale this is one pruned scan plus one bounded exchange."""
-    meta = spark.read.parquet(os.path.join(index_dir, "doc_meta")).select(
+    meta = _doc_meta(spark, index_dir).select(
         "doc_id", sort_col
     )
     docs = _matched_docs(spark, index_dir, terms, n_partitions)
@@ -2412,7 +2295,7 @@ def percentiles_agg(
     docs = _matched_docs(spark, index_dir, terms, n_partitions)
     if docs is None:
         return _local_frame(spark, [], "percentile double, value double")
-    meta = spark.read.parquet(os.path.join(index_dir, "doc_meta")).select(
+    meta = _doc_meta(spark, index_dir).select(
         "doc_id", stats_col
     )
     pcts = list(percentiles)
@@ -2457,7 +2340,7 @@ def extended_stats(
     )
     if docs is None:
         return _local_frame(spark, [], schema)
-    meta = spark.read.parquet(os.path.join(index_dir, "doc_meta")).select(
+    meta = _doc_meta(spark, index_dir).select(
         "doc_id", stats_col
     )
     c = F.col(stats_col)
@@ -2507,7 +2390,7 @@ def composite_agg(
     schema = f"{group_col} string, bucket long, n_docs long"
     if docs is None:
         return _local_frame(spark, [], schema)
-    meta = spark.read.parquet(os.path.join(index_dir, "doc_meta")).select(
+    meta = _doc_meta(spark, index_dir).select(
         "doc_id", group_col, stats_col
     )
     bucket = (F.floor(F.col(stats_col) / F.lit(int(interval))) * int(interval)).cast(
@@ -2546,7 +2429,7 @@ def mad_agg(
     docs = _matched_docs(spark, index_dir, terms, n_partitions)
     if docs is None:
         return _local_frame(spark, [], "median double, mad double")
-    meta = spark.read.parquet(os.path.join(index_dir, "doc_meta")).select(
+    meta = _doc_meta(spark, index_dir).select(
         "doc_id", stats_col
     )
     vals = docs.distinct().join(meta, "doc_id")

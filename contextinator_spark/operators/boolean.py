@@ -57,7 +57,6 @@ positional) into the standard IR algebra.
 from __future__ import annotations
 
 import functools
-import os
 import re
 from dataclasses import dataclass, field
 
@@ -79,8 +78,10 @@ from .bm25_segments import (
     MAX_EXPANSIONS,
     _BLOB_SCHEMA,
     _OUT_CHUNK_ROWS,
+    _doc_meta,
     _idf,
     _local_frame,
+    _rank_tail,
     _read_partitions,
     _segments,
     _spread_slices,
@@ -874,9 +875,8 @@ def _batch_scored(
     # ---- scoring-predicate streams (ConstantScore over metadata filters):
     # doc_meta scans (metadata-scale). doc_meta is not tombstone-masked on
     # disk, so mask here — the term/positional streams mask kernel-side.
-    meta_path = os.path.join(index_dir, "doc_meta")
     preds = [
-        spark.read.parquet(meta_path)
+        _doc_meta(spark, index_dir)
         .filter(c.predicate)
         .select(
             F.lit(qid).cast("int").alias("query_id"),
@@ -1010,7 +1010,7 @@ def _batch_scored(
         not_matched, _ = positional_matches_multi(spark, index_dir, not_spec)
         excl.append(not_matched.select(key_qid, "doc_id"))
     excl.extend(
-        spark.read.parquet(meta_path)
+        _doc_meta(spark, index_dir)
         .filter(c.predicate)
         .select(F.lit(qid).cast("int").alias("query_id"), "doc_id")
         for qid in live
@@ -1029,7 +1029,7 @@ def _batch_scored(
         ok = functools.reduce(
             DataFrame.unionByName,
             [
-                spark.read.parquet(meta_path)
+                _doc_meta(spark, index_dir)
                 .filter(" AND ".join(f"({c.predicate})" for c in filters[qid]))
                 .select(F.lit(qid).cast("int").alias("query_id"), "doc_id")
                 for qid in has_flt
@@ -1072,18 +1072,6 @@ def _boolean_scored(
         tie_breaker, {0: int(min_should_match)}, rare_filter=rare_filter,
         _partials_out=_partials_out,
     ).drop("query_id")
-
-
-def _rank_tail(scored: DataFrame, k: int) -> DataFrame:
-    """(rank, doc_id, score) top-k of a (doc_id, score) stream — the
-    shared collector tail (score desc, doc_id asc)."""
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .select("rank", "doc_id", "score")
-    )
 
 
 def boolean_topk(
@@ -1287,7 +1275,7 @@ def function_score_topk(
     scored = _boolean_scored(
         spark, index_dir, q_cl, k1=k1, b=b, max_expansions=max_expansions
     )
-    meta = spark.read.parquet(os.path.join(index_dir, "doc_meta")).select(
+    meta = _doc_meta(spark, index_dir).select(
         "doc_id", F.col(field).cast("double").alias("_fv")
     )
     v = F.lit(float(factor)) * F.col("_fv")
@@ -1344,7 +1332,7 @@ def decay_score_topk(
     scored = _boolean_scored(
         spark, index_dir, q_cl, k1=k1, b=b, max_expansions=max_expansions
     )
-    meta = spark.read.parquet(os.path.join(index_dir, "doc_meta")).select(
+    meta = _doc_meta(spark, index_dir).select(
         "doc_id", F.col(field).cast("double").alias("_fv")
     )
     dist = F.greatest(
@@ -1396,7 +1384,7 @@ def script_score_topk(
     scored = _boolean_scored(
         spark, index_dir, q_cl, k1=k1, b=b, max_expansions=max_expansions
     )
-    meta = spark.read.parquet(os.path.join(index_dir, "doc_meta"))
+    meta = _doc_meta(spark, index_dir)
     out = (
         scored.join(meta, "doc_id")
         .withColumn("score", F.expr(expr).cast("double"))

@@ -24,11 +24,18 @@ from __future__ import annotations
 import re
 from collections import Counter
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import BM25_B, BM25_K1, DEFAULT_TOP_K, TOKEN_PATTERN
-from .bm25_segments import _idf, _local_frame, load_stats, probe_dictionary, topk_segments
+from .bm25_segments import (
+    _idf,
+    _local_frame,
+    _rank_tail,
+    load_stats,
+    probe_dictionary,
+    topk_segments,
+)
 
 # Lucene MoreLikeThis defaults (MoreLikeThis.java): minTermFreq=2,
 # minDocFreq=5, maxQueryTerms=25. min_df default here is 2 — the corpus
@@ -94,10 +101,4 @@ def more_like_this(
     if not terms:
         return _local_frame(spark, [], "rank int, doc_id long, score double")
     over = topk_segments(spark, index_dir, terms, k=k + 1, k1=k1, b=b, **kw)
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        over.filter(F.col("doc_id") != int(doc_id))
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("rank", "doc_id", "score")
-    )
+    return _rank_tail(over.filter(F.col("doc_id") != int(doc_id)), k)

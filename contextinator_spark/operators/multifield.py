@@ -73,6 +73,7 @@ from .bm25_segments import (
     _exact_scored_matches,
     _idf,
     _local_frame,
+    _rank_tail,
     _segments,
     _spread_slices,
     _tombstones,
@@ -158,16 +159,6 @@ def _norm_weights(
     return w
 
 
-def _ranked(combined: DataFrame, k: int) -> DataFrame:
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        combined.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(int(k))
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .select("rank", "doc_id", "score")
-    )
-
-
 def multi_match_topk(
     spark: SparkSession,
     field_dirs: dict[str, str],
@@ -221,7 +212,7 @@ def multi_match_topk(
             SCORE_ROUND_DECIMALS,
         ).alias("score")
     )
-    return _ranked(combined, k)
+    return _rank_tail(combined, k)
 
 
 def bm25f_topk(
@@ -309,7 +300,7 @@ def bm25f_topk(
     combined = scored.groupBy("doc_id").agg(
         F.round(F.sum("partial"), SCORE_ROUND_DECIMALS).alias("score")
     )
-    return _ranked(combined, k)
+    return _rank_tail(combined, k)
 
 
 def _bucketed_term_arrays(

@@ -73,6 +73,7 @@ from .bm25_segments import (
     _BLOB_SCHEMA,
     _idf,
     _local_frame,
+    _rank_tail,
     _read_partitions,
     _segments,
     _spread_slices,
@@ -133,9 +134,8 @@ def _rank_matches(
     over the matched set, so the plan computing `matches` runs once (an
     aggregate crossJoined back would evaluate it twice — the kernel or
     the corpus scan included). One lazy plan ending in
-    TakeOrderedAndProject."""
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
+    TakeOrderedAndProject (_rank_tail)."""
+    scored = (
         matches.withColumn(
             "df_phrase", F.count(F.lit(1)).over(Window.partitionBy()).cast("double")
         )
@@ -154,11 +154,8 @@ def _rank_matches(
                 SCORE_ROUND_DECIMALS,
             ),
         )
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .select("rank", "doc_id", "score")
     )
+    return _rank_tail(scored, k)
 
 
 def phrase_topk(
@@ -840,7 +837,7 @@ def positional_topk_indexed_multi(
     # quantum / idf lower bound from the query's rarest slot df (phrase
     # df ≤ any slot's df): a dropped doc's ROUNDED score is then strictly
     # below k kept docs' — the θ prune's discipline
-    # (_theta_from_best_term) — so the global top-k is exact. Disabled
+    # (bm25_segments._batch_thetas) — so the global top-k is exact. Disabled
     # under over-cap tombstones (the anti-join lands after the kernel and
     # would skew the sentinel counts).
     cut = None

@@ -189,6 +189,50 @@ def test_bm25_driver_path_equals_distributed(spark, store):
         assert not {r[1] for r in a} & deleted, terms
 
 
+def test_batch_theta_reads_small_terms_on_the_driver(spark, store, monkeypatch):
+    """The tombstones void the stored kth_tfnorm, so θ is computed. When
+    the batch's θ terms hold ≤ DRIVER_TOPK_MAX_DF postings it is read on
+    the driver: no _distributed_term_kth job, and the pruned batch equals
+    prune=False. With the gate at 0 the same batch runs the distributed
+    job and still matches."""
+    d, deleted, _ = store
+    queries = {1: ["def", "import"], 2: ["return", "class"]}
+    kth_calls, thetas = [], []
+    orig_kth, orig_thetas = B._distributed_term_kth, B._batch_thetas
+
+    def spy_kth(*a, **kw):
+        kth_calls.append(a[2])
+        return orig_kth(*a, **kw)
+
+    def spy_thetas(*a, **kw):
+        thetas.append(orig_thetas(*a, **kw))
+        return thetas[-1]
+
+    monkeypatch.setattr(B, "_distributed_term_kth", spy_kth)
+    monkeypatch.setattr(B, "_batch_thetas", spy_thetas)
+
+    def batch(prune):
+        return sorted(_rows(B.topk_segments_multi(spark, d, queries, k=3, prune=prune)))
+
+    exact = batch(False)
+    assert exact and not {r[2] for r in exact} & deleted
+    assert batch(True) == exact
+    assert not kth_calls
+    assert thetas and set(thetas[-1]) == {1, 2} and all(v > 0 for v in thetas[-1].values())
+    monkeypatch.setattr(B, "DRIVER_TOPK_MAX_DF", 0)
+    assert batch(True) == exact
+    assert kth_calls
+
+
+def test_doc_meta_read_runs_no_job(spark, store):
+    d, _, _ = store
+    meta, n = _jobs_of(spark, lambda: B._doc_meta(spark, d))
+    assert n == 0
+    # base build and streamed delta part files: the schema Spark infers
+    assert meta.schema == spark.read.parquet(f"{d}/doc_meta").schema
+    assert meta.count() == spark.read.parquet(f"{d}/doc_meta").count()
+
+
 def test_positional_driver_path_equals_spark_path(spark, store, monkeypatch):
     """phrase, multiphrase, spanfirst, spannear and NEAR: the driver path
     and the Spark path (forced by a zero gate) return the same rows and

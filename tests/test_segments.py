@@ -220,10 +220,11 @@ def test_theta_distributed_when_all_terms_heavy(spark, index_dir, monkeypatch):
 
 def test_impact_theta_needs_no_spark_job(spark, index_dir):
     """Build-time impact metadata (per-slice k-th tf-norm in the dictionary)
-    makes θ a pure driver-side lookup: valid stamp ⇒ _theta_from_best_term
-    returns before touching Spark AT ALL (spark=None would raise otherwise),
-    and the stored bound is ≤ the exact k-th (conservative ⇒ pruning exact,
-    covered by test_pruned_equals_exhaustive)."""
+    makes θ a pure driver-side lookup: with a valid stamp _batch_thetas
+    returns before touching Spark AT ALL (spark=None would raise
+    otherwise), every query resolves, and the stored bound is ≤ the exact
+    k-th that stats=None (no stamp) reads on the driver (conservative ⇒
+    pruning exact, covered by test_pruned_equals_exhaustive)."""
     from contextinator_spark.operators import bm25_segments as B
 
     stats = B.load_stats(index_dir)
@@ -232,19 +233,12 @@ def test_impact_theta_needs_no_spark_job(spark, index_dir):
     info = B.probe_dictionary(spark, index_dir, terms)
     assert all(info[t].get("kth_tfnorm") is not None for t in info)
     idf = {t: B._idf(float(info[t]["df"]), float(stats["n_docs"])) for t in info}
-    th_fast = B._theta_from_best_term(
-        None, index_dir, info, idf, 10, 1.2, 0.75, float(stats["avgdl"]), stats
-    )
-    th_exact = B._theta_from_best_term(
-        spark, index_dir, info, idf, 10, 1.2, 0.75, float(stats["avgdl"]), None
-    )
-    assert 0.0 < th_fast <= th_exact + 1e-12
-    # batch path: every query's θ resolves from the stamp, zero jobs
-    thetas = B._batch_thetas(
-        None, index_dir, {1: terms, 2: ["def"]}, info, idf, 10, 1.2, 0.75,
-        float(stats["avgdl"]), stats,
-    )
-    assert set(thetas) == {1, 2} and all(v >= 0.0 for v in thetas.values())
+    queries = {1: terms, 2: ["def"]}
+    args = (index_dir, queries, info, idf, 10, 1.2, 0.75, float(stats["avgdl"]))
+    th_fast = B._batch_thetas(None, *args, stats)
+    th_exact = B._batch_thetas(spark, *args, None)
+    assert set(th_fast) == set(th_exact) == {1, 2}
+    assert all(0.0 < th_fast[q] <= th_exact[q] + 1e-12 for q in queries)
 
 
 def test_impact_stamp_invalidation(index_dir):
