@@ -7,9 +7,10 @@ re-expressed over the segment store):
                terms_delta/ partition directories, read on the driver
                with pyarrow — no Spark job)
              → small candidate sets (Σdf ≤ DRIVER_TOPK_MAX_DF): the pruned
-               blobs are read on the driver the same way and scored and
-               ranked in numpy; the result is a LocalRelation — zero
-               Spark jobs end to end (_topk_driver)
+               blobs are read on the driver the same way and the one BM25
+               kernel (_score_slices) runs in-process, without θ; the
+               partials fold per doc in numpy and the ranked result is a
+               LocalRelation — zero Spark jobs end to end (_topk_driver)
              → otherwise the one BM25 scorer (_bm25_scored), a single
                query being a batch of one:
                θ per query (_batch_thetas: stored kth_tfnorm, else a
@@ -19,10 +20,10 @@ re-expressed over the segment store):
                pinned to schemas.SEGMENTS, so no inference job; only the
                query terms' partition_ids reach the parquet reader:
                PushedFilters)
-             → Arrow UDF per slice: decode blob once → exact BM25 partial
-               scores (doc_len from the blob; N/avgdl broadcast as
-               literals) for every query using the term, with block-max
-               and posting pruning against each query's θ
+             → the same kernel in mapInPandas per slice: decode blob once
+               → exact BM25 partial scores (doc_len from the blob; N/avgdl
+               shipped as constants) for every query using the term, with
+               block-max and posting pruning against each query's θ
              → groupBy(query_id, doc_id).sum
              → single query: TakeOrderedAndProject(k) (_rank_tail);
                batch: per-partition local top-k + per-query rank window
@@ -43,7 +44,9 @@ and decreasing in dl, so the corner is a valid bound).
 
 from __future__ import annotations
 
+import dataclasses
 import functools
+import itertools
 import json
 import math
 import os
@@ -56,7 +59,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import (
-    BLOCK_SIZE,
     BM25_B,
     BM25_K1,
     DEFAULT_TOP_K,
@@ -67,7 +69,7 @@ from ..config import (
     TOMBSTONE_BROADCAST_MAX,
 )
 from ..schemas import SEGMENTS
-from .deletes import live_mask, member_mask
+from .deletes import live_mask, live_postings, member_mask
 
 # Batch-executor qid-chunking: bound the (qids × postings) broadcast temp in
 # score_slices to ~4M float64 elements (~32 MB) per chunk.
@@ -450,14 +452,15 @@ def topk_segments(
 ) -> DataFrame:
     """(rank, doc_id, score) from the compressed segment store.
 
-    Small candidate sets (Σdf ≤ DRIVER_TOPK_MAX_DF) short-circuit to a
-    driver-side scatter-gather: the driver reads the pruned blobs, numpy
-    scores and ranks exactly — identical results (tested), no Spark job.
-    driver_path=False forces the distributed plan. That plan is the batch
-    scorer (_bm25_scored) run as a batch of one, followed by a
-    TakeOrderedAndProject tail (_rank_tail) instead of the batch's
-    per-query rank window, which would sort the whole match set on one
-    task.
+    One BM25 kernel (_score_slices), two placements. Small candidate
+    sets (Σdf ≤ DRIVER_TOPK_MAX_DF, no over-cap tombstones, no DataFrame
+    scope) run it on the driver (_topk_driver): the driver reads the
+    pruned blobs, runs the kernel in-process without θ, folds and ranks
+    — identical results (tested), no Spark job. driver_path=False forces
+    the Spark placement: the batch scorer (_bm25_scored) run as a batch
+    of one, followed by a TakeOrderedAndProject tail (_rank_tail) instead
+    of the batch's per-query rank window, which would sort the whole
+    match set on one task.
 
     `after` = (score, doc_id) of the last hit already served (Lucene
     searchAfter): only docs STRICTLY after that cursor in the
@@ -490,13 +493,9 @@ def topk_segments(
         and not isinstance(scope, DataFrame)
         and sum(v["df"] for v in info.values()) <= DRIVER_TOPK_MAX_DF
     ):
-        n, avgdl = float(stats["n_docs"]), float(stats["avgdl"])
-        idf = {t: _idf(float(v["df"]), n) for t, v in info.items()}
         scope_bc = None if scope is None else spark.sparkContext.broadcast(scope)
-        return _topk_driver(
-            spark, index_dir, info, idf, k, k1, b, n, avgdl,
-            tomb_bc=tomb_bc, scope_bc=scope_bc, after=after,
-        )
+        kern = _kern({0: terms}, info, stats, k1, b, tomb_bc, scope_bc)
+        return _topk_driver(spark, index_dir, info, kern, k, after)
     scored = _bm25_scored(
         spark, index_dir, {0: terms}, k, k1, b, prune=prune and after is None,
         sketch=sketch, scope=scope, probed=probed,
@@ -656,18 +655,11 @@ def _term_kth(
 ) -> float | None:
     """The k-th best single-term score over the live, in-scope postings of
     `blobs` (one term's slices), None when fewer than k remain."""
-    from .compress import decode_postings
-
     scores = []
     for blob in blobs:
-        doc_ids, tfs, dls = decode_postings(bytes(blob))
-        keep = np.ones(doc_ids.size, dtype=bool)
-        if tomb is not None:
-            keep &= live_mask(doc_ids, tomb)
-        if scope is not None:
-            keep &= member_mask(doc_ids, scope)
+        _docs, tfs, dls = live_postings(blob, tomb, scope)
         scores.append(
-            t_idf * _tf_norm(tfs[keep].astype(np.float64), dls[keep].astype(np.float64), avgdl, k1, b)
+            t_idf * _tf_norm(tfs.astype(np.float64), dls.astype(np.float64), avgdl, k1, b)
         )
     sc = np.concatenate(scores) if scores else np.empty(0)
     if sc.size < k:
@@ -723,6 +715,139 @@ def _distributed_term_kth(
     return {r["term"]: float(r["kth"]) for r in rows}
 
 
+@dataclasses.dataclass(frozen=True)
+class _Kern:
+    """The driver-built constants of the BM25 kernel (_score_slices), per
+    matched term: `idf`, and `qarr` the ids of the queries using it; with
+    θ pruning on, `rest` (each such query's bound on its OTHER terms) and
+    `theta` (its θ), aligned with `qarr`, and `sketch` = (qt_mat,
+    per-term sketches, per-term qt_mat rows, doc-id span) when the
+    doc-range sketches are on. `tomb`/`scope` are broadcasts of sorted
+    doc-id arrays, or None; `out_rows` is the output chunk size, read on
+    the driver. Computed once so the hot loop does no dict lookup per
+    posting."""
+
+    idf: dict[str, float]
+    qarr: dict[str, np.ndarray]
+    avgdl: float
+    k1: float
+    b: float
+    out_rows: int
+    tomb: object = None
+    scope: object = None
+    rest: dict[str, np.ndarray] | None = None
+    theta: dict[str, np.ndarray] | None = None
+    sketch: tuple | None = None
+
+
+def _kern(
+    queries: dict[int, list[str]], info: dict[str, dict], stats: dict,
+    k1: float, b: float, tomb_bc=None, scope_bc=None,
+) -> _Kern:
+    """The kernel constants without θ: every live, in-scope posting of a
+    query's terms scores for that query."""
+    n = float(stats["n_docs"])
+    return _Kern(
+        idf={t: _idf(float(v["df"]), n) for t, v in info.items()},
+        qarr={
+            t: np.asarray([qid for qid, ts in queries.items() if t in set(ts)], dtype=np.int32)
+            for t in info
+        },
+        avgdl=float(stats["avgdl"]),
+        k1=k1,
+        b=b,
+        out_rows=_OUT_CHUNK_ROWS,
+        tomb=tomb_bc,
+        scope=scope_bc,
+    )
+
+
+def _score_slices(pdf_iter, kern: _Kern):
+    """The BM25 kernel, over (term, blob[, block_max]) slice rows: decode
+    each blob once, mask tombstones and the scope, score exact BM25
+    partials and emit (query_id, doc_id, partial) for every query using
+    the term. The Spark placement is mapInPandas(partial(_score_slices,
+    kern=…)) (_bm25_scored); the driver placement calls it in-process on
+    the _read_partitions rows (_topk_driver).
+
+    With θ (kern.theta) a block is skipped when its bound plus a query's
+    rest bound is below that query's θ for every query using the term,
+    and a posting is dropped for a query when its score plus the rest
+    bound is below θ — per doc-range bucket with sketches. Without θ
+    block_max is not read."""
+    tomb = None if kern.tomb is None else kern.tomb.value
+    scope = None if kern.scope is None else kern.scope.value
+    avgdl, k1, b = kern.avgdl, kern.k1, kern.b
+    qids_out, docs_out, scores_out, n_out = [], [], [], 0
+
+    def flush():
+        return pd.DataFrame(
+            {
+                "query_id": np.concatenate(qids_out),
+                "doc_id": np.concatenate(docs_out),
+                "partial": np.concatenate(scores_out),
+            }
+        )
+
+    for pdf in pdf_iter:
+        bms = itertools.repeat(None) if kern.theta is None else pdf["block_max"]
+        for term, blob, bm in zip(pdf["term"], pdf["blob"], bms):
+            qarr, t_idf = kern.qarr[term], kern.idf[term]
+            blocks = None
+            if kern.theta is not None:
+                ru, th = kern.rest[term], kern.theta[term]
+                if bm is not None and len(bm) > 0:
+                    # union block skip: keep a block iff it survives for at
+                    # least one query using this term — one broadcasted
+                    # comparison over the (qid, block) grid
+                    bmax = np.asarray(
+                        [(e["max_tf"], e["min_dl"]) for e in bm], dtype=np.float64
+                    )
+                    blk_ub = t_idf * _tf_norm(bmax[:, 0], bmax[:, 1], avgdl, k1, b)
+                    blocks = ((blk_ub[None, :] + ru[:, None]) >= th[:, None]).any(axis=0)
+            doc_ids, tfs, dls = live_postings(blob, tomb, scope, blocks)
+            if doc_ids.size == 0:
+                continue
+            scores = t_idf * _tf_norm(
+                tfs.astype(np.float64), dls.astype(np.float64), avgdl, k1, b
+            )
+            if kern.sketch is not None:
+                qt_mat, term_sk, term_qrows, span = kern.sketch
+                n_buckets = qt_mat.shape[1]
+                buck = np.minimum(
+                    (doc_ids.astype(np.float64) / span * n_buckets).astype(np.int64),
+                    n_buckets - 1,
+                )
+                sk_t, qrows = term_sk[term], term_qrows[term]
+            # Vectorized per-query masking: scores + rest[q] >= θ_q as one
+            # broadcasted comparison per qid-chunk (θ=0 rows pass: idf ≥ 0
+            # so scores ≥ 0). Chunked so the (qids × postings) temp stays
+            # ≤ ~32 MB at 1,000-query batches. With sketches the rest bound
+            # is per (query, doc-range bucket): (qt_mat[row] − sk_t)[bucket]
+            # — strictly ≤ the scalar rest, so more postings die before
+            # the shuffle.
+            step = max(1, _QID_CHUNK_ELEMS // doc_ids.size)
+            for lo in range(0, qarr.size, step):
+                if kern.theta is None:
+                    m = np.ones((qarr[lo : lo + step].size, doc_ids.size), dtype=bool)
+                elif kern.sketch is not None:
+                    rest_chunk = qt_mat[qrows[lo : lo + step]] - sk_t[None, :]
+                    m = (scores[None, :] + rest_chunk[:, buck]) >= th[lo : lo + step, None]
+                else:
+                    m = (scores[None, :] + ru[lo : lo + step, None]) >= th[lo : lo + step, None]
+                qi, pi = np.nonzero(m)
+                if qi.size:
+                    qids_out.append(qarr[lo : lo + step][qi])
+                    docs_out.append(doc_ids[pi])
+                    scores_out.append(scores[pi])
+                    n_out += qi.size
+                if n_out >= kern.out_rows:
+                    yield flush()
+                    qids_out, docs_out, scores_out, n_out = [], [], [], 0
+    if docs_out:
+        yield flush()
+
+
 def _bm25_scored(
     spark: SparkSession,
     index_dir: str,
@@ -743,10 +868,10 @@ def _bm25_scored(
     prune=False. None when no query term is indexed.
 
     One partition+term-pruned segment scan for the union of the batch's
-    terms; a mapInPandas kernel decodes each slice once, masks tombstones
-    and the scope, scores exact BM25 partials and emits (query_id,
-    doc_id, partial) for every query using the term; groupBy(query_id,
-    doc_id).sum folds them.
+    terms; the BM25 kernel (_score_slices, in mapInPandas) decodes each
+    slice once, masks tombstones and the scope, scores exact BM25
+    partials and emits (query_id, doc_id, partial) for every query using
+    the term; groupBy(query_id, doc_id).sum folds them.
 
     With prune=True (and no over-cap tombstones or DataFrame scope — a θ
     over a superset of the live/in-scope docs is not a lower bound) the
@@ -780,18 +905,13 @@ def _bm25_scored(
         if probed is None:
             return None
     stats, info, (tomb_bc, tomb_over) = probed
-    n, avgdl = float(stats["n_docs"]), float(stats["avgdl"])
-    matched = sorted(info)
     scope_bc = scope_over = None
     if isinstance(scope, DataFrame):
         scope_over = scope.select("doc_id")
     elif scope is not None:
         scope_bc = spark.sparkContext.broadcast(scope)
-    idf = {t: _idf(float(info[t]["df"]), n) for t in matched}
-    term_queries = {
-        t: [qid for qid, ts in queries.items() if t in set(ts)] for t in matched
-    }
-    global_ub = {t: idf[t] * (k1 + 1.0) for t in matched}
+    kern = _kern(queries, info, stats, k1, b, tomb_bc, scope_bc)
+    matched, idf, avgdl = sorted(info), kern.idf, kern.avgdl
     total_df = sum(info[t]["df"] for t in matched)
     thetas: dict[int, float] = {}
     if prune and tomb_over is None and scope_over is None and total_df > 50 * k:
@@ -799,168 +919,65 @@ def _bm25_scored(
             spark, index_dir, queries, info, idf, k, k1, b, avgdl, stats,
             tomb_bc=tomb_bc, scope_bc=scope_bc,
         )
-
-    # doc-range sketches (see docstring): one metadata job for the union
-    if sketch is None:
-        sketch = total_df >= SKETCH_MIN_DF
-    term_sk: dict[str, np.ndarray] | None = None
-    qtot: dict[int, np.ndarray] | None = None
-    span = float(int(stats["max_doc_id"]) + 1)
-    if thetas and sketch and len(matched) > 1:
-        sketches = _term_impact_sketch(
-            spark, index_dir, info, idf, avgdl, k1, b, int(stats["max_doc_id"])
-        )
-        global_ub = {t: min(global_ub[t], sketches[t][0]) for t in matched}
-        term_sk = {t: sketches[t][1] for t in matched}
-        qtot = {
-            qid: np.sum(
-                [sketches[t][1] for t in ts if t in info], axis=0
+    if thetas:
+        term_queries = {t: [int(q) for q in kern.qarr[t]] for t in matched}
+        global_ub = {t: idf[t] * (k1 + 1.0) for t in matched}
+        # doc-range sketches (see docstring): one metadata job for the union
+        if sketch is None:
+            sketch = total_df >= SKETCH_MIN_DF
+        sk = None
+        if sketch and len(matched) > 1:
+            sketches = _term_impact_sketch(
+                spark, index_dir, info, idf, avgdl, k1, b, int(stats["max_doc_id"])
             )
-            for qid, ts in queries.items()
-            if any(t in info for t in ts)
-        }
-
-    # rest_ub[(t, qid)]: max possible contribution of qid's OTHER terms
-    # (computed AFTER the sketch tightening of global_ub)
-    rest_ub = {
-        (t, qid): sum(
-            global_ub[t2] for t2 in set(queries[qid]) if t2 in info and t2 != t
+            global_ub = {t: min(global_ub[t], sketches[t][0]) for t in matched}
+            # ONE (n_queries × g) bucket-total matrix + per-term (g,)
+            # sketches + per-term row indices into the matrix — O((Q+T)·g)
+            # bytes instead of O(Σ_t n_q_t · g) for per-(term, query) rest
+            # matrices; the kernel rebuilds rest-per-bucket as
+            # qt_mat[row] − sk[term]
+            qtot = {
+                qid: np.sum([sketches[t][1] for t in ts if t in info], axis=0)
+                for qid, ts in queries.items()
+                if any(t in info for t in ts)
+            }
+            qrow = {qid: i for i, qid in enumerate(sorted(qtot))}
+            sk = (
+                np.stack([qtot[qid] for qid in sorted(qtot)]),
+                {t: sketches[t][1] for t in matched},
+                {t: np.asarray([qrow[q] for q in term_queries[t]], dtype=np.int32) for t in matched},
+                float(int(stats["max_doc_id"]) + 1),
+            )
+        # rest[t][i]: the most the OTHER terms of query qarr[t][i] can add
+        # (after the sketch tightening of global_ub); theta[t][i]: its θ
+        kern = dataclasses.replace(
+            kern,
+            rest={
+                t: np.asarray(
+                    [
+                        sum(global_ub[t2] for t2 in set(queries[q]) if t2 in info and t2 != t)
+                        for q in term_queries[t]
+                    ],
+                    dtype=np.float64,
+                )
+                for t in matched
+            },
+            theta={
+                t: np.asarray([thetas.get(q, 0.0) for q in term_queries[t]], dtype=np.float64)
+                for t in matched
+            },
+            sketch=sk,
         )
-        for t in matched
-        for qid in term_queries[t]
-    }
 
     pids = sorted({info[t]["partition_id"] for t in matched})
     seg = _segments(spark, index_dir).filter(
         F.col("partition_id").isin(pids) & F.col("term").isin(matched)
     )
     seg = _spread_slices(seg, spark, total_df)
-
-    # Per-term dense arrays for the executor kernel: qids using the term,
-    # their rest-of-query upper bounds and θ thresholds — computed once on
-    # the driver so the hot loop does zero dict lookups per posting.
-    term_qarr = {t: np.asarray(term_queries[t], dtype=np.int32) for t in matched}
-    term_ru = {
-        t: np.asarray([rest_ub[(t, q)] for q in term_queries[t]], dtype=np.float64)
-        for t in matched
-    }
-    term_th = {
-        t: np.asarray(
-            [thetas.get(q, 0.0) for q in term_queries[t]], dtype=np.float64
-        )
-        for t in matched
-    }
-    # Sketch shipping: ONE (n_queries × g) bucket-total matrix + per-term
-    # (g,) sketches + per-term row indices into the matrix — O((Q+T)·g)
-    # bytes instead of O(Σ_t n_q_t · g) for per-(term,query) rest matrices.
-    # The kernel reconstructs rest-per-bucket as qt_mat[row] − sk[term].
-    if qtot is not None:
-        _qrow = {qid: i for i, qid in enumerate(sorted(qtot))}
-        qt_mat = np.stack([qtot[qid] for qid in sorted(qtot)])
-        term_qrows = {
-            t: np.asarray([_qrow[q] for q in term_queries[t]], dtype=np.int32)
-            for t in matched
-        }
-        n_buckets = _SKETCH_BUCKETS
-    else:
-        qt_mat = None
-        term_qrows = None
-        n_buckets = 0
-
-    def score_slices(pdf_iter):
-        from .compress import decode_postings
-
-        qids_out, docs_out, scores_out, n_out = [], [], [], 0
-
-        def flush():
-            return pd.DataFrame(
-                {
-                    "query_id": np.concatenate(qids_out),
-                    "doc_id": np.concatenate(docs_out),
-                    "partial": np.concatenate(scores_out),
-                }
-            )
-
-        for pdf in pdf_iter:
-            for term, blob, bm in zip(pdf["term"], pdf["blob"], pdf["block_max"]):
-                qarr, ru, th = term_qarr[term], term_ru[term], term_th[term]
-                doc_ids, tfs, dls = decode_postings(bytes(blob))
-                if doc_ids.size == 0:
-                    continue
-                if thetas and bm is not None and len(bm) > 0:
-                    # union block skip: keep a block iff it survives for at
-                    # least one query using this term. One broadcasted
-                    # comparison over the (qid, block) grid — same FP
-                    # expression as the scalar loop it replaced.
-                    bmax = np.asarray(
-                        [(e["max_tf"], e["min_dl"]) for e in bm], dtype=np.float64
-                    )
-                    blk_ub = idf[term] * _tf_norm(bmax[:, 0], bmax[:, 1], avgdl, k1, b)
-                    keep_blk = (
-                        (blk_ub[None, :] + ru[:, None]) >= th[:, None]
-                    ).any(axis=0)
-                    if not keep_blk.all():
-                        blk_idx = np.arange(doc_ids.size) // BLOCK_SIZE
-                        m = keep_blk[blk_idx]
-                        doc_ids, tfs, dls = doc_ids[m], tfs[m], dls[m]
-                        if doc_ids.size == 0:
-                            continue
-                # live-docs and scope masks after block skip (block indices
-                # are positions in the original array), before scoring
-                if tomb_bc is not None:
-                    m = live_mask(doc_ids, tomb_bc.value)
-                    if not m.all():
-                        doc_ids, tfs, dls = doc_ids[m], tfs[m], dls[m]
-                if scope_bc is not None:
-                    m = member_mask(doc_ids, scope_bc.value)
-                    if not m.all():
-                        doc_ids, tfs, dls = doc_ids[m], tfs[m], dls[m]
-                if doc_ids.size == 0:
-                    continue
-                scores = idf[term] * _tf_norm(
-                    tfs.astype(np.float64), dls.astype(np.float64), avgdl, k1, b
-                )
-                if qt_mat is not None:
-                    buck = np.minimum(
-                        (doc_ids.astype(np.float64) / span * n_buckets).astype(
-                            np.int64
-                        ),
-                        n_buckets - 1,
-                    )
-                    sk_t = term_sk[term]
-                    qrows = term_qrows[term]
-                # Vectorized per-query masking: scores + rest_ub[q] >= θ_q as
-                # one broadcasted comparison per qid-chunk instead of a
-                # Python loop over qids (θ=0 rows pass automatically —
-                # idf ≥ 0 so scores ≥ 0). Chunked so the (qids × postings)
-                # temp stays ≤ ~32 MB at 1,000-query batches. With sketches
-                # the rest bound is per (query, doc-range bucket): rest =
-                # (qt_mat[row] − sk_t)[bucket(doc)] — strictly ≤ the scalar
-                # rest_ub, so strictly more postings die before the shuffle.
-                step = max(1, _QID_CHUNK_ELEMS // doc_ids.size)
-                for lo in range(0, qarr.size, step):
-                    if qt_mat is not None:
-                        rest_chunk = qt_mat[qrows[lo : lo + step]] - sk_t[None, :]
-                        m = (
-                            scores[None, :] + rest_chunk[:, buck]
-                        ) >= th[lo : lo + step, None]
-                    else:
-                        m = (
-                            scores[None, :] + ru[lo : lo + step, None]
-                        ) >= th[lo : lo + step, None]
-                    qi, pi = np.nonzero(m)
-                    if qi.size:
-                        qids_out.append(qarr[lo : lo + step][qi])
-                        docs_out.append(doc_ids[pi])
-                        scores_out.append(scores[pi])
-                        n_out += qi.size
-                    if n_out >= _OUT_CHUNK_ROWS:
-                        yield flush()
-                        qids_out, docs_out, scores_out, n_out = [], [], [], 0
-        if docs_out:
-            yield flush()
-
-    partials = seg.mapInPandas(score_slices, schema="query_id int, doc_id long, partial double")
+    partials = seg.mapInPandas(
+        functools.partial(_score_slices, kern=kern),
+        schema="query_id int, doc_id long, partial double",
+    )
     if tomb_over is not None:  # over-cap tombstones: distributed anti-join
         partials = partials.join(tomb_over, "doc_id", "left_anti")
     if scope_over is not None:  # over-cap scope: distributed semi-join
@@ -1024,63 +1041,96 @@ def _topk_driver(
     spark: SparkSession,
     index_dir: str,
     info: dict[str, dict],
-    idf: dict[str, float],
+    kern: _Kern,
     k: int,
-    k1: float,
-    b: float,
-    n: float,
-    avgdl: float,
-    tomb_bc=None,
-    scope_bc=None,
     after: tuple[float, int] | None = None,
 ) -> DataFrame:
-    """Scatter-gather execution for small candidate sets: read the pruned
-    blobs on the driver (_read_partitions), decode/score/rank with the SAME
-    kernels as the distributed path (bit-identical output by construction)
-    and return the top-k as a LocalRelation — no Spark job at all."""
+    """The driver placement of the BM25 kernel, for small candidate sets:
+    read the pruned blobs on the driver (_read_partitions), run
+    _score_slices in-process (kern without θ), fold the partials per doc
+    and rank (_topk_frame) — a LocalRelation, no Spark job at all."""
     matched = sorted(info)
     pids = sorted({info[t]["partition_id"] for t in matched})
     rows = _read_partitions(index_dir, "segments", pids, matched, _BLOB_SCHEMA)
-    from .compress import decode_postings
-
-    docs_all, scores_all = [], []
-    for term, blob in zip(rows.column("term").to_pylist(), rows.column("blob").to_pylist()):
-        doc_ids, tfs, dls = decode_postings(blob)
-        if tomb_bc is not None and doc_ids.size:
-            mask = live_mask(doc_ids, tomb_bc.value)
-            doc_ids, tfs, dls = doc_ids[mask], tfs[mask], dls[mask]
-        if scope_bc is not None and doc_ids.size:
-            mask = member_mask(doc_ids, scope_bc.value)
-            doc_ids, tfs, dls = doc_ids[mask], tfs[mask], dls[mask]
-        if doc_ids.size == 0:
-            continue
-        docs_all.append(doc_ids)
-        scores_all.append(
-            idf[term]
-            * _tf_norm(tfs.astype(np.float64), dls.astype(np.float64), avgdl, k1, b)
-        )
-    if not docs_all:
+    parts = list(_score_slices([rows.to_pandas()], kern))
+    if not parts:
         return _local_frame(spark, [], _TOPK_SCHEMA)
-    docs = np.concatenate(docs_all)
-    scores = np.concatenate(scores_all)
+    docs = np.concatenate([p["doc_id"].to_numpy() for p in parts])
     uniq, inv = np.unique(docs, return_inverse=True)
     totals = np.zeros(uniq.size, dtype=np.float64)
-    np.add.at(totals, inv, scores)
-    totals = np.round(totals, SCORE_ROUND_DECIMALS)
+    np.add.at(totals, inv, np.concatenate([p["partial"].to_numpy() for p in parts]))
+    return _topk_frame(spark, uniq, totals, k, after)
+
+
+def _topk_frame(
+    spark: SparkSession,
+    docs: np.ndarray,
+    raw: np.ndarray,
+    k: int,
+    after: tuple[float, int] | None = None,
+) -> DataFrame:
+    """(rank, doc_id, score) of the k best driver-side (doc, unrounded
+    score) pairs as a LocalRelation: scores rounded HALF_UP as F.round
+    rounds them, (score desc, doc_id asc) order — the same tiebreak as the
+    Window path; `after` keeps only docs strictly after that cursor."""
+    docs, scores = _halfup_topk(docs, raw, k, after)
+    out = [(i + 1, int(d), float(s)) for i, (d, s) in enumerate(zip(docs, scores))]
+    return _local_frame(spark, out, _TOPK_SCHEMA)
+
+
+_QUANTUM = 10.0 ** (-SCORE_ROUND_DECIMALS)
+
+
+def _halfup(vals: np.ndarray) -> np.ndarray:
+    """vals rounded to SCORE_ROUND_DECIMALS the way Spark's F.round rounds
+    a double: HALF_UP on its decimal repr. np.round rounds the binary
+    value half-to-even (np.round(2.0000025, 6) = 2.000002, F.round gives
+    2.000003). One Decimal per DISTINCT value: top-k margins are
+    tie-heavy."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    quant = Decimal(1).scaleb(-SCORE_ROUND_DECIMALS)
+    uniq, inv = np.unique(vals, return_inverse=True)
+    corr = np.array(
+        [float(Decimal(repr(float(v))).quantize(quant, ROUND_HALF_UP)) for v in uniq],
+        dtype=np.float64,
+    )
+    return corr[inv]
+
+
+def _halfup_topk(
+    docs: np.ndarray,
+    raw: np.ndarray,
+    k: int,
+    after: tuple[float, int] | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """(doc ids, HALF_UP scores) of the k best of (docs, unrounded raw) in
+    (score desc, doc_id asc) order, strictly after the `after` = (score,
+    doc_id) cursor when given.
+
+    Decimal rounding runs on the O(k) margin candidates only: np.round
+    and HALF_UP differ by at most one quantum, so a doc whose np.round
+    score is more than 1.5 quanta below the k-th best np.round score is
+    below k docs under HALF_UP too; likewise only docs within 1.5 quanta
+    of the cursor score need their HALF_UP score to apply the cursor."""
+    docs = np.asarray(docs)
+    raw = np.asarray(raw, dtype=np.float64)
+    margin = 1.5 * _QUANTUM
+    prelim = np.round(raw, SCORE_ROUND_DECIMALS)
     if after is not None:
         s_a, d_a = float(after[0]), int(after[1])
-        keep = (totals < s_a) | ((totals == s_a) & (uniq > d_a))
-        uniq, totals = uniq[keep], totals[keep]
-    return _topk_frame(spark, uniq, totals, k)
-
-
-def _topk_frame(spark: SparkSession, docs: np.ndarray, scores: np.ndarray, k: int) -> DataFrame:
-    """(rank, doc_id, score) of the k best driver-side (doc, rounded score)
-    pairs as a LocalRelation, in (score desc, doc_id asc) order — the
-    same tiebreak as the Window path."""
-    order = np.lexsort((docs, -scores))[: min(k, docs.size)]
-    out = [(i + 1, int(docs[j]), float(scores[j])) for i, j in enumerate(order)]
-    return _local_frame(spark, out, _TOPK_SCHEMA)
+        keep = prelim < s_a
+        band = np.flatnonzero(np.abs(prelim - s_a) <= margin)
+        hu = _halfup(raw[band])
+        keep[band] = (hu < s_a) | ((hu == s_a) & (docs[band] > d_a))
+        docs, raw, prelim = docs[keep], raw[keep], prelim[keep]
+    if 0 < k < docs.size:
+        kth = np.partition(prelim, docs.size - k)[docs.size - k]
+        cand = np.flatnonzero(prelim >= kth - margin)
+        docs, raw = docs[cand], raw[cand]
+    scores = _halfup(raw)
+    order = np.lexsort((docs, -scores))[: int(k)]
+    return docs[order], scores[order]
 
 
 # ---------------------------------------------------------------------------
@@ -1420,7 +1470,6 @@ def synonym_topk(
     TakeOrderedAndProject. Tombstones mask kernel-side (broadcast) or via
     anti-join (over-cap), like every other executor."""
     from .bm25 import idf_expr, tf_norm_expr
-    from .compress import decode_postings
 
     stats = load_stats(index_dir)
     n_docs, avgdl = float(stats["n_docs"]), float(stats["avgdl"])
@@ -1442,14 +1491,11 @@ def synonym_topk(
     seg = _spread_slices(seg, spark, sum(int(info[t]["df"]) for t in present))
 
     def emit(pdf_iter):
+        tomb = None if tomb_bc is None else tomb_bc.value
         for pdf in pdf_iter:
             od, ot, ol = [], [], []
             for blob in pdf["blob"]:
-                doc_ids, tfs, dls = decode_postings(bytes(blob))
-                if tomb_bc is not None and doc_ids.size:
-                    mliv = live_mask(doc_ids, tomb_bc.value)
-                    if not mliv.all():
-                        doc_ids, tfs, dls = doc_ids[mliv], tfs[mliv], dls[mliv]
+                doc_ids, tfs, dls = live_postings(blob, tomb)
                 if doc_ids.size == 0:
                     continue
                 od.append(doc_ids)
@@ -1533,7 +1579,6 @@ def topk_segments_conjunctive(
     k: int = DEFAULT_TOP_K,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    n_partitions: int | None = None,
     rare_filter: bool = True,
 ) -> DataFrame:
     """MUST semantics (Lucene BooleanQuery AND) over the segment store:
@@ -1541,103 +1586,22 @@ def topk_segments_conjunctive(
     score is the usual BM25 sum (result-identical to bm25.topk_conjunctive
     — tested).
 
-    Why no θ/block-max pruning here: θ lower-bounds the DISJUNCTIVE k-th
-    best, but the conjunctive k-th best can sit arbitrarily below it (the
-    top disjunctive docs usually miss a term), so score-based skipping is
-    unsound for AND. The sound conjunctive prune is CANDIDATE-based:
-    a result must appear in the rarest term's posting list, so when
-    df(rarest) ≤ DRIVER_TOPK_MAX_DF we decode that one list (read on the
-    driver, _read_partitions), broadcast its sorted doc_ids, and the scan
-    kernel drops every other term's postings outside it via searchsorted —
-    the shuffle then carries O(n_terms · df_rarest) rows instead of Σdf.
-    Each (term, doc) pair appears exactly once across a term's disjoint
-    doc-range slices, so the per-doc row count equals the number of
-    matched terms; count == n_terms implements the AND.
+    A Boolean query with one MUST term clause per distinct term
+    (boolean.boolean_topk, which caps a query at 1,024 scoring clauses
+    and raises ValueError above it). Its rare-MUST candidate mask is the
+    sound conjunctive prune — θ/block-max pruning is not: θ lower-bounds
+    the DISJUNCTIVE k-th best, and the conjunctive k-th best can sit
+    arbitrarily below it. A term absent from the dictionary returns empty
+    with no scan job; so does an empty term list."""
+    from .boolean import MUST, Clause, boolean_topk
 
-    A query term absent from the dictionary returns empty immediately
-    (zero scan jobs) — no doc can match all terms."""
-    from .compress import decode_postings
-
-    stats = load_stats(index_dir)
-    if n_partitions is None:
-        n_partitions = int(stats.get("n_partitions", INDEX_PARTITIONS))
-    n, avgdl = float(stats["n_docs"]), float(stats["avgdl"])
     qterms = sorted(set(terms))
-    empty = "rank int, doc_id long, score double"
     if not qterms:
-        return _local_frame(spark, [], empty)
-    info = probe_dictionary(spark, index_dir, qterms, n_partitions)
-    if len(info) < len(qterms):  # some term matches nothing anywhere
-        return _local_frame(spark, [], empty)
-    tomb_bc, tomb_over = _tombstones(spark, index_dir)
-    idf = {t: _idf(float(info[t]["df"]), n) for t in qterms}
-    n_terms = len(qterms)
-
-    cand_bc = None
-    if rare_filter and n_terms > 1:
-        rarest = min(qterms, key=lambda t: int(info[t]["df"]))
-        if int(info[rarest]["df"]) <= DRIVER_TOPK_MAX_DF:
-            blobs = _read_partitions(
-                index_dir, "segments", [info[rarest]["partition_id"]], [rarest], _BLOB_SCHEMA
-            ).column("blob")
-            ids = [decode_postings(blob)[0] for blob in blobs.to_pylist()]
-            cand_bc = spark.sparkContext.broadcast(
-                np.sort(np.concatenate(ids)) if ids else np.empty(0, np.int64)
-            )
-
-    pids = sorted({info[t]["partition_id"] for t in qterms})
-    seg = _segments(spark, index_dir).filter(
-        F.col("partition_id").isin(pids) & F.col("term").isin(qterms)
+        return _local_frame(spark, [], _TOPK_SCHEMA)
+    return boolean_topk(
+        spark, index_dir, [Clause(MUST, "term", (t,)) for t in qterms],
+        k=k, k1=k1, b=b, rare_filter=rare_filter,
     )
-    seg = _spread_slices(seg, spark, sum(int(info[t]["df"]) for t in qterms))
-    idf_b = dict(idf)
-
-    def score_slices(pdf_iter):
-        cand = cand_bc.value if cand_bc is not None else None
-        for pdf in pdf_iter:
-            out_docs, out_scores = [], []
-            for term, blob in zip(pdf["term"], pdf["blob"]):
-                doc_ids, tfs, dls = decode_postings(bytes(blob))
-                if tomb_bc is not None and doc_ids.size:
-                    # live-docs first: a deleted doc matching every term
-                    # must not survive the count filter
-                    m = live_mask(doc_ids, tomb_bc.value)
-                    doc_ids, tfs, dls = doc_ids[m], tfs[m], dls[m]
-                if cand is not None and doc_ids.size:
-                    if cand.size:
-                        pos = np.minimum(np.searchsorted(cand, doc_ids), cand.size - 1)
-                        mask = cand[pos] == doc_ids
-                    else:
-                        mask = np.zeros(doc_ids.size, bool)
-                    doc_ids, tfs, dls = doc_ids[mask], tfs[mask], dls[mask]
-                if doc_ids.size == 0:
-                    continue
-                out_docs.append(doc_ids)
-                out_scores.append(
-                    idf_b[term]
-                    * _tf_norm(tfs.astype(np.float64), dls.astype(np.float64), avgdl, k1, b)
-                )
-            if out_docs:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.concatenate(out_docs),
-                        "partial": np.concatenate(out_scores),
-                    }
-                )
-
-    partials = seg.mapInPandas(score_slices, schema="doc_id long, partial double")
-    if tomb_over is not None:  # over-cap tombstones: distributed anti-join
-        partials = partials.join(tomb_over, "doc_id", "left_anti")
-    scored = (
-        partials.groupBy("doc_id")
-        .agg(
-            F.round(F.sum("partial"), SCORE_ROUND_DECIMALS).alias("score"),
-            F.count(F.lit(1)).alias("n_matched"),
-        )
-        .filter(F.col("n_matched") == F.lit(n_terms))
-        .select("doc_id", "score")
-    )
-    return _rank_tail(scored, k)
 
 
 def explain_topk(
@@ -1686,19 +1650,16 @@ def explain_topk(
     )
 
     def explain_slices(pdf_iter):
-        from .compress import decode_postings
-
         for pdf in pdf_iter:
             t_out, d_out, tf_out, dl_out = [], [], [], []
             for term, blob in zip(pdf["term"], pdf["blob"]):
-                doc_ids, tfs, dls = decode_postings(bytes(blob))
-                mask = member_mask(doc_ids, docs_bc.value)
-                if not mask.any():
+                doc_ids, tfs, dls = live_postings(blob, scope=docs_bc.value)
+                if doc_ids.size == 0:
                     continue
-                t_out.append(np.full(int(mask.sum()), term, dtype=object))
-                d_out.append(doc_ids[mask])
-                tf_out.append(tfs[mask])
-                dl_out.append(dls[mask])
+                t_out.append(np.full(doc_ids.size, term, dtype=object))
+                d_out.append(doc_ids)
+                tf_out.append(tfs)
+                dl_out.append(dls)
             if d_out:
                 yield pd.DataFrame(
                     {
@@ -1764,14 +1725,11 @@ def _matched_docs(
     seg = _spread_slices(seg, spark, sum(int(info[t]["df"]) for t in matched))
 
     def match_slices(pdf_iter):
-        from .compress import decode_postings
-
+        tomb = None if tomb_bc is None else tomb_bc.value
         for pdf in pdf_iter:
             out = []
             for blob in pdf["blob"]:
-                doc_ids, _tfs, _dls = decode_postings(bytes(blob))
-                if tomb_bc is not None and doc_ids.size:
-                    doc_ids = doc_ids[live_mask(doc_ids, tomb_bc.value)]
+                doc_ids = live_postings(blob, tomb)[0]
                 if doc_ids.size:
                     out.append(doc_ids)
             if out:
@@ -1854,6 +1812,91 @@ def facet_stats(
     )
 
 
+def _foreground_overlap(
+    spark: SparkSession,
+    index_dir: str,
+    terms: list[str],
+    n_partitions: int | None = None,
+) -> tuple[DataFrame, int] | None:
+    """((term, fg, df) for every vocabulary term but the query terms,
+    n_fg) — the one foreground-overlap kernel of significant_terms and
+    rare_terms. fg = |live postings(term) ∩ match set|, df = |live
+    postings(term)|, n_fg = |match set| (_matched_docs' live docs). None
+    when nothing matches.
+
+    The plan is the honest one, the same as ES over doc_values: candidate
+    terms are unknown up front, so the segments scan cannot
+    partition-prune. The match set is collected once, capped at
+    TOMBSTONE_BROADCAST_MAX + 1 ids (one job). Under the cap it is
+    broadcast as a sorted array and the scan counts each blob's overlap
+    kernel-side (a sorted membership test, no per-doc rows): one (term,
+    fg, df) row per slice, a vocabulary-scale exchange. Above the cap the
+    live (term, doc_id) postings join the distinct match set distributed
+    (a left join whose match flag counts fg, so df comes from the same
+    pass), as deletes.tombstone_state falls back for over-cap tombstones:
+    nothing on the driver grows with the corpus.
+
+    Under-cap tombstones mask df kernel-side; over-cap deletes are
+    already out of the match set, and their residual effect on df only
+    deflates lift until the next compaction purges them (conservative)."""
+    docs = _matched_docs(spark, index_dir, terms, n_partitions)
+    if docs is None:
+        return None
+    fg = docs.distinct()
+    head = fg.limit(TOMBSTONE_BROADCAST_MAX + 1).toPandas()["doc_id"].to_numpy(np.int64)
+    if head.size == 0:
+        return None
+    tomb_bc, _tomb_over = _tombstones(spark, index_dir)
+    seg = _segments(spark, index_dir).select("term", "blob")
+    if head.size <= TOMBSTONE_BROADCAST_MAX:
+        n_fg = int(head.size)
+        fg_bc = spark.sparkContext.broadcast(np.sort(head))
+
+        def overlap(pdf_iter):
+            tomb = None if tomb_bc is None else tomb_bc.value
+            for pdf in pdf_iter:
+                terms_out, fg_out, df_out = [], [], []
+                for term, blob in zip(pdf["term"], pdf["blob"]):
+                    doc_ids = live_postings(blob, tomb)[0]
+                    if doc_ids.size:
+                        terms_out.append(term)
+                        fg_out.append(int(np.count_nonzero(member_mask(doc_ids, fg_bc.value))))
+                        df_out.append(int(doc_ids.size))
+                if terms_out:
+                    yield pd.DataFrame({"term": terms_out, "fg": fg_out, "df": df_out})
+
+        per_term = (
+            seg.mapInPandas(overlap, schema="term string, fg long, df long")
+            .groupBy("term")
+            .agg(F.sum("fg").alias("fg"), F.sum("df").alias("df"))
+        )
+    else:
+        n_fg = int(fg.count())
+
+        def postings(pdf_iter):
+            tomb = None if tomb_bc is None else tomb_bc.value
+            for pdf in pdf_iter:
+                t_out, d_out = [], []
+                for term, blob in zip(pdf["term"], pdf["blob"]):
+                    doc_ids = live_postings(blob, tomb)[0]
+                    if doc_ids.size:
+                        t_out.append(np.full(doc_ids.size, term, dtype=object))
+                        d_out.append(doc_ids)
+                if d_out:
+                    yield pd.DataFrame(
+                        {"term": np.concatenate(t_out), "doc_id": np.concatenate(d_out)}
+                    )
+
+        per_term = (
+            seg.mapInPandas(postings, schema="term string, doc_id long")
+            .join(fg.withColumn("in_fg", F.lit(1)), "doc_id", "left")
+            .groupBy("term")
+            .agg(F.count("in_fg").alias("fg"), F.count(F.lit(1)).alias("df"))
+        )
+    qset = sorted({t.lower() for t in terms})
+    return per_term.filter(~F.col("term").isin(qset)), n_fg
+
+
 def significant_terms(
     spark: SparkSession,
     index_dir: str,
@@ -1875,77 +1918,18 @@ def significant_terms(
     (rank, term, fg, df, score), score rounded to 6, ties broken by
     (fg desc, term asc).
 
-    Plan shape — the honest one, same as ES over doc_values: the match
-    set is collected as a BROADCAST numpy membership array (match sets
-    are query-sized, not corpus-sized), then ONE full segments scan
-    counts each term's overlap kernel-side (sorted-array intersection per
-    blob, no per-doc rows materialized) and a vocabulary-sized agg ranks.
-    Unlike every search executor this CANNOT partition-prune — candidate
-    terms are unknown up front, which is intrinsic to the aggregation —
-    but the scan emits one (term, fg) row per slice, so the exchange is
-    vocabulary-scale, not corpus-scale."""
-    stats = load_stats(index_dir)
-    if n_partitions is None:
-        n_partitions = int(stats.get("n_partitions", INDEX_PARTITIONS))
-    n_docs = float(stats["n_docs"])
-    docs = _matched_docs(spark, index_dir, terms, n_partitions)
+    Plan shape: the foreground-overlap kernel shared with rare_terms
+    (_foreground_overlap — one full segments scan, per-term (fg, df)
+    over live docs), then a vocabulary-sized filter + rank."""
     out_schema = "rank int, term string, fg long, df long, score double"
-    if docs is None:
+    overlap = _foreground_overlap(spark, index_dir, terms, n_partitions)
+    if overlap is None:
         return _local_frame(spark, [], out_schema)
-    # Arrow-collect the match set as one sorted int64 array. A match set
-    # is query-sized; at truly corpus-sized match sets the swap point is
-    # a compressed bitmap broadcast (roaring) — the kernel below only
-    # needs membership tests against a sorted structure.
-    fg_ids = np.unique(
-        docs.distinct().toPandas()["doc_id"].to_numpy(dtype=np.int64)
-    )
-    n_fg = int(fg_ids.size)
-    if n_fg == 0:
-        return _local_frame(spark, [], out_schema)
-    fg_bc = spark.sparkContext.broadcast(fg_ids)
-    # under-cap tombstones mask the background dfs kernel-side; over-cap
-    # deletes were already excluded from the fg set by _matched_docs, and
-    # their residual effect on background df only DEFLATES lift scores
-    # until the next compaction purges them (documented, conservative)
-    tomb_bc, _tomb_over_df = _tombstones(spark, index_dir)
-    seg = _segments(spark, index_dir).select(
-        "term", "blob"
-    )
-
-    def overlap(pdf_iter):
-        from .compress import decode_postings
-
-        for pdf in pdf_iter:
-            terms_out, fg_out, df_out = [], [], []
-            fg = fg_bc.value
-            for term, blob in zip(pdf["term"], pdf["blob"]):
-                doc_ids, _tfs, _dls = decode_postings(bytes(blob))
-                if tomb_bc is not None and doc_ids.size:
-                    doc_ids = doc_ids[live_mask(doc_ids, tomb_bc.value)]
-                if not doc_ids.size:
-                    continue
-                inter = np.searchsorted(fg, doc_ids)
-                inter = np.count_nonzero(
-                    (inter < fg.size)
-                    & (fg[np.minimum(inter, fg.size - 1)] == doc_ids)
-                )
-                terms_out.append(term)
-                fg_out.append(int(inter))
-                df_out.append(int(doc_ids.size))
-            if terms_out:
-                yield pd.DataFrame(
-                    {"term": terms_out, "fg": fg_out, "df": df_out}
-                )
-
-    per_slice = seg.mapInPandas(overlap, schema="term string, fg long, df long")
-    qset = sorted({t.lower() for t in terms})
-    w = Window.orderBy(
-        F.desc("score"), F.desc("fg"), F.asc("term")
-    )
+    per_term, n_fg = overlap
+    n_docs = float(load_stats(index_dir)["n_docs"])
+    w = Window.orderBy(F.desc("score"), F.desc("fg"), F.asc("term"))
     return (
-        per_slice.groupBy("term")
-        .agg(F.sum("fg").alias("fg"), F.sum("df").alias("df"))
-        .filter((F.col("fg") >= int(min_fg)) & ~F.col("term").isin(qset))
+        per_term.filter(F.col("fg") >= int(min_fg))
         .withColumn(
             "score",
             F.round(
@@ -2460,53 +2444,18 @@ def rare_terms(
     (rank, term, fg). Query terms themselves excluded (they match every
     doc by construction of the match set's definition of relevance).
 
-    Same intrinsic plan as significant_terms (which shares the honest
-    full-scan shape of ES over doc_values): broadcast sorted match-set
-    ids, ONE segments scan counting per-blob sorted-intersection overlap,
-    vocabulary-scale agg — candidate terms are unknown up front, so no
-    partition pruning is possible by construction."""
+    Same plan as significant_terms: the shared foreground-overlap kernel
+    (_foreground_overlap), then a vocabulary-scale filter + rank."""
     if max_doc_count < 1:
         raise ValueError("max_doc_count must be >= 1")
-    docs = _matched_docs(spark, index_dir, terms, n_partitions)
     out_schema = "rank int, term string, fg long"
-    if docs is None:
+    overlap = _foreground_overlap(spark, index_dir, terms, n_partitions)
+    if overlap is None:
         return _local_frame(spark, [], out_schema)
-    fg_ids = np.unique(docs.distinct().toPandas()["doc_id"].to_numpy(dtype=np.int64))
-    if fg_ids.size == 0:
-        return _local_frame(spark, [], out_schema)
-    fg_bc = spark.sparkContext.broadcast(fg_ids)
-    tomb_bc, _tomb_over = _tombstones(spark, index_dir)
-    seg = _segments(spark, index_dir).select("term", "blob")
-
-    def overlap(pdf_iter):
-        from .compress import decode_postings
-
-        for pdf in pdf_iter:
-            terms_out, fg_out = [], []
-            fg = fg_bc.value
-            for term, blob in zip(pdf["term"], pdf["blob"]):
-                doc_ids, _tfs, _dls = decode_postings(bytes(blob))
-                if tomb_bc is not None and doc_ids.size:
-                    doc_ids = doc_ids[live_mask(doc_ids, tomb_bc.value)]
-                if not doc_ids.size:
-                    continue
-                pos = np.searchsorted(fg, doc_ids)
-                inter = np.count_nonzero(
-                    (pos < fg.size) & (fg[np.minimum(pos, fg.size - 1)] == doc_ids)
-                )
-                if inter:
-                    terms_out.append(term)
-                    fg_out.append(int(inter))
-            if terms_out:
-                yield pd.DataFrame({"term": terms_out, "fg": fg_out})
-
-    per_slice = seg.mapInPandas(overlap, schema="term string, fg long")
-    qset = sorted({t.lower() for t in terms})
+    per_term, _n_fg = overlap
     w = Window.orderBy(F.asc("fg"), F.asc("term"))
     return (
-        per_slice.groupBy("term")
-        .agg(F.sum("fg").alias("fg"))
-        .filter((F.col("fg") <= int(max_doc_count)) & ~F.col("term").isin(qset))
+        per_term.filter((F.col("fg") >= 1) & (F.col("fg") <= int(max_doc_count)))
         .orderBy(F.asc("fg"), F.asc("term"))
         .limit(int(k))
         .withColumn("rank", F.row_number().over(w).cast("int"))

@@ -37,16 +37,18 @@ of one (_boolean_scored → boolean_topk and every re-scoring composer).
     share it, and positional clauses run the positional kernel once for
     the scoring clauses and once for the MUST_NOT clauses;
   * one shuffle: groupBy(query_id, doc_id) folds clause partials + the
-    MUST-coverage count; MUST_NOT and FILTER resolve as one anti- and one
+    MUST-coverage count (per-slot presence flags, no distinct
+    aggregate); MUST_NOT and FILTER resolve as one anti- and one
     semi-join on the (already aggregated, candidate-sized) stream — AQE
     broadcasts small sides;
   * a query's rare single-term MUST clause (the batch's chosen terms
     holding ≤ DRIVER_TOPK_MAX_DF postings in all) becomes a broadcast
     candidate mask applied kernel-side to that query's term rows
-    (searchsorted), the same sound candidate-based prune as
-    topk_segments_conjunctive — θ/block-max pruning is intentionally
-    ABSENT here: θ lower-bounds the disjunctive k-th best, which bounds
-    nothing once MUST/MUST_NOT constraints reshape the candidate set.
+    (searchsorted). This is THE sound conjunctive prune:
+    bm25_segments.topk_segments_conjunctive is this executor with every
+    term MUST. θ/block-max pruning is intentionally ABSENT here: θ
+    lower-bounds the disjunctive k-th best, which bounds nothing once
+    MUST/MUST_NOT constraints reshape the candidate set.
 
 No reference parity: Contextinator has no Boolean search (its query surface
 is grep + vector retrieval, search.rs / chroma_ops.py); this is new engine
@@ -95,7 +97,7 @@ from .bm25_segments import (
     probe_dictionary,
 )
 from .compress import decode_postings
-from .deletes import live_mask, member_mask
+from .deletes import live_postings, member_mask
 from .phrase import positional_matches_multi
 
 MUST, SHOULD, MUST_NOT, FILTER = "MUST", "SHOULD", "MUST_NOT", "FILTER"
@@ -496,9 +498,10 @@ def _batch_scored(
         clause, when the batch's chosen terms hold ≤ DRIVER_TOPK_MAX_DF
         postings in all, is read on the driver and broadcast; the scan
         kernel drops that query's rows outside it (searchsorted) — the
-        sound candidate prune of topk_segments_conjunctive. θ/block-max
-        pruning is absent: θ bounds the disjunctive k-th best, which
-        bounds nothing once MUST/MUST_NOT reshape the candidate set;
+        sound conjunctive prune, and the only one topk_segments_conjunctive
+        (every term MUST) has. θ/block-max pruning is absent: θ bounds
+        the disjunctive k-th best, which bounds nothing once MUST/MUST_NOT
+        reshape the candidate set;
       * positional clauses run the positional kernel
         (phrase.positional_matches_multi) once for every scoring clause of
         the batch and once for every MUST_NOT clause; df_phrase is a count
@@ -506,7 +509,8 @@ def _batch_scored(
       * ONE exchange folds the partials per (query, doc): per-slot sums
         pivoted inside the same aggregate (a slot-then-doc chain would be
         two exchanges over the partial stream) give both Σ and
-        max + tie·rest, plus MUST (and msm SHOULD) coverage;
+        max + tie·rest, plus MUST (and msm SHOULD) coverage as summed
+        per-slot presence flags (count_distinct would add an exchange);
       * MUST_NOT doc sets fold into ONE (query_id, doc_id) anti-join and
         FILTER predicates into ONE semi-join (idf/df/avgdl stay
         collection-global), so joins never multiply with batch size.
@@ -754,6 +758,7 @@ def _batch_scored(
 
         def score_slices(pdf_iter):
             cand = {} if cand_bc is None else cand_bc.value
+            tomb = None if tomb_bc is None else tomb_bc.value
             oq, os_, om, od, op, ok, n_out = [], [], [], [], [], [], 0
 
             def flush():
@@ -770,11 +775,7 @@ def _batch_scored(
 
             for pdf in pdf_iter:
                 for term, blob in zip(pdf["term"], pdf["blob"]):
-                    doc_ids, tfs, dls = decode_postings(bytes(blob))
-                    if tomb_bc is not None and doc_ids.size:
-                        mliv = live_mask(doc_ids, tomb_bc.value)
-                        if not mliv.all():
-                            doc_ids, tfs, dls = doc_ids[mliv], tfs[mliv], dls[mliv]
+                    doc_ids, tfs, dls = live_postings(blob, tomb)
                     if doc_ids.size == 0:
                         continue
                     qa, sa, ma, wa, ka = fan_arr[term]
@@ -944,16 +945,24 @@ def _batch_scored(
             ).alias(f"_s{j}")
             for j in range(m_slots)
         ]
+    # coverage = the number of distinct slots of one occur a doc matched:
+    # a per-slot presence flag summed over the slots — a distinct
+    # aggregate would plan one more exchange and Spark job
+    def covered(occur: Column) -> Column:
+        return functools.reduce(
+            lambda x, y: x + y,
+            [
+                F.coalesce(F.max(F.when(occur & (F.col("slot") == j), F.lit(1))), F.lit(0))
+                for j in range(m_slots)
+            ],
+        )
+
     n_must = {qid: sum(c.occur == MUST for _s, c in scoring[qid]) for qid in live}
     if any(n_must.values()):
-        aggs.append(
-            F.count_distinct(F.when(F.col("is_must"), F.col("slot"))).alias("n_cov")
-        )
+        aggs.append(covered(F.col("is_must")).alias("n_cov"))
     if any(msm[qid] for qid in live):
         # SHOULD coverage (minimum_should_match): distinct non-MUST slots
-        aggs.append(
-            F.count_distinct(F.when(~F.col("is_must"), F.col("slot"))).alias("n_scov")
-        )
+        aggs.append(covered(~F.col("is_must")).alias("n_scov"))
     scored = allp.groupBy("query_id", "doc_id").agg(*aggs)
     if any(n_must.values()):
         scored = scored.filter(F.col("n_cov") == _by_key("query_id", n_must))

@@ -47,7 +47,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import TOMBSTONE_BROADCAST_MAX
+from ..config import BLOCK_SIZE, TOMBSTONE_BROADCAST_MAX
+from .compress import decode_postings
 
 _TOMB_DIRNAME = "tombstones"
 _EPOCH_RE = re.compile(r"del-(\d{6})")
@@ -179,3 +180,31 @@ def member_mask(doc_ids: np.ndarray, sorted_set: np.ndarray) -> np.ndarray:
 def live_mask(doc_ids: np.ndarray, tomb: np.ndarray) -> np.ndarray:
     """True where doc_ids[i] is NOT tombstoned."""
     return ~member_mask(doc_ids, tomb) if tomb.size else np.ones(doc_ids.size, dtype=bool)
+
+
+def live_postings(
+    blob: bytes,
+    tomb: np.ndarray | None = None,
+    scope: np.ndarray | None = None,
+    blocks: np.ndarray | None = None,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(doc_ids, tfs, dls) of a posting blob, restricted to the kept
+    blocks, then the live docs (not in the sorted `tomb`), then the docs in
+    the sorted `scope` — the decode + mask preamble of every scan kernel.
+
+    `blocks` is one bool per BLOCK_SIZE run of the decoded list (the θ
+    block skip), so it applies first: block i is positions
+    [i·BLOCK_SIZE, (i+1)·BLOCK_SIZE) of the list as decoded."""
+    post = decode_postings(bytes(blob))
+    if blocks is not None:
+        post = _take(post, np.repeat(blocks, BLOCK_SIZE)[: post[0].size])
+    if tomb is not None:
+        post = _take(post, live_mask(post[0], tomb))
+    if scope is not None:
+        post = _take(post, member_mask(post[0], scope))
+    return post
+
+
+def _take(post: tuple, keep: np.ndarray) -> tuple:
+    return post if keep.all() else tuple(a[keep] for a in post)
+

@@ -71,6 +71,7 @@ from ..config import BM25_B, BM25_K1, DEFAULT_TOP_K, SCORE_ROUND_DECIMALS
 from .bm25_segments import (
     INDEX_PARTITIONS,
     _exact_scored_matches,
+    _halfup_topk,
     _idf,
     _local_frame,
     _rank_tail,
@@ -80,7 +81,7 @@ from .bm25_segments import (
     load_stats,
     probe_dictionary,
 )
-from .deletes import live_mask
+from .deletes import live_postings
 
 _RESULT_SCHEMA = "rank int, doc_id long, score double"
 
@@ -114,16 +115,11 @@ def term_tf_stream(
     seg = _spread_slices(seg, spark, sum(int(info[t]["df"]) for t in matched))
 
     def emit_rows(pdf_iter):
-        from .compress import decode_postings
-
+        tomb = None if tomb_bc is None else tomb_bc.value
         for pdf in pdf_iter:
             out = {"doc_id": [], "term": [], "tf": [], "doc_len": []}
             for term, blob in zip(pdf["term"], pdf["blob"]):
-                doc_ids, tfs, dls = decode_postings(bytes(blob))
-                if tomb_bc is not None and doc_ids.size:
-                    m = live_mask(doc_ids, tomb_bc.value)
-                    if not m.all():
-                        doc_ids, tfs, dls = doc_ids[m], tfs[m], dls[m]
+                doc_ids, tfs, dls = live_postings(blob, tomb)
                 if doc_ids.size == 0:
                     continue
                 out["doc_id"].append(doc_ids)
@@ -354,19 +350,14 @@ def _bucketed_term_arrays(
 
         def make_pack(tomb_bc=tomb_bc, field=field):
             def pack(pdf_iter):
-                from .compress import decode_postings
-
+                tomb = None if tomb_bc is None else tomb_bc.value
                 for pdf in pdf_iter:
                     out = {
                         "field": [], "term": [], "bucket": [],
                         "docs": [], "tfs": [], "dls": [],
                     }
                     for term, blob in zip(pdf["term"], pdf["blob"]):
-                        doc_ids, tfs, dls = decode_postings(bytes(blob))
-                        if tomb_bc is not None and doc_ids.size:
-                            m = live_mask(doc_ids, tomb_bc.value)
-                            if not m.all():
-                                doc_ids, tfs, dls = doc_ids[m], tfs[m], dls[m]
+                        doc_ids, tfs, dls = live_postings(blob, tomb)
                         if doc_ids.size == 0:
                             continue
                         # slices are doc-sorted: one searchsorted splits
@@ -443,10 +434,10 @@ def _kernel_batch_topk(
 
     Local-cut exactness is the standard argument: a global top-k doc has
     < k docs above it globally, hence < k above it in its own bucket.
-    Final scores go through the one-quantum margin + exact HALF_UP
-    correction (np.round is banker's; tie_breaker × 6-decimal per-field
-    scores manufacture exact half-quantum values — measured 3/30 graded
-    rows off by 1e-6 before this).
+    Final scores go through the shared margin + exact HALF_UP top-k
+    (bm25_segments._halfup_topk; np.round is banker's, and tie_breaker ×
+    6-decimal per-field scores manufacture exact half-quantum values —
+    measured 3/30 graded rows off by 1e-6 before HALF_UP).
 
     `prepare(groups, width)` → context; groups maps "field|term" →
     (docs_rel, tfs, dls) concatenated int arrays, docs unique per key
@@ -462,23 +453,6 @@ def _kernel_batch_topk(
     out_schema = "query_id int, doc_id long, score double"
 
     def kernel(pdf_iter):
-        from decimal import ROUND_HALF_UP, Decimal
-
-        quant = Decimal("0.000001")
-
-        def halfup6(vals):
-            # decimal per DISTINCT value only: margin sets are tie-heavy
-            # (duplicate docs share exact doubles), and the 64M probe
-            # measured per-value decimal as the dominant batch cost
-            uniq, inv_ = np.unique(vals, return_inverse=True)
-            corr = np.array(
-                [
-                    float(Decimal(repr(float(v))).quantize(quant, ROUND_HALF_UP))
-                    for v in uniq
-                ]
-            )
-            return corr[inv_]
-
         frames = [f for f in pdf_iter if len(f)]
         if not frames:
             return
@@ -516,18 +490,10 @@ def _kernel_batch_topk(
                 nz = np.flatnonzero(matched)
                 if nz.size == 0:
                     continue
-                prelim = np.round(raw[nz], SCORE_ROUND_DECIMALS)
-                if nz.size > kk:
-                    kth_val = -np.partition(-prelim, kk - 1)[kk - 1]
-                    keep = np.flatnonzero(prelim >= kth_val - 1.5e-6)
-                else:
-                    keep = np.arange(nz.size)
-                cand = nz[keep]
-                sc = halfup6(raw[cand])
-                order = np.lexsort((cand, -sc))[:kk]
-                out_q.append(np.full(order.size, qid, dtype=np.int32))
-                out_d.append(base + cand[order])
-                out_s.append(sc[order])
+                top, sc = _halfup_topk(nz, raw[nz], kk)
+                out_q.append(np.full(top.size, qid, dtype=np.int32))
+                out_d.append(base + top)
+                out_s.append(sc)
         if out_q:
             yield pd.DataFrame(
                 {

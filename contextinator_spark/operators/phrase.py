@@ -635,9 +635,11 @@ def _positional_topk(
     terms hold at most DRIVER_TOPK_MAX_DF positions in all (Σcf — the
     driver holds every position, not just every posting), the driver
     reads the terms' blobs (_read_partitions), runs _pack_term_blobs and
-    _match_bucket in-process, scores with _idf/_tf_norm and ranks as
-    bm25_segments._topk_driver does. No Spark job runs. Otherwise the
-    kernel's Spark plan (_match_plan) feeds _rank_matches."""
+    _match_bucket in-process, scores with _idf/_tf_norm and ranks with
+    bm25_segments._topk_frame, which rounds HALF_UP as F.round does (the
+    BM25 driver placement, _topk_driver, ranks the same way). No Spark
+    job runs. Otherwise the kernel's Spark plan (_match_plan) feeds
+    _rank_matches."""
     specs = _specs({0: (_slot_terms(terms), window, ordered, first)})
     stats = _positions_stats(index_dir)
     info = probe_dictionary(spark, index_dir, _spec_terms(specs), stats["n_partitions"])
@@ -662,7 +664,7 @@ def _positional_topk(
         matched["doc_len"].to_numpy(np.float64),
         float(stats["avgdl"]), k1, b,
     )
-    return _topk_frame(spark, docs, np.round(scores, SCORE_ROUND_DECIMALS), k)
+    return _topk_frame(spark, docs, scores, k)
 
 
 def phrase_topk_indexed(

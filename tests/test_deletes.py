@@ -121,6 +121,30 @@ def test_delete_overcap_antijoin_identical(spark, index_copy, monkeypatch):
     deletes._STATE_CACHE.clear()
 
 
+def test_foreground_overlap_overcap_equals_broadcast(spark, index_copy, monkeypatch):
+    """significant_terms and rare_terms collect their match set only up to
+    TOMBSTONE_BROADCAST_MAX ids; above it they count the overlaps with a
+    distributed join. On a store with a tombstone epoch that removes
+    matching docs, both forms return the same rows."""
+    base = bm25_segments.topk_segments(spark, index_copy, QUERY, k=5).collect()
+    deletes.delete_docs(spark, index_copy, [r["doc_id"] for r in base[:2]])
+
+    def both():
+        return (
+            [tuple(r) for r in bm25_segments.significant_terms(
+                spark, index_copy, QUERY, k=25, min_fg=1
+            ).collect()],
+            [tuple(r) for r in bm25_segments.rare_terms(
+                spark, index_copy, QUERY, max_doc_count=2, k=25
+            ).collect()],
+        )
+
+    sig, rare = both()
+    assert sig and rare
+    monkeypatch.setattr(bm25_segments, "TOMBSTONE_BROADCAST_MAX", 0)
+    assert both() == (sig, rare)
+
+
 def test_delete_epochs_append_and_dedupe(spark, index_copy):
     e1 = deletes.delete_docs(spark, index_copy, [11, 22, 33])
     e2 = deletes.delete_docs(spark, index_copy, [33, 44])  # overlap is fine

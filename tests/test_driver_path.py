@@ -16,6 +16,8 @@ import re
 import shutil
 from collections import Counter
 
+import numpy as np
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -187,6 +189,38 @@ def test_bm25_driver_path_equals_distributed(spark, store):
         b = _rows(B.topk_segments(spark, d, terms, k=10, driver_path=False))
         assert a == b, terms
         assert not {r[1] for r in a} & deleted, terms
+    # a sorted-array scope: the kernel's scope mask in both placements
+    ids = sorted(r["doc_id"] for r in spark.read.parquet(f"{d}/doc_meta").select("doc_id").collect())
+    scope = np.asarray(ids[::2], dtype=np.int64)
+    terms = ["import", "return", "class"]
+    a = _rows(B.topk_segments(spark, d, terms, k=10, scope=scope, driver_path=True))
+    b = _rows(B.topk_segments(spark, d, terms, k=10, scope=scope, driver_path=False))
+    assert a == b and len(a) == 10
+    assert {r[1] for r in a} <= set(scope.tolist()) and not {r[1] for r in a} & deleted
+
+
+def test_driver_rounding_is_spark_half_up(spark):
+    """The driver placements round as F.round does: HALF_UP on the decimal
+    repr. np.round rounds the binary value half-to-even and disagrees on
+    three of these half-quanta (2.0000025 → 2.000002, 5e-07 → 0.0,
+    3.1415925 → 3.141592). The search-after cursor compares the HALF_UP
+    scores."""
+    vals = [2.0000025, 5e-07, 3.1415925, 1.0000015, 0.1234565]
+    want = [
+        r["s"]
+        for r in spark.createDataFrame(pa.table({"i": list(range(5)), "v": vals}))
+        .select("i", F.round("v", 6).alias("s"))
+        .orderBy("i")
+        .collect()
+    ]
+    assert [float(np.round(v, 6)) for v in vals] != want
+    docs = np.arange(len(vals), dtype=np.int64)
+    got = {r["doc_id"]: r["score"] for r in B._topk_frame(spark, docs, np.asarray(vals), k=5).collect()}
+    assert [got[i] for i in range(len(vals))] == want
+    # strictly after (2.000003, doc 0): doc 0 itself is out, and so is
+    # 3.141593; np.round's 2.000002 would have let doc 0 back in
+    after = B._topk_frame(spark, docs, np.asarray(vals), k=5, after=(want[0], 0)).collect()
+    assert [r["doc_id"] for r in after] == [3, 4, 1]
 
 
 def test_batch_theta_reads_small_terms_on_the_driver(spark, store, monkeypatch):

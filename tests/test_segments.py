@@ -644,6 +644,16 @@ def test_conjunctive_absent_term_is_empty(spark, index_dir):
         spark, index_dir, ["import", "zzz_no_such_term"]
     )
     assert out.count() == 0
+    none = bm25_segments.topk_segments_conjunctive(spark, index_dir, [])
+    assert none.count() == 0
+    assert [(f.name, f.dataType.simpleString()) for f in none.schema.fields] == [
+        ("rank", "int"), ("doc_id", "bigint"), ("score", "double")
+    ]
+    # repeated terms are one MUST clause each, not a second match
+    dup = bm25_segments.topk_segments_conjunctive(spark, index_dir, ["import", "import", "def"])
+    once = bm25_segments.topk_segments_conjunctive(spark, index_dir, ["def", "import"])
+    assert [tuple(r) for r in dup.collect()] == [tuple(r) for r in once.collect()]
+    assert once.count() > 0
 
 
 # ---------------------------------------------------------------------------
