@@ -825,22 +825,26 @@ def _score_slices(pdf_iter, kern: _Kern):
             # ≤ ~32 MB at 1,000-query batches. With sketches the rest bound
             # is per (query, doc-range bucket): (qt_mat[row] − sk_t)[bucket]
             # — strictly ≤ the scalar rest, so more postings die before
-            # the shuffle.
+            # the shuffle. Without θ every posting scores for every query.
             step = max(1, _QID_CHUNK_ELEMS // doc_ids.size)
             for lo in range(0, qarr.size, step):
+                qs = qarr[lo : lo + step]
                 if kern.theta is None:
-                    m = np.ones((qarr[lo : lo + step].size, doc_ids.size), dtype=bool)
-                elif kern.sketch is not None:
-                    rest_chunk = qt_mat[qrows[lo : lo + step]] - sk_t[None, :]
-                    m = (scores[None, :] + rest_chunk[:, buck]) >= th[lo : lo + step, None]
+                    q_o = np.repeat(qs, doc_ids.size)
+                    d_o, s_o = np.tile(doc_ids, qs.size), np.tile(scores, qs.size)
                 else:
-                    m = (scores[None, :] + ru[lo : lo + step, None]) >= th[lo : lo + step, None]
-                qi, pi = np.nonzero(m)
-                if qi.size:
-                    qids_out.append(qarr[lo : lo + step][qi])
-                    docs_out.append(doc_ids[pi])
-                    scores_out.append(scores[pi])
-                    n_out += qi.size
+                    if kern.sketch is not None:
+                        rest_chunk = qt_mat[qrows[lo : lo + step]] - sk_t[None, :]
+                        m = (scores[None, :] + rest_chunk[:, buck]) >= th[lo : lo + step, None]
+                    else:
+                        m = (scores[None, :] + ru[lo : lo + step, None]) >= th[lo : lo + step, None]
+                    qi, pi = np.nonzero(m)
+                    q_o, d_o, s_o = qs[qi], doc_ids[pi], scores[pi]
+                if q_o.size:
+                    qids_out.append(q_o)
+                    docs_out.append(d_o)
+                    scores_out.append(s_o)
+                    n_out += q_o.size
                 if n_out >= kern.out_rows:
                     yield flush()
                     qids_out, docs_out, scores_out, n_out = [], [], [], 0
@@ -1588,8 +1592,9 @@ def topk_segments_conjunctive(
 
     A Boolean query with one MUST term clause per distinct term
     (boolean.boolean_topk, which caps a query at 1,024 scoring clauses
-    and raises ValueError above it). Its rare-MUST candidate mask is the
-    sound conjunctive prune — θ/block-max pruning is not: θ lower-bounds
+    and raises ValueError above it): a small one runs on the driver with
+    no Spark job. On the Spark placement its rare-MUST candidate mask is
+    the sound conjunctive prune — θ/block-max pruning is not: θ lower-bounds
     the DISJUNCTIVE k-th best, and the conjunctive k-th best can sit
     arbitrarily below it. A term absent from the dictionary returns empty
     with no scan job; so does an empty term list."""

@@ -28,25 +28,27 @@ phrase_topk_indexed's scoring), and boost_c is the Lucene `^w` multiplier
 
     +hash spark^0.5 -join "table hash"^2 "big table"~3 mer* grup~1 lang:en
 
-Scale shape: ONE scorer, _batch_scored, builds every Boolean plan. It
-takes a batch of queries (boolean_topk_multi); a single query is a batch
-of one (_boolean_scored → boolean_topk and every re-scoring composer).
-  * every posting read is partition-pruned (one dictionary probe first; a
-    MUST term absent everywhere costs zero scan jobs);
-  * each needed term is decoded ONCE even when several clauses or queries
-    share it, and positional clauses run the positional kernel once for
-    the scoring clauses and once for the MUST_NOT clauses;
-  * one shuffle: groupBy(query_id, doc_id) folds clause partials + the
-    MUST-coverage count (per-slot presence flags, no distinct
-    aggregate); MUST_NOT and FILTER resolve as one anti- and one
-    semi-join on the (already aggregated, candidate-sized) stream — AQE
-    broadcasts small sides;
-  * a query's rare single-term MUST clause (the batch's chosen terms
-    holding ≤ DRIVER_TOPK_MAX_DF postings in all) becomes a broadcast
-    candidate mask applied kernel-side to that query's term rows
-    (searchsorted). This is THE sound conjunctive prune:
-    bm25_segments.topk_segments_conjunctive is this executor with every
-    term MUST. θ/block-max pruning is intentionally ABSENT here: θ
+Scale shape: ONE Boolean kernel with two placements. _prepare resolves a
+batch of queries on the driver (one dictionary probe for every clause
+term; a MUST term absent everywhere empties its query with no scan); a
+single query is a batch of one.
+  * the kernel: _pack_terms decodes each needed term ONCE however many
+    clauses or queries share it, masks deleted docs and a query's
+    rare-MUST candidates, and emits doc-range-bucketed partial rows
+    (query, slot, role, doc, partial); positional clauses
+    (_positional_partials over the positional kernel's matches) and
+    doc_meta predicates emit the same rows. _fold_bucket folds whole
+    buckets for every query of the batch in numpy: per-slot sums, sum or
+    dismax, MUST and msm coverage, MUST_NOT exclusion, FILTER membership;
+  * the driver placement (boolean_topk on a small query, _driver_fits)
+    runs pack and fold in-process and schedules no Spark job;
+  * the Spark placement (_batch_scored: boolean_topk_multi, the composers,
+    larger queries) unions the partial rows into ONE
+    groupBy(bucket).applyInPandas(fold) exchange;
+  * a query's rare single-term MUST clause becomes a broadcast candidate
+    mask applied in the pack (searchsorted): THE sound conjunctive prune,
+    and bm25_segments.topk_segments_conjunctive is this executor with
+    every term MUST. θ/block-max pruning is intentionally ABSENT: θ
     lower-bounds the disjunctive k-th best, which bounds nothing once
     MUST/MUST_NOT constraints reshape the candidate set.
 
@@ -59,12 +61,12 @@ positional) into the standard IR algebra.
 from __future__ import annotations
 
 import functools
+import math
 import re
 from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -75,11 +77,11 @@ from ..config import (
     DRIVER_TOPK_MAX_DF,
     SCORE_ROUND_DECIMALS,
 )
-from .bm25 import idf_expr, tf_norm_expr
 from .bm25_segments import (
     MAX_EXPANSIONS,
     _BLOB_SCHEMA,
     _OUT_CHUNK_ROWS,
+    _TOPK_SCHEMA,
     _doc_meta,
     _idf,
     _local_frame,
@@ -89,6 +91,7 @@ from .bm25_segments import (
     _spread_slices,
     _tf_norm,
     _tombstones,
+    _topk_frame,
     expand_fuzzy,
     expand_prefix,
     expand_regexp,
@@ -97,8 +100,16 @@ from .bm25_segments import (
     probe_dictionary,
 )
 from .compress import decode_postings
-from .deletes import live_postings, member_mask
-from .phrase import positional_matches_multi
+from .deletes import live_mask, live_postings, member_mask
+from .phrase import (
+    _bucket_shift,
+    _match_bucket,
+    _pack_term_blobs,
+    _positions_stats,
+    _spec_terms,
+    _specs,
+    positional_matches_multi,
+)
 
 MUST, SHOULD, MUST_NOT, FILTER = "MUST", "SHOULD", "MUST_NOT", "FILTER"
 
@@ -439,6 +450,15 @@ _SLOT_BASE = 1024  # positional keys pack (qid, clause-slot); slots < 1024
 _TERMISH = ("term", "prefix", "wildcard", "fuzzy", "regexp")
 _POSITIONAL = ("phrase", "near", "phrase_prefix")
 _SCORED_SCHEMA = "query_id int, doc_id long, score double"
+# role of a partial row: a scoring MUST or SHOULD clause, a MUST_NOT
+# clause's match, a doc passing the query's FILTER clauses
+_R_MUST, _R_SHOULD, _R_NOT, _R_FILTER = 0, 1, 2, 3
+_ROLE = {MUST: _R_MUST, SHOULD: _R_SHOULD, MUST_NOT: _R_NOT, FILTER: _R_FILTER}
+_PARTIALS = (
+    "bucket long, query_id int, slot int, role tinyint, doc_id long, "
+    "partial double, is_const boolean"
+)
+_PACK_COLS = ("bucket", "query_id", "slot", "role", "doc_id", "partial", "is_const")
 
 
 def _by_key(key: str, values: dict) -> Column:
@@ -452,7 +472,174 @@ def _by_key(key: str, values: dict) -> Column:
     return F.create_map(*[F.lit(x) for kv in values.items() for x in kv])[F.col(key)]
 
 
-def _batch_scored(
+# ---------------------------------------------------------------------------
+# the Boolean kernel: one pack, one fold, two placements. Partial rows are
+# bucketed doc_id >> shift (the positional kernel's doc-range rule), so a
+# bucket holds every row of its (query, doc) pairs.
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class _Kernel:
+    """Driver-built constants of the kernel. Pack: `fan` maps each matched
+    term to the (query ids, slots, roles, weights, const flags) of its
+    uses: a BM25 use scores weight·tf_norm (weight = idf·boost), a const
+    use its v, a MUST_NOT use 0; `pos` maps a positional clause key
+    (qid·_SLOT_BASE + slot) to its (role, boost, const v or NaN). Fold:
+    aligned with the sorted query ids `qids`, each query's MUST clause
+    count, msm and whether it has FILTER clauses; the combiner."""
+
+    fan: dict[str, tuple[np.ndarray, ...]]
+    pos: dict[int, tuple[int, float, float]]
+    n_docs: float
+    avgdl: float
+    k1: float
+    b: float
+    shift: int
+    qids: np.ndarray
+    n_must: np.ndarray
+    msm: np.ndarray
+    filtered: np.ndarray
+    dismax: bool
+    tie: float
+    out_rows: int = _OUT_CHUNK_ROWS
+
+
+def _pack_terms(pdf_iter, kern: _Kernel, tomb: np.ndarray | None = None, cand: dict | None = None):
+    """The term pack: (term, blob) rows → partial rows (_PARTIALS) for
+    every use of each term, each blob decoded once. Deleted docs (sorted
+    `tomb`) are masked, and so are, for a query in `cand` (query id →
+    sorted doc ids of its rarest MUST term), the docs outside its
+    candidates. Rows come in chunks of about kern.out_rows."""
+    cand = cand or {}
+    out, n_out = {c: [] for c in _PACK_COLS}, 0
+    for pdf in pdf_iter:
+        for term, blob in zip(pdf["term"], pdf["blob"]):
+            docs, tfs, dls = live_postings(blob, tomb)
+            if docs.size == 0:
+                continue
+            qa, sa, ra, wa, ka = kern.fan[term]
+            bm25 = (ra <= _R_SHOULD) & ~ka
+            if bm25.any():
+                tfn = _tf_norm(tfs.astype(np.float64), dls.astype(np.float64), kern.avgdl,
+                               kern.k1, kern.b)
+            buckets = docs.astype(np.int64) >> kern.shift
+            for i in range(qa.size):
+                d, bk = docs, buckets
+                p = tfn * wa[i] if bm25[i] else np.full(d.size, wa[i])
+                mask = cand.get(int(qa[i]))
+                if mask is not None:
+                    keep = member_mask(d, mask)
+                    d, bk, p = d[keep], bk[keep], p[keep]
+                    if d.size == 0:
+                        continue
+                row = (bk, np.full(d.size, qa[i], np.int32), np.full(d.size, sa[i], np.int32),
+                       np.full(d.size, ra[i], np.int8), d, p, np.full(d.size, ka[i], bool))
+                for c, v in zip(_PACK_COLS, row):
+                    out[c].append(v)
+                n_out += d.size
+                if n_out >= kern.out_rows:
+                    yield pd.DataFrame({c: np.concatenate(v) for c, v in out.items()})
+                    out, n_out = {c: [] for c in _PACK_COLS}, 0
+    if n_out:
+        yield pd.DataFrame({c: np.concatenate(v) for c, v in out.items()})
+
+
+def _positional_partials(pdf_iter, kern: _Kernel):
+    """The positional pack: the positional kernel's match rows (query_id =
+    qid·_SLOT_BASE + slot, doc_id, phrase_tf, doc_len, df = the clause's
+    live match count) → partial rows (_PARTIALS). ConstantScore(phrase)
+    scores v per match; any other clause BM25 of one synthetic term:
+    idf(df)·tf_norm(phrase_tf)·boost."""
+    for m in pdf_iter:
+        key = m["query_id"].to_numpy(np.int64)
+        ukeys, first, inv = np.unique(key, return_index=True, return_inverse=True)
+        inv = inv.reshape(-1)
+        role, boost, const = (np.asarray([kern.pos[int(u)][j] for u in ukeys]) for j in range(3))
+        idf = np.asarray([_idf(float(n), kern.n_docs) for n in m["df"].to_numpy()[first]])
+        tfn = _tf_norm(m["phrase_tf"].to_numpy(np.float64), m["doc_len"].to_numpy(np.float64),
+                       kern.avgdl, kern.k1, kern.b)
+        is_const = ~np.isnan(const)[inv]
+        docs = m["doc_id"].to_numpy(np.int64)
+        yield pd.DataFrame({
+            "bucket": docs >> kern.shift,
+            "query_id": (key // _SLOT_BASE).astype(np.int32),
+            "slot": (key % _SLOT_BASE).astype(np.int32),
+            "role": role.astype(np.int8)[inv],
+            "doc_id": docs,
+            "partial": np.where(is_const, const[inv], idf[inv] * tfn * boost[inv]),
+            "is_const": is_const,
+        })
+
+
+def _fold_bucket(pdf: pd.DataFrame, kern: _Kernel, tomb: np.ndarray | None = None) -> pd.DataFrame:
+    """The fold: the partial rows of whole buckets → (query_id, doc_id,
+    unrounded score) of every query's hits. A (query, doc) hits when it
+    has every MUST slot, at least msm SHOULD slots, no MUST_NOT row and,
+    for a filtered query, a FILTER row; docs in the sorted `tomb` never
+    hit. A slot's value is the sum of its BM25 partials, or the max of a
+    const slot's (equal) values; the score is their sum, or
+    max + tie·(sum − max) under dismax. Rows are sorted on (query, doc,
+    slot, partial) first, so the sums add in one order whatever order the
+    rows arrive in: both placements get the same floats."""
+    udocs, dix = np.unique(pdf["doc_id"].to_numpy(np.int64), return_inverse=True)
+    pair = pdf["query_id"].to_numpy(np.int64) * udocs.size + dix.reshape(-1)  # (query, doc)
+    role = pdf["role"].to_numpy(np.int8)
+    sc = role <= _R_SHOULD
+    p_pair, p_slot = pair[sc], pdf["slot"].to_numpy(np.int64)[sc]
+    part = pdf["partial"].to_numpy(np.float64)[sc]
+    o = np.lexsort((part, p_slot, p_pair))
+    p_pair, p_slot, part = p_pair[o], p_slot[o], part[o]
+    s_role, s_const = role[sc][o], pdf["is_const"].to_numpy(bool)[sc][o]
+    # one value per (query, doc, slot), then one score and two coverage
+    # counts per (query, doc)
+    st = np.flatnonzero(np.diff(p_pair, prepend=-1) | np.diff(p_slot, prepend=-1))
+    val = np.where(s_const[st], np.maximum.reduceat(part, st), np.add.reduceat(part, st))
+    g_pair, g_role = p_pair[st], s_role[st]
+    ps = np.flatnonzero(np.diff(g_pair, prepend=-1))
+    score = np.add.reduceat(val, ps)
+    if kern.dismax:
+        best = np.maximum.reduceat(val, ps)
+        score = best + kern.tie * (score - best)
+    pairs = g_pair[ps]
+    qi = np.searchsorted(kern.qids, pairs // udocs.size)
+    keep = (np.add.reduceat((g_role == _R_MUST).astype(np.int64), ps) == kern.n_must[qi]) & (
+        np.add.reduceat((g_role == _R_SHOULD).astype(np.int64), ps) >= kern.msm[qi]
+    )
+    keep &= ~np.isin(pairs, pair[role == _R_NOT])
+    if kern.filtered.any():
+        keep &= ~kern.filtered[qi] | np.isin(pairs, pair[role == _R_FILTER])
+    pairs, score = pairs[keep], score[keep]
+    docs = udocs[pairs % udocs.size]
+    if tomb is not None:
+        live = live_mask(docs, tomb)
+        pairs, docs, score = pairs[live], docs[live], score[live]
+    return pd.DataFrame(
+        {"query_id": (pairs // udocs.size).astype(np.int32), "doc_id": docs, "score": score}
+    )
+
+
+@dataclass(frozen=True)
+class _Batch:
+    """A Boolean batch resolved on the driver, which both placements run
+    from: the dictionary entries of every clause term; the live queries'
+    clauses by occur (scoring = [(slot, clause)], slots of MUST_NOT
+    clauses numbered after them); each term-ish scoring clause's terms;
+    the positional specs (qid·_SLOT_BASE + slot → (slots, window)); the
+    kernel constants; the tombstones."""
+
+    info: dict[str, dict]
+    live: list[int]
+    scoring: dict[int, list[tuple[int, Clause]]]
+    nots: dict[int, list[Clause]]
+    filters: dict[int, list[Clause]]
+    cl_terms: dict[tuple[int, int], list[str]]
+    pos: dict[int, tuple[list, int | None]]
+    kern: _Kernel
+    tomb: tuple
+
+
+def _prepare(
     spark: SparkSession,
     index_dir: str,
     parsed: dict[int, list[Clause]],
@@ -462,81 +649,22 @@ def _batch_scored(
     combine: str,
     tie_breaker: float,
     msm: dict[int, int],
-    rare_filter: bool = True,
-    max_partial_rows: int | None = None,
-    k: int = DEFAULT_TOP_K,
-    _partials_out: list | None = None,
-) -> DataFrame:
-    """The Boolean scorer: (query_id, doc_id, score) for every doc that
-    satisfies its query's occur algebra, for a batch of parsed queries
-    (query_id → clauses, ids in [0, 2^20)) in ONE plan.
-    boolean_topk_multi adds the per-query rank window; a single query is a
-    batch of one (_boolean_scored).
-
-    Per query, `combine` picks the cross-clause combiner: "sum" is
-    BooleanQuery (Σ over matching scoring clauses); "dismax" is
-    DisjunctionMaxQuery — each scoring clause first folds to its own score
-    (a prefix/fuzzy clause is still a sum over its expansion, per Lucene's
-    rewrite), then score = max_c + tie_breaker · Σ_{c' ≠ argmax} c'.
-    msm[qid] is Lucene's setMinimumNumberShouldMatch: a doc must match ≥
-    that many DISTINCT SHOULD clauses on top of full MUST coverage (a
-    clause matching through several expansion terms counts once); more
-    than the query's SHOULD clauses matches nothing. Positional clauses
-    need a positions store (posting_format=2); term-only queries run on
-    either format.
-
-    Topology:
-      * ONE dictionary probe for the union of every query's scoring and
-        MUST_NOT terms (prefix/wildcard/fuzzy/regexp expansions are
-        per-clause dictionary reads, as in Lucene's MultiTermQuery
-        rewrite); a MUST term clause with no indexed expansion empties its
-        query with no scan;
-      * ONE pruned segment scan decodes each term's blob once and fans the
-        partials out to every (query, clause-slot) using it — rows carry
-        (query_id, slot, is_must, partial, is_const);
-      * rare-MUST candidate masks: a query's rarest single-term MUST
-        clause, when the batch's chosen terms hold ≤ DRIVER_TOPK_MAX_DF
-        postings in all, is read on the driver and broadcast; the scan
-        kernel drops that query's rows outside it (searchsorted) — the
-        sound conjunctive prune, and the only one topk_segments_conjunctive
-        (every term MUST) has. θ/block-max pruning is absent: θ bounds
-        the disjunctive k-th best, which bounds nothing once MUST/MUST_NOT
-        reshape the candidate set;
-      * positional clauses run the positional kernel
-        (phrase.positional_matches_multi) once for every scoring clause of
-        the batch and once for every MUST_NOT clause; df_phrase is a count
-        window per clause, so each kernel plan is consumed once;
-      * ONE exchange folds the partials per (query, doc): per-slot sums
-        pivoted inside the same aggregate (a slot-then-doc chain would be
-        two exchanges over the partial stream) give both Σ and
-        max + tie·rest, plus MUST (and msm SHOULD) coverage as summed
-        per-slot presence flags (count_distinct would add an exchange);
-      * MUST_NOT doc sets fold into ONE (query_id, doc_id) anti-join and
-        FILTER predicates into ONE semi-join (idf/df/avgdl stay
-        collection-global), so joins never multiply with batch size.
-
-    `max_partial_rows` bounds the (query, slot, doc) partial stream one
-    plan may carry: per-query stream sizes are estimated from the
-    dictionary's df column (Σ df over each term clause's expansion, min df
-    over a positional clause's terms), and a batch over the bound is
-    greedily packed into sub-batches that each fit. Each runs eagerly as
-    boolean_topk_multi(k) and the result is their (≤ k per query) rows —
-    exact, because queries never interact. This is the single-node safety
-    valve for the 64M-doc fold (BENCH/BASELINE.md); on a cluster the fold
-    exchange distributes and the bound can stay None.
-
-    `_partials_out`, when given, receives the pre-fold partial stream
-    (boolean_explain decomposes hits with it)."""
+) -> _Batch | None:
+    """Validate a batch of parsed queries, expand its multi-term and
+    phrase-prefix clauses, probe the dictionary ONCE for every clause
+    term, and build the kernel constants. None when no query can match: a
+    MUST term clause with no indexed expansion, an msm above the query's
+    SHOULD clause count (Lucene), or no clause that can emit a scoring
+    row (e.g. a SHOULD-only query of unknown words). Term and phrase
+    clauses run no Spark job here."""
     if combine not in ("sum", "dismax"):
         raise ValueError(f"combine must be sum|dismax, got {combine!r}")
     if not parsed:
-        return _local_frame(spark, [], _SCORED_SCHEMA)
+        return None
     stats = load_stats(index_dir)
-    n_partitions = int(stats["n_partitions"])
-    n_docs, avgdl = float(stats["n_docs"]), float(stats["avgdl"])
+    n_docs = float(stats["n_docs"])
 
-    # ---- per-query clause partition + slot assignment
-    scoring: dict[int, list[tuple[int, Clause]]] = {}  # qid -> [(slot, c)]
+    scoring: dict[int, list[tuple[int, Clause]]] = {}
     nots: dict[int, list[Clause]] = {}
     filters: dict[int, list[Clause]] = {}
     for qid, cls in parsed.items():
@@ -555,138 +683,157 @@ def _batch_scored(
                 f"query {qid}: predicate clauses are FILTER/MUST_NOT only "
                 "(add ^=v for a scoring ConstantScore filter)"
             )
-        if len(sc) > _SLOT_BASE:
-            raise ValueError(f"query {qid}: >{_SLOT_BASE} scoring clauses")
         scoring[qid] = list(enumerate(sc))
         nots[qid] = [c for c in cls if c.occur == MUST_NOT]
         filters[qid] = [c for c in cls if c.occur == FILTER]
+        if len(sc) + len(nots[qid]) > _SLOT_BASE:
+            raise ValueError(f"query {qid}: >{_SLOT_BASE} scoring and MUST_NOT clauses")
 
-    # ---- expansion + ONE dictionary probe over the union
+    # ---- expansion + ONE dictionary probe over every clause term
+    # (prefix/wildcard/fuzzy/regexp expand over the cached dictionary
+    # frame, as in Lucene's MultiTermQuery rewrite)
     cl_terms: dict[tuple[int, int], list[str]] = {}
+    not_terms: dict[int, set[str]] = {}
+    pos: dict[int, tuple[list, int | None]] = {}
+    pos_pack: dict[int, tuple[int, float, float]] = {}
     for qid, slots in scoring.items():
-        for slot, c in slots:
-            if c.kind in _TERMISH:
-                cl_terms[(qid, slot)] = _clause_terms(spark, index_dir, c, max_expansions)
-    not_terms: dict[int, list[str]] = {}
-    for qid, cs in nots.items():
-        ts = [
-            t
-            for c in cs
-            if c.kind in _TERMISH
-            for t in _clause_terms(spark, index_dir, c, max_expansions)
-        ]
-        if ts:
-            not_terms[qid] = sorted(set(ts))
-    all_terms = sorted(
-        {t for ts in cl_terms.values() for t in ts}
-        | {t for ts in not_terms.values() for t in ts}
-    )
-    info = probe_dictionary(spark, index_dir, all_terms, n_partitions) if all_terms else {}
-    idf = {t: _idf(float(info[t]["df"]), n_docs) for t in info}
-
-    # a query matches nothing when a MUST term clause has no indexed
-    # expansion, or when its msm exceeds its SHOULD clause count (Lucene)
-    dead = {
-        qid
-        for qid, slots in scoring.items()
-        for slot, c in slots
-        if c.occur == MUST
-        and c.kind in _TERMISH
-        and not any(t in info for t in cl_terms[(qid, slot)])
-    } | {
-        qid
-        for qid, slots in scoring.items()
-        if msm[qid] > sum(c.occur == SHOULD for _s, c in slots)
-    }
-    live = sorted(set(scoring) - dead)
-    if not live:
-        return _local_frame(spark, [], _SCORED_SCHEMA)
-    live_set = set(live)
-    m_slots = max(len(scoring[qid]) for qid in live)
-
-    # ---- optional stream bound: estimate per-query partial rows from the
-    # dictionary (metadata only) and sub-batch greedily when over
-    if max_partial_rows is not None and len(live) > 1:
-        pos_terms = sorted(
-            {
-                t
-                for qid in live
-                for _slot, c in scoring[qid]
-                if c.kind in _POSITIONAL
-                for t in c.terms
-            }
-        )
-        pos_info = (
-            probe_dictionary(spark, index_dir, pos_terms, n_partitions)
-            if pos_terms
-            else {}
-        )
-        est: dict[int, int] = {}
-        for qid in live:
-            rows = 0
-            for slot, c in scoring[qid]:
-                if c.kind in _POSITIONAL:
-                    # estimate from the EXACT terms' dfs (sound row bound:
-                    # matches ⊆ any exact term's postings; phrase_prefix
-                    # always carries ≥1 exact head term by the parser)
-                    dfs = [
-                        int(pos_info[t]["df"]) for t in c.terms if t in pos_info
-                    ]
-                    rows += min(dfs) if dfs else 0
-                elif c.kind == "predicate":
-                    # ConstantScore(filter): selectivity unknown without a
-                    # scan, so budget the worst case (every doc matches)
-                    rows += int(n_docs)
+        for slot, c in [*slots, *enumerate(nots[qid], len(slots))]:
+            if c.kind in _POSITIONAL:
+                spec = _positional_slots(spark, index_dir, c, max_expansions)
+                if spec is not None:  # an unexpandable prefix never matches
+                    pos[qid * _SLOT_BASE + slot] = (spec, c.window)
+                    pos_pack[qid * _SLOT_BASE + slot] = (
+                        _ROLE[c.occur], float(c.boost),
+                        np.nan if c.const_score is None else float(c.const_score),
+                    )
+            elif c.kind in _TERMISH:
+                ts = _clause_terms(spark, index_dir, c, max_expansions)
+                if c.occur == MUST_NOT:
+                    not_terms.setdefault(qid, set()).update(ts)
                 else:
-                    rows += sum(
-                        int(info[t]["df"])
-                        for t in cl_terms.get((qid, slot), ())
-                        if t in info
-                    )
-            est[qid] = rows
-        if sum(est.values()) > max_partial_rows:
-            groups: list[list[int]] = []
-            cur: list[int] = []
-            cur_rows = 0
-            for qid in live:
-                if cur and cur_rows + est[qid] > max_partial_rows:
-                    groups.append(cur)
-                    cur, cur_rows = [], 0
-                cur.append(qid)
-                cur_rows += est[qid]
-            if cur:
-                groups.append(cur)
-            # sub-batches run EAGERLY (collect per group, ≤ k rows/query)
-            # instead of folding into one lazy union: a lazy union keeps
-            # every group's multi-GB shuffle files live until the final
-            # collect — on tmpfs scratch that accumulation re-creates the
-            # very memory cliff the bound exists to avoid (observed: the
-            # 64M-doc 100-query run was OOM-killed by ~53 GB of retained
-            # sub-batch shuffle on /dev/shm plus the driver heap). After
-            # each group the plan is dropped and a JVM GC nudge lets
-            # ContextCleaner reap its shuffle files before the next runs.
-            rows: list = []
-            for g in groups:
-                rows.extend(
-                    boolean_topk_multi(
-                        spark,
-                        index_dir,
-                        {qid: parsed[qid] for qid in g},
-                        k=k,
-                        k1=k1,
-                        b=b,
-                        max_expansions=max_expansions,
-                        combine=combine,
-                        tie_breaker=tie_breaker,
-                        min_should_match={qid: msm[qid] for qid in g},
-                    )
-                    .select("query_id", "doc_id", "score")
-                    .collect()
-                )
-                spark.sparkContext._jvm.System.gc()
-            return _local_frame(spark, [tuple(r) for r in rows], _SCORED_SCHEMA)
+                    cl_terms[(qid, slot)] = ts
+    all_terms = sorted(set().union(*cl_terms.values(), *not_terms.values(), _spec_terms(pos)))
+    n_parts = int(stats["n_partitions"])
+    info = probe_dictionary(spark, index_dir, all_terms, n_parts) if all_terms else {}
+    live = [
+        qid
+        for qid, slots in sorted(scoring.items())
+        if msm[qid] <= sum(c.occur == SHOULD for _s, c in slots)
+        and not any(  # a MUST term clause with no indexed expansion
+            c.occur == MUST and c.kind in _TERMISH and not set(cl_terms[(qid, s)]) & set(info)
+            for s, c in slots
+        )
+    ]
+    pos = {key: v for key, v in pos.items() if key // _SLOT_BASE in live}
 
-    tomb_bc, tomb_over = _tombstones(spark, index_dir)
+    # ---- the term fan: every (query, slot) using each indexed term. A
+    # ConstantScore use's weight IS its partial; a BM25 use's is idf·boost
+    fan: dict[str, list[tuple]] = {}
+    for (qid, slot), ts in cl_terms.items():
+        if qid in live:
+            c = scoring[qid][slot][1]
+            for t in ts:
+                if t in info:
+                    fan.setdefault(t, []).append(
+                        (qid, slot, _ROLE[c.occur],
+                         float(c.const_score) if c.const_score is not None
+                         else _idf(float(info[t]["df"]), n_docs) * float(c.boost),
+                         c.const_score is not None)
+                    )
+    if not (
+        fan
+        or any(pos_pack[key][0] != _R_NOT for key in pos)
+        or any(c.kind == "predicate" for qid in live for _s, c in scoring[qid])
+    ):
+        return None  # nothing can score: the Lucene-faithful result is empty
+    for qid in live:
+        for t in sorted(not_terms.get(qid, ())):
+            if t in info:
+                fan.setdefault(t, []).append((qid, len(scoring[qid]), _R_NOT, 0.0, False))
+
+    fan_arrays = {
+        t: tuple(
+            np.asarray([e[i] for e in v], dt)
+            for i, dt in enumerate((np.int32, np.int32, np.int8, np.float64, bool))
+        )
+        for t, v in fan.items()
+    }
+    n_must = [sum(c.occur == MUST for _s, c in scoring[q]) for q in live]
+    kern = _Kernel(
+        fan_arrays, {key: pos_pack[key] for key in pos}, n_docs, float(stats["avgdl"]), k1, b,
+        _bucket_shift(spark, stats), np.asarray(live, np.int64), np.asarray(n_must, np.int64),
+        np.asarray([msm[q] for q in live], np.int64),
+        np.asarray([bool(filters[q]) for q in live]), combine == "dismax", float(tie_breaker),
+    )
+    return _Batch(info, live, scoring, nots, filters, cl_terms, pos, kern,
+                  _tombstones(spark, index_dir))
+
+
+def _driver_fits(batch: _Batch) -> bool:
+    """The driver placement's gate: the tombstones fit the broadcast cap,
+    no clause reads doc_meta (a predicate, FILTER included), and the
+    postings of the term-ish and MUST_NOT terms (Σdf) plus the positions
+    of the positional clauses' terms (Σcf) number at most
+    DRIVER_TOPK_MAX_DF: the driver holds all of them at once."""
+    info = batch.info
+    return (
+        batch.tomb[1] is None
+        and not any(
+            c.kind == "predicate"
+            for q in batch.live
+            for c in (*(c for _s, c in batch.scoring[q]), *batch.nots[q], *batch.filters[q])
+        )
+        and sum(int(info[t]["df"]) for t in batch.kern.fan)
+        + sum(int(info[t]["cf"]) for t in _spec_terms(batch.pos) if t in info)
+        <= DRIVER_TOPK_MAX_DF
+    )
+
+
+def _driver_topk(spark: SparkSession, index_dir: str, batch: _Batch, k: int) -> DataFrame:
+    """The driver placement: read the clause terms' blobs on the driver
+    (_read_partitions), run the pack, the positional kernel
+    (_pack_term_blobs + _match_bucket) and the fold in-process (one fold
+    over every row: a bucket never splits a (query, doc)) and rank with
+    bm25_segments._topk_frame, which rounds HALF_UP as F.round does. A
+    LocalRelation; no Spark job runs."""
+    info, kern = batch.info, batch.kern
+    pos_terms = [t for t in _spec_terms(batch.pos) if t in info]
+    terms = sorted(set(kern.fan) | set(pos_terms))
+    pids = sorted({info[t]["partition_id"] for t in terms})
+    blobs = _read_partitions(index_dir, "segments", pids, terms, _BLOB_SCHEMA).to_pandas()
+    tomb = None if batch.tomb[0] is None else batch.tomb[0].value
+    parts = list(_pack_terms([blobs[blobs["term"].isin(list(kern.fan))]], kern, tomb))
+    if pos_terms:
+        _positions_stats(index_dir)  # positional clauses need a positions store
+        specs = _specs(batch.pos)
+        found = [
+            _match_bucket(grp, kern.shift, specs)
+            for pdf in _pack_term_blobs([blobs[blobs["term"].isin(pos_terms)]], kern.shift, tomb)
+            for _bkt, grp in pdf.groupby("bucket", sort=False)
+        ]
+        if found:
+            m = pd.concat(found, ignore_index=True)
+            m["df"] = m.groupby("query_id")["doc_id"].transform("size")
+            parts.extend(_positional_partials([m], kern))
+    if not parts:
+        return _local_frame(spark, [], _TOPK_SCHEMA)
+    scored = _fold_bucket(pd.concat(parts, ignore_index=True), batch.kern)
+    return _topk_frame(
+        spark, scored["doc_id"].to_numpy(np.int64), scored["score"].to_numpy(np.float64), k
+    )
+
+
+def _spark_scored(
+    spark: SparkSession,
+    index_dir: str,
+    batch: _Batch,
+    rare_filter: bool = True,
+    _partials_out: list | None = None,
+) -> DataFrame:
+    """The Spark placement: (query_id, doc_id, score rounded by F.round)
+    for every hit of the batch; _batch_scored has the topology."""
+    info, live, scoring, kern = batch.info, batch.live, batch.scoring, batch.kern
+    tomb_bc, tomb_over = batch.tomb
     parts: list[DataFrame] = []
 
     # ---- rare-MUST candidate masks (sound conjunctive prune, kernel-side):
@@ -701,10 +848,8 @@ def _batch_scored(
                 for _s, c in scoring[qid]
                 if c.occur == MUST and c.kind == "term" and c.terms[0] in info
             ]
-            n_terms = len(
-                {t for s, _c in scoring[qid] for t in cl_terms.get((qid, s), ()) if t in info}
-            )
-            if must_terms and n_terms > 1:
+            terms = {t for s, _c in scoring[qid] for t in batch.cl_terms.get((qid, s), ())}
+            if must_terms and len(terms & set(info)) > 1:
                 rare[qid] = min(must_terms, key=lambda t: (int(info[t]["df"]), t))
         if sum(int(info[t]["df"]) for t in rare.values()) > DRIVER_TOPK_MAX_DF:
             rare = {}
@@ -715,345 +860,203 @@ def _batch_scored(
             index_dir, "segments", sorted({info[t]["partition_id"] for t in rare_terms}),
             rare_terms, _BLOB_SCHEMA,
         )
-        ids: dict[str, list] = {}
-        for t, blob in zip(blobs.column("term").to_pylist(), blobs.column("blob").to_pylist()):
-            ids.setdefault(t, []).append(decode_postings(blob)[0])
-        cand = {t: np.sort(np.concatenate(v)) for t, v in ids.items()}
+        cand = {
+            t: np.sort(np.concatenate([decode_postings(x)[0] for x in g["blob"]]))
+            for t, g in blobs.to_pandas().groupby("term")
+        }
         cand_bc = spark.sparkContext.broadcast(
             {qid: cand.get(t, np.empty(0, np.int64)) for qid, t in rare.items()}
         )
 
-    # ---- term-clause partial stream: decode once, fan out per (qid, slot).
-    # For a ConstantScore clause the weight IS the per-doc partial (const
-    # flag set); for BM25 clauses it is idf·boost, multiplied by tf_norm.
-    fan: dict[str, list[tuple]] = {}
-    for (qid, slot), ts in cl_terms.items():
-        if qid not in live_set:
-            continue
-        c = scoring[qid][slot][1]
-        for t in ts:
-            if t in info:
-                fan.setdefault(t, []).append(
-                    (qid, slot, c.occur == MUST,
-                     float(c.const_score) if c.const_score is not None
-                     else idf[t] * float(c.boost),
-                     c.const_score is not None)
-                )
-    if fan:
-        fan_arr = {
-            t: (
-                np.asarray([e[0] for e in v], np.int32),
-                np.asarray([e[1] for e in v], np.int32),
-                np.asarray([e[2] for e in v], bool),
-                np.asarray([e[3] for e in v], np.float64),
-                np.asarray([e[4] for e in v], bool),
-            )
-            for t, v in fan.items()
-        }
-        pids = sorted({info[t]["partition_id"] for t in fan})
+    # ---- term-ish and MUST_NOT term clauses: ONE pruned scan + the pack
+    if kern.fan:
+        pids = sorted({info[t]["partition_id"] for t in kern.fan})
         seg = _segments(spark, index_dir).filter(
-            F.col("partition_id").isin(pids) & F.col("term").isin(sorted(fan))
+            F.col("partition_id").isin(pids) & F.col("term").isin(sorted(kern.fan))
         )
-        seg = _spread_slices(seg, spark, sum(int(info[t]["df"]) for t in fan))
+        seg = _spread_slices(seg, spark, sum(int(info[t]["df"]) for t in kern.fan))
 
-        def score_slices(pdf_iter):
-            cand = {} if cand_bc is None else cand_bc.value
-            tomb = None if tomb_bc is None else tomb_bc.value
-            oq, os_, om, od, op, ok, n_out = [], [], [], [], [], [], 0
-
-            def flush():
-                return pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(oq),
-                        "slot": np.concatenate(os_),
-                        "is_must": np.concatenate(om),
-                        "doc_id": np.concatenate(od),
-                        "partial": np.concatenate(op),
-                        "is_const": np.concatenate(ok),
-                    }
-                )
-
-            for pdf in pdf_iter:
-                for term, blob in zip(pdf["term"], pdf["blob"]):
-                    doc_ids, tfs, dls = live_postings(blob, tomb)
-                    if doc_ids.size == 0:
-                        continue
-                    qa, sa, ma, wa, ka = fan_arr[term]
-                    tfn = (
-                        None
-                        if ka.all()  # const-only term: skip the BM25 math
-                        else _tf_norm(
-                            tfs.astype(np.float64), dls.astype(np.float64),
-                            avgdl, k1, b,
-                        )
-                    )
-                    for i in range(qa.size):
-                        d = doc_ids
-                        p = np.full(d.size, wa[i], np.float64) if ka[i] else tfn * wa[i]
-                        mask = cand.get(int(qa[i]))
-                        if mask is not None:
-                            keep = member_mask(d, mask)
-                            d, p = d[keep], p[keep]
-                            if d.size == 0:
-                                continue
-                        oq.append(np.full(d.size, qa[i], np.int32))
-                        os_.append(np.full(d.size, sa[i], np.int32))
-                        om.append(np.full(d.size, ma[i], bool))
-                        od.append(d)
-                        op.append(p)
-                        ok.append(np.full(d.size, ka[i], bool))
-                        n_out += d.size
-                        if n_out >= _OUT_CHUNK_ROWS:
-                            yield flush()
-                            oq, os_, om, od, op, ok, n_out = (
-                                [], [], [], [], [], [], 0,
-                            )
-            if od:
-                yield flush()
-
-        parts.append(
-            seg.mapInPandas(
-                score_slices,
-                schema="query_id int, slot int, is_must boolean, doc_id long, "
-                       "partial double, is_const boolean",
+        def pack(pdf_iter):
+            return _pack_terms(
+                pdf_iter, kern,
+                None if tomb_bc is None else tomb_bc.value,
+                None if cand_bc is None else cand_bc.value,
             )
-        )
 
-    # ---- positional clauses: one kernel plan for the scoring clauses and
-    # one for the MUST_NOT clauses, keyed qid·_SLOT_BASE + clause position
-    pos_spec: dict[int, tuple[list, int | None]] = {}
-    pos_clause: dict[int, Clause] = {}
-    not_spec: dict[int, tuple[list, int | None]] = {}
-    for qid in live:
-        for slot, c in scoring[qid]:
-            if c.kind in _POSITIONAL:
-                slots = _positional_slots(spark, index_dir, c, max_expansions)
-                if slots is None:
-                    continue  # unexpandable prefix: n_must coverage empties
-                pos_spec[qid * _SLOT_BASE + slot] = (slots, c.window)
-                pos_clause[qid * _SLOT_BASE + slot] = c
-        for j, c in enumerate(nots[qid]):
-            if c.kind in _POSITIONAL:
-                slots = _positional_slots(spark, index_dir, c, max_expansions)
-                if slots is None:
-                    continue  # unexpandable -"a b*" excludes nothing
-                not_spec[qid * _SLOT_BASE + j] = (slots, c.window)
-    key_qid = (F.col("query_id") / _SLOT_BASE).cast("int").alias("query_id")
-    if pos_spec:
-        matched, _ = positional_matches_multi(spark, index_dir, pos_spec)
-        # ConstantScore(phrase) is v per match; otherwise BM25 of one
-        # synthetic term with df = the clause's live match count
-        const = _by_key(
-            "query_id", {key: c.const_score for key, c in pos_clause.items()}
-        ).cast("double")
-        df_phrase = F.count(F.lit(1)).over(Window.partitionBy("query_id"))
+        parts.append(seg.mapInPandas(pack, schema=_PARTIALS))
+
+    # ---- positional clauses, scoring and MUST_NOT: ONE positional kernel
+    # plan; df_phrase is a count window per clause, so it is consumed once
+    if batch.pos:
+        matched, _ = positional_matches_multi(spark, index_dir, batch.pos)
         parts.append(
-            matched.select(
-                key_qid,
-                (F.col("query_id") % _SLOT_BASE).cast("int").alias("slot"),
-                _by_key(
-                    "query_id", {key: c.occur == MUST for key, c in pos_clause.items()}
-                ).alias("is_must"),
-                "doc_id",
-                F.coalesce(
-                    const,
-                    idf_expr(df_phrase.cast("double"), F.lit(n_docs))
-                    * tf_norm_expr(
-                        F.col("phrase_tf").cast("double"),
-                        F.col("doc_len").cast("double"),
-                        F.lit(avgdl),
-                        k1,
-                        b,
-                    )
-                    * _by_key(
-                        "query_id", {key: float(c.boost) for key, c in pos_clause.items()}
-                    ),
-                ).alias("partial"),
-                const.isNotNull().alias("is_const"),
-            )
+            matched.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("query_id")))
+            .mapInPandas(functools.partial(_positional_partials, kern=kern), schema=_PARTIALS)
         )
 
-    # ---- scoring-predicate streams (ConstantScore over metadata filters):
-    # doc_meta scans (metadata-scale). doc_meta is not tombstone-masked on
-    # disk, so mask here — the term/positional streams mask kernel-side.
-    preds = [
-        _doc_meta(spark, index_dir)
-        .filter(c.predicate)
-        .select(
+    # ---- doc_meta predicates (metadata-scale scans): ConstantScore
+    # clauses score v, negated predicates exclude, and a filtered query's
+    # FILTER clauses, ANDed, admit its docs (idf/df/avgdl stay global)
+    def meta_rows(pred: str, qid: int, slot: int, role: int, v: float | None) -> DataFrame:
+        return _doc_meta(spark, index_dir).filter(pred).select(
+            F.shiftright("doc_id", kern.shift).alias("bucket"),
             F.lit(qid).cast("int").alias("query_id"),
             F.lit(slot).cast("int").alias("slot"),
-            F.lit(c.occur == MUST).alias("is_must"),
+            F.lit(role).cast("tinyint").alias("role"),
             "doc_id",
-            F.lit(float(c.const_score)).alias("partial"),
-            F.lit(True).alias("is_const"),
+            F.lit(0.0 if v is None else float(v)).alias("partial"),
+            F.lit(v is not None).alias("is_const"),
         )
-        for qid in live
-        for slot, c in scoring[qid]
-        if c.kind == "predicate"
-    ]
-    if preds:
-        pm = functools.reduce(DataFrame.unionByName, preds)
-        if tomb_bc is not None:
-            # an Arrow LocalRelation: no Spark job, no Python row per id
-            deleted = spark.createDataFrame(pa.table({"doc_id": tomb_bc.value}))
-            pm = pm.join(F.broadcast(deleted), "doc_id", "left_anti")
-        parts.append(pm)
 
-    if not parts:
-        # every scoring clause expanded to zero indexed terms (e.g. a
-        # SHOULD-only query of unknown words): nothing can score, so the
-        # Lucene-faithful result is empty — not an error
-        return _local_frame(spark, [], _SCORED_SCHEMA)
+    for qid in live:
+        n_sc = len(scoring[qid])
+        for slot, c in [*scoring[qid], *enumerate(batch.nots[qid], n_sc)]:
+            if c.kind == "predicate":
+                parts.append(meta_rows(c.predicate, qid, slot, _ROLE[c.occur], c.const_score))
+        if batch.filters[qid]:
+            pred = " AND ".join(f"({c.predicate})" for c in batch.filters[qid])
+            parts.append(meta_rows(pred, qid, n_sc, _R_FILTER, None))
+
     allp = functools.reduce(DataFrame.unionByName, parts)
-    if tomb_over is not None:  # over-cap tombstones: distributed anti-join
-        allp = allp.join(tomb_over, "doc_id", "left_anti")
     if _partials_out is not None:
-        _partials_out.append(allp)
+        _partials_out.append(allp.filter(F.col("role") <= _R_SHOULD))
+    # doc_meta is not tombstone-masked on disk: with scoring predicates the
+    # fold drops deleted docs (the term and positional rows come masked)
+    scoring_preds = any(c.kind == "predicate" for q in live for _s, c in scoring[q])
+    tomb_fold = tomb_bc if scoring_preds else None
 
-    # ---- ONE exchange: per-slot pivot + MUST coverage per (query, doc).
-    # Const slots fold with MAX (v once per doc, expansion-term dupes all
-    # equal v); a (query, slot) is either const or BM25, so exactly one of
-    # the two legs is non-null per group — their coalesced sum is the slot.
-    if any(c.const_score is not None for qid in live for _s, c in scoring[qid]):
-        aggs = [
-            (
-                F.coalesce(
-                    F.sum(
-                        F.when(
-                            (F.col("slot") == j) & ~F.col("is_const"),
-                            F.col("partial"),
-                        )
-                    ),
-                    F.lit(0.0),
-                )
-                + F.coalesce(
-                    F.max(
-                        F.when(
-                            (F.col("slot") == j) & F.col("is_const"),
-                            F.col("partial"),
-                        )
-                    ),
-                    F.lit(0.0),
-                )
-            ).alias(f"_s{j}")
-            for j in range(m_slots)
-        ]
-    else:
-        aggs = [
-            F.coalesce(
-                F.sum(F.when(F.col("slot") == j, F.col("partial"))), F.lit(0.0)
-            ).alias(f"_s{j}")
-            for j in range(m_slots)
-        ]
-    # coverage = the number of distinct slots of one occur a doc matched:
-    # a per-slot presence flag summed over the slots — a distinct
-    # aggregate would plan one more exchange and Spark job
-    def covered(occur: Column) -> Column:
-        return functools.reduce(
-            lambda x, y: x + y,
-            [
-                F.coalesce(F.max(F.when(occur & (F.col("slot") == j), F.lit(1))), F.lit(0))
-                for j in range(m_slots)
-            ],
-        )
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _fold_bucket(pdf, kern, None if tomb_fold is None else tomb_fold.value)
 
-    n_must = {qid: sum(c.occur == MUST for _s, c in scoring[qid]) for qid in live}
-    if any(n_must.values()):
-        aggs.append(covered(F.col("is_must")).alias("n_cov"))
-    if any(msm[qid] for qid in live):
-        # SHOULD coverage (minimum_should_match): distinct non-MUST slots
-        aggs.append(covered(~F.col("is_must")).alias("n_scov"))
-    scored = allp.groupBy("query_id", "doc_id").agg(*aggs)
-    if any(n_must.values()):
-        scored = scored.filter(F.col("n_cov") == _by_key("query_id", n_must))
-    if any(msm[qid] for qid in live):
-        scored = scored.filter(
-            F.col("n_scov") >= _by_key("query_id", {qid: msm[qid] for qid in live})
-        )
-    cols = [F.col(f"_s{j}") for j in range(m_slots)]
-    total = functools.reduce(lambda x, y: x + y, cols)
-    if combine == "dismax":
-        best = F.greatest(*cols) if m_slots > 1 else cols[0]
-        expr = best + F.lit(float(tie_breaker)) * (total - best)
-    else:
-        expr = total
-    scored = scored.select(
-        "query_id", "doc_id", F.round(expr, SCORE_ROUND_DECIMALS).alias("score")
+    scored = allp.groupBy("bucket").applyInPandas(fold, schema=_SCORED_SCHEMA)
+    if tomb_over is not None:  # over-cap tombstones: distributed anti-join
+        scored = scored.join(tomb_over, "doc_id", "left_anti")
+    return scored.select(
+        "query_id", "doc_id", F.round("score", SCORE_ROUND_DECIMALS).alias("score")
     )
 
-    # ---- MUST_NOT: term-ish sets via one pruned scan, positional matches,
-    # negated predicates — ONE (query_id, doc_id) anti-join for all.
-    # Deleted docs need no masking: they never enter the scored stream.
-    excl: list[DataFrame] = []
-    nf: dict[str, list[int]] = {}
-    for qid, ts in not_terms.items():
-        if qid not in live_set:
-            continue
-        for t in ts:
-            if t in info:
-                nf.setdefault(t, []).append(qid)
-    if nf:
-        pids = sorted({info[t]["partition_id"] for t in nf})
-        nseg = _segments(spark, index_dir).filter(
-            F.col("partition_id").isin(pids) & F.col("term").isin(sorted(nf))
-        )
-        nf_arr = {t: np.asarray(v, np.int32) for t, v in nf.items()}
 
-        def excl_docs(pdf_iter):
-            for pdf in pdf_iter:
-                oq, od = [], []
-                for term, blob in zip(pdf["term"], pdf["blob"]):
-                    ids = decode_postings(bytes(blob))[0]
-                    if ids.size == 0:
-                        continue
-                    for qid in nf_arr[term]:
-                        oq.append(np.full(ids.size, qid, np.int32))
-                        od.append(ids)
-                if od:
-                    yield pd.DataFrame(
-                        {"query_id": np.concatenate(oq), "doc_id": np.concatenate(od)}
+def _batch_scored(
+    spark: SparkSession,
+    index_dir: str,
+    parsed: dict[int, list[Clause]],
+    k1: float,
+    b: float,
+    max_expansions: int,
+    combine: str,
+    tie_breaker: float,
+    msm: dict[int, int],
+    rare_filter: bool = True,
+    max_partial_rows: int | None = None,
+    k: int = DEFAULT_TOP_K,
+    _partials_out: list | None = None,
+) -> DataFrame:
+    """The Boolean scorer's Spark placement: (query_id, doc_id, score) for
+    every doc that satisfies its query's occur algebra, for a batch of
+    parsed queries (query_id → clauses, ids in [0, 2^20)) in ONE plan.
+    boolean_topk_multi adds the per-query rank window and the composers
+    (_boolean_scored) run a batch of one; boolean_topk runs the same
+    kernel on the driver when the query is small (_driver_fits).
+
+    Per query, `combine` picks the cross-clause combiner: "sum" is
+    BooleanQuery (Σ over matching scoring clauses); "dismax" is
+    DisjunctionMaxQuery — each scoring clause first folds to its own score
+    (a prefix/fuzzy clause is still a sum over its expansion, per Lucene's
+    rewrite), then score = max_c + tie_breaker · Σ_{c' ≠ argmax} c'.
+    msm[qid] is Lucene's setMinimumNumberShouldMatch: a doc must match ≥
+    that many DISTINCT SHOULD clauses on top of full MUST coverage (a
+    clause matching through several expansion terms counts once); more
+    than the query's SHOULD clauses matches nothing. Positional clauses
+    need a positions store (posting_format=2); term-only queries run on
+    either format.
+
+    Topology (one kernel, _prepare resolving the batch on the driver):
+      * ONE pruned segment scan of the term-ish and MUST_NOT terms runs
+        the pack (_pack_terms) in mapInPandas: each blob decoded once,
+        its partial rows fanned out to every (query, slot) using it;
+      * rare-MUST candidate masks: a query's rarest single-term MUST
+        clause, when the batch's chosen terms hold ≤ DRIVER_TOPK_MAX_DF
+        postings in all, is read on the driver and broadcast; the pack
+        drops that query's rows outside it (searchsorted);
+      * ONE positional kernel plan (phrase.positional_matches_multi) for
+        every positional clause of the batch, scoring and MUST_NOT, whose
+        matches _positional_partials turns into partial rows; df_phrase
+        is a count window per clause, so the plan is consumed once;
+      * doc_meta scans add the predicate clauses' rows: ConstantScore,
+        MUST_NOT, and one FILTER row set per filtered query;
+      * the union takes ONE exchange, groupBy(bucket).applyInPandas(
+        _fold_bucket), then F.round. No pivot, anti-join or semi-join.
+
+    `max_partial_rows` bounds the (query, slot, doc) partial stream one
+    plan may carry: per-query stream sizes are estimated from the
+    dictionary's df column (Σ df over each term clause's expansion, min df
+    over a positional clause's terms), and a batch over the bound is
+    greedily packed into sub-batches that each fit. Each runs eagerly as
+    boolean_topk_multi(k) and the result is their (≤ k per query) rows —
+    exact, because queries never interact. This is the single-node safety
+    valve for the 64M-doc fold (BENCH/BASELINE.md); on a cluster the fold
+    exchange distributes and the bound can stay None.
+
+    `_partials_out`, when given, receives the pre-fold scoring rows
+    (boolean_explain decomposes hits with them)."""
+    batch = _prepare(spark, index_dir, parsed, k1, b, max_expansions, combine, tie_breaker, msm)
+    if batch is None:
+        return _local_frame(spark, [], _SCORED_SCHEMA)
+    live, info, scoring = batch.live, batch.info, batch.scoring
+
+    # ---- optional stream bound: estimate per-query partial rows from the
+    # dictionary (metadata only) and sub-batch greedily when over
+    if max_partial_rows is not None and len(live) > 1:
+        est: dict[int, int] = {}
+        for qid in live:
+            rows = 0
+            for slot, c in scoring[qid]:
+                if c.kind in _POSITIONAL:
+                    # estimate from the EXACT terms' dfs (sound row bound:
+                    # matches ⊆ any exact term's postings; phrase_prefix
+                    # always carries ≥1 exact head term by the parser)
+                    dfs = [int(info[t]["df"]) for t in c.terms if t in info]
+                    rows += min(dfs) if dfs else 0
+                elif c.kind == "predicate":
+                    # ConstantScore(filter): selectivity unknown without a
+                    # scan, so budget the worst case (every doc matches)
+                    rows += int(batch.kern.n_docs)
+                else:
+                    ts = batch.cl_terms.get((qid, slot), ())
+                    rows += sum(int(info[t]["df"]) for t in ts if t in info)
+            est[qid] = rows
+        if sum(est.values()) > max_partial_rows:
+            groups: list[list[int]] = [[]]
+            cur_rows = 0
+            for qid in live:
+                if groups[-1] and cur_rows + est[qid] > max_partial_rows:
+                    groups.append([])
+                    cur_rows = 0
+                groups[-1].append(qid)
+                cur_rows += est[qid]
+            # sub-batches run EAGERLY (collect per group, ≤ k rows/query)
+            # instead of folding into one lazy union: a lazy union keeps
+            # every group's multi-GB shuffle files live until the final
+            # collect — on tmpfs scratch that accumulation re-creates the
+            # very memory cliff the bound exists to avoid (observed: the
+            # 64M-doc 100-query run was OOM-killed by ~53 GB of retained
+            # sub-batch shuffle on /dev/shm plus the driver heap). After
+            # each group the plan is dropped and a JVM GC nudge lets
+            # ContextCleaner reap its shuffle files before the next runs.
+            rows: list = []
+            for g in groups:
+                rows.extend(
+                    boolean_topk_multi(
+                        spark, index_dir, {qid: parsed[qid] for qid in g}, k=k, k1=k1, b=b,
+                        max_expansions=max_expansions, combine=combine,
+                        tie_breaker=tie_breaker, min_should_match={qid: msm[qid] for qid in g},
                     )
-
-        excl.append(nseg.mapInPandas(excl_docs, schema="query_id int, doc_id long"))
-    if not_spec:
-        not_matched, _ = positional_matches_multi(spark, index_dir, not_spec)
-        excl.append(not_matched.select(key_qid, "doc_id"))
-    excl.extend(
-        _doc_meta(spark, index_dir)
-        .filter(c.predicate)
-        .select(F.lit(qid).cast("int").alias("query_id"), "doc_id")
-        for qid in live
-        for c in nots[qid]
-        if c.kind == "predicate"
-    )
-    if excl:
-        ex = functools.reduce(DataFrame.unionByName, excl)
-        scored = scored.join(ex.distinct(), ["query_id", "doc_id"], "left_anti")
-
-    # ---- FILTER: a doc must satisfy every FILTER of its query — one
-    # doc_meta scan per filtered query (its predicates ANDed), ONE
-    # (query_id, doc_id) semi-join; scores stay global
-    has_flt = [qid for qid in live if filters[qid]]
-    if has_flt:
-        ok = functools.reduce(
-            DataFrame.unionByName,
-            [
-                _doc_meta(spark, index_dir)
-                .filter(" AND ".join(f"({c.predicate})" for c in filters[qid]))
-                .select(F.lit(qid).cast("int").alias("query_id"), "doc_id")
-                for qid in has_flt
-            ],
-        )
-        if len(has_flt) == len(live):
-            scored = scored.join(ok, ["query_id", "doc_id"], "left_semi")
-        else:
-            in_flt = F.col("query_id").isin(has_flt)
-            scored = (
-                scored.filter(in_flt)
-                .join(ok, ["query_id", "doc_id"], "left_semi")
-                .unionByName(scored.filter(~in_flt))
-            )
-    return scored
+                    .select("query_id", "doc_id", "score")
+                    .collect()
+                )
+                spark.sparkContext._jvm.System.gc()
+            return _local_frame(spark, [tuple(r) for r in rows], _SCORED_SCHEMA)
+    return _spark_scored(spark, index_dir, batch, rare_filter, _partials_out)
 
 
 def _boolean_scored(
@@ -1096,20 +1099,22 @@ def boolean_topk(
     tie_breaker: float = 0.0,
     min_should_match: int = 0,
 ) -> DataFrame:
-    """(rank, doc_id, score) for a Boolean query over the segment store —
-    _boolean_scored (the batch scorer as a batch of one; _batch_scored has
-    the full occur/scoring contract) plus the top-k collector tail, a
-    TakeOrderedAndProject rather than the batch's rank window, which would
-    sort the whole match set on one task."""
-    return _rank_tail(
-        _boolean_scored(
-            spark, index_dir, clauses, k1=k1, b=b,
-            max_expansions=max_expansions, rare_filter=rare_filter,
-            combine=combine, tie_breaker=tie_breaker,
-            min_should_match=min_should_match,
-        ),
-        k,
+    """(rank, doc_id, score) for a Boolean query over the segment store
+    (_batch_scored has the full occur/scoring contract). One kernel, two
+    placements: a small query (_driver_fits) runs it on the driver
+    (_driver_topk) — no Spark job; any other runs the Spark placement as
+    a batch of one plus the top-k collector tail, a TakeOrderedAndProject
+    rather than the batch's rank window, which would sort the whole match
+    set on one task. Both return the same rows (tested)."""
+    batch = _prepare(
+        spark, index_dir, {0: list(clauses)}, k1, b, max_expansions, combine,
+        tie_breaker, {0: int(min_should_match)},
     )
+    if batch is None:
+        return _local_frame(spark, [], _TOPK_SCHEMA)
+    if _driver_fits(batch):
+        return _driver_topk(spark, index_dir, batch, k)
+    return _rank_tail(_spark_scored(spark, index_dir, batch, rare_filter).drop("query_id"), k)
 
 
 def boosting_topk(
@@ -1247,6 +1252,28 @@ def rescore_topk(
     return _rank_tail(combined, k)
 
 
+def _meta_rescored(
+    spark: SparkSession,
+    index_dir: str,
+    query: str | list[Clause],
+    score: Column,
+    k: int,
+    k1: float,
+    b: float,
+    max_expansions: int,
+) -> DataFrame:
+    """The top-k of a Boolean query's FULL scored stream joined to the
+    store's doc_meta and re-scored by `score`, a Column over `score` and
+    the doc_meta columns, rounded to 6 (function, decay and script
+    score)."""
+    q_cl = parse_query(query) if isinstance(query, str) else query
+    scored = _boolean_scored(spark, index_dir, q_cl, k1=k1, b=b, max_expansions=max_expansions)
+    out = scored.join(_doc_meta(spark, index_dir), "doc_id").select(
+        "doc_id", F.round(score, SCORE_ROUND_DECIMALS).alias("score")
+    )
+    return _rank_tail(out, k)
+
+
 def function_score_topk(
     spark: SparkSession,
     index_dir: str,
@@ -1280,22 +1307,10 @@ def function_score_topk(
         raise ValueError(f"modifier must be none|log1p|sqrt: {modifier!r}")
     if mode not in ("multiply", "sum"):
         raise ValueError(f"mode must be multiply|sum: {mode!r}")
-    q_cl = parse_query(query) if isinstance(query, str) else query
-    scored = _boolean_scored(
-        spark, index_dir, q_cl, k1=k1, b=b, max_expansions=max_expansions
-    )
-    meta = _doc_meta(spark, index_dir).select(
-        "doc_id", F.col(field).cast("double").alias("_fv")
-    )
-    v = F.lit(float(factor)) * F.col("_fv")
+    v = F.lit(float(factor)) * F.col(field).cast("double")
     fn = {"none": v, "log1p": F.log1p(v), "sqrt": F.sqrt(v)}[modifier]
-    comb = (
-        F.col("score") * fn if mode == "multiply" else F.col("score") + fn
-    )
-    out = scored.join(meta, "doc_id").select(
-        "doc_id", F.round(comb, SCORE_ROUND_DECIMALS).alias("score")
-    )
-    return _rank_tail(out, k)
+    comb = F.col("score") * fn if mode == "multiply" else F.col("score") + fn
+    return _meta_rescored(spark, index_dir, query, comb, k, k1, b, max_expansions)
 
 
 def decay_score_topk(
@@ -1335,32 +1350,21 @@ def decay_score_topk(
         raise ValueError(f"decay must be in (0, 1): {decay}")
     if scale <= 0:
         raise ValueError(f"scale must be > 0: {scale}")
-    import math as _math
-
-    q_cl = parse_query(query) if isinstance(query, str) else query
-    scored = _boolean_scored(
-        spark, index_dir, q_cl, k1=k1, b=b, max_expansions=max_expansions
-    )
-    meta = _doc_meta(spark, index_dir).select(
-        "doc_id", F.col(field).cast("double").alias("_fv")
-    )
     dist = F.greatest(
-        F.lit(0.0), F.abs(F.col("_fv") - F.lit(float(origin))) - F.lit(float(offset))
+        F.lit(0.0),
+        F.abs(F.col(field).cast("double") - F.lit(float(origin))) - F.lit(float(offset)),
     )
     if shape == "gauss":
-        sigma2 = -(float(scale) ** 2) / (2.0 * _math.log(float(decay)))
+        sigma2 = -(float(scale) ** 2) / (2.0 * math.log(float(decay)))
         mult = F.exp(-(dist * dist) / F.lit(2.0 * sigma2))
     elif shape == "exp":
-        lam = _math.log(float(decay)) / float(scale)
+        lam = math.log(float(decay)) / float(scale)
         mult = F.exp(F.lit(lam) * dist)
     else:
         l = float(scale) / (1.0 - float(decay))
         mult = F.greatest(F.lit(0.0), (F.lit(l) - dist) / F.lit(l))
     comb = F.col("score") * mult if mode == "multiply" else F.col("score") + mult
-    out = scored.join(meta, "doc_id").select(
-        "doc_id", F.round(comb, SCORE_ROUND_DECIMALS).alias("score")
-    )
-    return _rank_tail(out, k)
+    return _meta_rescored(spark, index_dir, query, comb, k, k1, b, max_expansions)
 
 
 def script_score_topk(
@@ -1389,17 +1393,9 @@ def script_score_topk(
     boosting/fvf/decay) joined to the store-resident doc_meta. The
     expression must be deterministic per row for reproducible rankings —
     nondeterministic functions are the caller's own foot-gun, as in ES."""
-    q_cl = parse_query(query) if isinstance(query, str) else query
-    scored = _boolean_scored(
-        spark, index_dir, q_cl, k1=k1, b=b, max_expansions=max_expansions
+    return _meta_rescored(
+        spark, index_dir, query, F.expr(expr).cast("double"), k, k1, b, max_expansions
     )
-    meta = _doc_meta(spark, index_dir)
-    out = (
-        scored.join(meta, "doc_id")
-        .withColumn("score", F.expr(expr).cast("double"))
-        .select("doc_id", F.round("score", SCORE_ROUND_DECIMALS).alias("score"))
-    )
-    return _rank_tail(out, k)
 
 
 def boolean_explain(

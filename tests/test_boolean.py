@@ -20,6 +20,7 @@ from contextinator_spark.operators.boolean import (
     boolean_topk_query,
     parse_query,
 )
+from contextinator_spark.oracle import BruteForceBM25
 
 DOCS = [
     (0, "hash table hash join", "en"),
@@ -111,6 +112,14 @@ def test_must_terms_equal_conjunctive_executor(spark, idx):
     want = topk_segments_conjunctive(spark, idx, ["hash", "join"])
     assert _rows(got) == _rows(want)
     assert {d for _, d, _ in _rows(got)} == {0, 2, 6}
+    # topk_segments_conjunctive IS boolean_topk, so the scores are checked
+    # against the brute-force BM25 as well
+    ref = BruteForceBM25({d: text for d, text, _lang in DOCS})
+    scored = sorted(
+        ((d, round(ref.score(d, ["hash", "join"]), SCORE_ROUND_DECIMALS)) for d in (0, 2, 6)),
+        key=lambda x: (-x[1], x[0]),
+    )
+    assert _rows(got) == [(i + 1, d, s) for i, (d, s) in enumerate(scored)]
 
 
 def test_single_phrase_clause_equals_positional_executor(spark, idx):
@@ -578,10 +587,12 @@ def _plan_nodes(node):
 
 def test_boolean_plans_read_no_rdd_and_cache_nothing(spark, idx):
     """A phrase SHOULD, a MUST_NOT phrase and a FILTER, single and
-    batched: driver-built frames are Arrow LocalRelations (no ExistingRDD
-    scan), nothing is persisted, and each of the two positional kernel
-    plans (scoring clauses, MUST_NOT clauses) is consumed once — one pack
-    mapInPandas under one bucket applyInPandas."""
+    batched (the FILTER keeps the single query on the Spark placement):
+    driver-built frames are Arrow LocalRelations (no ExistingRDD scan),
+    nothing is persisted or cached, and the plan is one fold
+    applyInPandas over the term pack and ONE positional kernel plan
+    (scoring and MUST_NOT clauses) — its pack mapInPandas under its
+    bucket applyInPandas, consumed once."""
     from contextinator_spark.operators.boolean import boolean_topk_multi
 
     q = 'hash "table hash" -"spark join" lang:en'
@@ -600,9 +611,13 @@ def test_boolean_plans_read_no_rdd_and_cache_nothing(spark, idx):
         assert cache.isEmpty() == was_empty
         kernels = [n for n in nodes if n.getClass().getSimpleName() == "FlatMapGroupsInPandasExec"]
         assert len(kernels) == 2, names
-        for kern in kernels:
-            below = [n.getClass().getSimpleName() for n in _plan_nodes(kern)]
-            assert below.count("MapInPandasExec") == 1, below
+        fold, positional = kernels  # pre-order: the fold is on top
+        below = [n.getClass().getSimpleName() for n in _plan_nodes(fold)]
+        # the term pack, the positional partials and the positional pack
+        assert below.count("FlatMapGroupsInPandasExec") == 2, below
+        assert below.count("MapInPandasExec") == 3, below
+        below = [n.getClass().getSimpleName() for n in _plan_nodes(positional)]
+        assert below.count("MapInPandasExec") == 1, below
 
 
 # ---------------------------------------------------------------------------

@@ -28,6 +28,7 @@ from contextinator_spark import schemas
 from contextinator_spark.config import TOKEN_PATTERN
 from contextinator_spark.functions.xxhash import term_partition
 from contextinator_spark.operators import bm25_segments as B
+from contextinator_spark.operators import boolean as BO
 from contextinator_spark.operators import phrase as PH
 from contextinator_spark.operators import segments as S
 from contextinator_spark.operators.deletes import delete_docs
@@ -111,6 +112,14 @@ def test_small_single_queries_run_no_spark_job(spark, store):
     assert n == 0 and ph
     near, n = _jobs_of(spark, lambda: _rows(PH.near_topk_indexed(spark, d, phrases[0], 4, k=10)))
     assert n == 0 and near
+
+    # Boolean, and the conjunctive executor that is a Boolean query
+    bq, n = _jobs_of(spark, lambda: _rows(BO.boolean_topk_query(spark, d, "+def import -return")))
+    assert n == 0 and bq
+    conj, n = _jobs_of(
+        spark, lambda: _rows(B.topk_segments_conjunctive(spark, d, ["def", "import"], k=10))
+    )
+    assert n == 0 and conj
 
     # no-match returns: an absent term, a phrase slot no doc holds
     out, n = _jobs_of(spark, lambda: _rows(B.topk_segments(spark, d, ["zzz_absent"], k=10)))
@@ -293,6 +302,39 @@ def test_positional_driver_path_equals_spark_path(spark, store, monkeypatch):
     via_spark = run_all()
     assert driver == via_spark
     assert all(driver), "every query should match"
+    assert not {r[1] for rows in driver for r in rows} & deleted
+
+
+def test_boolean_driver_path_equals_spark_path(spark, store, monkeypatch):
+    """Boolean shapes on the driver placement and on the Spark placement
+    (forced by a zero gate) return the same rows and scores, and never a
+    deleted doc: +MUST SHOULD -NOT, msm, dismax with a tie-breaker, a
+    ^= const clause, a phrase MUST_NOT, a NEAR SHOULD, an absent MUST
+    term and a SHOULD-only query of unknown words."""
+    d, deleted, phrases = store
+    two = " ".join([p for p in phrases if len(p) == 2][0])
+    calls = [
+        ("+def import -return", {}),
+        ("def import return class", {"min_should_match": 2}),
+        ("+def import return class", {"combine": "dismax", "tie_breaker": 0.3}),
+        ("+def^=2 import return", {}),
+        (f'def import -"{two}"', {}),
+        ('+import "def return"~6', {}),
+        ("+def +zzz_absent import", {}),
+        ("zzz_absent zzz_nowhere", {}),
+    ]
+
+    def run_all():
+        return [_rows(BO.boolean_topk_query(spark, d, q, k=10, **kw)) for q, kw in calls]
+
+    driver, n = _jobs_of(spark, run_all)
+    assert n == 0
+    monkeypatch.setattr(BO, "DRIVER_TOPK_MAX_DF", 0)
+    via_spark, n = _jobs_of(spark, run_all)
+    assert n > 0
+    assert driver == via_spark
+    assert all(driver[:6]), "every query with indexed terms should match"
+    assert driver[6:] == [[], []]
     assert not {r[1] for rows in driver for r in rows} & deleted
 
 

@@ -104,13 +104,16 @@ def test_match_count_and_facet_random(spark, store):
         assert got == want, terms
 
 
-def test_boolean_random_shapes(spark, store):
-    """Each random query alone, then all of them as one batch, against
-    the brute-force scores."""
+def test_boolean_random_shapes(spark, store, monkeypatch):
+    """Each random query alone on both placements (the driver one at the
+    default gate, the Spark one with the gate at 0), then all of them as
+    one batch, against the brute-force scores."""
+    from contextinator_spark.operators import boolean as BO
     from contextinator_spark.operators.boolean import boolean_topk_multi, boolean_topk_query
 
     ref = BruteForceBM25(DOCS)
     rng = random.Random(SEED + 5)
+    default_gate = BO.DRIVER_TOPK_MAX_DF
     wanted = {}
     for _ in range(6):
         must, should, mustnot = (
@@ -119,10 +122,6 @@ def test_boolean_random_shapes(spark, store):
             rng.sample(VOCAB[40:60], 1),
         )
         q = f"+{must[0]} {should[0]} {should[1]} -{mustnot[0]}"
-        got = [
-            (r["rank"], r["doc_id"], r["score"])
-            for r in boolean_topk_query(spark, store, q, k=50).collect()
-        ]
         scored = []
         for d, text in DOCS.items():
             toks = set(text.split())
@@ -132,7 +131,14 @@ def test_boolean_random_shapes(spark, store):
             scored.append((d, round(s, 6)))
         scored.sort(key=lambda x: (-x[1], x[0]))
         want = [(i + 1, d, s) for i, (d, s) in enumerate(scored[:50])]
-        assert got == want, q
+        for gate in (default_gate, 0):
+            monkeypatch.setattr(BO, "DRIVER_TOPK_MAX_DF", gate)
+            got = [
+                (r["rank"], r["doc_id"], r["score"])
+                for r in boolean_topk_query(spark, store, q, k=50).collect()
+            ]
+            assert got == want, (q, gate)
+        monkeypatch.setattr(BO, "DRIVER_TOPK_MAX_DF", default_gate)
         wanted[q] = want
     queries = dict(enumerate(wanted))
     batch = {}
