@@ -34,8 +34,8 @@ term; a MUST term absent everywhere empties its query with no scan); a
 single query is a batch of one.
   * the kernel: _pack_terms decodes each needed term ONCE however many
     clauses or queries share it, masks deleted docs and a query's
-    rare-MUST candidates, and emits doc-range-bucketed partial rows
-    (query, slot, role, doc, partial); positional clauses
+    rare-MUST candidates, and emits partial rows (query, slot, role, doc,
+    partial) bucketed doc_id mod n_buckets; positional clauses
     (_positional_partials over the positional kernel's matches) and
     doc_meta predicates emit the same rows. _fold_bucket folds whole
     buckets for every query of the batch in numpy: per-slot sums, sum or
@@ -61,7 +61,6 @@ positional) into the standard IR algebra.
 from __future__ import annotations
 
 import functools
-import math
 import re
 from dataclasses import dataclass, field
 
@@ -102,9 +101,8 @@ from .bm25_segments import (
 from .compress import decode_postings
 from .deletes import live_mask, live_postings, member_mask
 from .phrase import (
-    _bucket_shift,
-    _match_bucket,
-    _pack_term_blobs,
+    _BUCKET_SHIFT,
+    _driver_matches,
     _positions_stats,
     _spec_terms,
     _specs,
@@ -474,8 +472,10 @@ def _by_key(key: str, values: dict) -> Column:
 
 # ---------------------------------------------------------------------------
 # the Boolean kernel: one pack, one fold, two placements. Partial rows are
-# bucketed doc_id >> shift (the positional kernel's doc-range rule), so a
-# bucket holds every row of its (query, doc) pairs.
+# bucketed doc_id mod n_buckets, so a bucket holds every row of its
+# (query, doc) pairs; n_buckets = max(4 × parallelism, n_docs >> 18)
+# keeps ~262k docs per fold call at most, whether doc ids are dense or
+# hashed (a doc-range rule gives hashed ids one bucket per doc).
 # ---------------------------------------------------------------------------
 
 
@@ -495,7 +495,7 @@ class _Kernel:
     avgdl: float
     k1: float
     b: float
-    shift: int
+    n_buckets: int
     qids: np.ndarray
     n_must: np.ndarray
     msm: np.ndarray
@@ -523,7 +523,7 @@ def _pack_terms(pdf_iter, kern: _Kernel, tomb: np.ndarray | None = None, cand: d
             if bm25.any():
                 tfn = _tf_norm(tfs.astype(np.float64), dls.astype(np.float64), kern.avgdl,
                                kern.k1, kern.b)
-            buckets = docs.astype(np.int64) >> kern.shift
+            buckets = docs.astype(np.int64) % kern.n_buckets
             for i in range(qa.size):
                 d, bk = docs, buckets
                 p = tfn * wa[i] if bm25[i] else np.full(d.size, wa[i])
@@ -562,7 +562,7 @@ def _positional_partials(pdf_iter, kern: _Kernel):
         is_const = ~np.isnan(const)[inv]
         docs = m["doc_id"].to_numpy(np.int64)
         yield pd.DataFrame({
-            "bucket": docs >> kern.shift,
+            "bucket": docs % kern.n_buckets,
             "query_id": (key // _SLOT_BASE).astype(np.int32),
             "slot": (key % _SLOT_BASE).astype(np.int32),
             "role": role.astype(np.int8)[inv],
@@ -684,10 +684,13 @@ def _prepare(
                 "(add ^=v for a scoring ConstantScore filter)"
             )
         scoring[qid] = list(enumerate(sc))
-        nots[qid] = [c for c in cls if c.occur == MUST_NOT]
+        # MUST_NOT slots follow the scoring ones, positional clauses first:
+        # only they need a key (qid·_SLOT_BASE + slot)
+        nots[qid] = sorted((c for c in cls if c.occur == MUST_NOT),
+                           key=lambda c: c.kind not in _POSITIONAL)
         filters[qid] = [c for c in cls if c.occur == FILTER]
-        if len(sc) + len(nots[qid]) > _SLOT_BASE:
-            raise ValueError(f"query {qid}: >{_SLOT_BASE} scoring and MUST_NOT clauses")
+        if len(sc) + sum(c.kind in _POSITIONAL for c in nots[qid]) > _SLOT_BASE:
+            raise ValueError(f"query {qid}: >{_SLOT_BASE} scoring + positional MUST_NOT clauses")
 
     # ---- expansion + ONE dictionary probe over every clause term
     # (prefix/wildcard/fuzzy/regexp expand over the cached dictionary
@@ -761,7 +764,8 @@ def _prepare(
     n_must = [sum(c.occur == MUST for _s, c in scoring[q]) for q in live]
     kern = _Kernel(
         fan_arrays, {key: pos_pack[key] for key in pos}, n_docs, float(stats["avgdl"]), k1, b,
-        _bucket_shift(spark, stats), np.asarray(live, np.int64), np.asarray(n_must, np.int64),
+        max(4 * spark.sparkContext.defaultParallelism, int(n_docs) >> _BUCKET_SHIFT),
+        np.asarray(live, np.int64), np.asarray(n_must, np.int64),
         np.asarray([msm[q] for q in live], np.int64),
         np.asarray([bool(filters[q]) for q in live]), combine == "dismax", float(tie_breaker),
     )
@@ -792,8 +796,8 @@ def _driver_fits(batch: _Batch) -> bool:
 def _driver_topk(spark: SparkSession, index_dir: str, batch: _Batch, k: int) -> DataFrame:
     """The driver placement: read the clause terms' blobs on the driver
     (_read_partitions), run the pack, the positional kernel
-    (_pack_term_blobs + _match_bucket) and the fold in-process (one fold
-    over every row: a bucket never splits a (query, doc)) and rank with
+    (phrase._driver_matches) and the fold in-process (one fold over every
+    row: a bucket never splits a (query, doc)) and rank with
     bm25_segments._topk_frame, which rounds HALF_UP as F.round does. A
     LocalRelation; no Spark job runs."""
     info, kern = batch.info, batch.kern
@@ -805,14 +809,8 @@ def _driver_topk(spark: SparkSession, index_dir: str, batch: _Batch, k: int) -> 
     parts = list(_pack_terms([blobs[blobs["term"].isin(list(kern.fan))]], kern, tomb))
     if pos_terms:
         _positions_stats(index_dir)  # positional clauses need a positions store
-        specs = _specs(batch.pos)
-        found = [
-            _match_bucket(grp, kern.shift, specs)
-            for pdf in _pack_term_blobs([blobs[blobs["term"].isin(pos_terms)]], kern.shift, tomb)
-            for _bkt, grp in pdf.groupby("bucket", sort=False)
-        ]
-        if found:
-            m = pd.concat(found, ignore_index=True)
+        m = _driver_matches(blobs[blobs["term"].isin(pos_terms)], _specs(batch.pos), tomb)
+        if len(m):
             m["df"] = m.groupby("query_id")["doc_id"].transform("size")
             parts.extend(_positional_partials([m], kern))
     if not parts:
@@ -856,10 +854,8 @@ def _spark_scored(
     cand_bc = None
     if rare:
         rare_terms = sorted(set(rare.values()))
-        blobs = _read_partitions(
-            index_dir, "segments", sorted({info[t]["partition_id"] for t in rare_terms}),
-            rare_terms, _BLOB_SCHEMA,
-        )
+        pids = sorted({info[t]["partition_id"] for t in rare_terms})
+        blobs = _read_partitions(index_dir, "segments", pids, rare_terms, _BLOB_SCHEMA)
         cand = {
             t: np.sort(np.concatenate([decode_postings(x)[0] for x in g["blob"]]))
             for t, g in blobs.to_pandas().groupby("term")
@@ -877,11 +873,8 @@ def _spark_scored(
         seg = _spread_slices(seg, spark, sum(int(info[t]["df"]) for t in kern.fan))
 
         def pack(pdf_iter):
-            return _pack_terms(
-                pdf_iter, kern,
-                None if tomb_bc is None else tomb_bc.value,
-                None if cand_bc is None else cand_bc.value,
-            )
+            return _pack_terms(pdf_iter, kern, None if tomb_bc is None else tomb_bc.value,
+                               None if cand_bc is None else cand_bc.value)
 
         parts.append(seg.mapInPandas(pack, schema=_PARTIALS))
 
@@ -899,7 +892,7 @@ def _spark_scored(
     # FILTER clauses, ANDed, admit its docs (idf/df/avgdl stay global)
     def meta_rows(pred: str, qid: int, slot: int, role: int, v: float | None) -> DataFrame:
         return _doc_meta(spark, index_dir).filter(pred).select(
-            F.shiftright("doc_id", kern.shift).alias("bucket"),
+            F.pmod("doc_id", F.lit(kern.n_buckets).cast("long")).alias("bucket"),
             F.lit(qid).cast("int").alias("query_id"),
             F.lit(slot).cast("int").alias("slot"),
             F.lit(role).cast("tinyint").alias("role"),
@@ -1252,28 +1245,6 @@ def rescore_topk(
     return _rank_tail(combined, k)
 
 
-def _meta_rescored(
-    spark: SparkSession,
-    index_dir: str,
-    query: str | list[Clause],
-    score: Column,
-    k: int,
-    k1: float,
-    b: float,
-    max_expansions: int,
-) -> DataFrame:
-    """The top-k of a Boolean query's FULL scored stream joined to the
-    store's doc_meta and re-scored by `score`, a Column over `score` and
-    the doc_meta columns, rounded to 6 (function, decay and script
-    score)."""
-    q_cl = parse_query(query) if isinstance(query, str) else query
-    scored = _boolean_scored(spark, index_dir, q_cl, k1=k1, b=b, max_expansions=max_expansions)
-    out = scored.join(_doc_meta(spark, index_dir), "doc_id").select(
-        "doc_id", F.round(score, SCORE_ROUND_DECIMALS).alias("score")
-    )
-    return _rank_tail(out, k)
-
-
 def function_score_topk(
     spark: SparkSession,
     index_dir: str,
@@ -1307,10 +1278,22 @@ def function_score_topk(
         raise ValueError(f"modifier must be none|log1p|sqrt: {modifier!r}")
     if mode not in ("multiply", "sum"):
         raise ValueError(f"mode must be multiply|sum: {mode!r}")
-    v = F.lit(float(factor)) * F.col(field).cast("double")
+    q_cl = parse_query(query) if isinstance(query, str) else query
+    scored = _boolean_scored(
+        spark, index_dir, q_cl, k1=k1, b=b, max_expansions=max_expansions
+    )
+    meta = _doc_meta(spark, index_dir).select(
+        "doc_id", F.col(field).cast("double").alias("_fv")
+    )
+    v = F.lit(float(factor)) * F.col("_fv")
     fn = {"none": v, "log1p": F.log1p(v), "sqrt": F.sqrt(v)}[modifier]
-    comb = F.col("score") * fn if mode == "multiply" else F.col("score") + fn
-    return _meta_rescored(spark, index_dir, query, comb, k, k1, b, max_expansions)
+    comb = (
+        F.col("score") * fn if mode == "multiply" else F.col("score") + fn
+    )
+    out = scored.join(meta, "doc_id").select(
+        "doc_id", F.round(comb, SCORE_ROUND_DECIMALS).alias("score")
+    )
+    return _rank_tail(out, k)
 
 
 def decay_score_topk(
@@ -1350,21 +1333,32 @@ def decay_score_topk(
         raise ValueError(f"decay must be in (0, 1): {decay}")
     if scale <= 0:
         raise ValueError(f"scale must be > 0: {scale}")
+    import math as _math
+
+    q_cl = parse_query(query) if isinstance(query, str) else query
+    scored = _boolean_scored(
+        spark, index_dir, q_cl, k1=k1, b=b, max_expansions=max_expansions
+    )
+    meta = _doc_meta(spark, index_dir).select(
+        "doc_id", F.col(field).cast("double").alias("_fv")
+    )
     dist = F.greatest(
-        F.lit(0.0),
-        F.abs(F.col(field).cast("double") - F.lit(float(origin))) - F.lit(float(offset)),
+        F.lit(0.0), F.abs(F.col("_fv") - F.lit(float(origin))) - F.lit(float(offset))
     )
     if shape == "gauss":
-        sigma2 = -(float(scale) ** 2) / (2.0 * math.log(float(decay)))
+        sigma2 = -(float(scale) ** 2) / (2.0 * _math.log(float(decay)))
         mult = F.exp(-(dist * dist) / F.lit(2.0 * sigma2))
     elif shape == "exp":
-        lam = math.log(float(decay)) / float(scale)
+        lam = _math.log(float(decay)) / float(scale)
         mult = F.exp(F.lit(lam) * dist)
     else:
         l = float(scale) / (1.0 - float(decay))
         mult = F.greatest(F.lit(0.0), (F.lit(l) - dist) / F.lit(l))
     comb = F.col("score") * mult if mode == "multiply" else F.col("score") + mult
-    return _meta_rescored(spark, index_dir, query, comb, k, k1, b, max_expansions)
+    out = scored.join(meta, "doc_id").select(
+        "doc_id", F.round(comb, SCORE_ROUND_DECIMALS).alias("score")
+    )
+    return _rank_tail(out, k)
 
 
 def script_score_topk(
@@ -1393,9 +1387,17 @@ def script_score_topk(
     boosting/fvf/decay) joined to the store-resident doc_meta. The
     expression must be deterministic per row for reproducible rankings —
     nondeterministic functions are the caller's own foot-gun, as in ES."""
-    return _meta_rescored(
-        spark, index_dir, query, F.expr(expr).cast("double"), k, k1, b, max_expansions
+    q_cl = parse_query(query) if isinstance(query, str) else query
+    scored = _boolean_scored(
+        spark, index_dir, q_cl, k1=k1, b=b, max_expansions=max_expansions
     )
+    meta = _doc_meta(spark, index_dir)
+    out = (
+        scored.join(meta, "doc_id")
+        .withColumn("score", F.expr(expr).cast("double"))
+        .select("doc_id", F.round("score", SCORE_ROUND_DECIMALS).alias("score"))
+    )
+    return _rank_tail(out, k)
 
 
 def boolean_explain(

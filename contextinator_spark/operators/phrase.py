@@ -516,6 +516,20 @@ def _match_bucket(
     )
 
 
+def _driver_matches(
+    blobs: pd.DataFrame, specs: dict[int, tuple], tomb: np.ndarray | None
+) -> pd.DataFrame:
+    """The kernel in-process, for the driver placements (_positional_topk
+    and the Boolean executor's): (term, blob) rows → _QUERY_MATCHES rows
+    of every spec, packed and matched at _BUCKET_SHIFT."""
+    found = [
+        _match_bucket(grp, _BUCKET_SHIFT, specs)
+        for pdf in _pack_term_blobs([blobs], _BUCKET_SHIFT, tomb)
+        for _bkt, grp in pdf.groupby("bucket", sort=False)
+    ]
+    return pd.concat(found, ignore_index=True) if found else _no_matches()
+
+
 def _match_plan(
     spark: SparkSession,
     index_dir: str,
@@ -634,8 +648,8 @@ def _positional_topk(
     Driver path: when the tombstones fit the broadcast cap and the slot
     terms hold at most DRIVER_TOPK_MAX_DF positions in all (Σcf — the
     driver holds every position, not just every posting), the driver
-    reads the terms' blobs (_read_partitions), runs _pack_term_blobs and
-    _match_bucket in-process, scores with _idf/_tf_norm and ranks with
+    reads the terms' blobs (_read_partitions), runs the kernel in-process
+    (_driver_matches), scores with _idf/_tf_norm and ranks with
     bm25_segments._topk_frame, which rounds HALF_UP as F.round does (the
     BM25 driver placement, _topk_driver, ranks the same way). No Spark
     job runs. Otherwise the kernel's Spark plan (_match_plan) feeds
@@ -650,13 +664,7 @@ def _positional_topk(
 
     pids = sorted({info[t]["partition_id"] for t in info})
     blobs = _read_partitions(index_dir, "segments", pids, sorted(info), _BLOB_SCHEMA)
-    tomb = None if tomb_bc is None else tomb_bc.value
-    found = [
-        _match_bucket(grp, _BUCKET_SHIFT, specs)
-        for pdf in _pack_term_blobs([blobs.to_pandas()], _BUCKET_SHIFT, tomb)
-        for _bkt, grp in pdf.groupby("bucket", sort=False)
-    ]
-    matched = pd.concat(found) if found else _no_matches()
+    matched = _driver_matches(blobs.to_pandas(), specs, None if tomb_bc is None else tomb_bc.value)
     docs = matched["doc_id"].to_numpy(np.int64)
     idf = _idf(float(docs.size), float(stats["n_docs"]))
     scores = idf * _tf_norm(

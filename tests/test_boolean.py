@@ -271,6 +271,32 @@ def test_requires_scoring_clause(spark, idx):
         boolean_topk(spark, idx, [Clause(MUST, "predicate", predicate="lang='en'")])
 
 
+def test_clause_cap_counts_only_keyed_clauses(spark, idx, monkeypatch):
+    """Only scoring and positional MUST_NOT clauses take a key slot
+    (qid·_SLOT_BASE + slot). 1 MUST + 800 SHOULD + 300 term MUST_NOT + 1
+    phrase MUST_NOT clauses (1,102 in all, 802 keyed) run on both
+    placements and equal the query without the unindexed words; past
+    1,024 keyed clauses the query is rejected."""
+    cap = B._SLOT_BASE
+    unknown = [Clause(SHOULD, "term", (f"zzs{i}",)) for i in range(800)]
+    unknown += [Clause(MUST_NOT, "term", (f"zzn{i}",)) for i in range(299)]
+    core = [
+        Clause(MUST, "term", ("hash",)),
+        Clause(MUST_NOT, "term", ("spark",)),
+        Clause(MUST_NOT, "phrase", ("join", "merge")),
+    ]
+    want = _rows(boolean_topk(spark, idx, core))
+    assert [r[1] for r in want] == [0, 3, 6]
+    assert _rows(boolean_topk(spark, idx, [*core, *unknown])) == want
+    monkeypatch.setattr(B, "DRIVER_TOPK_MAX_DF", 0)
+    assert _rows(boolean_topk(spark, idx, [*core, *unknown])) == want
+    should = [Clause(SHOULD, "term", (f"zzs{i}",)) for i in range(cap)]
+    with pytest.raises(ValueError):
+        boolean_topk(spark, idx, [*should, Clause(SHOULD, "term", ("hash",))])
+    with pytest.raises(ValueError):
+        boolean_topk(spark, idx, [*should, Clause(MUST_NOT, "phrase", ("join", "merge"))])
+
+
 # ---------------------------------------------------------------------------
 # fuzzy (Lucene FuzzyQuery) and boosts (^w)
 # ---------------------------------------------------------------------------

@@ -338,6 +338,20 @@ def test_boolean_driver_path_equals_spark_path(spark, store, monkeypatch):
     assert not {r[1] for rows in driver for r in rows} & deleted
 
 
+def test_boolean_fold_groups_are_bounded_on_hashed_ids(spark, store):
+    """The store's doc ids are hashed (pmod(xxhash64, 2^61), as the CLI
+    assigns them). The Spark placement's fold still groups the partial
+    rows into at most max(4 × parallelism, n_docs >> 18) buckets, not one
+    per matched doc."""
+    d, _, _ = store
+    sink: list = []
+    BO._boolean_scored(spark, d, BO.parse_query("def import return"), _partials_out=sink)
+    rows = sink[0].select("bucket", "doc_id").distinct().collect()
+    bound = 4 * spark.sparkContext.defaultParallelism
+    assert len({r["doc_id"] for r in rows}) > bound
+    assert len({r["bucket"] for r in rows}) <= bound
+
+
 def test_segments_schema_is_the_on_disk_schema(spark, store):
     d, _, _ = store
     files = sorted(glob.glob(f"{d}/segments/partition_id=*/*.parquet"))
